@@ -71,6 +71,36 @@ object Bench {
     case c             => c.toString
   }
 
+  /** `v` with `digits` decimals, formatted the same in every default
+    * locale: a decimal comma would make the record invalid JSON.
+    */
+  def fixed(v: Double, digits: Int): String =
+    s"%.${digits}f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The stdout contract line. It carries the medians of the most
+    * expensive queries, added in descending median order while the line
+    * stays within `lineBudget` bytes; `queries_omitted` counts the rest.
+    */
+  def contractLine(total: Double, calib: Double, calibIo: Double,
+      sweeps: Int, calibsJson: String, source: String, nFailed: Int,
+      ioJson: String, ok: Map[String, Double], sfDir: String,
+      lineBudget: Int): String = {
+    val valueCalib = total / calib
+    def summaryWith(entries: Seq[(String, Double)], omitted: Int): String = {
+      val qsTop = entries.map { case (k, v) => "\"" + k + "\":" + fixed(v, 3) }
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":$total,"value_calib":$valueCalib,"unit":"sec","stat":"median_of_sweeps","sweeps":$sweeps,"calib":$calib,"calib_io":$calibIo,"calibs":$calibsJson,"source":"$source","n":${ok.size},"n_failed":$nFailed,"io":$ioJson,"queries":$qsTop,"queries_omitted":$omitted,"sf":"$sfDir"}"""
+    }
+    val byCost = ok.toSeq.sortBy { case (k, v) => (-v, k) }
+    // largest prefix of the cost-ordered queries that keeps the line
+    // within budget (every prefix is monotonically longer, so the scan
+    // finds the exact cut)
+    val kFit = (0 to byCost.size).reverse
+      .find(k => summaryWith(byCost.take(k), byCost.size - k).length <= lineBudget)
+      .getOrElse(0)
+    summaryWith(byCost.take(kFit), byCost.size - kFit)
+  }
+
   def main(args: Array[String]): Unit = {
     // mechanical mutual exclusion with any ScaleProbe chain — fail fast
     // BEFORE building a session, so a contaminated official record
@@ -170,7 +200,7 @@ object Bench {
         // per-query progress on stderr: long sweeps were a black box
         // until the final JSON (stdout stays reserved for that line)
         System.err.println(
-          s"[bench $s/$sweeps] $name ${t.times.map(x => f"$x%.2f").mkString("/")}s" +
+          s"[bench $s/$sweeps] $name ${t.times.map(fixed(_, 2)).mkString("/")}s" +
             (if (t.times.size < nRuns)
               " FAILED " + t.err.getOrElse("") else ""))
         name -> t
@@ -242,14 +272,14 @@ object Bench {
     // across three sweeps — a cross-round comparison needs to know it)
     val sweepTotals = perSweep
       .map(m => ok.keys.map(k => m(k).times.min).sum)
-      .map(v => f"$v%.3f").mkString("[", ",", "]")
+      .map(fixed(_, 3)).mkString("[", ",", "]")
     // record provenance (r16 verdict item 4: two "official" r16 records
     // coexisted — the builder's close run and the driver's post-close
     // run — and nothing in either file said which was which): the
     // harness stamps who invoked it; round_close exports builder-close
     val source = sys.env.getOrElse("SPARK_GRAFT_BENCH_SOURCE", "driver")
-    val calibsJson = sweepCalibs.map(c => f"$c%.6f").mkString("[", ",", "]")
-    val calibsIoJson = sweepCalibsIo.map(c => f"$c%.6f").mkString("[", ",", "]")
+    val calibsJson = sweepCalibs.map(fixed(_, 6)).mkString("[", ",", "]")
+    val calibsIoJson = sweepCalibsIo.map(fixed(_, 6)).mkString("[", ",", "]")
     // "queries" carries the official (median) statistic; the explicit
     // "queries_median" alias says so to any consumer diffing rounds
     val json =
@@ -333,21 +363,8 @@ object Bench {
     // overruns gets HEAD-truncated and the round loses its bench
     // record entirely (the r1/r2 failure mode), which is never worth a
     // few more sub-2s entries whose deltas are noise anyway
-    val lineBudget = 1650
-    val valueCalib = total / calib
-    def summaryWith(entries: Seq[(String, Double)], omitted: Int): String = {
-      val qsTop = entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"value_calib":$valueCalib,"unit":"sec","stat":"median_of_sweeps","sweeps":$sweeps,"calib":$calib,"calib_io":$calibIo,"calibs":$calibsJson,"source":"$source","n":${ok.size},"n_failed":${failed.size},"io":$ioJson,"queries":$qsTop,"queries_omitted":$omitted,"sf":"$sfDir"}"""
-    }
-    val byCost = ok.toSeq.sortBy { case (k, v) => (-v, k) }
-    // largest prefix of the cost-ordered queries that keeps the line
-    // within budget (every prefix is monotonically longer, so the scan
-    // finds the exact cut)
-    val kFit = (0 to byCost.size).reverse
-      .find(k => summaryWith(byCost.take(k), byCost.size - k).length <= lineBudget)
-      .getOrElse(0)
-    val summary = summaryWith(byCost.take(kFit), byCost.size - kFit)
+    val summary = contractLine(total, calib, calibIo, sweeps, calibsJson,
+      source, failed.size, ioJson, ok, sfDir, lineBudget = 1650)
     println(summary)
     spark.stop()
     benchLock.close()

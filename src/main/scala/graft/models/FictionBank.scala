@@ -348,10 +348,7 @@ class FictionBankDag(spark: SparkSession, warehouseDir: String) {
       m.materialization match {
         case View =>
           df.createOrReplaceTempView(m.name); df
-        case Table =>
-          val path = s"$warehouseDir/${m.name}"
-          df.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path) // downstream refs read the TABLE, not the plan
+        case Table => graft.sources.Tables.writeTable(df, s"$warehouseDir/${m.name}")
       }
     }
     var built: Map[String, DataFrame] = seeds

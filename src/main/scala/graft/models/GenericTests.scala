@@ -165,7 +165,7 @@ object GenericTests {
         Some(path)
       } else None
       val n = stored.fold(frame.count())(p =>
-        frame.sparkSession.read.parquet(p).count())
+        graft.sources.Tables.readWritten(frame.sparkSession, p, frame.schema).count())
       TestResult(t.name, n, t.config.status(n), stored)
     }
 }

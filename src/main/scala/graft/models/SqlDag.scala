@@ -874,10 +874,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       contractByModel.get(m.name).foreach(enforceContract(_, df))
       val materialized = m.materialization match {
         case View | Ephemeral => df
-        case Table =>
-          val path = s"$warehouseDir/${m.name}"
-          df.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
+        case Table => graft.sources.Tables.writeTable(df, s"$warehouseDir/${m.name}")
       }
       materialized.createOrReplaceTempView(m.name)
       runHooks(m.postHooks)

@@ -29,28 +29,27 @@ object ScaleOps {
     * store measured 3 upstream tasks × 8 buckets = 24 fragments per
     * write at demo scale; at corpus scale N is the full shuffle width).
     * Every probe/join then opens N×B files and every REFRESH relists
-    * them. The fix shuffles by the bucket columns into exactly
-    * `buckets` partitions first: `repartition(buckets, keys)` is the
-    * same HashPartitioning(keys, buckets) expression Spark's bucketing
-    * hashes rows with, so each output task holds exactly one bucket's
-    * rows and writes exactly ONE file — B files total, the layout a
-    * bucketed store is supposed to have. A REBALANCE hint (not a hard
-    * `repartition(buckets)`) does the aligning: AQE coalesces the
-    * exchange to as few tasks as the data warrants (locally: one task →
-    * still exactly B files, the writer splits by bucket id within the
-    * task) and can SPLIT a fat bucket across tasks at corpus scale
-    * (several well-sized files for that bucket — valid bucketed layout —
-    * instead of one straggling writer), so write parallelism is sized by
-    * data volume rather than capped at `buckets`.
+    * them. The fix shuffles by the bucket columns first, with a
+    * REBALANCE hint: it hash-partitions rows by the keys into
+    * `spark.sql.shuffle.partitions` partitions, so all rows of one key
+    * reach one writer task. AQE then coalesces adjacent partitions to
+    * as few tasks as the data warrants, and a coalesced task may hold
+    * several buckets (the writer splits by bucket id within the task),
+    * or SPLITS a fat partition across tasks at corpus scale. So the
+    * write does not give exactly B files: it gives at most one file per
+    * pre-coalesce partition when B divides the shuffle width (a
+    * partition then holds one bucket's keys), lcm(B, width) files at
+    * most in general, plus one per split — independent of N, and still
+    * a valid bucketed layout (bucketed reads accept several files per
+    * bucket).
     */
-  private def bucketAligned(df: DataFrame, buckets: Int,
-      keys: Seq[String]): DataFrame =
+  private def bucketAligned(df: DataFrame, keys: Seq[String]): DataFrame =
     df.hint("rebalance", keys.map(col): _*)
 
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String], sortCols: Seq[String] = Nil,
       path: Option[String] = None): Unit = {
-    val w0 = bucketAligned(df, buckets, keys)
+    val w0 = bucketAligned(df, keys)
       .write.mode("overwrite").bucketBy(buckets, keys.head, keys.tail: _*)
     val w1 = if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*) else w0
     val w2 = path.fold(w1)(p => w1.option("path", p))
@@ -70,10 +69,10 @@ object ScaleOps {
   def appendBucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String], sortCols: Seq[String] = Nil): Unit = {
     // same write-side distribution as [[writeBucketed]]: each append
-    // adds exactly `buckets` files to the store instead of
-    // tasks × buckets fragments — over a crawl loop's lifetime the
+    // adds files bounded by the shuffle width instead of tasks × buckets
+    // fragments — over a crawl loop's lifetime the
     // difference compounds into the store's whole listing cost
-    val w0 = bucketAligned(df, buckets, keys)
+    val w0 = bucketAligned(df, keys)
       .write.mode("append").bucketBy(buckets, keys.head, keys.tail: _*)
     val w1 = if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*) else w0
     w1.format("parquet").saveAsTable(table)

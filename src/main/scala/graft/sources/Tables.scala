@@ -1,6 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -146,6 +152,54 @@ object Tables {
     StructField("principal_paid", DoubleType),
     StructField("interest_paid", DoubleType),
     StructField("payment_status", StringType)))
+
+  /** Overwrite `path` with `df` as parquet and return the stored table,
+    * read back with the schema just written ([[readWritten]]) — the one
+    * write-and-reread of a whole-table materialization: downstream refs
+    * read the TABLE, not the plan.
+    */
+  def writeTable(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    readWritten(df.sparkSession, path, df.schema)
+  }
+
+  /** Read the parquet table at `path`, written whole by one write of a
+    * frame with `schema`. Every file's footer holds exactly that schema,
+    * and the file source makes the schema nullable whether it is given or
+    * inferred, so this equals `spark.read.parquet(path)` — without the
+    * inference job (`mergeSchemasInParallel`) that reads a footer on an
+    * executor. Not for partitioned or appended-to tables: partition
+    * columns come from directory names, and appended files may differ.
+    */
+  def readWritten(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
+  /** The Spark schema of the parquet table at `path`, read without a
+    * Spark job from the footer of its first `part-*.parquet` file — the schema
+    * string Spark's own inference job would read there, converted by the
+    * same `ParquetFileFormat.readSchemaFromFooter`. None when the table
+    * has no data file or the footer carries no Spark schema (a file
+    * written by another tool). Only valid for a table whose files all
+    * share one schema, e.g. one written whole by one write.
+    */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    fs.listStatus(dir)
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
+        s.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName).headOption
+      .flatMap { file =>
+        val meta = ParquetFileReader.readFooter(
+          HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        if (!meta.getFileMetaData.getKeyValueMetaData
+            .containsKey(ParquetReadSupport.SPARK_METADATA_KEY)) None
+        else Some(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      }
+  }
 
   /** CSV seed ingest (SURVEY §2A S1): header row, quoted fields with embedded
     * commas, empty field → NULL. Reads from a directory containing the three

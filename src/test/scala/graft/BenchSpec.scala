@@ -54,6 +54,24 @@ class BenchSpec extends SparkSpec {
     assert(ok.times.size === 2 && ok.err.isEmpty)
   }
 
+  test("contract line numbers parse as JSON under a decimal-comma locale") {
+    val before = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val line =
+      try {
+        assert(f"${1.5}%.1f" === "1,5") // the locale really is in force
+        Bench.contractLine(total = 12.25, calib = 1.5, calibIo = 0.75,
+          sweeps = 3, calibsJson = Seq(1.4, 1.5, 1.6).map(Bench.fixed(_, 6))
+            .mkString("[", ",", "]"),
+          source = "spec", nFailed = 0, ioJson = "[]",
+          ok = Map("q01" -> 2.125, "q02" -> 0.5), sfDir = "sf0.1", lineBudget = 1650)
+      } finally java.util.Locale.setDefault(before)
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(tree.get("queries").get("q01").asDouble() === 2.125)
+    assert(tree.get("calibs").get(1).asDouble() === 1.5)
+    assert(tree.get("queries_omitted").asInt() === 0)
+  }
+
   test("jsonEscape keeps failure messages one-line-JSON safe") {
     assert(Bench.jsonEscape("""say "hi"\ now""") === """say \"hi\"\\ now""")
     assert(Bench.jsonEscape("a\nb\tc\rd") === "a\\nb\\tc\\rd")
