@@ -2,38 +2,32 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE definition of the timing protocol shared by [[Bench]] (the
-  * official per-round record) and [[ScaleProbe]] (the scale-sweep
-  * harness) — r8 review: the two had copy-pasted blocks that had
-  * already drifted (unconditional gc, missing noop-write warmup), which
-  * silently breaks the "ratios are protocol-consistent" premise every
-  * BENCHNOTES table rests on.
+/** The timing protocol shared by [[Bench]] (the full-suite record) and
+  * [[ScaleProbe]] (the scale-sweep harness): one lock, one warmup, one
+  * timing action, one release between timings and one pair of
+  * calibrations, so ratios between the two harnesses compare like with
+  * like.
   */
 object BenchProtocol {
 
   /** Repo root for harness artifacts (BENCH_FULL.json, the bench lock):
-    * `SPARK_GRAFT_REPO`, else the sbt-set `user.dir`, else CWD — ONE
-    * definition so Bench and ScaleProbe can never resolve to different
-    * lock files (round-5 advice for the record path; the lock rides
-    * the same rule).
+    * `SPARK_GRAFT_REPO`, else the sbt-set `user.dir`, else CWD. One
+    * definition, so Bench and ScaleProbe always resolve the same lock
+    * file and a caller outside the repo root still writes the record
+    * into the repo.
     */
   def repoRoot: String = sys.env.get("SPARK_GRAFT_REPO")
     .orElse(sys.props.get("user.dir")).getOrElse(".")
 
-  /** Mutual-exclusion lock for timing harnesses. r9's OFFICIAL bench
-    * record was invalid because the round-close Bench ran concurrently
-    * with a detached ScaleProbe chain on the same 32 CPUs (and a disk
-    * the chain was exhausting) — 182 s and a spurious per-query
-    * failure vs 117 s on a quiet box. Two timing JVMs sharing the box
-    * can only produce garbage, so exclusion is now MECHANICAL: both
-    * [[Bench]] and [[ScaleProbe]] acquire an OS-level file lock
+  /** Mutual-exclusion lock for timing harnesses. Two timing JVMs sharing
+    * one box slow each other down and can fail each other's queries (a
+    * Bench run next to a ScaleProbe took 182 s against 117 s alone), so
+    * [[Bench]] and [[ScaleProbe]] both take an OS-level file lock
     * (`target/.graft_bench_lock` under [[repoRoot]]) before building
-    * their SparkSession; the second acquirer FAILS FAST with a named
-    * error instead of silently contaminating the first. An OS `flock`
-    * — not a marker file — so a crashed/killed harness releases the
-    * lock with its process and can never wedge the next round.
-    * Returns a handle to close when timing is done; process exit also
-    * releases it.
+    * their SparkSession, and the second acquirer fails fast with a named
+    * error. An OS `flock`, not a marker file, so a crashed or killed
+    * harness releases the lock with its process. Returns a handle to
+    * close when timing is done; process exit also releases it.
     */
   def acquireBenchLock(root: String = repoRoot): java.io.Closeable = {
     import java.nio.file.{Files, Paths, StandardOpenOption => O}
@@ -55,9 +49,9 @@ object BenchProtocol {
       throw new IllegalStateException(
         s"graft bench lock $path is HELD" +
           (if (holder.nonEmpty) s" ($holder)" else "") +
-          " — another timing harness (Bench or a ScaleProbe chain) is " +
+          " — another timing harness (Bench or a ScaleProbe run) is " +
           "running on this box; a concurrent run would contaminate both " +
-          "records (r9 lesson). Wait for it to finish.")
+          "records. Wait for it to finish.")
     }
     ch.truncate(0)
     ch.write(java.nio.ByteBuffer.wrap(
@@ -78,22 +72,20 @@ object BenchProtocol {
   def evaluate(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Release executor storage between timings so query N's
-    * localCheckpoints never distort query N+1's clock, and nudge
-    * shuffle-file cleanup (ContextCleaner deletes shuffles only when
-    * their dependencies are unreachable AND a GC runs — long sweeps on
-    * a big heap otherwise accumulate each query's spill until the disk
-    * fills; observed ~50 GB at the r7 sf10 probe). `gcMode`:
-    * "blocking" (default — pair with
-    * `spark.cleaner.referenceTracking.blocking.shuffle=true` so
-    * deletions complete HERE, outside every timed window), "async"
-    * (the r7 behavior, kept for A/B), "off" (no gc call).
+  /** Release executor storage between timings so one query's cached
+    * frames and localCheckpoints never distort the next query's clock,
+    * and run `System.gc()` so the ContextCleaner deletes the shuffle
+    * files of plans that went unreachable: it deletes them only after a
+    * GC, so a long sweep on a big heap would otherwise keep every
+    * query's shuffle files until the disk fills (~50 GB in an sf10
+    * sweep). Under [[GraftSession.local]]'s blocking shuffle cleanup the
+    * deletions finish here, outside every timed window.
     */
-  def releaseStorage(spark: SparkSession, gcMode: String = "blocking"): Unit = {
+  def releaseStorage(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    if (gcMode != "off") System.gc()
+    System.gc()
   }
 
   /** JIT/codegen warmup: exercise the shuffle, codegen AND noop-write
@@ -108,8 +100,8 @@ object BenchProtocol {
     } catch { case _: Throwable => }
 
   /** Machine-speed calibration: a fixed CPU-bound job (range sum + hash
-    * agg), timed after warmup — container CPU throughput varies
-    * several-fold between rounds. CPU-only: pair with [[calibIo]].
+    * agg), timed after warmup; container CPU throughput varies
+    * several-fold between time windows. CPU-only: pair with [[calibIo]].
     */
   def calib(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
@@ -119,10 +111,10 @@ object BenchProtocol {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** I/O calibration (r8): a fixed ~64 MB parquet write+read round trip
-    * through the local disk and the datasource scan path — the r7 1.56x
-    * regression was invisible to the CPU calib (which IMPROVED across
-    * the same span); this measures the dimension that moved.
+  /** I/O calibration: a fixed ~64 MB parquet write+read round trip
+    * through the local disk and the datasource scan path. Query time on
+    * a shared box can move with disk speed while the CPU calibration
+    * stays flat or improves; this measures that dimension.
     */
   def calibIo(spark: SparkSession): Double = {
     val dir = java.nio.file.Files.createTempDirectory("graft-calib-io")

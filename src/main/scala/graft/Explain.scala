@@ -3,17 +3,14 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: `runMain graft.Explain <query>[,<query>...]
   * [sfDir] [outDir]` prints the formatted physical plan of each named
   * SparkEntry query — the iterate-on-the-plan loop (builder prompt:
   * explain until it's the plan you'd want, not the first one that
   * passed). With a single query and no outDir it also times two
   * `count()`s (warm/cold) as a quick probe; with `outDir` each plan is
-  * written to `outDir/<query>.txt` instead (the r17 optimization-round
-  * evidence trail: plans/r17/<query>_before.txt / _after.txt are these
-  * files, committed).
+  * written to `outDir/<query>.txt` instead (the committed before/after
+  * plans under `plans/` are these files).
   *
   * Queries that drive their own actions eagerly (multi-batch demos like
   * x59/x12/x13) still produce a plan for their FINAL frame — the
@@ -25,16 +22,7 @@ object Explain {
     val names = args(0).split(',').toSeq.filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.bootstrap(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     outDir.foreach(d => Files.createDirectories(Paths.get(d)))
     val built = names.map { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -56,7 +44,7 @@ object Explain {
       // demos (x59/x12/x13 — store writes, scratch setup) execute those
       // actions when the query function is CALLED, so building the
       // DataFrame a second time here would run the writes twice and
-      // time a rebuilt state (r17 advice)
+      // time a rebuilt state
       val df = built.head
       val t0 = System.nanoTime()
       val n = df.count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.models.FictionBankDag
 import graft.sources.Tables
 
@@ -16,17 +15,7 @@ object RunPipeline {
     val seedsDir = if (args.length > 0) args(0) else "src/test/resources/seeds"
     val warehouseDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.bootstrap(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     // GraftExtensions injects FanoutLint, which flags the checked-in
     // agg_monthly_loans fan-out join as the pipeline materializes it
     // (reference: docs/bug-analysis.md)
@@ -37,7 +26,7 @@ object RunPipeline {
 
     // dbt's `threads`: independent models in one dependency wave build
     // concurrently (e.g. the two mart variants + loan_monthly_detail)
-    val threads = sys.env.getOrElse("SPARK_GRAFT_THREADS", "4").toInt
+    val threads = GraftSession.intEnv("SPARK_GRAFT_THREADS", 4)
     val t0 = System.nanoTime()
     val dag = new FictionBankDag(spark, warehouseDir)
     val built = dag.run(seeds, threads = threads)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-probe variants that the demo registry cannot express: a
@@ -103,45 +103,11 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    // same mechanical mutual exclusion as Bench (ONE lock file): a
-    // probe must never run while an official bench is timing, and vice
-    // versa — the r9 official record was contaminated exactly this way
+    // the same lock as Bench: a probe never runs while a bench is
+    // timing, and vice versa
     val benchLock = BenchProtocol.acquireBenchLock()
     val (op, sfDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_GC mirrors Bench EXACTLY — validated, read before
-    // session construction, and wired to blocking.shuffle the same way,
-    // so SPARK_GRAFT_GC=async in a probe reproduces Bench's async
-    // behavior (r8 advice: the knob was half-wired here — blocking
-    // shuffle deletion was hardcoded while releaseStorage still honored
-    // the env var, so the A/B was silently partial in this harness)
-    val gcMode = sys.env.getOrElse("SPARK_GRAFT_GC", "blocking")
-    require(Set("blocking", "async", "off")(gcMode),
-      s"SPARK_GRAFT_GC must be blocking|async|off, got '$gcMode'")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle",
-        (gcMode == "blocking").toString)
-      // the checkpoint-cut storage-level A/B knob (r14 verdict item 1):
-      // validated HERE so a typo fails the chain before an hour-long
-      // face, and stamped into the record below so every probe says
-      // which level it measured
-      .config("spark.graft.checkpoint.storage", {
-        val lvl = sys.env.getOrElse("SPARK_GRAFT_CKPT_STORAGE",
-          "MEMORY_AND_DISK_SER")
-        org.apache.spark.storage.StorageLevel.fromString(lvl)
-        lvl
-      })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-    graft.sources.Tables.bootstrap(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
 
     val cap = 64 // the production stop-bucket cap the r7 verdict asks measured
     val rates = graft.queries.CorpusCleanDemos.rates // x11/x50's exact params
@@ -350,8 +316,8 @@ object ScaleProbe {
         // cannot: micro-batch count, emitted pairs, and the pair-dedup
         // operator's max state rows/bytes — the number that decides
         // whether the watermark bounds state at corpus scale.
-        val waves = sys.env.getOrElse("SPARK_GRAFT_STREAM_WAVES", "8").toInt
-        require(waves >= 1 && waves <= 59,
+        val waves = GraftSession.intEnv("SPARK_GRAFT_STREAM_WAVES", 8)
+        require(waves <= 59,
           s"SPARK_GRAFT_STREAM_WAVES must be in [1, 59], got $waves")
         // stream-static joins must SHUFFLE on this face: micro-batch
         // planning broadcast the corpus text side at the 500k size class
@@ -387,8 +353,7 @@ object ScaleProbe {
         // accumulation, not the watermark-bounded steady state this
         // number is supposed to decide — with 5-minute steps evictions
         // actually occur from the third micro-batch on)
-        val stepMin = sys.env.getOrElse("SPARK_GRAFT_WAVE_STEP_MIN", "5").toInt
-        require(stepMin >= 1, s"SPARK_GRAFT_WAVE_STEP_MIN must be >= 1, got $stepMin")
+        val stepMin = GraftSession.intEnv("SPARK_GRAFT_WAVE_STEP_MIN", 5)
         val epoch0 = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond
         (0 until waves).foreach { w =>
           arrivals.filter(pmod(col("doc_id"), lit(waves)) === w)
@@ -547,7 +512,7 @@ object ScaleProbe {
         // estimates the full-universe recall, and running both faces at
         // 500k measures the estimator's residual bias directly.
         val k = if (op == "recall_sampled")
-          Some(sys.env.getOrElse("SPARK_GRAFT_RECALL_BANDS", "2").toInt)
+          Some(GraftSession.intEnv("SPARK_GRAFT_RECALL_BANDS", 2))
         else None
         val budget = sys.env.getOrElse("SPARK_GRAFT_PAIR_BUDGET", "32").toDouble
         val nd = docs.count()
@@ -617,8 +582,8 @@ object ScaleProbe {
         // the record carries the sample size (n_true) and a binomial
         // 95% CI per cap so the measuredRecallTable row can state its
         // precision. Validated against the exact 5M row (same corpus,
-        // same caps) before the 10M face runs — probe_r17.sh face order.
-        val oneIn = sys.env.getOrElse("SPARK_GRAFT_SAMPLE_ONE_IN", "8").toInt
+        // same caps) before the 10M face runs.
+        val oneIn = GraftSession.intEnv("SPARK_GRAFT_SAMPLE_ONE_IN", 8)
         val budget = sys.env.getOrElse("SPARK_GRAFT_PAIR_BUDGET", "32").toDouble
         val nd = docs.count()
         val budgetGrid = sys.env.get("SPARK_GRAFT_BUDGET_GRID")
@@ -680,8 +645,7 @@ object ScaleProbe {
     // (BENCHNOTES r8), so cross-window probe comparisons need calib_io
     val calibIo = BenchProtocol.calibIo(spark)
 
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "1").toInt
-    require(nRuns >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $nRuns")
+    val nRuns = GraftSession.intEnv("SPARK_GRAFT_RUNS", 1)
     // attached after warmup + calib: the record's shuffle/spill counters
     // cover ONLY the timed runs
     val metrics = new ProbeMetrics
@@ -690,7 +654,7 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       BenchProtocol.evaluate(result())
       val dt = (System.nanoTime() - t0) / 1e9
-      BenchProtocol.releaseStorage(spark, gcMode)
+      BenchProtocol.releaseStorage(spark)
       dt
     }
     metrics.quiesce()
@@ -701,8 +665,7 @@ object ScaleProbe {
     // regime it measured or cross-round ratios silently mix codecs.
     val codec = spark.conf.getOption("spark.io.compression.codec").getOrElse("lz4")
     val bg = bandGroups.fold("")(g => s""","band_groups":$g""") +
-      verifyGroups.fold("")(g => s""","verify_groups":$g""") +
-      s""","ckpt_storage":"${spark.conf.get("spark.graft.checkpoint.storage")}""""
+      verifyGroups.fold("")(g => s""","verify_groups":$g""")
     val dg =
       if (diag.isEmpty) ""
       else diag.toSeq.sortBy(_._1)

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.Checkpoints
 import graft.sources.Tables
 
 /** dbt `incremental` materialization analog: a model that, after its first
@@ -154,9 +155,10 @@ object Incremental {
           // models re-read affected partitions), and Spark correctly
           // refuses to overwrite a path a lazy plan still reads. The
           // delta is batch-sized by contract, so the checkpoint is
-          // bounded; a transactional format's MERGE/REPLACE WHERE makes
-          // both the pin and the swap storage-side.
-          val pinned = delta.localCheckpoint(true)
+          // bounded, and it is released once the write is done; a
+          // transactional format's MERGE/REPLACE WHERE makes both the
+          // pin and the swap storage-side.
+          val (pinned, pinIds) = Checkpoints.tracked(delta)
           // dynamic mode: only partitions present in the delta are
           // replaced (static mode would silently truncate the whole
           // table). The conf must hold at write execution, but it also
@@ -167,9 +169,12 @@ object Incremental {
           val before = spark.conf.getOption(key)
           spark.conf.set(key, "dynamic")
           try partitionedWrite(pinned, parts)
-          finally before match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
+          finally {
+            before match {
+              case Some(v) => spark.conf.set(key, v)
+              case None => spark.conf.unset(key)
+            }
+            Checkpoints.release(spark.sparkContext, pinIds)
           }
           spark.read.parquet(path)
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints
 import graft.functions.{Hashing, MinHashAgg}
 
 /** Reusable text-deduplication operators (SURVEY.md §2B X1/X2) — the
@@ -33,53 +34,13 @@ object TextDedup {
   graft.plans.FanoutLint.allowContractKeys(
     "__graft_id_a", "__graft_id_b", "__graft_new_id", "__graft_old_id")
 
-  /** Storage level for the operators' own eager checkpoint cuts —
-    * `spark.graft.checkpoint.storage`, default MEMORY_AND_DISK_SER.
-    *
-    * Why not localCheckpoint's default (MEMORY_AND_DISK, DESERIALIZED):
-    * the r14 sf100 probe chain attributed 54.7 of 57.4 G of disk spill
-    * to the checkpoint-BUILD stages at [[checkpointTracked]] — caching
-    * a 320M-row band index as deserialized InternalRows eats the
-    * unified-memory region the SAME stage's sorts and aggregates need,
-    * so execution spills while storage hoards. Serialized blocks are
-    * several × smaller for these narrow (long, int, long) rows, and
-    * DISK_ONLY removes the storage-memory competition entirely (blocks
-    * stream to disk; reads pay one deserialization — cheap next to the
-    * self-join they feed). The knob exists so the probe chain can A/B
-    * levels without a code edit; fails fast on a level Spark can't
-    * parse. Tracked-release semantics are level-independent (the ids
-    * are persistent-RDD ids either way).
-    */
-  private def cutStorageLevel(df: DataFrame): org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      df.sparkSession.conf.get("spark.graft.checkpoint.storage",
-        "MEMORY_AND_DISK_SER"))
-
   /** The operators' default eager lineage cut: localCheckpoint at
-    * [[cutStorageLevel]]. Public so demo/probe callers that pass a
-    * `materialize*` strategy can opt into the same storage-level knob
-    * instead of hardcoding `_.localCheckpoint(true)` (which pins the
-    * deserialized default).
+    * [[graft.Checkpoints.level]]. Public so demo and probe callers that
+    * pass a `materialize*` strategy cut at the same level instead of
+    * `_.localCheckpoint(true)` (which pins the deserialized default).
     */
   def eagerCut(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, cutStorageLevel(df))
-
-  /** localCheckpoint(eager) + track exactly which persistent RDD ids the
-    * checkpoint created, so a caller can release THAT generation later
-    * (localCheckpoint persists into executor storage and offers no
-    * Dataset-level release). Shared by [[dedupClusters]]' per-round
-    * label generations and the band-group candidate passes.
-    */
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    val out = df.localCheckpoint(true, cutStorageLevel(df))
-    (out, sc.getPersistentRDDs.keySet.toSet.diff(before))
-  }
-
-  private def release(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
-    ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    df.localCheckpoint(true, Checkpoints.level)
 
   /** Nudge the ContextCleaner to reclaim the SHUFFLE FILES of plans that
     * just went unreachable (a localCheckpoint truncates lineage, so the
@@ -764,7 +725,7 @@ object TextDedup {
       val sliceIds = slice
         .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
         .distinct()
-      val (out, _) = checkpointTracked(
+      val (out, _) = Checkpoints.tracked(
         verifyCandidatePairs(slice, df.join(sliceIds, Seq(idCol), "left_semi"),
           idCol, textCol, threshold))
       releaseShuffles() // this slice's shingle-build + verify-join shuffles
@@ -786,12 +747,12 @@ object TextDedup {
       groups: Int, verifyGroups: Option[Int] = None): DataFrame = {
     require(groups >= 1, s"bandGroups must be >= 1, got $groups")
     val sc = df.sparkSession.sparkContext
-    val (bands, bandIds) = checkpointTracked(lshIndex(df, idCol, textCol))
+    val (bands, bandIds) = Checkpoints.tracked(lshIndex(df, idCol, textCol))
     releaseShuffles() // the signature aggregate's shuffle files
     val passes = (0 until groups).map { g =>
       // slicing by band is windowing-safe: the (band, key) bucket count
       // never crosses bands, so a slice sees every row of its buckets
-      val out = checkpointTracked(
+      val out = Checkpoints.tracked(
         lshCandidatePairs(bands.filter(col("band") % groups === g), maxBucket))
       releaseShuffles() // this pass's window + self-join shuffle files
       out
@@ -804,7 +765,7 @@ object TextDedup {
       materialize(passes.map(_._1).reduce(_ union _).distinct()))
     // candidates are cut: the band index and every pass generation are
     // dead weight from here — release before the verify stage spills
-    release(sc, bandIds ++ passes.flatMap(_._2).toSet)
+    Checkpoints.release(sc, bandIds ++ passes.flatMap(_._2).toSet)
     releaseShuffles()
     verifyGroups match {
       case Some(vg) =>
@@ -1464,7 +1425,7 @@ object TextDedup {
     // track each round's checkpoint RDD ids and explicitly unpersist the
     // superseded round, so live storage stays at edges + one label
     // generation instead of one copy per iteration
-    def release(ids: Set[Int]): Unit = TextDedup.release(sc, ids)
+    def release(ids: Set[Int]): Unit = Checkpoints.release(sc, ids)
     // both edge directions from ONE evaluation of the pairs frame: the
     // old self-union (pairs ∪ pairs.swapped) planned the ENTIRE pairs
     // subtree twice — for the composed x2f path that is the full LSH
@@ -1473,7 +1434,7 @@ object TextDedup {
     // item 6: the pairs chain, not the iterations, is x2f's cost). The
     // explode emits (a→b, b→a) per pair row in a codegen projection, so
     // the chain evaluates once; same rows, same distinct.
-    val (edges, edgeIds) = checkpointTracked(
+    val (edges, edgeIds) = Checkpoints.tracked(
       pairs.select(explode(array(
           struct(col(idACol).as("src"), col(idBCol).as("dst")),
           struct(col(idBCol).as("src"), col(idACol).as("dst")))).as("__e"))
@@ -1485,7 +1446,7 @@ object TextDedup {
     // of a full join+agg+update round (r17: saves one loop round — two
     // checkpoint/convergence jobs — per call; the trajectory from here
     // is identical, spec-pinned by the chain-propagation test)
-    var (labels, labelIds) = checkpointTracked(
+    var (labels, labelIds) = Checkpoints.tracked(
       edges.groupBy(col("src"))
         .agg(least(col("src"), min(col("dst"))).as("label"))
         .select(col("src").as("node"), col("label")))
@@ -1495,7 +1456,7 @@ object TextDedup {
       val neighborMin = edges
         .join(labels.select(col("node").as("dst"), col("label").as("nl")), "dst")
         .groupBy(col("src")).agg(min(col("nl")).as("min_nl"))
-      val (updated, newIds) = checkpointTracked(labels
+      val (updated, newIds) = Checkpoints.tracked(labels
         .join(neighborMin.select(col("src").as("node"), col("min_nl")), Seq("node"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("min_nl"), col("label"))).as("label"),

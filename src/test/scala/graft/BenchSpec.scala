@@ -1,11 +1,9 @@
 package graft
 
-/** Harness-discipline specs (r9 verdict items 2 + 3): the bench/probe
-  * mutual-exclusion lock, and failure-reason capture in the timing
-  * loop. Neither touches query semantics — they exist so an OFFICIAL
-  * bench record can never again be silently contaminated (r9's was run
-  * concurrently with a probe chain: +50% total and a spurious failure
-  * with no recorded reason).
+/** Harness-discipline specs: the bench/probe mutual-exclusion lock,
+  * failure-reason capture in the timing loop, and the record line's
+  * JSON. None touches query semantics; they keep a bench record from
+  * being contaminated by a concurrent run or losing why a query failed.
   */
 class BenchSpec extends SparkSpec {
 
@@ -38,18 +36,18 @@ class BenchSpec extends SparkSpec {
   }
 
   test("timeQuery records the failure reason as <class>: <message>") {
-    val t = Bench.timeQuery(spark, nRuns = 1, gcMode = "off")(() =>
+    val t = Bench.timeQuery(spark, nRuns = 1)(() =>
       throw new RuntimeException("boom: stage 3 lost"))
     assert(t.times.isEmpty)
     assert(t.err === Some("java.lang.RuntimeException: boom: stage 3 lost"))
     // multiline Spark messages flatten to one line, bounded length
-    val t2 = Bench.timeQuery(spark, nRuns = 1, gcMode = "off")(() =>
+    val t2 = Bench.timeQuery(spark, nRuns = 1)(() =>
       throw new IllegalStateException("line1\nline2\n" + "x" * 500))
     val err2 = t2.err.get
     assert(err2.startsWith("java.lang.IllegalStateException: line1 line2"))
     assert(err2.length <= "java.lang.IllegalStateException: ".length + 300)
     // a healthy query times normally and carries no err
-    val ok = Bench.timeQuery(spark, nRuns = 2, gcMode = "off")(() =>
+    val ok = Bench.timeQuery(spark, nRuns = 2)(() =>
       spark.range(10).toDF("id"))
     assert(ok.times.size === 2 && ok.err.isEmpty)
   }

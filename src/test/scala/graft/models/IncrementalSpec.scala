@@ -244,6 +244,21 @@ class IncrementalSpec extends SparkSpec {
     assert(!Files.exists(staging(path)))
   }
 
+  test("insert_overwrite releases the delta's pin after the write") {
+    val path = tmp()
+    val strat = Incremental.InsertOverwrite(Seq("p"))
+    Incremental.run(spark, path, strat) { (_, _) =>
+      Seq(("d1", "a", 1L), ("d2", "b", 2L)).toDF("p", "k", "v")
+    }
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val r = Incremental.run(spark, path, strat) { (inc, _) =>
+      assert(inc); Seq(("d2", "b", 20L)).toDF("p", "k", "v")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(persisted).isEmpty)
+    assert(r.select("p", "k", "v").as[(String, String, Long)].collect().toSet ===
+      Set(("d1", "a", 1L), ("d2", "b", 20L)))
+  }
+
   test("insert_overwrite refuses an empty partition list") {
     intercept[IllegalArgumentException](Incremental.InsertOverwrite(Nil))
   }

@@ -49,23 +49,17 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  test("checkpoint storage knob: DISK_ONLY cuts ≡ default level; bad level fails fast") {
+  test("tracked checkpoint cuts persist at MEMORY_AND_DISK_SER and release") {
+    val sc = spark.sparkContext
     val docs = Tables.table(spark, sfDir, "documents")
-    val default = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        maxBucket = Some(64), bandGroups = Some(2))
-      .collect().map(_.mkString("|")).toSet
+    val (cut, ids) = graft.Checkpoints.tracked(docs.select("doc_id"))
     try {
-      spark.conf.set("spark.graft.checkpoint.storage", "DISK_ONLY")
-      val diskOnly = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-          maxBucket = Some(64), bandGroups = Some(2))
-        .collect().map(_.mkString("|")).toSet
-      assert(diskOnly === default)
-      assert(default.nonEmpty)
-      spark.conf.set("spark.graft.checkpoint.storage", "NOT_A_LEVEL")
-      intercept[IllegalArgumentException] {
-        TextDedup.eagerCut(docs.limit(1))
-      }
-    } finally spark.conf.unset("spark.graft.checkpoint.storage")
+      assert(ids.nonEmpty)
+      ids.foreach(id => assert(sc.getPersistentRDDs(id).getStorageLevel ===
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+      assert(cut.count() === docs.count())
+    } finally graft.Checkpoints.release(sc, ids)
+    assert(ids.forall(id => !sc.getPersistentRDDs.contains(id)))
   }
 
   test("minhash LSH: band-grouped path ≡ monolithic, runs ≥ groups+2 sequential jobs, releases its intermediates") {

