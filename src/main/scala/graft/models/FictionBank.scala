@@ -1,6 +1,6 @@
 package graft.models
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,7 +11,9 @@ import org.apache.spark.sql.types._
   * Each reference model is one Scala function `DataFrame => DataFrame` shape;
   * `{{ ref('x') }}` edges (reference: stg_loans.sql:2, fct_loan_details.sql:2,6,
   * agg_monthly_loans.sql:2,6) become plain function arguments, so lineage is
-  * the Scala call graph (see [[FictionBankDag]]).
+  * the Scala call graph. The project itself runs as SQL texts through
+  * [[SqlDag]] ([[FictionBankSql]]); these functions are the reference that
+  * FictionBankSqlSpec compares those texts against.
   *
   * Scale note: all transforms are declarative DataFrame ops — Catalyst prunes
   * columns/pushes filters; the single dim join is broadcast (3-row dim); the
@@ -202,180 +204,5 @@ object FictionBank {
       .select(col("expected_rows"), col("actual_rows"),
         (col("actual_rows") - col("expected_rows")).as("extra_rows"))
       .filter(col("actual_rows") =!= col("expected_rows"))
-  }
-}
-
-/** dbt-style DAG orchestration (SURVEY §2A M1, §3.2): named models with
-  * `ref()` edges, topological execution, and the two materialization
-  * strategies — staging as temp views (dbt_project.yml:19-20), marts as
-  * parquet tables written then RE-READ (dbt_project.yml:21-22), preserving
-  * dbt's cut-point semantics (SURVEY §3.2.5).
-  */
-class FictionBankDag(spark: SparkSession, warehouseDir: String) {
-  import FictionBank._
-
-  sealed trait Materialization
-  case object View extends Materialization
-  case object Table extends Materialization
-
-  case class Model(
-      name: String,
-      deps: Seq[String],
-      materialization: Materialization,
-      build: Map[String, DataFrame] => DataFrame)
-
-  private val models = Seq(
-    Model("stg_loans", Seq("raw_loans"), View, m => stgLoans(m("raw_loans"))),
-    Model("stg_loan_payments", Seq("raw_loan_payments"), View,
-      m => stgLoanPayments(m("raw_loan_payments"))),
-    Model("fct_loan_details", Seq("stg_loans", "loan_types"), Table,
-      m => fctLoanDetails(m("stg_loans"), m("loan_types"))),
-    Model("agg_monthly_loans", Seq("fct_loan_details", "stg_loan_payments"), Table,
-      m => aggMonthlyLoansBuggy(m("fct_loan_details"), m("stg_loan_payments"))),
-    Model("agg_monthly_loans_fixed", Seq("fct_loan_details", "stg_loan_payments"), Table,
-      m => aggMonthlyLoansFixed(m("fct_loan_details"), m("stg_loan_payments"))),
-    Model("loan_monthly_detail", Seq("fct_loan_details"), Table,
-      m => loanMonthlyDetail(m("fct_loan_details"))))
-
-  /** Lineage graph, dbt `ref()`-equivalent: model -> upstream names. */
-  def lineage: Map[String, Set[String]] =
-    models.map(m => m.name -> m.deps.toSet).toMap
-
-  /** The project's data tests — the schema.yml the reference configures
-    * but never ships (dbt_project.yml:8), expressed with the four dbt
-    * generic tests ([[GenericTests]]) plus the reference's documented
-    * grain test (docs/bug-analysis.md:139-157). Evaluate with [[test]].
-    */
-  val dataTests: Seq[GenericTests.DataTest] = {
-    import GenericTests._
-    Seq(
-      DataTest("unique_stg_loans_loan_id",
-        b => unique(b("stg_loans"), "loan_id")),
-      DataTest("not_null_stg_loans_loan_id",
-        b => notNull(b("stg_loans"), "loan_id")),
-      DataTest("unique_stg_loan_payments_payment_id",
-        b => unique(b("stg_loan_payments"), "payment_id")),
-      DataTest("not_null_stg_loan_payments_payment_status",
-        b => notNull(b("stg_loan_payments"), "payment_status")),
-      DataTest("accepted_values_payment_status",
-        b => acceptedValues(b("stg_loan_payments"), "payment_status",
-          Seq("completed", "pending", "failed"))),
-      DataTest("relationships_stg_loans_loan_type_id",
-        b => relationships(b("stg_loans"), "loan_type_id",
-          b("loan_types"), "loan_type_id")),
-      DataTest("relationships_payments_loan_id",
-        b => relationships(b("stg_loan_payments"), "loan_id",
-          b("stg_loans"), "loan_id")),
-      // the reference's grain test — over-strict by design: the payment-
-      // only month (NULL type) makes it flag BOTH mart variants with
-      // extra_rows = 1 (see FictionBankSpec's golden assertion). These
-      // KNOWN-informational tests carry dbt's triage config — demoted to
-      // `severity: warn` with `store_failures` so a build still goes
-      // green while the flagged rows persist to the audit schema — the
-      // exact workflow dbt users run while a bug like the checked-in
-      // fan-out is being analyzed (docs/bug-analysis.md)
-      DataTest("grain_agg_monthly_loans",
-        b => grainTest(b("fct_loan_details"), b("agg_monthly_loans")),
-        TestConfig(severity = "warn", storeFailures = true)),
-      DataTest("grain_agg_monthly_loans_fixed",
-        b => grainTest(b("fct_loan_details"), b("agg_monthly_loans_fixed")),
-        TestConfig(severity = "warn", storeFailures = true)),
-      // the DISCRIMINATING grain check, via the dbt `unique` generic test:
-      // the mart's intended grain is one row per (month, type) — the
-      // checked-in fan-out bug duplicates every origination combo (warn +
-      // store_failures: the documented bug under triage), the fixed
-      // variant none (full-severity: a failure THERE is a regression)
-      DataTest("unique_agg_monthly_loans_grain",
-        b => unique(b("agg_monthly_loans"), "month", "loan_type_name"),
-        TestConfig(severity = "warn", storeFailures = true)),
-      DataTest("unique_agg_monthly_loans_fixed_grain",
-        b => unique(b("agg_monthly_loans_fixed"), "month", "loan_type_name")))
-  }
-
-  /** `dbt test`: violation count per test name over the built relations
-    * (seeds included), 0 = pass. Note the warn-severity tests with
-    * `store_failures` throw here for want of an audit location — use
-    * [[testDetailed]] for the full config semantics.
-    */
-  def test(built: Map[String, DataFrame]): Seq[(String, Long)] =
-    GenericTests.run(dataTests.map(_.copy(
-      config = GenericTests.TestConfig())), built)
-
-  /** `dbt test` with the full config semantics: pass/warn/error verdicts
-    * and `store_failures` audit tables under `storeDir`.
-    */
-  def testDetailed(built: Map[String, DataFrame],
-      storeDir: String): Seq[GenericTests.TestResult] =
-    GenericTests.runDetailed(dataTests, built, Some(storeDir))
-
-  /** `dbt docs generate` analog: the manifest artifact — every model node
-    * with its materialization, upstream deps (`ref()` lineage) and output
-    * schema as one JSON object (dbt's manifest.json, reduced to what this
-    * project defines). Driver-side metadata only: schemas come from the
-    * already-analyzed frames; no job runs.
-    */
-  def manifest(built: Map[String, DataFrame]): String = {
-    // Jackson (shipped with Spark) rather than hand-rolled strings:
-    // RFC-8259-complete escaping of any model/column name for free
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    models.foreach { m =>
-      val node = root.putObject(m.name)
-      node.put("materialization", m.materialization.toString.toLowerCase)
-      val deps = node.putArray("depends_on")
-      m.deps.sorted.foreach(deps.add)
-      val cols = node.putObject("columns")
-      built(m.name).schema.fields.foreach { f =>
-        cols.put(f.name, f.dataType.simpleString)
-      }
-    }
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
-  }
-
-  /** `dbt run`: topological build of every model from the three seeds.
-    * `threads` mirrors dbt's profiles.yml setting — each dependency
-    * frontier's models build concurrently (the [[SqlDag.run]] contract:
-    * inputs fully materialized before the wave, sibling models on
-    * disjoint names, so results are identical to the sequential build;
-    * the win is overlapping independent Table writes, e.g. the two mart
-    * variants + loan_monthly_detail in one wave).
-    */
-  def run(seeds: Map[String, DataFrame],
-      threads: Int = 1): Map[String, DataFrame] = {
-    require(threads >= 1, s"need threads >= 1, got $threads")
-    def build(m: Model, built: Map[String, DataFrame]): DataFrame = {
-      val df = m.build(built)
-      m.materialization match {
-        case View =>
-          df.createOrReplaceTempView(m.name); df
-        case Table => graft.sources.Tables.writeTable(df, s"$warehouseDir/${m.name}")
-      }
-    }
-    var built: Map[String, DataFrame] = seeds
-    var remaining = models
-    while (remaining.nonEmpty) {
-      val (ready, blocked) = remaining.partition(_.deps.forall(built.contains))
-      require(ready.nonEmpty, s"cyclic or unsatisfied deps: ${blocked.map(_.name)}")
-      val frozen = built
-      val wave: Seq[(String, DataFrame)] =
-        if (threads == 1 || ready.size == 1)
-          ready.map(m => m.name -> build(m, frozen))
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(threads, ready.size))
-          try {
-            import scala.jdk.CollectionConverters._
-            val tasks = ready.map { m =>
-              new java.util.concurrent.Callable[(String, DataFrame)] {
-                override def call(): (String, DataFrame) = m.name -> build(m, frozen)
-              }
-            }
-            pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
-          } finally pool.shutdown()
-        }
-      built ++= wave
-      remaining = blocked
-    }
-    built
   }
 }

@@ -125,23 +125,9 @@ object GenericTests {
   final case class TestResult(name: String, failures: Long, status: String,
       storedPath: Option[String])
 
-  /** `dbt test` analog: evaluate each test, returning name → violation
-    * count (0 = pass). One Spark job per test; no driver-side data.
-    * Count-only API: it never promised an audit table, so a test whose
-    * config sets `store_failures` is evaluated with the store step
-    * skipped (use [[runDetailed]] with a `storeDir` to persist audits)
-    * rather than throwing on a config the caller can't act on.
-    */
-  def run(tests: Seq[DataTest],
-      built: Map[String, DataFrame]): Seq[(String, Long)] =
-    runDetailed(
-      tests.map(t =>
-        if (t.config.storeFailures)
-          t.copy(config = t.config.copy(storeFailures = false))
-        else t),
-      built).map(r => r.name -> r.failures)
-
-  /** [[run]] with dbt's full test-config semantics: each test's count
+  /** `dbt test` analog: evaluate each test over the built relations
+    * (one Spark job per test; no driver-side data) with dbt's full
+    * test-config semantics: each test's violation count (0 = pass)
     * maps through its [[TestConfig]] to pass/warn/error, and a test with
     * `store_failures` persists its violating rows as a parquet audit
     * table under `storeDir/<test_name>` (dbt's audit schema) — written
@@ -149,7 +135,7 @@ object GenericTests {
     * run (a stale failure table from a previous run would read as a
     * live problem). The count is then taken off the stored table: one
     * evaluation of the test frame, and the persisted audit rows provably
-    * back the verdict. Scale: unchanged — one bounded job per test; the
+    * back the verdict. Scale: one bounded job per test; the
     * store is a write of the (small) violation set, never the relation.
     */
   def runDetailed(tests: Seq[DataTest], built: Map[String, DataFrame],

@@ -448,7 +448,7 @@ object SchemaConfig {
     * ([[SqlDag.sourceViewName]]).
     */
   final case class UnitTest(name: String, model: String,
-      given: Seq[(String, Fixture)],
+      `given`: Seq[(String, Fixture)],
       expect: Fixture)
 
   /** Parse the `unit_tests:` block (dbt 1.8):
@@ -493,7 +493,7 @@ object SchemaConfig {
         val givenNode = Option(u.get("given")).getOrElse(
           throw new IllegalArgumentException(s"unit test $name needs `given`"))
         require(givenNode.isArray, s"unit test $name: `given` must be a list")
-        val given = givenNode.elements.asScala.map { g =>
+        val `given` = givenNode.elements.asScala.map { g =>
           val input = inputName(reqText(g, "input", s"given of unit test $name"))
           input -> fixtureOf(g, s"unit test $name given $input")
         }.toSeq

@@ -49,8 +49,7 @@ object SqlDag {
     * catalog state, not model output — they never appear in the
     * returned frames, but they DO participate in the state manifest
     * (dbt's `state:modified` hashes node config, hooks included — a
-    * CI run must not skip a model whose audit/GRANT hook changed;
-    * r9 advice).
+    * CI run must not skip a model whose audit/GRANT hook changed).
     */
   /** `tags` is dbt's `+tags` node config: free-form labels selectable
     * with `tag:name` tokens (`dbt run --select tag:nightly`).
@@ -68,6 +67,38 @@ object SqlDag {
     * carries in its `analyses/` directory.
     */
   final case class Analysis(name: String, jinjaSql: String)
+
+  /** `{{ ref('x') }}` in either dbt quote form (single or double): one
+    * pattern drives dependency EXTRACTION ([[SqlDag.refsOf]]) and
+    * RENDERING ([[render]]), so the two can never disagree on what counts
+    * as a ref.
+    */
+  val RefPattern: scala.util.matching.Regex =
+    raw"""\{\{\s*ref\(\s*['"]([^'"]+)['"]\s*\)\s*\}\}""".r
+  private val DateTruncPattern =
+    raw"\{\{\s*date_trunc\('([^']+)',\s*'([^']+)'\)\s*\}\}".r
+
+  /** Render the two Jinja constructs left after macro expansion: `ref('x')`
+    * → the relation name `x` (models/seeds registered as temp views), and
+    * the reference project's `date_trunc(part, col)` macro → the SQL
+    * function call (both Spark and DuckDB spell it `date_trunc('month',
+    * col)`). The macro substitution is unconditional: a build that passes
+    * no `macros` still renders `{{ date_trunc(...) }}`.
+    */
+  def render(jinjaSql: String): String = {
+    val refs = RefPattern.replaceAllIn(jinjaSql, m => m.group(1))
+    DateTruncPattern.replaceAllIn(refs,
+      m => s"date_trunc('${m.group(1)}', ${m.group(2)})")
+  }
+
+  /** A compiled text as runnable SQL: `source()` spans become their
+    * registered view names ([[sourceViewName]]) — resolved only at build
+    * time, since selection still needs them as graph edges — then
+    * [[render]] resolves the rest.
+    */
+  private def runnable(sql: String): String =
+    render(SourcePattern.replaceAllIn(sql,
+      m => sourceViewName(m.group(1), m.group(2))))
 
   /** dbt's `{{ source('src', 'table') }}` — the staging-layer idiom the
     * reference never uses (its seed-only project refs even raw CSVs via
@@ -140,6 +171,12 @@ object SqlDag {
         "+exposure:name, tag:name, source:name, source:name.table, " +
         "analysis:name, +analysis:name)")
   }
+
+  /** Jackson (shipped with Spark) for every manifest: RFC-8259-complete
+    * escaping of any model/column name; thread-safe once configured.
+    * Lazy, so a run that writes no manifest never builds it.
+    */
+  private lazy val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def sha256Hex(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
@@ -214,11 +251,11 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
   import SqlDag._
 
   /** `ref()` targets of one model text (both dbt quote forms; the same
-    * [[FictionBankSql.RefPattern]] drives rendering, so extraction and
+    * [[SqlDag.RefPattern]] drives rendering, so extraction and
     * substitution cannot drift).
     */
   def refsOf(jinjaSql: String): Set[String] =
-    FictionBankSql.RefPattern.findAllMatchIn(jinjaSql).map(_.group(1)).toSet
+    RefPattern.findAllMatchIn(jinjaSql).map(_.group(1)).toSet
 
   /** `source()` targets of one model text as (source, table) pairs. */
   def sourcesOf(jinjaSql: String): Set[(String, String)] =
@@ -241,9 +278,9 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * materialization, sorted `ref()` deps, a checksum of the COMPILED
     * (Jinja-rendered) SQL, and the rendered pre/post hooks (dbt's
     * `state:modified` hashes node CONFIG — hooks included — so a
-    * hook-only edit must flag the model modified; r9 advice: the old
-    * manifest omitted them and a CI `state:modified` run would
-    * silently skip a model whose audit/GRANT hook changed).
+    * hook-only edit must flag the model modified, or a CI
+    * `state:modified` run would silently skip a model whose audit/GRANT
+    * hook changed).
     * Checksumming the compiled text — not the raw file — means an edit
     * inside a `{% macro %}` marks every caller modified, dbt's
     * `state:modified.macros` behavior for free (hooks render through
@@ -262,28 +299,16 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       macros: Seq[JinjaMacros.MacroDef] = Nil,
       vars: Map[String, String] = Map.empty,
       analyses: Seq[Analysis] = Nil): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
+    val root = Json.createObjectNode()
     analyses.foreach { a =>
       val rendered = JinjaMacros.renderModel(a.jinjaSql, macros, vars = vars)
-      val node = root.putObject(s"analysis:${a.name}")
-      node.put("materialization", "analysis")
-      val deps = node.putArray("depends_on")
-      (refsOf(rendered).toSeq ++
-        sourcesOf(rendered).toSeq.map(st => s"source:${st._1}.${st._2}"))
-        .sorted.foreach(deps.add)
-      node.put("checksum", SqlDag.sha256Hex(rendered))
+      putNode(root, s"analysis:${a.name}", "analysis", rendered)
+        .put("checksum", SqlDag.sha256Hex(rendered))
     }
     models.foreach { m =>
       val rendered = JinjaMacros.renderModel(m.jinjaSql, macros, vars = vars)
-      val node = root.putObject(m.name)
-      node.put("materialization", m.materialization.toString.toLowerCase)
-      val deps = node.putArray("depends_on")
-      // source deps ride the manifest as dbt-style qualified names, so a
-      // model switching from one source table to another flags modified
-      (refsOf(rendered).toSeq ++
-        sourcesOf(rendered).toSeq.map(st => s"source:${st._1}.${st._2}"))
-        .sorted.foreach(deps.add)
+      val node = putNode(root, m.name,
+        m.materialization.toString.toLowerCase, rendered)
       node.put("checksum", SqlDag.sha256Hex(rendered))
       if (m.tags.nonEmpty) {
         val tags = node.putArray("tags")
@@ -300,7 +325,44 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
           post.add(JinjaMacros.renderModel(h, macros, vars = vars)))
       }
     }
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+    Json.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+  }
+
+  /** One manifest node under `key`: its materialization and its sorted
+    * `depends_on` — the text's `ref()` targets plus its source tables as
+    * dbt-style qualified names (`source:src.table`), so a model switching
+    * from one source table to another flags modified.
+    */
+  private def putNode(root: com.fasterxml.jackson.databind.node.ObjectNode,
+      key: String, materialization: String, sql: String)
+      : com.fasterxml.jackson.databind.node.ObjectNode = {
+    val node = root.putObject(key)
+    node.put("materialization", materialization)
+    val deps = node.putArray("depends_on")
+    (refsOf(sql).toSeq ++
+      sourcesOf(sql).toSeq.map(st => s"source:${st._1}.${st._2}"))
+      .sorted.foreach(deps.add)
+    node
+  }
+
+  /** `dbt docs generate` analog: the manifest artifact — every model node
+    * with its materialization, upstream deps (as [[putNode]] writes them)
+    * and, when `built` holds its relation, the output schema as `columns`
+    * (dbt's manifest.json, reduced to what a project defines).
+    * Driver-side metadata only: schemas come from the already-analyzed
+    * frames; no job runs.
+    */
+  def manifest(models: Seq[SqlModel], built: Map[String, DataFrame]): String = {
+    val root = Json.createObjectNode()
+    models.foreach { m =>
+      val node = putNode(root, m.name,
+        m.materialization.toString.toLowerCase, m.jinjaSql)
+      built.get(m.name).foreach { df =>
+        val cols = node.putObject("columns")
+        df.schema.fields.foreach(f => cols.put(f.name, f.dataType.simpleString))
+      }
+    }
+    Json.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
   /** (new, modified) model names of `models` vs a previous
@@ -312,15 +374,20 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
   def stateDiff(models: Seq[SqlModel], previousManifest: String,
       macros: Seq[JinjaMacros.MacroDef] = Nil,
       vars: Map[String, String] = Map.empty): (Set[String], Set[String]) = {
-    val prev = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(previousManifest)
-    val current = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(stateManifest(models, macros, vars))
-    val names = models.map(_.name)
-    val newNames = names.filter(n => !prev.has(n)).toSet
-    val modified = names.filter(n => prev.has(n) &&
-      prev.get(n) != current.get(n)).toSet
-    (newNames, modified)
+    diffNodes(models.map(m => m.name -> m.name), previousManifest,
+      stateManifest(models, macros, vars))
+  }
+
+  /** (new, modified) names of `keys` (name → manifest key) between the
+    * `previous` and `current` manifests: new = key absent from
+    * `previous`, modified = key present with a different node.
+    */
+  private def diffNodes(keys: Seq[(String, String)], previous: String,
+      current: String): (Set[String], Set[String]) = {
+    val (prev, cur) = (Json.readTree(previous), Json.readTree(current))
+    val (present, absent) = keys.partition { case (_, k) => prev.has(k) }
+    (absent.map(_._1).toSet,
+      present.collect { case (n, k) if prev.get(k) != cur.get(k) => n }.toSet)
   }
 
   /** (new, modified) ANALYSIS names vs a previous [[stateManifest]]
@@ -335,16 +402,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
   def analysisStateDiff(analyses: Seq[Analysis], previousManifest: String,
       macros: Seq[JinjaMacros.MacroDef] = Nil,
       vars: Map[String, String] = Map.empty): (Set[String], Set[String]) = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val prev = mapper.readTree(previousManifest)
-    val current = mapper.readTree(
-      stateManifest(Nil, macros, vars, analyses = analyses))
-    val keys = analyses.map(a => a.name -> s"analysis:${a.name}")
-    val newNames = keys.collect { case (n, k) if !prev.has(k) => n }.toSet
-    val modified = keys.collect {
-      case (n, k) if prev.has(k) && prev.get(k) != current.get(k) => n
-    }.toSet
-    (newNames, modified)
+    diffNodes(analyses.map(a => a.name -> s"analysis:${a.name}"),
+      previousManifest, stateManifest(Nil, macros, vars, analyses = analyses))
   }
 
   /** dbt node selection (`dbt run --select … --exclude …`): resolve graph
@@ -377,7 +436,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * var bindings the manifest was built with — calling with raw
     * macro-bearing models and macros = Nil would flag every macro-using
     * model modified (checksum of unexpanded vs expanded text) and miss
-    * macro-introduced deps (r8 advice). [[run]] pre-expands models
+    * macro-introduced deps. [[run]] pre-expands models
     * before selecting, so its Nil stays consistent.
     */
   def selectModels(models: Seq[SqlModel], select: Seq[String],
@@ -410,6 +469,10 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     }
     def resolve(token: String): Set[String] = {
       val sel = SqlDag.parseSelector(token)
+      // a node plus the closures its +/+ suffixes ask for
+      def around(n: String): Set[String] = Set(n) ++
+        (if (sel.ancestors) closure(n, parents) else Set.empty) ++
+        (if (sel.descendants) closure(n, children) else Set.empty)
       if (sel.name.startsWith("exposure:")) {
         // dbt's exposure: method — the node itself is a sink that runs
         // nothing, so the bare form selects no models (dbt parity: the
@@ -448,9 +511,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
         // everything downstream)
         val tag = sel.name.stripPrefix("tag:")
         val tagged = models.filter(_.tags.contains(tag)).map(_.name).toSet
-        tagged.flatMap(n => Set(n) ++
-          (if (sel.ancestors) closure(n, parents) else Set.empty) ++
-          (if (sel.descendants) closure(n, children) else Set.empty))
+        tagged.flatMap(around)
       } else if (sel.name.startsWith("source:")) {
         // dbt's source: method — the source node itself runs nothing, so
         // the bare form selects no models (parity with exposures' sink
@@ -482,19 +543,13 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
           case "state:new"      => newNames
           case "state:modified" => newNames ++ modified // dbt: modified ⊇ new
         }
-        baseSet.flatMap(n => Set(n) ++
-          (if (sel.ancestors) closure(n, parents) else Set.empty) ++
-          (if (sel.descendants) closure(n, children) else Set.empty))
+        baseSet.flatMap(around)
       } else {
         require(names.contains(sel.name), s"selector '$token' names unknown model '${sel.name}'")
         if (sel.at) {
           val down = closure(sel.name, children)
           down ++ down.flatMap(closure(_, parents))
-        } else {
-          Set(sel.name) ++
-            (if (sel.ancestors) closure(sel.name, parents) else Set.empty) ++
-            (if (sel.descendants) closure(sel.name, children) else Set.empty)
-        }
+        } else around(sel.name)
       }
     }
     // selectors.yml composition: union/intersection combine their
@@ -570,9 +625,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       require(missingSrc.isEmpty,
         s"analysis ${a.name} reads undeclared sources: " +
           missingSrc.map(st => s"${st._1}.${st._2}").toSeq.sorted.mkString(", "))
-      a.name -> FictionBankSql.render(
-        SqlDag.SourcePattern.replaceAllIn(rendered,
-          mm => SqlDag.sourceViewName(mm.group(1), mm.group(2))))
+      a.name -> runnable(rendered)
     }: _*)
   }
 
@@ -704,19 +757,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       vars: Map[String, String], onRunStart: Seq[String],
       onRunEnd: Seq[String], analyses: Seq[Analysis])
       : (Seq[SqlModel], Seq[String], Seq[String], Seq[Analysis]) = {
-    val dupPkg = packages.groupBy(_.name).collect {
-      case (n, ps) if ps.size > 1 => n
-    }
-    require(dupPkg.isEmpty,
-      s"duplicate package names: ${dupPkg.mkString(", ")}")
-    val allMacros = macros ++ packages.flatMap(_.macros)
-    val dupMacros = allMacros.groupBy(_.name).collect {
-      case (n, ms) if ms.size > 1 => n
-    }
-    require(dupMacros.isEmpty,
-      "macro name collisions across project/packages: " +
-        s"${dupMacros.toSeq.sorted.mkString(", ")} — rename, or call " +
-        "the package-qualified spelling and drop the bare registration")
+    val allMacros = macroRegistry(macros, packages)
     def jinja(text: String, v: Map[String, String] = vars) =
       JinjaMacros.renderModel(text, allMacros, vars = v)
     val expanded = models.map { m =>
@@ -731,6 +772,27 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     }
     (expanded, onRunStart.map(jinja(_)), onRunEnd.map(jinja(_)),
       analyses.map(a => a.copy(jinjaSql = jinja(a.jinjaSql))))
+  }
+
+  /** The project's macros plus every package's, refusing duplicate
+    * package names and any macro name defined twice across them.
+    */
+  private def macroRegistry(macros: Seq[JinjaMacros.MacroDef],
+      packages: Seq[Packages.Package]): Seq[JinjaMacros.MacroDef] = {
+    val dupPkg = packages.groupBy(_.name).collect {
+      case (n, ps) if ps.size > 1 => n
+    }
+    require(dupPkg.isEmpty,
+      s"duplicate package names: ${dupPkg.mkString(", ")}")
+    val allMacros = macros ++ packages.flatMap(_.macros)
+    val dupMacros = allMacros.groupBy(_.name).collect {
+      case (n, ms) if ms.size > 1 => n
+    }
+    require(dupMacros.isEmpty,
+      "macro name collisions across project/packages: " +
+        s"${dupMacros.toSeq.sorted.mkString(", ")} — rename, or call " +
+        "the package-qualified spelling and drop the bare registration")
+    allMacros
   }
 
   private def runExpanded(models: Seq[SqlModel], seeds: Map[String, DataFrame],
@@ -794,17 +856,9 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
           missingSrc.map(st => s"${st._1}.${st._2}").mkString(", ") +
           " — declare them in run(sources = Map((source, table) -> frame))")
     }
-    // source relations register like seeds: inputs, never built. The
-    // registration loop itself runs INSIDE the try: if a view name
-    // mangles invalid partway through, the finally's drop loop (keyed on
-    // sources.keys, tolerant of never-registered names) still sweeps the
-    // views that did register — a run that throws at ANY point after the
-    // first createOrReplaceTempView must not leave stale __src_* views
-    // addressable in the shared session (r12/r13 advice).
-    try {
-    sources.foreach { case ((s, t), df) =>
-      df.createOrReplaceTempView(SqlDag.sourceViewName(s, t))
-    }
+    // source relations register like seeds: inputs, never built; they are
+    // dropped after the end hooks (the last consumer) or when the run throws
+    withSources(sources) {
     val chosen =
       if (select.isEmpty && exclude.isEmpty && selector.isEmpty) models
       else selectModels(models, select, exclude, state,
@@ -848,11 +902,6 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       if (needsView) df.createOrReplaceTempView(name)
       name -> df
     }.toMap
-    // source() spans resolve at build time (after selection, which
-    // still needs them as graph edges) to the registered view names
-    def renderSources(sql: String): String =
-      SqlDag.SourcePattern.replaceAllIn(sql,
-        mm => SqlDag.sourceViewName(mm.group(1), mm.group(2)))
     def build(m: SqlModel): DataFrame = {
       // spark.sql executes DML/DDL commands EAGERLY (INSERT/CREATE/
       // ANALYZE/REFRESH — every statement a dbt hook is in practice);
@@ -863,12 +912,11 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       def runHooks(hooks: Seq[String]): Unit = hooks.foreach { h =>
         // quoteReplacement: the model name is DATA to the regex engine —
         // a '$' or '\' in a name must not be read as a group reference
-        // (r9 advice)
-        spark.sql(FictionBankSql.render(renderSources(ThisPattern.replaceAllIn(h,
-          scala.util.matching.Regex.quoteReplacement(m.name)))))
+        spark.sql(runnable(ThisPattern.replaceAllIn(h,
+          scala.util.matching.Regex.quoteReplacement(m.name))))
       }
       runHooks(m.preHooks)
-      val df = spark.sql(FictionBankSql.render(renderSources(m.jinjaSql)))
+      val df = spark.sql(runnable(m.jinjaSql))
       // enforced contract: fail BEFORE materialization — a drifted
       // relation must never reach the warehouse under a contract
       contractByModel.get(m.name).foreach(enforceContract(_, df))
@@ -908,7 +956,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     // eager spark.sql like model hooks, skipped when nothing is selected
     def runProjectHooks(hooks: Seq[String]): Unit =
       if (chosen.nonEmpty)
-        hooks.foreach(h => spark.sql(FictionBankSql.render(renderSources(h))))
+        hooks.foreach(h => spark.sql(runnable(h)))
     runProjectHooks(onRunStart)
     var built: Map[String, DataFrame] = seeds ++ externallyBuilt
     // `dead` = nodes whose DESCENDANTS must not run: a node whose build
@@ -975,8 +1023,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
               pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
             } finally pool.shutdown()
           }
-        // ALL wave successes register before ANY gate runs (two passes,
-        // r16 advice): the gates run sequentially in wave order, and a
+        // ALL wave successes register before ANY gate runs (two passes):
+        // the gates run sequentially in wave order, and a
         // test frame may read any relation built so far INCLUDING every
         // sibling of its own wave — with the single-pass form a gate on
         // wave member i could not see members i+1..n even though they
@@ -994,9 +1042,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
         }
         remaining = blocked
         // dbt build --fail-fast also halts SCHEDULING after a failed
-        // test node, not only after build exceptions (r16 advice: the
-        // old doc claimed tests never abort, a fidelity deviation):
-        // every node not yet started reports as skipped, named after
+        // test node, not only after build exceptions: every node not
+        // yet started reports as skipped, named after
         // the first gate failure of this wave, and no further wave runs
         if (haltOnGateFailure) {
           wave.collectFirst {
@@ -1020,22 +1067,29 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     // state dbt's would (ephemeral models never reach the warehouse)
     runProjectHooks(onRunEnd)
     built
-    // source temp views are run-scoped plumbing, not relations the run
-    // produced: drop them after the end hooks (the last consumer) on
-    // success, and unconditionally on failure — in a shared session a
-    // stale __src_* view must not stay addressable by raw SQL, whether
-    // the next run declares fewer sources (r11 advice) or this one
-    // aborted mid-build (r12 advice). Models captured their analyzed
-    // plans eagerly, so the drop cannot break anything already built.
-    } finally {
-      // tolerant sweep: a name the CREATE refused (so it never
-      // registered) must not abort the drops of the views that did
-      sources.keys.foreach { case (s, t) =>
-        scala.util.Try(
-          spark.catalog.dropTempView(SqlDag.sourceViewName(s, t)))
-      }
     }
   }
+
+  /** Runs `body` with `sources` registered as temp views, and drops them
+    * afterwards whether `body` returns or throws: source views are
+    * run-scoped plumbing, and in a shared session a stale __src_* view
+    * must not stay addressable by raw SQL, whether the next run declares
+    * fewer sources or this one aborted. Registration runs inside the
+    * `try`, so a view name refused partway still sweeps the views that
+    * did register, and the sweep tolerates names that never registered.
+    * Models captured their analyzed plans eagerly, so the drop cannot
+    * break anything already built.
+    */
+  private def withSources[T](sources: Map[(String, String), DataFrame])(
+      body: => T): T =
+    try {
+      sources.foreach { case ((s, t), df) =>
+        df.createOrReplaceTempView(sourceViewName(s, t))
+      }
+      body
+    } finally sources.keys.foreach { case (s, t) =>
+      scala.util.Try(spark.catalog.dropTempView(sourceViewName(s, t)))
+    }
 
   /** `dbt build` — the one-command lifecycle: seeds' tests gate first,
     * then models build in DAG order with EACH node's tests running
@@ -1059,8 +1113,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * failed error-severity TEST halts scheduling — every node not yet
     * started reports as "skipped" with the gate-failed node as cause,
     * and the report is returned (dbt also stops scheduling after a
-    * failed test node under --fail-fast; r16 advice — the previous
-    * doc claimed tests never abort, which was a fidelity deviation).
+    * failed test node under --fail-fast).
     * Remaining knobs (selection, vars, macros, packages, sources,
     * hooks, contracts) mean exactly what they mean on [[run]].
     *
@@ -1082,43 +1135,70 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       packages: Seq[Packages.Package] = Nil,
       storeDir: Option[String] = None,
       failFast: Boolean = false): SqlDag.BuildResult = {
+    val gated = new GatedBuild(models, seeds, tests, threads, macros, vars,
+      sources, onRunStart, onRunEnd, contracts, packages, storeDir, failFast)
+    val relations = gated.schedule(select, exclude)
+    SqlDag.BuildResult(gated.report.toSeq, relations)
+  }
+
+  /** One [[build]] or [[retry]] run: the Jinja expansion, a refusal of
+    * tests keyed on nodes the project does not have (known: models,
+    * package models and seeds), the node report, and the test gate the
+    * scheduler calls after every node. The gate runs a node's tests over
+    * the relations built so far and says whether its descendants may run;
+    * a node in `passed` (retry's kept successes) never re-runs its tests,
+    * and an untested seed gets no report row. A node whose build throws is
+    * reported and gates its descendants — or, under `failFast`, aborts the
+    * run — and under `failFast` a failed gate halts scheduling.
+    */
+  private final class GatedBuild(models: Seq[SqlModel],
+      seeds: Map[String, DataFrame],
+      tests: Map[String, Seq[GenericTests.DataTest]], threads: Int,
+      macros: Seq[JinjaMacros.MacroDef], vars: Map[String, String],
+      sources: Map[(String, String), DataFrame], onRunStart: Seq[String],
+      onRunEnd: Seq[String], contracts: Seq[SchemaConfig.Contract],
+      packages: Seq[Packages.Package], storeDir: Option[String],
+      failFast: Boolean, passed: Set[String] = Set.empty) {
     require(threads >= 1, s"need threads >= 1, got $threads")
     val (expanded, startHooks, endHooks, _) =
       expandJinja(models, macros, packages, vars, onRunStart, onRunEnd, Nil)
-    val knownNodes = expanded.map(_.name).toSet ++ seeds.keySet
-    val orphanTests = tests.keySet.diff(knownNodes)
+    val knownNodes: Set[String] = expanded.map(_.name).toSet ++ seeds.keySet
+    private val orphanTests = tests.keySet.diff(knownNodes)
     require(orphanTests.isEmpty,
       "tests are keyed on unknown nodes: " +
         s"${orphanTests.toSeq.sorted.mkString(", ")} (known: models, " +
         "package models, and seeds)")
-    val report = scala.collection.mutable.ListBuffer.empty[SqlDag.BuildNodeResult]
-    val gate = (name: String, built: Map[String, DataFrame]) => {
+    val report = scala.collection.mutable.ListBuffer.empty[BuildNodeResult]
+
+    def gate(name: String, built: Map[String, DataFrame]): Boolean = {
       val ts = tests.getOrElse(name, Nil)
-      if (ts.isEmpty && seeds.contains(name)) true // untested seed: no node row
+      if (passed(name) || (ts.isEmpty && seeds.contains(name))) true
       else {
         val results = GenericTests.runDetailed(ts, built, storeDir)
-        val ok = results.forall(_.status != "error")
-        report += SqlDag.BuildNodeResult(name, "success", results,
-          if (ok) None
-          else Some("test failure: " +
-            results.filter(_.status == "error").map(_.name).mkString(", ")))
-        ok
+        val failed = results.filter(_.status == "error")
+        report += BuildNodeResult(name, "success", results,
+          if (failed.isEmpty) None
+          else Some("test failure: " + failed.map(_.name).mkString(", ")))
+        failed.isEmpty
       }
     }
-    val relations = runExpanded(expanded, seeds, threads, select, exclude,
-      state = None, defer = None, favorState = false,
-      sources = sources, onRunStart = startHooks, onRunEnd = endHooks,
-      contracts = contracts,
-      afterNode = Some(gate),
-      onSkip = (name, cause) =>
-        report += SqlDag.BuildNodeResult(name, "skipped", Nil, Some(cause)),
-      onError =
-        if (failFast) None
-        else Some((name, e) =>
-          report += SqlDag.BuildNodeResult(name, "error", Nil,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)))),
-      haltOnGateFailure = failFast)
-    SqlDag.BuildResult(report.toSeq, relations)
+
+    def schedule(select: Seq[String], exclude: Seq[String],
+        deadAtStart: Set[String] = Set.empty): Map[String, DataFrame] =
+      runExpanded(expanded, seeds, threads, select, exclude,
+        state = None, defer = None, favorState = false,
+        sources = sources, onRunStart = startHooks, onRunEnd = endHooks,
+        contracts = contracts,
+        afterNode = Some(gate _),
+        onSkip = (name, cause) =>
+          report += BuildNodeResult(name, "skipped", Nil, Some(cause)),
+        onError =
+          if (failFast) None
+          else Some((name, e) =>
+            report += BuildNodeResult(name, "error", Nil,
+              Some(Option(e.getMessage).getOrElse(e.getClass.getName)))),
+        haltOnGateFailure = failFast,
+        deadAtStart = deadAtStart)
   }
 
   /** `dbt retry` — resume a failed [[build]] from its failure point,
@@ -1157,16 +1237,11 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       packages: Seq[Packages.Package] = Nil,
       storeDir: Option[String] = None,
       failFast: Boolean = false): SqlDag.BuildResult = {
-    require(threads >= 1, s"need threads >= 1, got $threads")
-    val (expanded, startHooks, endHooks, _) =
-      expandJinja(models, macros, packages, vars, onRunStart, onRunEnd, Nil)
-    val knownNodes = expanded.map(_.name).toSet ++ seeds.keySet
-    val orphanTests = tests.keySet.diff(knownNodes)
-    require(orphanTests.isEmpty,
-      "tests are keyed on unknown nodes: " +
-        s"${orphanTests.toSeq.sorted.mkString(", ")} (known: models, " +
-        "package models, and seeds)")
-    val unknownPrev = previous.nodes.map(_.name).filterNot(knownNodes)
+    // keep successes: a passed gate never re-runs
+    val gated = new GatedBuild(models, seeds, tests, threads, macros, vars,
+      sources, onRunStart, onRunEnd, contracts, packages, storeDir, failFast,
+      passed = previous.nodes.filter(_.gatePassed).map(_.name).toSet)
+    val unknownPrev = previous.nodes.map(_.name).filterNot(gated.knownNodes)
     require(unknownPrev.isEmpty,
       "previous build report names nodes this project does not have: " +
         s"${unknownPrev.distinct.sorted.mkString(", ")} — retry must " +
@@ -1174,49 +1249,28 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     val toRebuild = previous.nodes.collect {
       case n if n.status == "error" || n.status == "skipped" => n.name
     }.distinct
-    val gateRetryModels = previous.nodes.collect {
-      case n if n.status == "success" && !n.gatePassed &&
-        !seeds.contains(n.name) => n.name
-    }.distinct
-    val gateRetrySeeds = previous.nodes.collect {
-      case n if n.status == "success" && !n.gatePassed &&
-        seeds.contains(n.name) => n.name
-    }.distinct
+    val (gateRetrySeeds, gateRetryModels) = previous.nodes.collect {
+      case n if n.status == "success" && !n.gatePassed => n.name
+    }.distinct.partition(seeds.contains)
     require(toRebuild.nonEmpty || gateRetryModels.nonEmpty ||
       gateRetrySeeds.nonEmpty,
       "nothing to retry: the previous build fully succeeded")
-    val prevPassed = previous.nodes.filter(_.gatePassed).map(_.name).toSet
-    val report = scala.collection.mutable.ListBuffer.empty[SqlDag.BuildNodeResult]
-    val gate = (name: String, built: Map[String, DataFrame]) => {
-      val ts = tests.getOrElse(name, Nil)
-      if (prevPassed(name)) true // keep successes: a passed gate never re-runs
-      else if (ts.isEmpty && seeds.contains(name)) true
-      else {
-        val results = GenericTests.runDetailed(ts, built, storeDir)
-        val ok = results.forall(_.status != "error")
-        report += SqlDag.BuildNodeResult(name, "success", results,
-          if (ok) None
-          else Some("test failure: " +
-            results.filter(_.status == "error").map(_.name).mkString(", ")))
-        ok
-      }
-    }
     // failed MODEL gates re-run HERE, against the kept relations — the
     // node is not in the rebuild selection, so the scheduler would
     // never invoke its gate; a re-failure pre-marks it dead so its
     // descendants (in the selection) skip exactly like a live failure
     val kept = seeds ++ previous.relations
-    val deadStart = gateRetryModels.filterNot(gate(_, kept)).toSet
+    val deadStart = gateRetryModels.filterNot(gated.gate(_, kept)).toSet
     if (toRebuild.isEmpty) {
       // gate-only retry: failed SEED gates get the same treatment (the
       // scheduler's seed-gate loop is not running to do it for us)
-      gateRetrySeeds.foreach(gate(_, kept))
-      SqlDag.BuildResult(report.toSeq, previous.relations)
+      gateRetrySeeds.foreach(gated.gate(_, kept))
+      SqlDag.BuildResult(gated.report.toSeq, previous.relations)
     } else {
       // EPHEMERAL ancestors of the rebuild set re-materialize too:
       // their carrier views were dropped when the previous run ended,
       // so a rebuilt child's ref cannot resolve externally
-      val byName = expanded.map(m => m.name -> m).toMap
+      val byName = gated.expanded.map(m => m.name -> m).toMap
       var rebuild = toRebuild.toSet
       var frontier = rebuild
       while (frontier.nonEmpty) {
@@ -1226,22 +1280,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
           .diff(rebuild)
         rebuild ++= frontier
       }
-      val relations = runExpanded(expanded, seeds, threads,
-        select = rebuild.toSeq.sorted, exclude = Nil,
-        state = None, defer = None, favorState = false,
-        sources = sources, onRunStart = startHooks, onRunEnd = endHooks,
-        contracts = contracts,
-        afterNode = Some(gate),
-        onSkip = (name, cause) =>
-          report += SqlDag.BuildNodeResult(name, "skipped", Nil, Some(cause)),
-        onError =
-          if (failFast) None
-          else Some((name, e) =>
-            report += SqlDag.BuildNodeResult(name, "error", Nil,
-              Some(Option(e.getMessage).getOrElse(e.getClass.getName)))),
-        haltOnGateFailure = failFast,
-        deadAtStart = deadStart)
-      SqlDag.BuildResult(report.toSeq, previous.relations ++ relations)
+      val relations = gated.schedule(rebuild.toSeq.sorted, Nil, deadStart)
+      SqlDag.BuildResult(gated.report.toSeq, previous.relations ++ relations)
     }
   }
 
@@ -1250,9 +1290,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * grammar as [[run]]/[[build]] (`+closures`, `tag:`, `state:` via
     * [[selectModels]]' other overloads is deliberately out — `ls` is
     * stateless), names returned SORTED (dbt ls's default alphabetical
-    * output). The last dbt CLI verb with no analog here; the selection
-    * engine existed since r12 ([[selectModels]]) — this is its
-    * user-facing print form.
+    * output): the user-facing print form of [[selectModels]].
     */
   def ls(models: Seq[SqlModel], select: Seq[String] = Nil,
       exclude: Seq[String] = Nil,
@@ -1297,13 +1335,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       packages: Seq[Packages.Package] = Nil,
       vars: Map[String, String] = Map.empty,
       sources: Map[(String, String), DataFrame] = Map.empty): Option[DataFrame] = {
-    val allMacros = macros ++ packages.flatMap(_.macros)
-    val dupMacros = allMacros.groupBy(_.name).collect {
-      case (n, ms) if ms.size > 1 => n
-    }
-    require(dupMacros.isEmpty,
-      "macro name collisions across project/packages: " +
-        s"${dupMacros.toSeq.sorted.mkString(", ")}")
+    val allMacros = macroRegistry(macros, packages)
     require(allMacros.exists(_.name == name),
       s"run-operation: no macro named '$name' is registered" +
         (if (allMacros.isEmpty) " (no macros were passed)"
@@ -1313,19 +1345,6 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     val rendered = JinjaMacros.renderModel(call, allMacros, vars = vars)
       .trim
     if (rendered.isEmpty) None
-    else
-      try {
-        sources.foreach { case ((s, t), df) =>
-          df.createOrReplaceTempView(SqlDag.sourceViewName(s, t))
-        }
-        Some(spark.sql(FictionBankSql.render(
-          SqlDag.SourcePattern.replaceAllIn(rendered,
-            mm => SqlDag.sourceViewName(mm.group(1), mm.group(2))))))
-      } finally {
-        sources.keys.foreach { case (s, t) =>
-          scala.util.Try(
-            spark.catalog.dropTempView(SqlDag.sourceViewName(s, t)))
-        }
-      }
+    else withSources(sources)(Some(spark.sql(runnable(rendered))))
   }
 }

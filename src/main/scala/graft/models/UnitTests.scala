@@ -56,7 +56,7 @@ object UnitTests {
           s"(known: ${models.map(_.name).sorted.mkString(", ")})"))
     val rendered = JinjaMacros.renderModel(model.jinjaSql, macros, vars = vars)
     // the compiled SQL's input set, resolved like SqlDag.run resolves it
-    val refs = FictionBankSql.RefPattern.findAllMatchIn(rendered)
+    val refs = SqlDag.RefPattern.findAllMatchIn(rendered)
       .map(_.group(1)).toSet
     val srcs = SqlDag.SourcePattern.findAllMatchIn(rendered)
       .map(m => SqlDag.sourceViewName(m.group(1), m.group(2))).toSet
@@ -82,14 +82,14 @@ object UnitTests {
     }
     try {
       val inlined = SqlDag.SourcePattern.replaceAllIn(
-        FictionBankSql.RefPattern.replaceAllIn(rendered,
+        SqlDag.RefPattern.replaceAllIn(rendered,
           m => fixtureNames(m.group(1))),
         m => fixtureNames(SqlDag.sourceViewName(m.group(1), m.group(2))))
       val actual = spark.sql(inlined)
       // expected literals cast to the model's ACTUAL output schema
       val expected = fixtureFrame(spark, test.expect, Some(actual),
         s"${test.name} expect")
-        .select(actual.columns.map(org.apache.spark.sql.functions.col): _*)
+        .select(actual.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
       import org.apache.spark.sql.functions.lit
       actual.exceptAll(expected).withColumn("__graft_side", lit("actual"))
         .unionByName(

@@ -99,7 +99,7 @@ object CorpusClean {
     // 1. quality: C4-style keep flag
     val quality = cutStage(TextAnalysis.qualityMetrics(docs, textCol)
       .filter(col("keep") === 1)
-      .select(docs.columns.map(col): _*))
+      .select(docs.columns.toIndexedSeq.map(col): _*))
 
     // 2. exact dedup: one survivor (lowest id) per content fingerprint —
     // fingerprint appends as a narrow column (no join, no extra shuffle)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -191,8 +192,10 @@ object Tables {
         s.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName).headOption
       .flatMap { file =>
-        val meta = ParquetFileReader.readFooter(
-          HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+          ParquetReadOptions.builder()
+            .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+        val meta = try reader.getFooter finally reader.close()
         if (!meta.getFileMetaData.getKeyValueMetaData
             .containsKey(ParquetReadSupport.SPARK_METADATA_KEY)) None
         else Some(ParquetFileFormat.readSchemaFromFooter(

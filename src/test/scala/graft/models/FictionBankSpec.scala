@@ -107,30 +107,34 @@ class FictionBankSpec extends SparkSpec {
     assert(buggy.count() !== fixed.count())
   }
 
-  test("dag: topological run + materializations (M1, S3, S4)") {
+  /** `dbt build` over the project: every model plus its tests, in a
+    * fresh warehouse.
+    */
+  private lazy val project: (String, SqlDag, SqlDag.BuildResult) = {
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val dag = new FictionBankDag(spark, wh)
-    val built = dag.run(Map(
-      "raw_loans" -> rawLoans,
-      "raw_loan_payments" -> rawPayments,
-      "loan_types" -> loanTypes))
+    val dag = new SqlDag(spark, wh)
+    val res = dag.build(FictionBankSql.models, fictionBankSeeds,
+      FictionBankSql.tests, storeDir = Some(s"$wh/test_failures"))
+    (wh, dag, res)
+  }
+
+  test("dag: topological run + materializations (M1, S3, S4)") {
+    val (wh, dag, res) = project
+    assert(res.success)
+    val built = res.relations
     assert(built("agg_monthly_loans").count() === 39)
     assert(built("agg_monthly_loans_fixed").count() === 11)
     // marts are materialized as parquet (re-read, not the live plan)
     assert(new java.io.File(s"$wh/fct_loan_details").exists())
     // lineage edges match dbt ref() graph
-    assert(dag.lineage("fct_loan_details") === Set("stg_loans", "loan_types"))
-    assert(dag.lineage("agg_monthly_loans") === Set("fct_loan_details", "stg_loan_payments"))
+    val lineage = dag.lineage(FictionBankSql.models)
+    assert(lineage("fct_loan_details") === Set("stg_loans", "loan_types"))
+    assert(lineage("agg_monthly_loans") === Set("fct_loan_details", "stg_loan_payments"))
   }
 
   test("manifest: dbt-docs artifact is valid JSON with deps + schemas (M1)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val dag = new FictionBankDag(spark, wh)
-    val built = dag.run(Map(
-      "raw_loans" -> rawLoans,
-      "raw_loan_payments" -> rawPayments,
-      "loan_types" -> loanTypes))
-    val json = dag.manifest(built)
+    val (_, dag, res) = project
+    val json = dag.manifest(FictionBankSql.models, res.relations)
     // must parse as strict JSON (Jackson ships with Spark)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(json)

@@ -50,11 +50,17 @@ class GenericTestsSpec extends SparkSpec {
     assert(viol.map(_.getInt(0)).toSeq === Seq(7))
   }
 
-  test("project suite over the seeds: all pass except the buggy mart's grain test") {
-    val seeds = fictionBankSeeds
+  /** The project's tests as `dbt build` runs them over the seeds. */
+  private lazy val projectResults: Seq[TestResult] = {
     val wh = java.nio.file.Files.createTempDirectory("graft-test-wh").toString
-    val dag = new FictionBankDag(spark, wh)
-    val results = dag.test(dag.run(seeds)).toMap
+    new SqlDag(spark, wh).build(FictionBankSql.models, fictionBankSeeds,
+      FictionBankSql.tests, storeDir = Some(s"$wh/test_failures"))
+      .nodes.flatMap(_.tests)
+  }
+
+  test("project suite over the seeds: all pass except the buggy mart's grain test") {
+    assert(projectResults.size === 11)
+    val results = projectResults.map(r => r.name -> r.failures).toMap
     assert(results("unique_stg_loans_loan_id") === 0)
     assert(results("not_null_stg_loans_loan_id") === 0)
     assert(results("unique_stg_loan_payments_payment_id") === 0)
@@ -111,15 +117,6 @@ class GenericTestsSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       TestConfig(severity = "WARNING")
     }.getMessage.contains("severity must be warn or error"))
-  }
-
-  test("run: count-only API skips store_failures instead of throwing (r13 advice)") {
-    val d = df(Seq((1, "a"), (2, "b"), (2, "c")))
-    val tests = Seq(
-      DataTest("unique_t_k", b => unique(b("t"), "k"),
-        TestConfig(severity = "warn", storeFailures = true)))
-    // pre-fix this threw "no storeDir"; the count contract needs no audit
-    assert(GenericTests.run(tests, Map("t" -> d)) === Seq("unique_t_k" -> 1L))
   }
 
   test("runDetailed: store_failures persists the violating rows (and empty on pass)") {
@@ -221,10 +218,7 @@ models:
   }
 
   test("project suite detailed: known-informational tests WARN and store, the rest pass") {
-    val seeds = fictionBankSeeds
-    val wh = java.nio.file.Files.createTempDirectory("graft-test-wh2").toString
-    val dag = new FictionBankDag(spark, wh)
-    val results = dag.testDetailed(dag.run(seeds), s"$wh/test_failures")
+    val results = projectResults
     val byName = results.map(r => r.name -> r).toMap
     // the demoted triage tests warn — the build stays green — and their
     // flagged rows persist to the audit schema

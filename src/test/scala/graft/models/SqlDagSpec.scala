@@ -127,7 +127,8 @@ class SqlDagSpec extends SparkSpec {
       "accepted_values_stg_loans_loan_type_id",
       "relationships_stg_loans_loan_type_id",
       "not_null_stg_loans_property_value"))
-    val results = GenericTests.run(tests, built).toMap
+    val results = GenericTests.runDetailed(tests, built)
+      .map(r => r.name -> r.failures).toMap
     // the seeds satisfy key/value/FK integrity...
     assert(results("unique_stg_loans_loan_id") === 0L)
     assert(results("not_null_stg_loans_loan_id") === 0L)
@@ -174,7 +175,7 @@ class SqlDagSpec extends SparkSpec {
               tests: [not_null]
     """)
     val ghost = intercept[IllegalArgumentException] {
-      GenericTests.run(tests, Map.empty)
+      GenericTests.runDetailed(tests, Map.empty)
     }
     assert(ghost.getMessage.contains("ghost"))
   }

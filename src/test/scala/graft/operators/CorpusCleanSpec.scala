@@ -63,7 +63,7 @@ class CorpusCleanSpec extends SparkSpec {
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     // replicate the pipeline's own pre-passes to get the implied cap
     val quality = TextAnalysis.qualityMetrics(docs, "text")
-      .filter(col("keep") === 1).select(docs.columns.map(col): _*)
+      .filter(col("keep") === 1).select(docs.columns.toIndexedSeq.map(col): _*)
     val exactKept = TextDedup.exactDedup(
         TextDedup.withFingerprint(quality, "text"),
         keys = Seq("fingerprint"), tiebreak = col("doc_id"))
