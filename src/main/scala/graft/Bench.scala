@@ -99,14 +99,14 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // mutual exclusion with any ScaleProbe run, taken before the
+    // mutual exclusion with any other timing harness, taken before the
     // session is built so a concurrent run fails fast instead of
     // contaminating this record
     val benchLock = BenchProtocol.acquireBenchLock()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(GraftSession.cpus)
 
-    // the protocol shared with ScaleProbe; Bench also warms the entry
+    // the protocol shared with perfbench; Bench also warms the entry
     // query (a real datasource scan on the smallest fixture)
     BenchProtocol.warmup(spark)
     try BenchProtocol.evaluate(SparkEntry.entry(spark))

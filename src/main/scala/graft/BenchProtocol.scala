@@ -3,16 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The timing protocol shared by [[Bench]] (the full-suite record) and
-  * [[ScaleProbe]] (the scale-sweep harness): one lock, one warmup, one
-  * timing action, one release between timings and one pair of
-  * calibrations, so ratios between the two harnesses compare like with
-  * like.
+  * `perfbench` (the steady benchmark): one lock, one warmup, one timing
+  * action, one release between timings and one pair of calibrations, so
+  * ratios between the two harnesses compare like with like.
   */
 object BenchProtocol {
 
   /** Repo root for harness artifacts (BENCH_FULL.json, the bench lock):
     * `SPARK_GRAFT_REPO`, else the sbt-set `user.dir`, else CWD. One
-    * definition, so Bench and ScaleProbe always resolve the same lock
+    * definition, so every harness always resolves the same lock
     * file and a caller outside the repo root still writes the record
     * into the repo.
     */
@@ -21,8 +20,8 @@ object BenchProtocol {
 
   /** Mutual-exclusion lock for timing harnesses. Two timing JVMs sharing
     * one box slow each other down and can fail each other's queries (a
-    * Bench run next to a ScaleProbe took 182 s against 117 s alone), so
-    * [[Bench]] and [[ScaleProbe]] both take an OS-level file lock
+    * Bench run next to another timing JVM took 182 s against 117 s
+    * alone), so [[Bench]] and `perfbench` both take an OS-level file lock
     * (`target/.graft_bench_lock` under [[repoRoot]]) before building
     * their SparkSession, and the second acquirer fails fast with a named
     * error. An OS `flock`, not a marker file, so a crashed or killed
@@ -49,7 +48,7 @@ object BenchProtocol {
       throw new IllegalStateException(
         s"graft bench lock $path is HELD" +
           (if (holder.nonEmpty) s" ($holder)" else "") +
-          " — another timing harness (Bench or a ScaleProbe run) is " +
+          " — another timing harness (Bench or perfbench) is " +
           "running on this box; a concurrent run would contaminate both " +
           "records. Wait for it to finish.")
     }

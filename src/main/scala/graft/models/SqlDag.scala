@@ -222,13 +222,28 @@ object SqlDag {
     *     the node's descendants),
     *   - "skipped": an ancestor died — `cause` names WHICH ancestor
     *     (the nearest dead ref, ties broken alphabetically),
-    *   - "error": the node's own build threw — `cause` is the message.
+    *   - "error": the node's own build threw — `cause` is the first
+    *     line of its message ([[errorCause]]).
     */
   final case class BuildNodeResult(name: String, status: String,
       tests: Seq[GenericTests.TestResult], cause: Option[String]) {
     /** true when scheduling continued past this node. */
     def gatePassed: Boolean =
       status == "success" && tests.forall(_.status != "error")
+  }
+
+  /** One-line cause of a failed node build: an `AnalysisException`'s
+    * message without the analyzed plan Spark appends to `getMessage`,
+    * otherwise the first non-blank line of the message, so a report
+    * line stays one line.
+    */
+  private[models] def errorCause(e: Throwable): String = {
+    val msg = e match {
+      case a: org.apache.spark.sql.AnalysisException => a.getSimpleMessage
+      case _ => e.getMessage
+    }
+    Option(msg).flatMap(_.linesIterator.map(_.trim).find(_.nonEmpty))
+      .getOrElse(e.getClass.getName)
   }
 
   /** A [[SqlDag.build]] run's full report: per-node outcomes in
@@ -1196,7 +1211,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
           if (failFast) None
           else Some((name, e) =>
             report += BuildNodeResult(name, "error", Nil,
-              Some(Option(e.getMessage).getOrElse(e.getClass.getName)))),
+              Some(errorCause(e)))),
         haltOnGateFailure = failFast,
         deadAtStart = deadAtStart)
   }

@@ -51,19 +51,13 @@ object CorpusClean {
   }
 
   /** `lshMaxBucket` passes through to [[TextDedup.minhashLshPairs]]'
-    * stop-bucket cap — the r7 sf10 probe measured the UNCAPPED
-    * candidate set as the whole pipeline's super-linear term (x11/x50
-    * grew ~50x at 10x docs while every other stage stayed ~2x), so at
+    * stop-bucket cap — at sf10 the UNCAPPED candidate set is the whole
+    * pipeline's super-linear term (x11/x50 grew ~50x at 10x docs while
+    * every other stage stayed ~2x), so at
     * open-web scale the cap is this pipeline's linearity knob too.
     * Default None keeps exact all-in-bucket-pairs semantics.
     */
-  /** `lshBandGroups` passes through to [[TextDedup.minhashLshPairs]]'
-    * band-group split — the DISK knob (the cap bounds candidate compute;
-    * the grouping bounds the live shuffle-spill footprint of the LSH
-    * stage at ~1/groups, which is what keeps the pipeline runnable when
-    * per-node scratch, not CPU, is the binding constraint).
-    */
-  /** `lshRecallFloor` is the RECALL knob — the third face of the same
+  /** `lshRecallFloor` is the RECALL knob — the second face of the same
     * LSH stage: instead of a hand-picked cap (`lshMaxBucket`), the
     * pipeline prices the floor through the measured recall table
     * ([[TextDedup.budgetForRecall]] — refusing floors/corpus sizes the
@@ -79,7 +73,7 @@ object CorpusClean {
     * frame (quality, nearKept), not just the exact-dedup survivors —
     * for consumers that read the `ordered` stage list more than once
     * (the x50 waterfall counts every stage, so a lazy `nearKept` would
-    * re-run the whole LSH pair chain once per downstream count; r17).
+    * re-run the whole LSH pair chain once per downstream count).
     * The pipeline default stays false: a single-consumer chain pays
     * the extra materialization barriers for nothing.
     */
@@ -88,7 +82,6 @@ object CorpusClean {
       rates: Map[String, Int], defaultPercent: Int = 0,
       materializeCut: DataFrame => DataFrame = identity,
       lshMaxBucket: Option[Int] = None,
-      lshBandGroups: Option[Int] = None,
       lshRecallFloor: Option[Double] = None,
       cutAllStages: Boolean = false): CleanStages = {
     require(lshMaxBucket.isEmpty || lshRecallFloor.isEmpty,
@@ -121,7 +114,7 @@ object CorpusClean {
         TextDedup.budgetForRecall(n, floor)))
     }
     val pairs = TextDedup.minhashLshPairs(exactKept, idCol, textCol,
-      nearDupThreshold, maxBucket = cap, bandGroups = lshBandGroups)
+      nearDupThreshold, maxBucket = cap)
     val nearKept = cutStage(exactKept.join(
       pairs.select(col("id_b").as(idCol)).distinct(),
       Seq(idCol), "left_anti"))
@@ -137,11 +130,10 @@ object CorpusClean {
       rates: Map[String, Int], defaultPercent: Int = 0,
       materializeCut: DataFrame => DataFrame = identity,
       lshMaxBucket: Option[Int] = None,
-      lshBandGroups: Option[Int] = None,
       lshRecallFloor: Option[Double] = None): DataFrame =
     stages(docs, idCol, textCol, stratumCol, nearDupThreshold,
       rates, defaultPercent, materializeCut, lshMaxBucket,
-      lshBandGroups, lshRecallFloor).sampled
+      lshRecallFloor).sampled
 
   /** Curriculum ordering: place every doc in a difficulty band (the
     * CCNet perplexity terciles of [[TextAnalysis.perplexityBuckets]] —

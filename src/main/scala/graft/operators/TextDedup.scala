@@ -29,43 +29,18 @@ object TextDedup {
   // the reserved names internally and alias to the public id_a/id_b/
   // new_id/old_id only in their final select, so registering them here
   // cannot exempt a user query whose own columns happen to be called
-  // id_a (r8 advice: the old public-name allowlist was action at a
-  // distance — any user join on a coinciding name was silently skipped).
+  // id_a (a public-name allowlist would silently skip any user join on a
+  // coinciding name).
   graft.plans.FanoutLint.allowContractKeys(
     "__graft_id_a", "__graft_id_b", "__graft_new_id", "__graft_old_id")
 
   /** The operators' default eager lineage cut: localCheckpoint at
-    * [[graft.Checkpoints.level]]. Public so demo and probe callers that
+    * [[graft.Checkpoints.level]]. Public so demo and spec callers that
     * pass a `materialize*` strategy cut at the same level instead of
     * `_.localCheckpoint(true)` (which pins the deserialized default).
     */
   def eagerCut(df: DataFrame): DataFrame =
     df.localCheckpoint(true, Checkpoints.level)
-
-  /** Nudge the ContextCleaner to reclaim the SHUFFLE FILES of plans that
-    * just went unreachable (a localCheckpoint truncates lineage, so the
-    * pre-checkpoint shuffles' dependencies become garbage): ContextCleaner
-    * deletes shuffle files only when their ShuffleDependency is GC'd — on
-    * a big heap that can be never, and a sequential multi-pass job would
-    * otherwise accumulate every pass's spill until the disk fills (the
-    * exact r10 failure: the monolithic 2M-doc LSH probes' cumulative
-    * shuffle files exceeded 79 G even under zstd). Pair with
-    * `spark.cleaner.referenceTracking.blocking.shuffle=true` so deletions
-    * complete before the next pass starts writing.
-    *
-    * Single-JVM operational caveat (r15 probe chain): on a large local
-    * heap (48 g at 5M docs) this explicit GC can run a multi-minute
-    * stop-the-world full collection — long enough to starve executor
-    * heartbeats past `spark.network.timeout`'s 120 s default, at which
-    * point HeartbeatReceiver removes local mode's ONLY executor and
-    * every cached checkpoint block "disappears" mid-read. Run big
-    * single-box jobs with `-XX:+ExplicitGCInvokesConcurrent` (the call
-    * becomes a concurrent G1 cycle; reference processing still drives
-    * the ContextCleaner) and a raised `spark.network.timeout`. On a
-    * real cluster the driver heap holds no data and the pause never
-    * materializes.
-    */
-  private def releaseShuffles(): Unit = System.gc()
 
   /** Keep-first exact dedup by key (X1): one hash shuffle on the keys;
     * `tiebreak` makes "first" deterministic (dropDuplicates' keep-first
@@ -297,8 +272,8 @@ object TextDedup {
     * .writeBucketed]]) the store side joins with NO exchange.
     */
   /** `maxBucket` is the incremental analogue of [[minhashLshPairs]]'
-    * stop-bucket cap — the crawl loop's linearity knob (r7 verdict: the
-    * probe side still rode the uncapped candidate volume): STORE buckets
+    * stop-bucket cap — the crawl loop's linearity knob (without it the
+    * probe side rides the uncapped candidate volume): STORE buckets
     * with more than `maxBucket` members are dropped before the probe
     * join, so one corpus-scale boilerplate bucket can no longer collide
     * with every arriving batch doc. The count runs over the store INDEX
@@ -314,9 +289,9 @@ object TextDedup {
     * here — the crawl loop indexes each accepted batch anyway (the
     * append half), so deriving the batch index once and passing it to
     * BOTH the probe and [[lshStoreAppend]] saves a full
-    * shingle→signature→band pass per batch (r17: x59 measured the
-    * batch-1 index being built twice, once inside its probe and once
-    * inside its append).
+    * shingle→signature→band pass per batch (otherwise x59 builds the
+    * batch-1 index twice, once inside its probe and once inside its
+    * append).
     */
   def probeLshStore(batch: DataFrame, corpusIndex: DataFrame,
       corpus: DataFrame, idCol: String, textCol: String, threshold: Double,
@@ -376,8 +351,8 @@ object TextDedup {
     ScaleOps.writeBucketed(lshIndex(corpus, idCol, textCol), table,
       LshStoreBuckets, Seq("band", "key"), path = path)
 
-  /** Index maintenance — the other half of the crawl loop (r6 verdict
-    * item #3): APPEND an accepted batch's band keys into the bucketed
+  /** Index maintenance — the other half of the crawl loop: APPEND an
+    * accepted batch's band keys into the bucketed
     * store, so the NEXT batch probes base+batch without re-indexing or
     * re-scanning the corpus. Cost is O(batch·bands) rows hashed into
     * the store's existing bucket layout; the store is never rewritten.
@@ -394,48 +369,6 @@ object TextDedup {
     batch.sparkSession.catalog.refreshTable(table)
   }
 
-  /** MinHash+LSH near-dup pairs (X2b) — the 100 TB dedup path: shingle →
-    * codegen hash → single-buffer 128-slot minhash signature (map-side
-    * combinable) → 64 bands of r=2 → per-bucket candidate pairs → exact
-    * Jaccard verification at `threshold`. At threshold t the per-pair miss
-    * probability is (1−t²)^64 (≤1e-8 at t=0.5), while cluster cost is
-    * O(n·bands) shuffle instead of O(n²).
-    */
-  /** `materializeCandidates` selects the verification strategy. `None`
-    * (default): the candidate pairs stay lazy and exact verification
-    * joins against shingle sets of the WHOLE corpus — one job, full
-    * operator overlap; best when a corpus scan is cheap (it is re-read
-    * twice, once per pair side). `Some(m)` — e.g.
-    * `Some(_.localCheckpoint(true))`: the candidate pair set is
-    * materialized via `m` and shingle sets are built ONLY for docs that
-    * appear in a candidate pair (semi join — AQE picks broadcast when
-    * the candidate set fits). That is the 100 TB path — at scale the two
-    * extra full-corpus shingle builds dwarf the materialization barrier,
-    * while at demo scale the barrier costs more than it saves (measured;
-    * hence not the default).
-    *
-    * `maxBucket` is the stop-BUCKET cap, the banding analogue of
-    * [[ngramJaccardPairs]]' stop-shingle `maxDocFreq`: band buckets with
-    * more than `maxBucket` members are dropped BEFORE pair expansion,
-    * bounding the worst bucket's candidate cost at C(cap, 2). An
-    * oversized bucket is overwhelmingly minhash-collision noise (a
-    * corpus-scale boilerplate shingle, a degenerate signature), while a
-    * TRUE pair at Jaccard t collides in ~64·t² bands in expectation
-    * (16 at t = 0.5) — it is only lost if EVERY one of its colliding
-    * buckets blows the cap. `None` (default) keeps exact
-    * all-in-bucket-pairs semantics; the r7 sf10 probe measured the
-    * uncapped candidate set growing 45× at 10× docs (random band
-    * collisions are O(n²·p)), so at open-web scale the cap is the knob
-    * that keeps LSH linear.
-    *
-    * Candidate generation is a (band, key) equi SELF-JOIN with a
-    * `doc_id <` residual hanging off the same hash-partitioning as the
-    * bucket-size count (ReuseExchange shuffles the index once) — all
-    * whole-stage codegen. The previous collect_set-per-bucket form was
-    * an ObjectHashAggregate that falls back to sort-based aggregation
-    * past 128 groups; at 500k docs (32M buckets) that fallback sorted
-    * and spilled ~50 GB (the same lesson as x2c2's r4 rewrite).
-    */
   /** Candidate pairs of a `(doc_id, band, key)` band frame — the ONE
     * definition of the LSH candidate machinery ([[minhashLshPairs]] and
     * [[estimatePairsFromSignatures]] share it, so the estimator's
@@ -461,76 +394,60 @@ object TextDedup {
       .distinct()
   }
 
-  /** `bandGroups` bounds the candidate generation's LIVE shuffle-spill
-    * footprint — the disk knob the r10 2M-doc probes were missing: the
-    * monolithic formulation is ONE job whose shuffle files (signature
-    * aggregate + band-bucket window + band self-join + pair distinct)
-    * all coexist on disk until the job ends; at 2M docs that cumulative
-    * footprint exceeded the probe box's 79 G of scratch even under zstd.
-    * With `Some(g)` the band index is localCheckpoint'ed ONCE (after
-    * which the signature aggregate's shuffle files release) and the
-    * (band, key) self-join runs as `g` SEQUENTIAL passes over bands
-    * ≡ i (mod g), each pass's pair set checkpointed and its shuffle
-    * files GC-released before the next pass starts — live scratch is
-    * bounded at ~1/g of the monolithic job's, identical output (band
-    * membership partitions the candidate universe; the final distinct
-    * dedups pairs that collide in bands of different groups —
-    * spec-pinned equality). This is also the honest 100 TB story: a
-    * real cluster bounds spill per STAGE, not per pipeline.
+  /** MinHash+LSH near-dup pairs (X2b) — the 100 TB dedup path: shingle →
+    * codegen hash → single-buffer 128-slot minhash signature (map-side
+    * combinable) → 64 bands of r=2 → per-bucket candidate pairs → exact
+    * Jaccard verification at `threshold`. At threshold t the per-pair miss
+    * probability is (1−t²)^64 (≤1e-8 at t=0.5), while cluster cost is
+    * O(n·bands) shuffle instead of O(n²).
     *
-    * Grouped mode always materializes the candidate set (the per-pass
-    * results already are): `materializeCandidates` selects HOW the
-    * unioned set is cut (default `_.localCheckpoint(true)`), and
-    * verification shingles only candidate docs via semi joins — the
-    * scale path, which is the only regime where `bandGroups` makes
-    * sense. Demo scale should keep `None`: g sequential passes forfeit
-    * operator overlap, costing wall-clock to save scratch.
-    */
-  /** `verifyGroups` is the verify-stage analogue of `bandGroups` — the
-    * SECOND disk knob: the exact-Jaccard verification joins attach a
-    * shingle set to each side of every candidate pair, so the verify
-    * stage's live shuffle footprint is O(candidates × set size) — at
-    * 160M+ candidates that alone exceeds a box/executor's scratch even
-    * when candidate GENERATION was bounded by `bandGroups` (the r11
-    * 2M-doc fixed-cap face survived generation and died in the verify
-    * tail). With `Some(g)` the MATERIALIZED candidate set verifies as
-    * `g` sequential hash-slices (deterministic xxhash64 of the pair),
-    * each slice's result checkpointed and its verify shuffles released
-    * before the next slice starts — live verify scratch is ~1/g,
-    * identical output (the slices partition the candidate set; verify
-    * is per-pair). Requires materialized candidates (`bandGroups`, or
-    * `materializeCandidates` on the monolithic path): slicing a LAZY
-    * candidate plan would re-run candidate generation per slice.
+    * `materializeCandidates` selects the verification strategy. `None`
+    * (default): the candidate pairs stay lazy and exact verification
+    * joins against shingle sets of the WHOLE corpus — one job, full
+    * operator overlap; best when a corpus scan is cheap (it is re-read
+    * twice, once per pair side). `Some(m)` — e.g.
+    * `Some(_.localCheckpoint(true))`: the candidate pair set is
+    * materialized via `m` and shingle sets are built ONLY for docs that
+    * appear in a candidate pair (semi join — AQE picks broadcast when
+    * the candidate set fits). That is the 100 TB path — at scale the two
+    * extra full-corpus shingle builds dwarf the materialization barrier,
+    * while at demo scale the barrier costs more than it saves (measured;
+    * hence not the default).
+    *
+    * `maxBucket` is the stop-BUCKET cap, the banding analogue of
+    * [[ngramJaccardPairs]]' stop-shingle `maxDocFreq`: band buckets with
+    * more than `maxBucket` members are dropped BEFORE pair expansion,
+    * bounding the worst bucket's candidate cost at C(cap, 2). An
+    * oversized bucket is overwhelmingly minhash-collision noise (a
+    * corpus-scale boilerplate shingle, a degenerate signature), while a
+    * TRUE pair at Jaccard t collides in ~64·t² bands in expectation
+    * (16 at t = 0.5) — it is only lost if EVERY one of its colliding
+    * buckets blows the cap. `None` (default) keeps exact
+    * all-in-bucket-pairs semantics; the uncapped candidate set grows
+    * ~45× at 10× the docs (random band collisions are O(n²·p)), so at
+    * open-web scale the cap is the knob that keeps LSH linear.
+    *
+    * Candidate generation is a (band, key) equi SELF-JOIN with a
+    * `doc_id <` residual hanging off the same hash-partitioning as the
+    * bucket-size count (ReuseExchange shuffles the index once) — all
+    * whole-stage codegen. A collect_set-per-bucket form would be an
+    * ObjectHashAggregate, which falls back to sort-based aggregation
+    * past 128 groups; at 500k docs (32M buckets) that fallback sorts and
+    * spills ~50 GB.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double,
       materializeCandidates: Option[DataFrame => DataFrame] = None,
-      maxBucket: Option[Int] = None,
-      bandGroups: Option[Int] = None,
-      verifyGroups: Option[Int] = None): DataFrame = bandGroups match {
-    case Some(g) =>
-      minhashLshPairsGrouped(df, idCol, textCol, threshold,
-        materializeCandidates.getOrElse(eagerCut), maxBucket, g,
-        verifyGroups)
-    case None =>
-      require(verifyGroups.isEmpty || materializeCandidates.nonEmpty,
-        "verifyGroups needs materialized candidates (set bandGroups or " +
-          "materializeCandidates) — slicing a lazy candidate plan would " +
-          "re-run candidate generation once per slice")
-      minhashLshPairsMonolithic(df, idCol, textCol, threshold,
-        materializeCandidates, maxBucket, verifyGroups)
-  }
+      maxBucket: Option[Int] = None): DataFrame =
+    pairsFromBands(lshCandidatePairs(lshIndex(df, idCol, textCol), maxBucket),
+      df, idCol, textCol, threshold, materializeCandidates)
 
   /** Trust a caller-provided materialization only when it actually
     * truncated lineage: a plan whose analyzed root is a `LogicalRDD` is
     * checkpoint-backed (the default `localCheckpoint(true)` path);
     * anything else — `identity`, `cache()`, another lazy cut — is re-cut
-    * here. The grouped candidate path needs the cut before it RELEASES
-    * the pass generations the lazy plan still references (r11 advice);
-    * the grouped VERIFY path needs it so each slice filters a computed
-    * RDD instead of silently re-running candidate generation once per
-    * slice (r12 advice — the monolithic path's require checked only
-    * that a materializer was provided, not that it cut).
+    * here, so a `prebuiltIndex` handed to the survival instruments is
+    * read once instead of re-derived by each of its consumers.
     */
   private[operators] def ensureEagerCut(df: DataFrame): DataFrame =
     if (df.queryExecution.analyzed
@@ -542,9 +459,8 @@ object TextDedup {
     * (typically checkpointed once and shared): calibration sweeps,
     * multi-preset demos, and any pipeline that derives the
     * shingle→signature→band chain once and runs the capped candidate +
-    * verify tail several times (x64 ran the FULL chain once per preset
-    * before this existed — the whole suite's slowest query, at 3× the
-    * needed signature work). `bands` must be [[lshIndex]]-shaped
+    * verify tail several times (running the full chain once per preset
+    * triples the signature work). `bands` must be [[lshIndex]]-shaped
     * (`doc_id, band, key`); `corpus` supplies the texts for exact
     * verification, exactly as in the from-text path — spec-pinned:
     * `minhashLshPairsFromIndex(lshIndex(df), df, …) ≡
@@ -553,18 +469,13 @@ object TextDedup {
   def minhashLshPairsFromIndex(bands: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       materializeCandidates: Option[DataFrame => DataFrame] = None,
-      maxBucket: Option[Int] = None,
-      verifyGroups: Option[Int] = None): DataFrame = {
+      maxBucket: Option[Int] = None): DataFrame = {
     val need = Set("doc_id", "band", "key")
     require(need.subsetOf(bands.columns.toSet),
       s"band index must have columns ${need.mkString(", ")} (lshIndex " +
         s"output); got ${bands.columns.mkString(", ")}")
-    require(verifyGroups.isEmpty || materializeCandidates.nonEmpty,
-      "verifyGroups needs materialized candidates (set " +
-        "materializeCandidates) — slicing a lazy candidate plan would " +
-        "re-run candidate generation once per slice")
     pairsFromBands(lshCandidatePairs(bands, maxBucket), corpus, idCol,
-      textCol, threshold, materializeCandidates, verifyGroups)
+      textCol, threshold, materializeCandidates)
   }
 
   /** [[minhashLshPairsFromIndex]] at cap `maxBucket`, with each verified
@@ -574,11 +485,10 @@ object TextDedup {
     * cap `c ≤ maxBucket` iff `min_bn ≤ c`, so a multi-preset caller
     * (x64: the default and high-recall budget presets differ only in
     * their calibrated cap) runs ONE candidate + verify chain at the
-    * LOOSEST preset's cap and reads every tighter preset as a filter —
-    * r16's x64 ran the full capped chain once per preset (the suite's
-    * most expensive query) when the presets' outputs are nested by
-    * construction. Filter-equality with the per-cap operator is
-    * spec-pinned (TextDedupSpec).
+    * LOOSEST preset's cap and reads every tighter preset as a filter
+    * instead of running the full capped chain once per preset — the
+    * presets' outputs are nested by construction. Filter-equality with
+    * the per-cap operator is spec-pinned (TextDedupSpec).
     *
     * Cost vs one [[minhashLshPairsFromIndex]] run: the candidate
     * aggregate keys the same (pair) groups — `min(bn)` instead of
@@ -588,13 +498,8 @@ object TextDedup {
     */
   def minhashLshPairsWithMinBucket(bands: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double, maxBucket: Int,
-      materializeCandidates: Option[DataFrame => DataFrame] = None,
-      verifyGroups: Option[Int] = None): DataFrame = {
+      materializeCandidates: Option[DataFrame => DataFrame] = None): DataFrame = {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    require(verifyGroups.isEmpty || materializeCandidates.nonEmpty,
-      "verifyGroups needs materialized candidates (set " +
-        "materializeCandidates) — slicing a lazy candidate plan would " +
-        "re-run candidate generation once per slice")
     val bnc = count(lit(1)).over(Window.partitionBy(col("band"), col("key")))
     val live = bands.withColumn("bn", bnc)
       .filter(col("bn") >= 2 && col("bn") <= maxBucket)
@@ -614,18 +519,8 @@ object TextDedup {
       case None =>
         verifyCandidatePairs(candIds, corpus, idCol, textCol, threshold)
       case Some(m) =>
-        verifyGroups match {
-          case Some(vg) =>
-            verifyCandidatePairsGrouped(ensureEagerCut(candIds), corpus,
-              idCol, textCol, threshold, vg)
-          case None =>
-            val docsOf = candIds
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            verifyCandidatePairs(candIds,
-              corpus.join(docsOf, Seq(idCol), "left_semi"),
-              idCol, textCol, threshold, cut = m)
-        }
+        verifyCandidatePairs(candIds, candidateDocs(corpus, candIds, idCol),
+          idCol, textCol, threshold, cut = m)
     }
     verified.join(candMin.select(col("__graft_id_a").as("id_a"),
         col("__graft_id_b").as("id_b"), col("__graft_min_bn").as("min_bn")),
@@ -633,60 +528,46 @@ object TextDedup {
       .select(col("id_a"), col("id_b"), col("jaccard"), col("min_bn"))
   }
 
-  private def minhashLshPairsMonolithic(df: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame],
-      maxBucket: Option[Int],
-      verifyGroups: Option[Int] = None): DataFrame =
-    pairsFromBands(lshCandidatePairs(lshIndex(df, idCol, textCol), maxBucket),
-      df, idCol, textCol, threshold, materializeCandidates, verifyGroups)
-
   /** The shared candidate→verify tail of the from-text and from-index
-    * monolithic paths (ONE definition, so the index-reusing face can
-    * never drift from [[minhashLshPairs]]' semantics).
+    * paths (ONE definition, so the index-reusing face can never drift
+    * from [[minhashLshPairs]]' semantics).
     */
-  private def pairsFromBands(lazyCand0: DataFrame, df: DataFrame,
+  private def pairsFromBands(lazyCand: DataFrame, df: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame],
-      verifyGroups: Option[Int]): DataFrame = {
-    val lazyCand = lazyCand0
+      materializeCandidates: Option[DataFrame => DataFrame]): DataFrame =
     materializeCandidates match {
       case None => verifyCandidatePairs(lazyCand, df, idCol, textCol, threshold)
       case Some(m) =>
         val c = m(lazyCand)
-        verifyGroups match {
-          case Some(vg) =>
-            verifyCandidatePairsGrouped(ensureEagerCut(c), df, idCol, textCol,
-              threshold, vg)
-          case None =>
-            val candIds = c
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            // no broadcast hint: the candidate-doc set is O(docs with a
-            // near-dup), unbounded at corpus scale — let AQE broadcast it
-            // only when it actually fits, else a shuffled semi join.
-            // The caller's materializer also cuts the shingle-set frame
-            // (see verifyCandidatePairs: lazy sets evaluate once per
-            // pair side)
-            verifyCandidatePairs(c, df.join(candIds, Seq(idCol), "left_semi"),
-              idCol, textCol, threshold, cut = m)
-        }
+        // the caller's materializer also cuts the shingle-set frame (see
+        // verifyCandidatePairs: lazy sets evaluate once per pair side)
+        verifyCandidatePairs(c, candidateDocs(df, c, idCol),
+          idCol, textCol, threshold, cut = m)
     }
-  }
+
+  /** The rows of `df` whose id appears on either side of a
+    * `(__graft_id_a, __graft_id_b)` candidate frame — the verify base of
+    * every materialized path. No broadcast hint: the candidate-doc set is
+    * O(docs with a near-dup), unbounded at corpus scale, so AQE
+    * broadcasts it only when it actually fits, else a shuffled semi join.
+    */
+  private def candidateDocs(df: DataFrame, cand: DataFrame,
+      idCol: String): DataFrame =
+    df.join(cand
+      .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
+      .distinct(), Seq(idCol), "left_semi")
 
   /** Exact-Jaccard verification of a `(__graft_id_a, __graft_id_b)`
     * candidate frame against shingle sets built from `setsBase` — the
-    * shared tail of the monolithic and band-grouped paths (ONE
-    * definition, so the grouped path's semantics can never drift).
+    * shared tail of every LSH verify path (ONE definition, so the paths'
+    * semantics can never drift).
     *
     * `cut` materializes the shingle-set frame ONCE before the two pair-
     * side joins: the sets frame is joined by `__graft_id_a` and again by
     * `__graft_id_b` — two different hash partitionings, so exchange
     * reuse never applies and a LAZY sets plan (text scan → semi join →
-    * tokenize → shingle build) evaluates once per side (r17 verdict
-    * item 4: the sampled survival instrument's verify rebuilt shingle
-    * sets from text for both pair sides). Callers holding a
-    * materialization strategy pass it here; the default `identity`
+    * tokenize → shingle build) evaluates once per side. Callers holding
+    * a materialization strategy pass it here; the default `identity`
     * keeps the lazy demo contract (at demo scale the barrier can cost
     * more than the duplicated build — the same measured tradeoff as
     * `materializeCandidates` itself).
@@ -705,82 +586,8 @@ object TextDedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** [[verifyCandidatePairs]] as `groups` SEQUENTIAL hash-slices of a
-    * MATERIALIZED candidate frame (see [[minhashLshPairs]]'
-    * `verifyGroups` doc): each slice semi-joins its own candidate docs,
-    * verifies, checkpoints its (small) verified output, and releases its
-    * verify shuffles before the next slice starts — the slice outputs
-    * stay persisted because they ARE the result. The slice key is a
-    * deterministic pair hash, so the slices partition the candidate set
-    * and the union equals the monolithic verify exactly (spec-pinned).
-    */
-  private def verifyCandidatePairsGrouped(cand: DataFrame, df: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      groups: Int): DataFrame = {
-    require(groups >= 1, s"verifyGroups must be >= 1, got $groups")
-    val passes = (0 until groups).map { g =>
-      val slice = cand.filter(
-        pmod(xxhash64(col("__graft_id_a"), col("__graft_id_b")),
-          lit(groups.toLong)) === g)
-      val sliceIds = slice
-        .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-        .distinct()
-      val (out, _) = Checkpoints.tracked(
-        verifyCandidatePairs(slice, df.join(sliceIds, Seq(idCol), "left_semi"),
-          idCol, textCol, threshold))
-      releaseShuffles() // this slice's shingle-build + verify-join shuffles
-      out
-    }
-    passes.reduce(_ union _)
-  }
-
-  /** The band-grouped candidate path (see [[minhashLshPairs]]'
-    * `bandGroups` doc): checkpoint the band index once, run the
-    * candidate self-join as `groups` sequential band-slice passes with
-    * per-pass checkpoint + shuffle release, union + distinct + cut the
-    * candidate set, release every intermediate generation, then verify
-    * over semi-joined candidate docs only.
-    */
-  private def minhashLshPairsGrouped(df: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      materialize: DataFrame => DataFrame, maxBucket: Option[Int],
-      groups: Int, verifyGroups: Option[Int] = None): DataFrame = {
-    require(groups >= 1, s"bandGroups must be >= 1, got $groups")
-    val sc = df.sparkSession.sparkContext
-    val (bands, bandIds) = Checkpoints.tracked(lshIndex(df, idCol, textCol))
-    releaseShuffles() // the signature aggregate's shuffle files
-    val passes = (0 until groups).map { g =>
-      // slicing by band is windowing-safe: the (band, key) bucket count
-      // never crosses bands, so a slice sees every row of its buckets
-      val out = Checkpoints.tracked(
-        lshCandidatePairs(bands.filter(col("band") % groups === g), maxBucket))
-      releaseShuffles() // this pass's window + self-join shuffle files
-      out
-    }
-    // the cut must be EAGER and lineage-truncating before the pass
-    // generations release below — a lazy cut would leave the candidate
-    // plan backed by released checkpoint blocks, which localCheckpoint'd
-    // RDDs cannot recompute (r11 advice; see [[ensureEagerCut]])
-    val cand = ensureEagerCut(
-      materialize(passes.map(_._1).reduce(_ union _).distinct()))
-    // candidates are cut: the band index and every pass generation are
-    // dead weight from here — release before the verify stage spills
-    Checkpoints.release(sc, bandIds ++ passes.flatMap(_._2).toSet)
-    releaseShuffles()
-    verifyGroups match {
-      case Some(vg) =>
-        verifyCandidatePairsGrouped(cand, df, idCol, textCol, threshold, vg)
-      case None =>
-        val candIds = cand
-          .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-          .distinct()
-        verifyCandidatePairs(cand, df.join(candIds, Seq(idCol), "left_semi"),
-          idCol, textCol, threshold)
-    }
-  }
-
-  /** The stop-bucket cap CALIBRATED to a candidate-pair budget — the
-    * scale rule the r11 probes made necessary: at a FIXED cap the
+  /** The stop-bucket cap CALIBRATED to a candidate-pair budget: at a
+    * FIXED cap the
     * candidate volume Σ_buckets C(bn∧cap, 2) grows SUPER-linearly with
     * corpus size (measured 10.3× per 4× docs at cap 64, 500k→2M —
     * sub-threshold band collisions keep FILLING buckets as n grows, so
@@ -826,9 +633,9 @@ object TextDedup {
   }
 
   /** Per-TRUE-PAIR survival statistics of the stop-bucket cap — the
-    * recall instrument the budget rule ([[calibrateMaxBucket]]) needs:
-    * bounded cost with unmeasured recall is half a production story
-    * (r11 verdict item 1). One row per TRUE near-dup pair (exact
+    * recall instrument the budget rule ([[calibrateMaxBucket]]) needs,
+    * since a cap bounds cost but says nothing of what it costs in
+    * recall. One row per TRUE near-dup pair (exact
     * Jaccard ≥ `threshold` among the uncapped LSH candidates):
     * `(id_a, id_b, jaccard, min_bn)` where `min_bn` is the SMALLEST
     * colliding band-bucket the pair shares, over ALL bands. The capped
@@ -850,8 +657,8 @@ object TextDedup {
     * 1/π(j) (Horvitz–Thompson) to estimate the full-universe recall.
     * Residual bias (conditioning on an early-band collision adds ~1
     * expected colliding bucket, nudging min_bn down) is measured, not
-    * assumed: the probe harness runs k-sampled and exact side by side
-    * at 500k docs (BENCHNOTES r12).
+    * assumed: BENCHNOTES.md records k-sampled and exact side by side at
+    * 500k docs.
     *
     * Recall here is RELATIVE TO UNCAPPED LSH: pairs that never collide
     * in any band are invisible to both capped and uncapped runs and are
@@ -862,36 +669,27 @@ object TextDedup {
     * (b) the verified true-pair set before the min-bucket join re-uses
     * it on both sides — pass `Some(_.localCheckpoint(true))` at scale;
     * the `None` default keeps the whole computation lazy for
-    * oracle-checkable demo use. `verifyGroups` slices the exact-verify
-    * stage exactly like [[minhashLshPairs]]' knob (requires
-    * `materialize`) — the instrument's k-band UNCAPPED candidate set
-    * grows with n² just like the operator's, so the at-scale recall
-    * faces need the same disk bound.
+    * oracle-checkable demo use.
     *
     * `prebuiltIndex`: an already-derived [[lshIndex]] frame
-    * (`doc_id, band, key`) to use instead of deriving one here — the
-    * probe faces calibrate their cap grid off ONE cut band index and
-    * this instrument used to re-derive (and re-cache) the same chain
-    * internally, double-caching 320M-row generations per run (r16
-    * advice). An already-checkpointed frame passes [[ensureEagerCut]]
-    * untouched; a lazy one is cut exactly like the internal derivation
-    * would be.
+    * (`doc_id, band, key`) to use instead of deriving one here, so a
+    * caller that calibrates its cap off one cut band index (the recall
+    * gate in TextDedupSpec) reads the same cut here instead of caching
+    * the chain twice. An already-checkpointed frame passes
+    * [[ensureEagerCut]] untouched; a lazy one is cut exactly like the
+    * internal derivation would be.
     */
   def lshSurvivalStats(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, discoveryBands: Option[Int] = None,
       materialize: Option[DataFrame => DataFrame] = None,
-      verifyGroups: Option[Int] = None,
       prebuiltIndex: Option[DataFrame] = None): DataFrame = {
     discoveryBands.foreach(k => require(k >= 1 && k <= Hashing.MinhashK / 2,
       s"discoveryBands must be in [1, ${Hashing.MinhashK / 2}], got $k"))
-    require(verifyGroups.isEmpty || materialize.nonEmpty,
-      "verifyGroups needs materialized candidates (set materialize) — " +
-        "slicing a lazy candidate plan would re-run discovery per slice")
     val cut = materialize.getOrElse(identity[DataFrame] _)
-    // one band-index derivation per call (r15 verdict item 4, the x64
-    // index-reuse lesson): the index feeds THREE consumers — discovery,
-    // the bucket-size window, and (via candidates) the verify — and a
-    // lazy chain re-runs shingles+signatures per consumer. Under a
+    // one band-index derivation per call: the index feeds THREE
+    // consumers — discovery, the bucket-size window, and (via
+    // candidates) the verify — and a lazy chain re-runs
+    // shingles+signatures per consumer. Under a
     // materialize strategy the index cuts ONCE and every consumer reads
     // the cut; the lazy default keeps the demo-scale no-storage path.
     val bands = prebuiltIndex match {
@@ -900,37 +698,21 @@ object TextDedup {
     }
     val discovery = discoveryBands.fold(bands)(k => bands.filter(col("band") < k))
     val cand = cut(lshCandidatePairs(discovery, maxBucket = None))
-    // the instrument meets the same wall the capped operator did: the
-    // UNCAPPED k-band candidate set at corpus scale (~230M pairs at 5M
-    // docs, k=2) exceeds a box's scratch under a monolithic verify, so
-    // the verify stage takes the same slice knob as minhashLshPairs
-    val truePairs = verifyGroups match {
-      case Some(vg) =>
-        cut(verifyCandidatePairsGrouped(ensureEagerCut(cand), df,
-          idCol, textCol, threshold, vg))
-      case None =>
-        val setsBase = materialize match {
-          case None => df // lazy demo path: verify against the whole corpus
-          case Some(_) =>
-            val candIds = cand
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            df.join(candIds, Seq(idCol), "left_semi")
-        }
-        cut(verifyCandidatePairs(cand, setsBase, idCol, textCol, threshold,
-          cut = cut))
-    }
+    // lazy demo path: verify against the whole corpus
+    val setsBase =
+      if (materialize.isEmpty) df else candidateDocs(df, cand, idCol)
+    val truePairs = cut(verifyCandidatePairs(cand, setsBase, idCol,
+      textCol, threshold, cut = cut))
     // bucket sizes over the FULL index (the sizes the capped operator
     // filters on), then restricted to docs that appear in a true pair —
     // the window must see every bucket member, so filter AFTER it.
-    // (Deliberately kept as the lazy window shape after an r17 A/B:
-    // this exact-discovery instrument is priced to ≤5M docs where the
-    // window fits; the 10M+ face is [[lshSurvivalStatsSampled]], whose
-    // histogram tail never materializes the full index with counts.
-    // Rewriting THIS tail to histogram+cut measured x63 2.55→3.11 s and
-    // histogram-no-cut 3.77 s at sf0.1 — the extra checkpoint barrier /
-    // semi-join stages cost more than the duplicate window saves below
-    // the 5M ceiling, so the window stays.)
+    // The lazy window shape is deliberate: this exact-discovery
+    // instrument is priced to ≤5M docs where the window fits (the 10M+
+    // face is [[lshSurvivalStatsSampled]], whose histogram tail never
+    // materializes the full index with counts). A histogram+cut tail
+    // measured x63 2.55→3.11 s and histogram-no-cut 3.77 s at sf0.1 —
+    // the extra checkpoint barrier / semi-join stages cost more than the
+    // duplicate window saves below the 5M ceiling.
     val bn = bands.withColumn("bn",
       count(lit(1)).over(Window.partitionBy(col("band"), col("key"))))
     val pairDocs = truePairs
@@ -940,19 +722,18 @@ object TextDedup {
     joinMinBn(truePairs, bnPair)
   }
 
-  /** The shared min_bn tail of [[lshSurvivalStats]] and
-    * [[lshSurvivalStatsSampled]]: FULL-corpus bucket sizes for exactly
+  /** The min_bn tail of [[lshSurvivalStatsSampled]]: FULL-corpus
+    * bucket sizes for exactly
     * the buckets the true-pair docs are members of — membership rows
     * first (index ⋉ pair docs; the pair-doc side is O(true pairs),
     * broadcastable), then each touched bucket's size via a
     * map-side-combinable histogram over the index rows of those buckets
-    * (never the full-index window — the 10M-doc wall, r16 kill #3).
+    * (never the full-index window, which does not fit at 10M docs).
     * `bnPair` feeds BOTH sides of the pair join below, so it is cut via
     * the caller's `cut` strategy — without the cut the whole
     * memb ⋈ sizes subtree (itself reading the band index three times)
-    * evaluates once per side: the r17 plan audit measured x65's tail at
-    * 52 Exchanges / 10 checkpoint re-scans from exactly this
-    * duplication.
+    * evaluates once per side: x65's tail planned 52 Exchanges and 10
+    * checkpoint re-scans from exactly this duplication.
     */
   private def attachMinBn(truePairs: DataFrame, bands: DataFrame,
       cut: DataFrame => DataFrame): DataFrame = {
@@ -1007,11 +788,10 @@ object TextDedup {
 
   /** [[lshSurvivalStats]] over a SAMPLED PAIR UNIVERSE — the instrument
     * for corpus decades where even band-restricted exact ground truth
-    * exceeds a box's scratch (r16 measured the wall three ways at 10M
-    * docs: the uncapped candidate universe is 29.64 B pairs ≈ ~100 G of
-    * verify scratch vs ~78 G usable, and k-band discovery CANNOT shrink
-    * it — k samples the same quadratically growing universe,
-    * probes/r16/refusals.log). Pair sampling shrinks the UNIVERSE
+    * exceeds a box's scratch (at 10M docs the uncapped candidate
+    * universe is 29.64 B pairs ≈ ~100 G of verify scratch vs ~78 G
+    * usable, and k-band discovery CANNOT shrink it — k samples the same
+    * quadratically growing universe). Pair sampling shrinks the UNIVERSE
     * itself: restrict to pairs whose BOTH endpoints pass
     * [[samplePredicate]] — every such pair that collides in any band
     * does so inside the sampled sub-corpus (bucket membership is
@@ -1032,23 +812,19 @@ object TextDedup {
     * shrink ×S² (the part that could never fit), and the bucket-size
     * side is a map-side-combinable `(band, key)` histogram joined to
     * the sampled pair docs' buckets — NOT the full-index window that
-    * materializes every index row with its count (kill #3's stage).
+    * materializes every index row with its count.
     * The histogram semi-joins down to the buckets pair docs touch
     * before counting, so its shuffle output is bounded by those
     * buckets' membership, not the 10·64 M-row index.
     *
-    * `prebuiltIndex` / `materialize` / `verifyGroups` as in
+    * `prebuiltIndex` / `materialize` as in
     * [[lshSurvivalStats]]. Output schema identical:
     * `(id_a, id_b, jaccard, min_bn)`.
     */
   def lshSurvivalStatsSampled(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, sampleOneIn: Int,
       prebuiltIndex: Option[DataFrame] = None,
-      materialize: Option[DataFrame => DataFrame] = None,
-      verifyGroups: Option[Int] = None): DataFrame = {
-    require(verifyGroups.isEmpty || materialize.nonEmpty,
-      "verifyGroups needs materialized candidates (set materialize) — " +
-        "slicing a lazy candidate plan would re-run discovery per slice")
+      materialize: Option[DataFrame => DataFrame] = None): DataFrame = {
     val cut = materialize.getOrElse(identity[DataFrame] _)
     val bandsFull = prebuiltIndex match {
       case Some(b) => if (materialize.nonEmpty) ensureEagerCut(b) else b
@@ -1059,36 +835,24 @@ object TextDedup {
     val bandsSample = bandsFull.filter(samplePredicate(col("doc_id"), sampleOneIn))
     val sampled = df.filter(samplePredicate(col(idCol), sampleOneIn))
     val cand = cut(lshCandidatePairs(bandsSample, maxBucket = None))
-    val truePairs = verifyGroups match {
-      case Some(vg) =>
-        cut(verifyCandidatePairsGrouped(ensureEagerCut(cand), sampled,
-          idCol, textCol, threshold, vg))
-      case None =>
-        val setsBase = materialize match {
-          case None => sampled // lazy demo path
-          case Some(_) =>
-            val candIds = cand
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            sampled.join(candIds, Seq(idCol), "left_semi")
-        }
-        // deliberately NO sets-cut here, unlike [[lshSurvivalStats]]:
-        // this instrument's verify base is the 1/S sampled sub-corpus
-        // semi-joined to its candidates, so the duplicated lazy shingle
-        // build is S²× smaller than the exact instrument's — the r18
-        // interleaved A/B measured the extra checkpoint barrier COSTING
-        // more than it saves (x65b 3.25→3.88 s, x65 4.22→4.49 s medians
-        // of 3 interleaved runs) where the exact family won (x62
-        // 4.35→3.80 s). The at-scale faces (10M docs) pass verifyGroups
-        // and take the grouped path above, which never hits this branch.
-        cut(verifyCandidatePairs(cand, setsBase, idCol, textCol, threshold))
-    }
+    // lazy demo path: verify against the whole sampled sub-corpus
+    val setsBase =
+      if (materialize.isEmpty) sampled else candidateDocs(sampled, cand, idCol)
+    // deliberately NO sets-cut here, unlike [[lshSurvivalStats]]: this
+    // instrument's verify base is the 1/S sampled sub-corpus semi-joined
+    // to its candidates, so the duplicated lazy shingle build is S²×
+    // smaller than the exact instrument's — an interleaved A/B measured
+    // the extra checkpoint barrier COSTING more than it saves (x65b
+    // 3.25→3.88 s, x65 4.22→4.49 s medians of 3 interleaved runs) where
+    // the exact family won (x62 4.35→3.80 s).
+    val truePairs = cut(verifyCandidatePairs(cand, setsBase, idCol,
+      textCol, threshold))
     // FULL-corpus bucket sizes for exactly the buckets the pair docs
-    // are members of — the shared histogram tail ([[attachMinBn]]; ONE
-    // definition with [[lshSurvivalStats]] so the two instruments can
-    // never disagree on the bn a pair reads, and the two-sided bnPair
-    // frame is cut once instead of evaluating its index-scanning
-    // subtree once per pair side).
+    // are members of ([[attachMinBn]]; the pair join is [[joinMinBn]],
+    // shared with [[lshSurvivalStats]] so the two instruments can never
+    // disagree on the bn a pair reads, and the two-sided bnPair frame is
+    // cut once instead of evaluating its index-scanning subtree once per
+    // pair side).
     attachMinBn(truePairs, bandsFull, cut)
   }
 
@@ -1131,10 +895,10 @@ object TextDedup {
 
   /** The MEASURED recall table behind [[budgetForRecall]] — one row per
     * probed corpus decade: `docs → (pairsPerDoc budget → recall at the
-    * budget's calibrated cap)`. Every number is a probe-chain
-    * measurement of THIS operator on this repo's synthetic corpus
-    * ([[lshSurvivalStats]] + [[recallAtCaps]], probes/r12–r13;
-    * BENCHNOTES.md "recall-vs-cap" sections): at 500k and 2M docs the
+    * budget's calibrated cap)`. Every number is a measurement of THIS
+    * operator on this repo's synthetic corpus ([[lshSurvivalStats]] +
+    * [[recallAtCaps]]; the records are in `probes/` and BENCHNOTES.md's
+    * "recall-vs-cap" sections): at 500k and 2M docs the
     * default budget 32 has measured recall 1.0; at 5M docs budget 32
     * (calibrated cap 6) measures 0.998271, budget 48 (cap 8) 0.99982,
     * and budget 105 (cap 16) 1.0. Recall here is relative to the
@@ -1181,22 +945,6 @@ object TextDedup {
           f"recall ${row.map(_._2).max}%.6f at this corpus decade — " +
           "no priced budget delivers it; measure a larger budget with " +
           "lshSurvivalStats + recallAtCaps or lower the floor"))
-  }
-
-  /** The measured recall a `pairsPerDoc` budget buys at `nDocs` docs —
-    * [[budgetForRecall]]'s inverse, for LOGGING an operating point's
-    * implied floor (the probe chain stamps each face's record with it).
-    * Conservative like the forward lookup (decade rounds UP; the budget
-    * rounds DOWN to the largest measured budget ≤ it, whose recall the
-    * larger budget can only meet or beat). `None` when unpriced — an
-    * honest "the table doesn't know" instead of a guess.
-    */
-  def pricedRecall(nDocs: Long, pairsPerDoc: Double): Option[Double] = {
-    require(nDocs > 0, s"need nDocs > 0, got $nDocs")
-    require(pairsPerDoc > 0, s"need pairsPerDoc > 0, got $pairsPerDoc")
-    measuredRecallTable.find(_._1 >= nDocs)
-      .flatMap(_._2.filter(_._1 <= pairsPerDoc).lastOption)
-      .map(_._2)
   }
 
   /** Signature-only near-dup pairs (X2h) — [[minhashLshPairs]]' candidate
@@ -1277,16 +1025,15 @@ object TextDedup {
     * `df` rides a WINDOW over the postings' (sh) hash-partitioning —
     * the same one-exchange shape as [[lshCandidatePairs]]' bucket
     * count: the count, the per-doc capped sizes, AND both self-join
-    * sides all hang off ONE shuffle of the postings (r17: the previous
-    * two-phase COUNT + join-back formulation shuffled the postings for
-    * the join anyway and added a second exchange of the per-shingle
-    * counts plus an SMJ to re-attach them; the window reads the same
-    * sorted runs the self-join needs and costs no extra exchange). The
-    * even older collect_set-per-shingle form is documented at
-    * lshCandidatePairs — ObjectHashAggregate falls back to sort-based
-    * past 128 groups.
+    * sides all hang off ONE shuffle of the postings (a two-phase COUNT
+    * + join-back formulation shuffles the postings for the join anyway
+    * and adds a second exchange of the per-shingle counts plus an SMJ to
+    * re-attach them; the window reads the same sorted runs the
+    * self-join needs and costs no extra exchange). A
+    * collect_set-per-shingle form would hit the ObjectHashAggregate
+    * sort-based fallback past 128 groups (see [[minhashLshPairs]]).
     *
-    * Skew guard (r17 verdict item 3 / advice: the window buffers each
+    * Skew guard (the window buffers each
     * shingle's ENTIRE posting list in one task before any filter can
     * drop it, so a corpus-scale stop-shingle — millions of postings on
     * one reducer — is a one-task spill/straggler that exists only to be
@@ -1412,12 +1159,10 @@ object TextDedup {
     * algorithm cut). Converges in O(component diameter) rounds —
     * near-dup clusters are near-cliques, so a handful; `maxIters` caps
     * the loop and convergence is verified (throws if not reached, rather
-    * than silently returning partial labels). Note on the cap's meaning
-    * since round 1 fused into init (r17): the loop bounds propagation
-    * rounds 2..maxIters+1, so a component of diameter exactly
-    * maxIters+1 converges where the pre-fusion operator would have
-    * thrown — a strict behavior relaxation (everything that converged
-    * before still converges, to identical labels; r17 advice).
+    * than silently returning partial labels). The first propagation
+    * round is fused into init, so the loop bounds propagation rounds
+    * 2..maxIters+1: a component of diameter exactly maxIters+1
+    * converges.
     */
   def dedupClusters(pairs: DataFrame, idACol: String = "id_a",
       idBCol: String = "id_b", maxIters: Int = 20): DataFrame = {
@@ -1430,8 +1175,8 @@ object TextDedup {
     // old self-union (pairs ∪ pairs.swapped) planned the ENTIRE pairs
     // subtree twice — for the composed x2f path that is the full LSH
     // chain (signature aggregate, band window, self-join, verify) run
-    // once per union arm inside the edges checkpoint job (r17 verdict
-    // item 6: the pairs chain, not the iterations, is x2f's cost). The
+    // once per union arm inside the edges checkpoint job (the pairs
+    // chain, not the iterations, is x2f's cost). The
     // explode emits (a→b, b→a) per pair row in a codegen projection, so
     // the chain evaluates once; same rows, same distinct.
     val (edges, edgeIds) = Checkpoints.tracked(
@@ -1443,8 +1188,8 @@ object TextDedup {
     // init = identity labels with the FIRST propagation round fused in:
     // label(v) = min(v, min direct neighbor) — exactly what round 1 over
     // identity labels computes, for the price of one aggregate instead
-    // of a full join+agg+update round (r17: saves one loop round — two
-    // checkpoint/convergence jobs — per call; the trajectory from here
+    // of a full join+agg+update round (one loop round — two
+    // checkpoint/convergence jobs — fewer per call; the trajectory from here
     // is identical, spec-pinned by the chain-propagation test)
     var (labels, labelIds) = Checkpoints.tracked(
       edges.groupBy(col("src"))
@@ -1624,7 +1369,7 @@ object TextDedup {
     * instead of reaching the join. The equi-join then verifies exactly,
     * so false positives cannot reach the output.
     *
-    * When to use which (measured, BENCHNOTES r6): under the
+    * When to use which (measured, BENCHNOTES.md): under the
     * tiny-benchmark contract [[decontaminate]]'s broadcast verify join
     * is already one hash lookup per corpus gram, so the bloom probe adds
     * work and plain x23 wins slightly at every corpus size tested (sf0.1
@@ -1641,7 +1386,7 @@ object TextDedup {
     * earlier hand-rolled variant probed a 2^20-bit array LITERAL with
     * three `element_at` bit-tests per gram; the 16K-element literal and
     * triple probe made the filter ~3× the cost of the join it was meant
-    * to prune — BENCHNOTES.md r6.)
+    * to prune.)
     *
     * The filter is built from ONE bounded collect of the benchmark's
     * distinct grams (+ hashes) — the benchmark is a fixed eval suite,
@@ -1743,7 +1488,7 @@ object TextDedup {
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + (n - 1))).as("pos"))
       .distinct()
-    // Reassembly stays ARRAY-NATIVE (r17): removed positions fold to one
+    // Reassembly stays ARRAY-NATIVE: removed positions fold to one
     // set per doc (bounded by that doc's duplicated spans — most docs
     // have none and skip the aggregate entirely), join back to the token
     // arrays on doc id, and the surviving tokens are an array_except
@@ -1848,7 +1593,7 @@ object TextDedup {
       // per-row predicate — the previous count(*)-over-doc window
       // re-derived it from the exploded rows, a second window function
       // (and its per-row frame state) on the same exchange for a value
-      // the scan side already knew (r17)
+      // the scan side already knew
       .select(col("doc_id"), (size(col("ths")) - (k - 1)).as("mg"), posexplode(
         transform(sequence(lit(0), size(col("ths")) - k), i =>
           aggregate(sequence(lit(1), lit(k)), lit(0L), (acc, j) =>

@@ -284,10 +284,10 @@ object VectorSearch {
   }
 
   /** [[semDeDup]] with the cell count derived from the corpus — the
-    * production face ScaleProbe measures: holding cell SIZE constant
+    * production configuration: holding cell SIZE constant
     * (kCells = max(4, n / targetCellSize)) keeps the in-cell pairwise
     * verify linear in the corpus where a FIXED kCells grows it
-    * quadratically (measured 11.2x vs ≤ linear per 10x — BENCHNOTES r8).
+    * quadratically (measured 11.2x vs ≤ linear per 10x, BENCHNOTES.md).
     * Costs one `count()` action up front to size k — at 100 TB that is
     * a metadata-cheap aggregate, and the alternative (a wrong fixed k)
     * costs the quadratic cell.

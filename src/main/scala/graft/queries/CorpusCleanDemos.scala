@@ -17,9 +17,7 @@ object CorpusCleanDemos {
 
   import Hashing.Mod
 
-  // private[graft]: graft.ScaleProbe's capped x11/x50 faces reuse the
-  // demos' exact parameters so scale ratios compare like-for-like
-  private[graft] val rates = Map("en" -> 50, "de" -> 100, "fr" -> 100, "es" -> 100)
+  private val rates = Map("en" -> 50, "de" -> 100, "fr" -> 100, "es" -> 100)
 
   /** The SQL CASE for the per-language rates, generated from the same map
     * the Spark side uses, so the two can't drift.

@@ -278,8 +278,7 @@ object DedupDemos {
   // r7 500k probe). The demo pins cap=2 — small enough that the cap
   // provably FIRES at the verify SF (at sf0.01 it drops the one pair
   // whose every colliding bucket has 3+ members), so the oracle checks
-  // the capped SEMANTICS, not just the uncapped-coincident output; the
-  // scale probes run the production cap (64, graft.ScaleProbe).
+  // the capped SEMANTICS, not just the uncapped-coincident output.
   private val x2b2 = Demo("x2b2_minhash_capped",
     Some(oracleLshCappedPairs(0.5, cap = 2)),
     (s, dir) => TextDedup.minhashLshPairs(
@@ -1028,8 +1027,8 @@ object DedupDemos {
   // measures what the chosen cap COSTS IN RECALL: a pair survives cap c
   // iff its smallest shared band bucket is ≤ c). Exact discovery face.
   // Scale: candidate gen is the x2b machinery; min_bn rides the same
-  // (band, key) bucket-count shuffle restricted to pair docs — the probe
-  // harness runs this at 500k docs (graft.ScaleProbe recall_exact).
+  // (band, key) bucket-count shuffle restricted to pair docs. The
+  // recall gate in TextDedupSpec runs this instrument at sf0.1.
   private val x62 = Demo("x62_lsh_survival",
     Some(oracleSurvivalStats(0.5, None)),
     (s, dir) => TextDedup.lshSurvivalStats(

@@ -217,11 +217,11 @@ object SimilarityDemos {
 
   // -------------------------------------------------------------------
   // X31b: SEMDEDUP, CONSTANT-CELL-SIZE FACE (VectorSearch.semDeDupAuto)
-  // — the production configuration ScaleProbe measures: the cell COUNT
+  // — the production configuration: the cell COUNT
   // derives from the corpus (k = max(4, n / targetCellSize)) so cell
   // SIZE stays constant and the in-cell pairwise verify stays linear as
   // the corpus grows (a fixed k grows it quadratically — 11.2x vs
-  // ≤ linear per 10x, BENCHNOTES r8). The oracle computes the SAME k
+  // ≤ linear per 10x, BENCHNOTES.md). The oracle computes the SAME k
   // from the SAME corpus count (integer floor division both sides) and
   // drives the x31 unrolled k-means chain with it — the checked path IS
   // the measured path (the x2b2 playbook; r8 verdict item 1: the auto

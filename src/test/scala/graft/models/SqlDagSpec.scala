@@ -1220,4 +1220,21 @@ other_profile:
       "p:\n  target: dev\n  outputs:\n    dev:\n      path: /a\n      warehouse_dir: /b\n"))
       intercept[IllegalArgumentException] { Profiles.parse(bad) }
   }
+
+  test("build error cause: an unknown column is reported as one line naming it") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-sqldag-cause").toString
+    val models = Seq(SqlModel("bad_mart",
+      "select no_such_column from {{ ref('raw_loans') }}", Table))
+    val r = new SqlDag(spark, wh).build(models, fictionBankSeeds)
+    assert(r.statusOf("bad_mart") === Some("error"))
+    val cause = r.nodes.find(_.name == "bad_mart").get.cause.get
+    // getMessage of an AnalysisException appends the analyzed plan over
+    // several lines; the report keeps the message line only
+    assert(cause.contains("no_such_column"), cause)
+    assert(!cause.contains("\n"), cause)
+    // a non-Spark throwable keeps its first message line
+    assert(SqlDag.errorCause(new RuntimeException("first\nsecond")) === "first")
+    assert(SqlDag.errorCause(new RuntimeException()) ===
+      "java.lang.RuntimeException")
+  }
 }

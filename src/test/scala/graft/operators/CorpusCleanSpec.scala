@@ -29,23 +29,6 @@ class CorpusCleanSpec extends SparkSpec {
     assert(cutRows.nonEmpty)
   }
 
-  test("lshBandGroups passthrough: band-grouped pipeline keeps identical survivors") {
-    // the disk-bounded LSH stage (sequential band-slice passes) must be
-    // a pure execution-strategy change: same cap, with vs without the
-    // grouping — survivor set byte-identical
-    def capped(bandGroups: Option[Int]) = CorpusClean.pipeline(
-        Tables.table(spark, sfDir, "documents"),
-        idCol = "doc_id", textCol = "text", stratumCol = "lang",
-        nearDupThreshold = 0.5, rates = rates,
-        materializeCut = _.localCheckpoint(true),
-        lshMaxBucket = Some(64), lshBandGroups = bandGroups)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val mono = capped(None)
-    val grouped = capped(Some(3))
-    assert(grouped === mono)
-    assert(grouped.nonEmpty)
-  }
-
   test("lshRecallFloor: prices the floor through the measured table and calibrates the cap") {
     // the floor path must equal the explicit-cap path at the cap the
     // floor implies: budgetForRecall prices the floor at the corpus's

@@ -62,53 +62,6 @@ class TextDedupSpec extends SparkSpec {
     assert(ids.forall(id => !sc.getPersistentRDDs.contains(id)))
   }
 
-  test("minhash LSH: band-grouped path ≡ monolithic, runs ≥ groups+2 sequential jobs, releases its intermediates") {
-    val docs = Tables.table(spark, sfDir, "documents")
-    val mono = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    val sc = spark.sparkContext
-    val groups = 3
-    // job-group-scoped counting: suites run in parallel against the
-    // shared session, so a global job counter would see other suites'
-    // jobs — eager checkpoints run on THIS thread and inherit its group
-    val groupId = "graft-band-group-spec"
-    @volatile var groupJobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            groupId == e.properties.getProperty("spark.jobGroup.id"))
-          groupJobs += 1
-    }
-    sc.addSparkListener(listener)
-    val persistedBefore = sc.getPersistentRDDs.keySet.toSet
-    val grouped =
-      try {
-        sc.setJobGroup(groupId, "band-grouped construction")
-        val df = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-          maxBucket = Some(64), bandGroups = Some(groups))
-        sc.clearJobGroup()
-        // construction is synchronous (eager checkpoints); give the
-        // async listener bus a bounded beat to deliver the job starts
-        val deadline = System.nanoTime() + 10e9.toLong
-        while (groupJobs < groups + 2 && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        df
-      } finally sc.removeSparkListener(listener)
-    // band-index checkpoint + one per pass + the candidate-union cut
-    assert(groupJobs >= groups + 2,
-      s"expected >= ${groups + 2} sequential checkpoint jobs, saw $groupJobs")
-    // hygiene: the pass generations and the band index are RELEASED at
-    // construction end — only the candidate cut may remain. (<= 2, not
-    // == 1: a parallel suite may persist concurrently; a release
-    // regression would leave groups + 2 = 5 behind.)
-    val leaked = sc.getPersistentRDDs.keySet.toSet.diff(persistedBefore)
-    assert(leaked.size <= 2, s"grouped path leaked checkpoints: $leaked")
-    assert(grouped.collect().map(_.mkString("|")).toSet === mono)
-    assert(mono.nonEmpty)
-  }
-
   test("minhash LSH: stop-bucket cap wiring — generous cap ≡ uncapped, cap below pairability drops all") {
     val docs = Tables.table(spark, sfDir, "documents")
     val uncapped = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5)
@@ -717,41 +670,6 @@ class TextDedupSpec extends SparkSpec {
       === Set(2L))
   }
 
-  test("verify-grouped path ≡ monolithic verify, on both candidate paths") {
-    val docs = Tables.table(spark, sfDir, "documents")
-    val mono = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    // band-grouped candidates, hash-sliced verify
-    val vgBand = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        maxBucket = Some(64), bandGroups = Some(2), verifyGroups = Some(3))
-      .collect().map(_.mkString("|")).toSet
-    assert(vgBand === mono)
-    // monolithic materialized candidates, hash-sliced verify
-    val vgMono = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        materializeCandidates = Some(_.localCheckpoint(true)),
-        maxBucket = Some(64), verifyGroups = Some(3))
-      .collect().map(_.mkString("|")).toSet
-    assert(vgMono === mono)
-    assert(mono.nonEmpty)
-    // r12 advice: a LAZY cut (identity) on the monolithic verify-grouped
-    // path passed the materializer require but let each verify slice
-    // re-run candidate generation — it is now RE-CUT eagerly; output
-    // stays ≡ monolithic either way
-    val vgLazy = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        materializeCandidates = Some(identity),
-        maxBucket = Some(64), verifyGroups = Some(3))
-      .collect().map(_.mkString("|")).toSet
-    assert(vgLazy === mono)
-    // verifyGroups without materialized candidates would re-run candidate
-    // generation per slice — refused, not silently slow
-    val e = intercept[IllegalArgumentException] {
-      TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        verifyGroups = Some(2))
-    }
-    assert(e.getMessage.contains("materialized candidates"))
-  }
-
   test("ensureEagerCut: checkpoint-backed plans pass through untouched; lazy cuts re-cut") {
     val s = spark
     import s.implicits._
@@ -768,30 +686,6 @@ class TextDedupSpec extends SparkSpec {
     val cached = df.cache()
     assert(isRddBacked(TextDedup.ensureEagerCut(cached)))
     cached.unpersist()
-  }
-
-  test("band-grouped path survives a LAZY materializeCandidates cut") {
-    // r11 advice (medium): the grouped path releases the band-index and
-    // per-pass checkpoint generations right after the cut; a lazy cut
-    // (identity, cache()) used to leave the candidate plan backed by
-    // released blocks, which localCheckpoint'd RDDs cannot recompute —
-    // the verify action then died with missing-block errors. The path
-    // now re-cuts eagerly unless the caller's cut already produced a
-    // checkpoint-backed plan.
-    val docs = Tables.table(spark, sfDir, "documents")
-    val mono = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    val lazyCut = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        materializeCandidates = Some(identity),
-        maxBucket = Some(64), bandGroups = Some(2))
-      .collect().map(_.mkString("|")).toSet
-    assert(lazyCut === mono)
-    val cachedCut = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        materializeCandidates = Some(_.cache()),
-        maxBucket = Some(64), bandGroups = Some(2))
-      .collect().map(_.mkString("|")).toSet
-    assert(cachedCut === mono)
   }
 
   test("lshSurvivalStats: true pairs ≡ uncapped LSH; min_bn survival ≡ the capped operator at every cap") {
@@ -833,19 +727,6 @@ class TextDedupSpec extends SparkSpec {
         materialize = Some(_.localCheckpoint(true)))
       .collect().map(_.mkString("|")).toSet
     assert(sampledCut === sampled)
-    // the instrument's verify-stage disk knob (r13, for the 5M-doc
-    // recall face): hash-sliced verify ≡ monolithic verify
-    val sampledVg = TextDedup.lshSurvivalStats(docs, "doc_id", "text", 0.5,
-        discoveryBands = Some(8),
-        materialize = Some(_.localCheckpoint(true)),
-        verifyGroups = Some(3))
-      .collect().map(_.mkString("|")).toSet
-    assert(sampledVg === sampled)
-    // and like the operator's knob, it refuses a lazy candidate plan
-    assert(intercept[IllegalArgumentException] {
-      TextDedup.lshSurvivalStats(docs, "doc_id", "text", 0.5,
-        verifyGroups = Some(2))
-    }.getMessage.contains("materialize"))
   }
 
   test("samplePredicate: deterministic md5 sample — rates, nesting, cross-engine arithmetic, refusals") {
@@ -903,14 +784,13 @@ class TextDedupSpec extends SparkSpec {
     assert(sampled === expected)
     assert(sampled.nonEmpty)
     assert(sampled.size < exact.size) // the sample is a real restriction
-    // the at-scale face: prebuilt cut index + materialized cuts +
-    // hash-sliced verify ≡ the lazy path
+    // the at-scale face: prebuilt cut index + materialized cuts ≡ the
+    // lazy path
     val bands = TextDedup.lshIndex(docs, "doc_id", "text").localCheckpoint(true)
     val atScale = TextDedup.lshSurvivalStatsSampled(
         docs, "doc_id", "text", 0.5, sampleOneIn = 2,
         prebuiltIndex = Some(bands),
-        materialize = Some(TextDedup.eagerCut),
-        verifyGroups = Some(3))
+        materialize = Some(TextDedup.eagerCut))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSet
@@ -925,10 +805,6 @@ class TextDedupSpec extends SparkSpec {
     assert(curve.forall(_.getLong(1) === nTrue))
     assert(curve.map(r => r.getLong(2).toDouble / nTrue) ===
       curve.map(_.getDouble(3)))
-    assert(intercept[IllegalArgumentException] {
-      TextDedup.lshSurvivalStatsSampled(docs, "doc_id", "text", 0.5,
-        sampleOneIn = 2, verifyGroups = Some(2))
-    }.getMessage.contains("materialize"))
   }
 
   test("minhashLshPairsWithMinBucket: the min_bn filter ≡ the per-cap operator (x64's shared-chain law)") {
@@ -950,11 +826,10 @@ class TextDedupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(filtered === direct, s"shared-chain law broken at cap $cap")
     }
-    // scale path (materialized candidates + sliced verify) ≡ lazy
+    // scale path (materialized candidates) ≡ lazy
     val atScale = TextDedup.minhashLshPairsWithMinBucket(bands, docs,
         "doc_id", "text", 0.5, maxBucket = 64,
-        materializeCandidates = Some(_.localCheckpoint(true)),
-        verifyGroups = Some(3))
+        materializeCandidates = Some(_.localCheckpoint(true)))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSet
@@ -963,10 +838,6 @@ class TextDedupSpec extends SparkSpec {
       TextDedup.minhashLshPairsWithMinBucket(bands, docs,
         "doc_id", "text", 0.5, maxBucket = 1)
     }.getMessage.contains("maxBucket"))
-    assert(intercept[IllegalArgumentException] {
-      TextDedup.minhashLshPairsWithMinBucket(bands, docs,
-        "doc_id", "text", 0.5, maxBucket = 64, verifyGroups = Some(2))
-    }.getMessage.contains("materialize"))
   }
 
   test("recallAtCaps: exact-face fractions, cap monotonicity, HT reweighting on a pinned frame") {
@@ -1036,22 +907,40 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  test("pricedRecall: the inverse lookup — budget rounds DOWN, decade rounds UP, None when unpriced") {
-    assert(TextDedup.pricedRecall(5000000L, 32.0) === Some(0.998271))
-    assert(TextDedup.pricedRecall(5000000L, 40.0) === Some(0.998271)) // 32 ≤ 40 < 48
-    assert(TextDedup.pricedRecall(5000000L, 48.0) === Some(0.99982))
-    assert(TextDedup.pricedRecall(5000000L, 200.0) === Some(1.0)) // ≥ 105
-    assert(TextDedup.pricedRecall(2000000L, 32.0) === Some(1.0))
-    assert(TextDedup.pricedRecall(400000L, 32.0) === Some(1.0))
-    // below the smallest measured budget: unpriced, not extrapolated
-    assert(TextDedup.pricedRecall(5000000L, 8.0) === None)
-    // beyond the largest measured decade: unpriced
-    assert(TextDedup.pricedRecall(50000000L, 32.0) === None)
-    // round-trip coherence: the budget the forward lookup picks must
-    // price back to a recall meeting the floor it was asked for
-    for (floor <- Seq(0.9, 0.998, 0.9995, 1.0)) {
-      val b = TextDedup.budgetForRecall(5000000L, floor)
-      assert(TextDedup.pricedRecall(5000000L, b).exists(_ >= floor))
-    }
+  test("recall gate: calibrated cap, cap 5 and cap 8 keep every sf0.1 true pair; cap 2 does not") {
+    // A banding or capping change that costs recall must fail the suite:
+    // the x63 oracle row cannot catch it, because DuckDB recomputes the
+    // same degraded curve and the hash still matches. Ground truth is
+    // the full uncapped verify (fine at sf0.1). Pins: the budget rule's
+    // own operating point (pair budget 32 — at sf0.1 the budget does not
+    // bind, so this pin alone is weak), cap 5 (the smallest cap the
+    // budget rule calibrates to at sf10–sf100) and cap 8 (the cap
+    // budgetForRecall(5M, 0.9995) resolves to). Cap 2 is known to lose
+    // pairs here, which shows the gate can see a miss.
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    try {
+      val docs = Tables.table(spark, "/root/testdata/sf0.1", "documents")
+      val nDocs = docs.count()
+      val bandsIdx = TextDedup.eagerCut(TextDedup.lshIndex(docs, "doc_id", "text"))
+      val calCap = TextDedup.calibrateMaxBucket(bandsIdx, nDocs, 32.0)
+      val caps = (Seq(2, 4, 5, 8, 16, 32, 64) :+ calCap).distinct.sorted
+      val stats = TextDedup.lshSurvivalStats(docs, "doc_id", "text",
+        threshold = 0.5, materialize = Some(TextDedup.eagerCut),
+        prebuiltIndex = Some(bandsIdx))
+      val recall = TextDedup.recallAtCaps(stats, caps).collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(3)))).toMap
+      info(s"calibrated cap $calCap, n_true ${recall(2)._1}, recall ppm " +
+        caps.map(c => s"c$c=${math.round(recall(c)._2 * 1e6)}").mkString(" "))
+      assert(recall.keySet === caps.toSet)
+      assert(recall.values.map(_._1).toSet.size === 1 && recall(2)._1 > 0L,
+        s"n_true must be one positive count: $recall")
+      for ((cap, label) <- Seq(calCap -> "calibrated cap", 5 -> "cap 5",
+          8 -> "high-recall preset cap 8"))
+        assert(recall(cap)._2 === 1.0,
+          s"recall at $label ($cap) is ${recall(cap)._2} < 1.0 — a " +
+            s"banding/capping change cost recall (n_true ${recall(cap)._1})")
+      assert(recall(2)._2 < 1.0, s"cap 2 lost no pair: $recall")
+    } finally graft.Checkpoints.release(sc, sc.getPersistentRDDs.keySet.toSet -- before)
   }
 }
