@@ -72,7 +72,7 @@ object BenchProtocol {
     df.write.format("noop").mode("overwrite").save()
 
   /** Release executor storage between timings so one query's cached
-    * frames and localCheckpoints never distort the next query's clock,
+    * frames and cuts never distort the next query's clock,
     * and run `System.gc()` so the ContextCleaner deletes the shuffle
     * files of plans that went unreachable: it deletes them only after a
     * GC, so a long sweep on a big heap would otherwise keep every

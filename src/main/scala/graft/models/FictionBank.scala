@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   * every model in the reference dbt project (reference: models/staging and
   * models/marts SQL files; README.md:7).
   *
-  * Each reference model is one Scala function `DataFrame => DataFrame` shape;
+  * Each reference model is one Scala function from DataFrames to a DataFrame;
   * `{{ ref('x') }}` edges (reference: stg_loans.sql:2, fct_loan_details.sql:2,6,
   * agg_monthly_loans.sql:2,6) become plain function arguments, so lineage is
   * the Scala call graph. The project itself runs as SQL texts through

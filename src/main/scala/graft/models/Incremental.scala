@@ -155,26 +155,25 @@ object Incremental {
           // models re-read affected partitions), and Spark correctly
           // refuses to overwrite a path a lazy plan still reads. The
           // delta is batch-sized by contract, so the checkpoint is
-          // bounded, and it is released once the write is done; a
+          // bounded, and its scope closes once the write is done; a
           // transactional format's MERGE/REPLACE WHERE makes both the
           // pin and the swap storage-side.
-          val (pinned, pinIds) = Checkpoints.tracked(delta)
-          // dynamic mode: only partitions present in the delta are
-          // replaced (static mode would silently truncate the whole
-          // table). The conf must hold at write execution, but it also
-          // changes the semantics of every OTHER partitioned overwrite
-          // in the session — so set/restore around this one write (the
-          // write is synchronous).
-          val key = "spark.sql.sources.partitionOverwriteMode"
-          val before = spark.conf.getOption(key)
-          spark.conf.set(key, "dynamic")
-          try partitionedWrite(pinned, parts)
-          finally {
-            before match {
+          Checkpoints.scoped { cuts =>
+            val pinned = cuts.cut(delta)
+            // dynamic mode: only partitions present in the delta are
+            // replaced (static mode would silently truncate the whole
+            // table). The conf must hold at write execution, but it also
+            // changes the semantics of every OTHER partitioned overwrite
+            // in the session — so set/restore around this one write (the
+            // write is synchronous).
+            val key = "spark.sql.sources.partitionOverwriteMode"
+            val before = spark.conf.getOption(key)
+            spark.conf.set(key, "dynamic")
+            try partitionedWrite(pinned, parts)
+            finally before match {
               case Some(v) => spark.conf.set(key, v)
               case None => spark.conf.unset(key)
             }
-            Checkpoints.release(spark.sparkContext, pinIds)
           }
           spark.read.parquet(path)
       }

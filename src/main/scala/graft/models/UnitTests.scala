@@ -44,9 +44,10 @@ object UnitTests {
     * a `given` entry — dbt's isolation rule (a unit test that silently
     * read a real table would not be a unit test) — and unknown `given`
     * inputs fail fast (a typo'd input name must never silently no-op).
+    * The diff is cut into `cuts`, which the caller closes.
     */
   def run(spark: SparkSession, test: SchemaConfig.UnitTest,
-      models: Seq[SqlDag.SqlModel],
+      models: Seq[SqlDag.SqlModel], cuts: graft.Checkpoints.Scope,
       macros: Seq[JinjaMacros.MacroDef] = Nil,
       vars: Map[String, String] = Map.empty,
       inputFrames: Map[String, DataFrame] = Map.empty): DataFrame = {
@@ -91,12 +92,11 @@ object UnitTests {
         s"${test.name} expect")
         .select(actual.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
       import org.apache.spark.sql.functions.lit
-      actual.exceptAll(expected).withColumn("__graft_side", lit("actual"))
+      // the diff must survive the fixture-view cleanup in finally: the
+      // cut ends the plan's dependence on the temp views
+      cuts.cut(actual.exceptAll(expected).withColumn("__graft_side", lit("actual"))
         .unionByName(
-          expected.exceptAll(actual).withColumn("__graft_side", lit("expected")))
-        // the diff must survive the fixture-view cleanup in finally:
-        // localCheckpoint cuts the plan's dependence on the temp views
-        .localCheckpoint(true)
+          expected.exceptAll(actual).withColumn("__graft_side", lit("expected"))))
     } finally fixtureNames.values.foreach(spark.catalog.dropTempView(_))
   }
 
@@ -106,8 +106,10 @@ object UnitTests {
       macros: Seq[JinjaMacros.MacroDef] = Nil,
       vars: Map[String, String] = Map.empty,
       inputFrames: Map[String, DataFrame] = Map.empty): Seq[(String, Long)] =
-    tests.map(t =>
-      t.name -> run(spark, t, models, macros, vars, inputFrames).count())
+    graft.Checkpoints.scoped { cuts =>
+      tests.map(t =>
+        t.name -> run(spark, t, models, cuts, macros, vars, inputFrames).count())
+    }
 
   /** One [[SchemaConfig.Fixture]] → a typed local DataFrame, per its
     * format: dict rows ([[rowsFrame]]), an inline CSV block

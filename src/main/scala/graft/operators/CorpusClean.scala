@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints
+
 /** End-to-end corpus cleaning — the composition the individual operators
   * exist for (SURVEY.md §2B): heuristic quality filter → exact dedup by
   * content fingerprint → near-duplicate removal via MinHash+LSH →
@@ -30,12 +32,8 @@ object CorpusClean {
     * Materialization: downstream stages re-evaluate the upstream subtree
     * several times without a cut (LSH reads its input for signatures and
     * twice for verification sets — 3× the dominant I/O at corpus scale).
-    * `materializeCut` is applied to the post-exact-dedup frame to break
-    * that: pass `_.localCheckpoint(true)` (one in-memory materialization,
-    * no CacheManager registration, so repeated builds stay independent)
-    * or `_.persist(...)` if the caller manages unpersist; default
-    * `identity` keeps the pipeline fully lazy (storage-level decisions
-    * stay with the caller).
+    * `cuts` as in [[TextDedup]]: `Some(scope)` cuts the post-exact-dedup
+    * frame to break that.
     */
   /** Every intermediate frame of [[pipeline]], in stage order — so
     * audits (the x50 waterfall) count the SAME DataFrames the pipeline
@@ -69,8 +67,8 @@ object CorpusClean {
     * the band-bucket histogram — before the LSH stage proper; both are
     * narrow aggregates any production run affords.
     */
-  /** `cutAllStages`: apply `materializeCut` to EVERY intermediate stage
-    * frame (quality, nearKept), not just the exact-dedup survivors —
+  /** `cutAllStages`: under `cuts = Some(scope)`, cut EVERY intermediate
+    * stage frame (quality, nearKept), not just the exact-dedup survivors —
     * for consumers that read the `ordered` stage list more than once
     * (the x50 waterfall counts every stage, so a lazy `nearKept` would
     * re-run the whole LSH pair chain once per downstream count).
@@ -80,15 +78,14 @@ object CorpusClean {
   def stages(docs: DataFrame, idCol: String, textCol: String,
       stratumCol: String, nearDupThreshold: Double,
       rates: Map[String, Int], defaultPercent: Int = 0,
-      materializeCut: DataFrame => DataFrame = identity,
+      cuts: Option[Checkpoints.Scope] = None,
       lshMaxBucket: Option[Int] = None,
       lshRecallFloor: Option[Double] = None,
       cutAllStages: Boolean = false): CleanStages = {
     require(lshMaxBucket.isEmpty || lshRecallFloor.isEmpty,
       "lshMaxBucket and lshRecallFloor both set — pass one cap " +
         "authority (an explicit cap, or a floor the measured table prices)")
-    val cutStage: DataFrame => DataFrame =
-      if (cutAllStages) materializeCut else identity
+    val cutStage = Checkpoints.cutIn(cuts.filter(_ => cutAllStages)) _
     // 1. quality: C4-style keep flag
     val quality = cutStage(TextAnalysis.qualityMetrics(docs, textCol)
       .filter(col("keep") === 1)
@@ -96,7 +93,7 @@ object CorpusClean {
 
     // 2. exact dedup: one survivor (lowest id) per content fingerprint —
     // fingerprint appends as a narrow column (no join, no extra shuffle)
-    val exactKept = materializeCut(
+    val exactKept = Checkpoints.cutIn(cuts)(
       TextDedup.exactDedup(
           TextDedup.withFingerprint(quality, textCol),
           keys = Seq("fingerprint"), tiebreak = col(idCol))
@@ -105,8 +102,8 @@ object CorpusClean {
     // 3. near-dup: drop the higher id of every similar pair among the
     // survivors (pairs already come ordered id_a < id_b). Candidate
     // verification stays in default lazy mode: the re-reads it implies
-    // hit the (typically materializeCut-checkpointed) exactKept frame,
-    // which is exactly what that cut exists to make cheap.
+    // hit the (typically cut) exactKept frame, which is exactly what
+    // that cut exists to make cheap.
     val cap = lshRecallFloor.fold(lshMaxBucket) { floor =>
       val n = exactKept.count()
       Some(TextDedup.calibrateMaxBucket(
@@ -128,11 +125,11 @@ object CorpusClean {
   def pipeline(docs: DataFrame, idCol: String, textCol: String,
       stratumCol: String, nearDupThreshold: Double,
       rates: Map[String, Int], defaultPercent: Int = 0,
-      materializeCut: DataFrame => DataFrame = identity,
+      cuts: Option[Checkpoints.Scope] = None,
       lshMaxBucket: Option[Int] = None,
       lshRecallFloor: Option[Double] = None): DataFrame =
     stages(docs, idCol, textCol, stratumCol, nearDupThreshold,
-      rates, defaultPercent, materializeCut, lshMaxBucket,
+      rates, defaultPercent, cuts, lshMaxBucket,
       lshRecallFloor).sampled
 
   /** Curriculum ordering: place every doc in a difficulty band (the

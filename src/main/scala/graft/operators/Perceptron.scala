@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
+import graft.Checkpoints
+
 /** Distributed full-batch perceptron (Rosenblatt 1958; Collins 2002 for
   * the batch/structured use) over INTEGER features — the model-based
   * quality-filter shape of modern LLM data pipelines (GPT-3 appendix A /
@@ -55,28 +57,21 @@ object Perceptron {
     * `> 0` test, same tie in [[score]] and the oracle).
     */
   def train(df: DataFrame, featureCols: Seq[String], labelCol: String,
-      iters: Int, materialize: Boolean = true): Seq[Long] = {
+      iters: Int): Seq[Long] = {
     require(featureCols.nonEmpty, "need at least one feature column")
     require(iters >= 1, s"need iters >= 1, got $iters")
     requireIntegral(df, featureCols :+ labelCol)
-    val sc = df.sparkSession.sparkContext
-    // project to the slim (features, label) long frame FIRST and — by
-    // default — materialize it once: T rounds then scan k+1 longs per
-    // row instead of re-deriving features from the source T times (the
-    // 10× scale probe measured the unmaterialized loop near-linear in
-    // corpus passes). Storage is (k+1)·8 bytes per doc; pass
-    // materialize=false when the upstream frame is already materialized
-    // or storage is tighter than recompute.
+    // project to the slim (features, label) long frame FIRST and cut it
+    // once: T rounds then scan k+1 longs per row instead of re-deriving
+    // features from the source T times (the 10× scale probe measured the
+    // unmaterialized loop near-linear in corpus passes). Storage is
+    // (k+1)·8 bytes per doc, released before train returns.
     val slim = df.filter(
         (featureCols :+ labelCol).map(col(_).isNotNull).reduce(_ && _))
       .select((featureCols.map(c => col(c).cast("long")) :+
         col(labelCol).cast("long").as(labelCol)): _*)
-    val before: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    val clean = if (materialize) slim.localCheckpoint(true) else slim
-    val ckptIds: Set[Int] =
-      if (materialize) sc.getPersistentRDDs.keySet.toSet.diff(before)
-      else Set.empty
-    try {
+    Checkpoints.scoped { cuts =>
+      val clean = cuts.cut(slim)
       val feats = lit(1L) +: featureCols.map(c => col(c).cast("long"))
       val y = col(labelCol).cast("long")
       var w = Vector.fill(feats.size)(0L)
@@ -94,8 +89,7 @@ object Perceptron {
         t += 1
       }
       w
-    } finally ckptIds.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    }
   }
 
   /** Append exact-long `score` (w·x, bias included) and 0/1 int `pred`

@@ -226,25 +226,20 @@ object Sketches {
     * both engines (IEEE ops are exact-rounded; no transcendentals).
     *
     * Input passes: the bounds aggregate feeds TWO consumers (the bin
-    * computation and the quantile targets), so the default lazy plan may
-    * evaluate it twice — two-to-three scans of the input. At scale, pass
-    * `materializeBounds = Some(_.localCheckpoint(true))` to pin the
-    * bounds pass to one scan (the hook is opt-in because an eager
-    * barrier costs more than the re-read at small inputs); a production
+    * computation and the quantile targets), so the lazy plan may
+    * evaluate it twice — two-to-three scans of the input; a production
     * run with a FIXED domain skips the bounds pass entirely.
     */
   def histQuantiles(df: DataFrame, group: String, cents: Column,
-      qs: Seq[(String, Double)],
-      materializeBounds: Option[DataFrame => DataFrame] = None): DataFrame = {
+      qs: Seq[(String, Double)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(qs.nonEmpty && qs.map(_._1).distinct.size == qs.size,
       s"quantile labels must be non-empty and distinct: ${qs.map(_._1)}")
     val base = df.filter(cents.isNotNull)
       .select(col(group), cents.cast("long").as("cents"))
-    val bounds0 = base.groupBy(col(group)).agg(
+    val bounds = base.groupBy(col(group)).agg(
       min(col("cents")).as("lo"), max(col("cents")).as("hi"),
       count(lit(1)).as("n"))
-    val bounds = materializeBounds.map(_(bounds0)).getOrElse(bounds0)
     val hist = base.join(broadcast(bounds), Seq(group))
       .select(col(group),
         expr(s"((cents - lo) * $HistBins) div (hi - lo + 1)").as("bin"))

@@ -238,19 +238,19 @@ object TextAnalysis {
     * NULL text rows carry a NULL token count: they do not advance the
     * running offset and group into a NULL bin (SQL semantics) — filter
     * them upstream if undesired.
+    * The result reads the partitioned base, cut into `cuts`.
     */
   def packSequences(df: DataFrame, idCol: String, textCol: String,
-      windowTokens: Int): DataFrame = {
+      windowTokens: Int, cuts: graft.Checkpoints.Scope): DataFrame = {
     require(windowTokens > 0, s"windowTokens must be positive: $windowTokens")
     // the offsets are keyed by __pid, so the SAME physical partitioning
     // must serve both the offset job and the final plan: materialize it
     // (range boundaries come from sampling and are NOT stable across
     // separate executions of an unmaterialized plan)
-    val t = df
+    val t = cuts.cut(df
       .select(col(idCol).as("doc_id"), size(split(col(textCol), " ")).as("n_tokens"))
       .repartitionByRange(col("doc_id"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("__pid", spark_partition_id()))
     // one row per partition — bounded driver state by construction; a
     // partition whose every text is NULL sums to NULL → contributes 0
     val partTotals = t.groupBy(col("__pid"))
@@ -592,10 +592,11 @@ object TextAnalysis {
     * order and per-partition (total, row-count) offsets are collected
     * (one row per partition, bounded by construction — the x5g
     * distributed prefix-sum shape) and added back as a broadcast map.
-    * Bigint cross-products stay exact to ~9·10¹² total tokens.
+    * Bigint cross-products stay exact to ~9·10¹² total tokens. The
+    * result reads the partitioned counts, cut into `cuts`.
     */
   def vocabCoverage(df: DataFrame, textCol: String,
-      coveragePpm: Long): DataFrame = {
+      coveragePpm: Long, cuts: graft.Checkpoints.Scope): DataFrame = {
     require(coveragePpm >= 1 && coveragePpm <= 1000000,
       s"coveragePpm must be in [1, 1000000], got $coveragePpm")
     val counts = df.select(explode(split(lower(col(textCol)), " ")).as("word"))
@@ -604,10 +605,9 @@ object TextAnalysis {
     // same materialize-the-partitioning contract as packSequences: the
     // offsets are keyed by __pid, so the exact physical partitioning
     // must serve both the offset job and the final plan
-    val t = counts
+    val t = cuts.cut(counts
       .repartitionByRange(col("cnt").desc, col("word").asc)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("__pid", spark_partition_id()))
     val partStats = t.groupBy(col("__pid"))
       .agg(sum(col("cnt")).as("tot"), count(lit(1)).as("n"))
       .collect()
@@ -736,9 +736,9 @@ object TextAnalysis {
     * (shuffle = distinct pairs) + a distributed TakeOrdered(1); only the
     * winning pair — one row per round — ever reaches the driver, the
     * ivfTrain bounded-driver-state loop shape. The merge application is
-    * a narrow per-row array fold (no shuffle), and lineage is cut with a
-    * `localCheckpoint` every `checkpointEvery` rounds so a real 32k-merge
-    * run does not accumulate 32k nested plan nodes.
+    * a narrow per-row array fold (no shuffle), and lineage is cut every
+    * `checkpointEvery` rounds (releasing the superseded cut) so a real
+    * 32k-merge run does not accumulate 32k nested plan nodes.
     *
     * Determinism: pair counts are exact longs and the tiebreak is total,
     * so the merge sequence is a pure function of the corpus — the DuckDB
@@ -766,18 +766,20 @@ object TextAnalysis {
       .empty[(Int, String, String, String, Long)]
     var r = 1
     var exhausted = false
-    while (r <= numMerges && !exhausted) {
-      val best = bpePairCounts(syms)
-        .orderBy(col("pc").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true // every word is one symbol
-      else {
-        val (lhs, rhs, pc) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((r, lhs, rhs, lhs + rhs, pc))
-        syms = syms.withColumn("syms", bpeApplyMerge(col("syms"), lhs, rhs))
-        if (r % checkpointEvery == 0) syms = syms.localCheckpoint(true)
-        r += 1
+    graft.Checkpoints.scoped { generation =>
+      while (r <= numMerges && !exhausted) {
+        val best = bpePairCounts(syms)
+          .orderBy(col("pc").desc, col("lhs").asc, col("rhs").asc)
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true // every word is one symbol
+        else {
+          val (lhs, rhs, pc) =
+            (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((r, lhs, rhs, lhs + rhs, pc))
+          syms = syms.withColumn("syms", bpeApplyMerge(col("syms"), lhs, rhs))
+          if (r % checkpointEvery == 0) syms = generation.recut(syms)
+          r += 1
+        }
       }
     }
     spark.createDataFrame(merges.toSeq)

@@ -19,6 +19,11 @@ import graft.functions.{Hashing, MinHashAgg}
   * map/aggregate whose reduce keys are bounded (doc id, shingle, band
   * bucket); the O(n²) formulations every stage avoids are documented at
   * each site.
+  *
+  * Cuts: `cuts: Option[graft.Checkpoints.Scope]` is lazy under `None`
+  * (the default — at demo scale a barrier costs more than the re-reads it
+  * saves) and, under `Some(scope)`, cuts the frames several consumers read
+  * into `scope`, which the caller closes once the result is spent.
   */
 object TextDedup {
 
@@ -32,15 +37,8 @@ object TextDedup {
   // id_a (a public-name allowlist would silently skip any user join on a
   // coinciding name).
   graft.plans.FanoutLint.allowContractKeys(
-    "__graft_id_a", "__graft_id_b", "__graft_new_id", "__graft_old_id")
-
-  /** The operators' default eager lineage cut: localCheckpoint at
-    * [[graft.Checkpoints.level]]. Public so demo and spec callers that
-    * pass a `materialize*` strategy cut at the same level instead of
-    * `_.localCheckpoint(true)` (which pins the deserialized default).
-    */
-  def eagerCut(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, Checkpoints.level)
+    "__graft_id_a", "__graft_id_b", "__graft_new_id", "__graft_old_id",
+    "__graft_node", "__graft_band", "__graft_key")
 
   /** Keep-first exact dedup by key (X1): one hash shuffle on the keys;
     * `tiebreak` makes "first" deterministic (dropDuplicates' keep-first
@@ -245,28 +243,22 @@ object TextDedup {
     *
     * Same recall contract as x2b: at threshold t a true pair misses all
     * 64 bands with probability (1−t²)^64 (≤1e-8 at t=0.5), so the exact
-    * brute-force oracle matches. `materializeCandidates` carries x2b's
-    * verification-strategy contract verbatim: `None` builds shingle sets
-    * for the full frames (one evaluation of the lazy candidate plan —
-    * right at demo scale); `Some(_.localCheckpoint(true))` materializes
-    * the candidate pairs and shingles ONLY candidate docs via semi joins
-    * — the 100 TB path, where the corpus-side shingle build dwarfs the
-    * barrier.
+    * brute-force oracle matches. `Some(scope)` cuts the candidate pairs
+    * and shingles ONLY candidate docs via semi joins.
     */
   def incrementalLshPairs(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame] = None,
+      cuts: Option[Checkpoints.Scope] = None,
       maxBucket: Option[Int] = None): DataFrame =
     probeLshStore(batch, lshIndex(corpus, idCol, textCol), corpus,
-      idCol, textCol, threshold, materializeCandidates, maxBucket)
+      idCol, textCol, threshold, cuts, maxBucket)
 
   /** [[incrementalLshPairs]] against an ALREADY-BUILT band index — the
     * store-probing face of the crawl loop: `corpusIndex` is the
     * persisted `(doc_id, band, key)` frame ([[lshIndex]] output, e.g.
     * a bucketed store table), `corpus` supplies the indexed documents'
-    * texts for exact verification (shingled only for docs on a
-    * candidate pair under `materializeCandidates`, see
-    * [[incrementalLshPairs]]). Probing never re-indexes the corpus —
+    * texts for exact verification (see [[incrementalLshPairs]]). Probing
+    * never re-indexes the corpus —
     * batch band keys equi-join the store on (band, key); when the
     * store is bucketed by those keys ([[graft.operators.ScaleOps
     * .writeBucketed]]) the store side joins with NO exchange.
@@ -295,7 +287,7 @@ object TextDedup {
     */
   def probeLshStore(batch: DataFrame, corpusIndex: DataFrame,
       corpus: DataFrame, idCol: String, textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame] = None,
+      cuts: Option[Checkpoints.Scope] = None,
       maxBucket: Option[Int] = None,
       prebuiltBatchIndex: Option[DataFrame] = None): DataFrame = {
     val liveStore = maxBucket.fold(corpusIndex) { cap =>
@@ -312,10 +304,10 @@ object TextDedup {
         .select(col("doc_id").as("__graft_old_id"), col("band"), col("key")),
         Seq("band", "key"))
       .select(col("__graft_new_id"), col("__graft_old_id")).distinct()
-    val (cand, newBase, oldBase) = materializeCandidates match {
+    val (cand, newBase, oldBase) = cuts match {
       case None => (lazyCand, batch, corpus)
-      case Some(m) =>
-        val c = m(lazyCand)
+      case Some(scope) =>
+        val c = scope.cut(lazyCand)
         def side(src: DataFrame, k: String) = src.join(
           c.select(col(k).as(idCol)).distinct(), Seq(idCol), "left_semi")
         (c, side(batch, "__graft_new_id"), side(corpus, "__graft_old_id"))
@@ -401,18 +393,11 @@ object TextDedup {
     * probability is (1−t²)^64 (≤1e-8 at t=0.5), while cluster cost is
     * O(n·bands) shuffle instead of O(n²).
     *
-    * `materializeCandidates` selects the verification strategy. `None`
-    * (default): the candidate pairs stay lazy and exact verification
-    * joins against shingle sets of the WHOLE corpus — one job, full
-    * operator overlap; best when a corpus scan is cheap (it is re-read
-    * twice, once per pair side). `Some(m)` — e.g.
-    * `Some(_.localCheckpoint(true))`: the candidate pair set is
-    * materialized via `m` and shingle sets are built ONLY for docs that
-    * appear in a candidate pair (semi join — AQE picks broadcast when
-    * the candidate set fits). That is the 100 TB path — at scale the two
-    * extra full-corpus shingle builds dwarf the materialization barrier,
-    * while at demo scale the barrier costs more than it saves (measured;
-    * hence not the default).
+    * `cuts`: under `None` exact verification joins against shingle sets
+    * of the WHOLE corpus (re-read once per pair side). `Some(scope)` cuts
+    * the candidate pairs and the shingle sets, built ONLY for docs on a
+    * candidate pair (semi join) — at scale the two extra full-corpus
+    * shingle builds dwarf the barrier.
     *
     * `maxBucket` is the stop-BUCKET cap, the banding analogue of
     * [[ngramJaccardPairs]]' stop-shingle `maxDocFreq`: band buckets with
@@ -437,22 +422,10 @@ object TextDedup {
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame] = None,
+      cuts: Option[Checkpoints.Scope] = None,
       maxBucket: Option[Int] = None): DataFrame =
     pairsFromBands(lshCandidatePairs(lshIndex(df, idCol, textCol), maxBucket),
-      df, idCol, textCol, threshold, materializeCandidates)
-
-  /** Trust a caller-provided materialization only when it actually
-    * truncated lineage: a plan whose analyzed root is a `LogicalRDD` is
-    * checkpoint-backed (the default `localCheckpoint(true)` path);
-    * anything else — `identity`, `cache()`, another lazy cut — is re-cut
-    * here, so a `prebuiltIndex` handed to the survival instruments is
-    * read once instead of re-derived by each of its consumers.
-    */
-  private[operators] def ensureEagerCut(df: DataFrame): DataFrame =
-    if (df.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) df
-    else eagerCut(df)
+      df, idCol, textCol, threshold, cuts)
 
   /** [[minhashLshPairs]] against an ALREADY-BUILT band index — the
     * re-entry point for callers that hold the [[lshIndex]] output
@@ -468,14 +441,14 @@ object TextDedup {
     */
   def minhashLshPairsFromIndex(bands: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame] = None,
+      cuts: Option[Checkpoints.Scope] = None,
       maxBucket: Option[Int] = None): DataFrame = {
     val need = Set("doc_id", "band", "key")
     require(need.subsetOf(bands.columns.toSet),
       s"band index must have columns ${need.mkString(", ")} (lshIndex " +
         s"output); got ${bands.columns.mkString(", ")}")
     pairsFromBands(lshCandidatePairs(bands, maxBucket), corpus, idCol,
-      textCol, threshold, materializeCandidates)
+      textCol, threshold, cuts)
   }
 
   /** [[minhashLshPairsFromIndex]] at cap `maxBucket`, with each verified
@@ -498,7 +471,7 @@ object TextDedup {
     */
   def minhashLshPairsWithMinBucket(bands: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double, maxBucket: Int,
-      materializeCandidates: Option[DataFrame => DataFrame] = None): DataFrame = {
+      cuts: Option[Checkpoints.Scope] = None): DataFrame = {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     val bnc = count(lit(1)).over(Window.partitionBy(col("band"), col("key")))
     val live = bands.withColumn("bn", bnc)
@@ -513,19 +486,17 @@ object TextDedup {
       .groupBy(col("a.doc_id").as("__graft_id_a"),
         col("b.doc_id").as("__graft_id_b"))
       .agg(min(col("a.bn")).as("__graft_min_bn"))
-    val candMin = materializeCandidates.fold(candMin0)(m => m(candMin0))
+    val candMin = Checkpoints.cutIn(cuts)(candMin0)
     val candIds = candMin.select(col("__graft_id_a"), col("__graft_id_b"))
-    val verified = materializeCandidates match {
-      case None =>
-        verifyCandidatePairs(candIds, corpus, idCol, textCol, threshold)
-      case Some(m) =>
-        verifyCandidatePairs(candIds, candidateDocs(corpus, candIds, idCol),
-          idCol, textCol, threshold, cut = m)
-    }
-    verified.join(candMin.select(col("__graft_id_a").as("id_a"),
-        col("__graft_id_b").as("id_b"), col("__graft_min_bn").as("min_bn")),
-      Seq("id_a", "id_b"))
-      .select(col("id_a"), col("id_b"), col("jaccard"), col("min_bn"))
+    val setsBase =
+      if (cuts.isEmpty) corpus else candidateDocs(corpus, candIds, idCol)
+    // one verified row per pair: the re-attach joins on contract keys
+    verifyCandidatePairs(candIds, setsBase, idCol, textCol, threshold, cuts)
+      .select(col("id_a").as("__graft_id_a"), col("id_b").as("__graft_id_b"),
+        col("jaccard"))
+      .join(candMin, Seq("__graft_id_a", "__graft_id_b"))
+      .select(col("__graft_id_a").as("id_a"), col("__graft_id_b").as("id_b"),
+        col("jaccard"), col("__graft_min_bn").as("min_bn"))
   }
 
   /** The shared candidate→verify tail of the from-text and from-index
@@ -534,15 +505,15 @@ object TextDedup {
     */
   private def pairsFromBands(lazyCand: DataFrame, df: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame]): DataFrame =
-    materializeCandidates match {
+      cuts: Option[Checkpoints.Scope]): DataFrame =
+    cuts match {
       case None => verifyCandidatePairs(lazyCand, df, idCol, textCol, threshold)
-      case Some(m) =>
-        val c = m(lazyCand)
-        // the caller's materializer also cuts the shingle-set frame (see
-        // verifyCandidatePairs: lazy sets evaluate once per pair side)
+      case Some(scope) =>
+        val c = scope.cut(lazyCand)
+        // the shingle-set frame is cut too (see verifyCandidatePairs:
+        // lazy sets evaluate once per pair side)
         verifyCandidatePairs(c, candidateDocs(df, c, idCol),
-          idCol, textCol, threshold, cut = m)
+          idCol, textCol, threshold, cuts)
     }
 
   /** The rows of `df` whose id appears on either side of a
@@ -562,20 +533,16 @@ object TextDedup {
     * shared tail of every LSH verify path (ONE definition, so the paths'
     * semantics can never drift).
     *
-    * `cut` materializes the shingle-set frame ONCE before the two pair-
+    * `Some(scope)` cuts the shingle-set frame ONCE before the two pair-
     * side joins: the sets frame is joined by `__graft_id_a` and again by
     * `__graft_id_b` — two different hash partitionings, so exchange
     * reuse never applies and a LAZY sets plan (text scan → semi join →
-    * tokenize → shingle build) evaluates once per side. Callers holding
-    * a materialization strategy pass it here; the default `identity`
-    * keeps the lazy demo contract (at demo scale the barrier can cost
-    * more than the duplicated build — the same measured tradeoff as
-    * `materializeCandidates` itself).
+    * tokenize → shingle build) evaluates once per side.
     */
   private def verifyCandidatePairs(cand: DataFrame, setsBase: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      cut: DataFrame => DataFrame = identity): DataFrame = {
-    val sets = cut(shingleSets(setsBase, idCol, textCol))
+      cuts: Option[Checkpoints.Scope] = None): DataFrame = {
+    val sets = Checkpoints.cutIn(cuts)(shingleSets(setsBase, idCol, textCol))
     cand
       .join(sets.select(col("doc_id").as("__graft_id_a"), col("shs").as("shs_a")),
         "__graft_id_a")
@@ -665,44 +632,36 @@ object TextDedup {
     * governed by the analytic (1−t²)^64 ≤ 1e-8 miss bound (x2b's
     * contract), not by the cap.
     *
-    * `materialize` cuts (a) the candidate set before verification and
-    * (b) the verified true-pair set before the min-bucket join re-uses
-    * it on both sides — pass `Some(_.localCheckpoint(true))` at scale;
-    * the `None` default keeps the whole computation lazy for
-    * oracle-checkable demo use.
+    * `Some(scope)` cuts the band index, the candidates, the shingle sets
+    * and the true pairs (which feed both sides of the min-bucket join).
     *
     * `prebuiltIndex`: an already-derived [[lshIndex]] frame
     * (`doc_id, band, key`) to use instead of deriving one here, so a
     * caller that calibrates its cap off one cut band index (the recall
     * gate in TextDedupSpec) reads the same cut here instead of caching
-    * the chain twice. An already-checkpointed frame passes
-    * [[ensureEagerCut]] untouched; a lazy one is cut exactly like the
-    * internal derivation would be.
+    * the chain twice (an already-cut index is not cut again).
     */
   def lshSurvivalStats(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, discoveryBands: Option[Int] = None,
-      materialize: Option[DataFrame => DataFrame] = None,
+      cuts: Option[Checkpoints.Scope] = None,
       prebuiltIndex: Option[DataFrame] = None): DataFrame = {
     discoveryBands.foreach(k => require(k >= 1 && k <= Hashing.MinhashK / 2,
       s"discoveryBands must be in [1, ${Hashing.MinhashK / 2}], got $k"))
-    val cut = materialize.getOrElse(identity[DataFrame] _)
+    val cut = Checkpoints.cutIn(cuts) _
     // one band-index derivation per call: the index feeds THREE
     // consumers — discovery, the bucket-size window, and (via
     // candidates) the verify — and a lazy chain re-runs
-    // shingles+signatures per consumer. Under a
-    // materialize strategy the index cuts ONCE and every consumer reads
-    // the cut; the lazy default keeps the demo-scale no-storage path.
-    val bands = prebuiltIndex match {
-      case Some(b) => if (materialize.nonEmpty) ensureEagerCut(b) else b
-      case None => cut(lshIndex(df, idCol, textCol))
-    }
+    // shingles+signatures per consumer. Under `Some(scope)` the index
+    // cuts ONCE and every consumer reads the cut; the lazy default keeps
+    // the demo-scale no-storage path.
+    val bands = cut(prebuiltIndex.getOrElse(lshIndex(df, idCol, textCol)))
     val discovery = discoveryBands.fold(bands)(k => bands.filter(col("band") < k))
     val cand = cut(lshCandidatePairs(discovery, maxBucket = None))
     // lazy demo path: verify against the whole corpus
     val setsBase =
-      if (materialize.isEmpty) df else candidateDocs(df, cand, idCol)
+      if (cuts.isEmpty) df else candidateDocs(df, cand, idCol)
     val truePairs = cut(verifyCandidatePairs(cand, setsBase, idCol,
-      textCol, threshold, cut = cut))
+      textCol, threshold, cuts))
     // bucket sizes over the FULL index (the sizes the capped operator
     // filters on), then restricted to docs that appear in a true pair —
     // the window must see every bucket member, so filter AFTER it.
@@ -729,14 +688,14 @@ object TextDedup {
     * broadcastable), then each touched bucket's size via a
     * map-side-combinable histogram over the index rows of those buckets
     * (never the full-index window, which does not fit at 10M docs).
-    * `bnPair` feeds BOTH sides of the pair join below, so it is cut via
-    * the caller's `cut` strategy — without the cut the whole
+    * `bnPair` feeds BOTH sides of the pair join below, so
+    * `Some(scope)` cuts it — without the cut the whole
     * memb ⋈ sizes subtree (itself reading the band index three times)
     * evaluates once per side: x65's tail planned 52 Exchanges and 10
     * checkpoint re-scans from exactly this duplication.
     */
   private def attachMinBn(truePairs: DataFrame, bands: DataFrame,
-      cut: DataFrame => DataFrame): DataFrame = {
+      cuts: Option[Checkpoints.Scope]): DataFrame = {
     val pairDocs = truePairs
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
       .distinct()
@@ -744,8 +703,15 @@ object TextDedup {
     val sizes = bands
       .join(memb.select(col("band"), col("key")).distinct(),
         Seq("band", "key"), "left_semi")
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("bn"))
-    val bnPair = cut(memb.join(sizes, Seq("band", "key")))
+      .groupBy(col("band").as("__graft_band"), col("key").as("__graft_key"))
+      .agg(count(lit(1)).as("bn"))
+    // one size row per bucket: the attach joins on contract keys
+    val bnPair = Checkpoints.cutIn(cuts)(memb
+      .select(col("doc_id"), col("band").as("__graft_band"),
+        col("key").as("__graft_key"))
+      .join(sizes, Seq("__graft_band", "__graft_key"))
+      .select(col("__graft_band").as("band"), col("__graft_key").as("key"),
+        col("doc_id"), col("bn")))
     joinMinBn(truePairs, bnPair)
   }
 
@@ -817,19 +783,16 @@ object TextDedup {
     * before counting, so its shuffle output is bounded by those
     * buckets' membership, not the 10·64 M-row index.
     *
-    * `prebuiltIndex` / `materialize` as in
+    * `prebuiltIndex` / `cuts` as in
     * [[lshSurvivalStats]]. Output schema identical:
     * `(id_a, id_b, jaccard, min_bn)`.
     */
   def lshSurvivalStatsSampled(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, sampleOneIn: Int,
       prebuiltIndex: Option[DataFrame] = None,
-      materialize: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val cut = materialize.getOrElse(identity[DataFrame] _)
-    val bandsFull = prebuiltIndex match {
-      case Some(b) => if (materialize.nonEmpty) ensureEagerCut(b) else b
-      case None => cut(lshIndex(df, idCol, textCol))
-    }
+      cuts: Option[Checkpoints.Scope] = None): DataFrame = {
+    val cut = Checkpoints.cutIn(cuts) _
+    val bandsFull = cut(prebuiltIndex.getOrElse(lshIndex(df, idCol, textCol)))
     // the sample is a pure doc_id predicate — a filter on the full
     // index, never a join (the index is the big thing here)
     val bandsSample = bandsFull.filter(samplePredicate(col("doc_id"), sampleOneIn))
@@ -837,7 +800,7 @@ object TextDedup {
     val cand = cut(lshCandidatePairs(bandsSample, maxBucket = None))
     // lazy demo path: verify against the whole sampled sub-corpus
     val setsBase =
-      if (materialize.isEmpty) sampled else candidateDocs(sampled, cand, idCol)
+      if (cuts.isEmpty) sampled else candidateDocs(sampled, cand, idCol)
     // deliberately NO sets-cut here, unlike [[lshSurvivalStats]]: this
     // instrument's verify base is the 1/S sampled sub-corpus semi-joined
     // to its candidates, so the duplicated lazy shingle build is S²×
@@ -853,7 +816,7 @@ object TextDedup {
     // disagree on the bn a pair reads, and the two-sided bnPair frame is
     // cut once instead of evaluating its index-scanning subtree once per
     // pair side).
-    attachMinBn(truePairs, bandsFull, cut)
+    attachMinBn(truePairs, bandsFull, cuts)
   }
 
   /** The recall-vs-cap curve off a [[lshSurvivalStats]] frame: one row
@@ -964,22 +927,17 @@ object TextDedup {
     * Score parity: matches/128 is exact binary arithmetic (k ≤ 128,
     * division by a power of two) — bit-identical in the oracle's replay.
     */
-  /** `materializeSignatures` carries x2b's verification-strategy
-    * contract shape: `None` (default) keeps the signature frame lazy —
-    * the plan computes the signature aggregate once for the banding and
-    * once per pair side (three corpus scans; right at demo scale, where
-    * the scans are cheap). `Some(_.localCheckpoint(true))` materializes
-    * signatures ONCE and all three consumers read the cut — the
-    * from-text scale path, approaching [[estimatePairsFromSignatures]]'
-    * store cost without a persisted store.
+  /** `cuts`: lazily the signature aggregate runs once for the banding
+    * and once per pair side (three corpus scans). `Some(scope)` cuts the
+    * signatures ONCE for all three consumers — the from-text scale path,
+    * approaching [[estimatePairsFromSignatures]]' store cost.
     */
   def minhashEstimatePairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxBucket: Option[Int] = None,
-      materializeSignatures: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val raw = minhashSignatures(df, idCol, textCol)
-    estimatePairsFromSignatures(materializeSignatures.fold(raw)(m => m(raw)),
+      cuts: Option[Checkpoints.Scope] = None): DataFrame =
+    estimatePairsFromSignatures(
+      Checkpoints.cutIn(cuts)(minhashSignatures(df, idCol, textCol)),
       threshold, maxBucket)
-  }
 
   /** [[minhashEstimatePairs]] off an ALREADY-BUILT signature frame — the
     * store-probing face: `sigs` is a persisted `(doc_id, sig)` table
@@ -1154,71 +1112,72 @@ object TextDedup {
     *
     * Scale shape: per iteration one join (edge × label) + one min-agg +
     * one label update, each a bounded shuffle on node id; labels are
-    * localCheckpoint'ed per round so iteration N+1 reads a materialized
-    * frame instead of re-running rounds 1..N (the standard iterative-
-    * algorithm cut). Converges in O(component diameter) rounds —
-    * near-dup clusters are near-cliques, so a handful; `maxIters` caps
-    * the loop and convergence is verified (throws if not reached, rather
-    * than silently returning partial labels). The first propagation
-    * round is fused into init, so the loop bounds propagation rounds
+    * cut per round so iteration N+1 reads a materialized frame instead
+    * of re-running rounds 1..N (the standard iterative-algorithm cut).
+    * Converges in O(component diameter) rounds — near-dup clusters are
+    * near-cliques, so a handful; `maxIters` caps the loop and
+    * convergence is verified (throws if not reached, rather than
+    * silently returning partial labels). The first propagation round is
+    * fused into init, so the loop bounds propagation rounds
     * 2..maxIters+1: a component of diameter exactly maxIters+1
     * converges.
+    *
+    * Storage: this call releases the edges and each superseded label
+    * generation itself; the final generation, which the result reads,
+    * moves into `cuts`.
     */
-  def dedupClusters(pairs: DataFrame, idACol: String = "id_a",
-      idBCol: String = "id_b", maxIters: Int = 20): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // track each round's checkpoint RDD ids and explicitly unpersist the
-    // superseded round, so live storage stays at edges + one label
-    // generation instead of one copy per iteration
-    def release(ids: Set[Int]): Unit = Checkpoints.release(sc, ids)
-    // both edge directions from ONE evaluation of the pairs frame: the
-    // old self-union (pairs ∪ pairs.swapped) planned the ENTIRE pairs
-    // subtree twice — for the composed x2f path that is the full LSH
-    // chain (signature aggregate, band window, self-join, verify) run
-    // once per union arm inside the edges checkpoint job (the pairs
-    // chain, not the iterations, is x2f's cost). The
-    // explode emits (a→b, b→a) per pair row in a codegen projection, so
-    // the chain evaluates once; same rows, same distinct.
-    val (edges, edgeIds) = Checkpoints.tracked(
-      pairs.select(explode(array(
-          struct(col(idACol).as("src"), col(idBCol).as("dst")),
-          struct(col(idBCol).as("src"), col(idACol).as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .distinct()) // consumed every round: materialize once
-    // init = identity labels with the FIRST propagation round fused in:
-    // label(v) = min(v, min direct neighbor) — exactly what round 1 over
-    // identity labels computes, for the price of one aggregate instead
-    // of a full join+agg+update round (one loop round — two
-    // checkpoint/convergence jobs — fewer per call; the trajectory from here
-    // is identical, spec-pinned by the chain-propagation test)
-    var (labels, labelIds) = Checkpoints.tracked(
-      edges.groupBy(col("src"))
-        .agg(least(col("src"), min(col("dst"))).as("label"))
-        .select(col("src").as("node"), col("label")))
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
-      val neighborMin = edges
-        .join(labels.select(col("node").as("dst"), col("label").as("nl")), "dst")
-        .groupBy(col("src")).agg(min(col("nl")).as("min_nl"))
-      val (updated, newIds) = Checkpoints.tracked(labels
-        .join(neighborMin.select(col("src").as("node"), col("min_nl")), Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("min_nl"), col("label"))).as("label"),
-          (col("min_nl") < col("label")).as("__changed")))
-      converged = updated.filter(col("__changed")).isEmpty
-      release(labelIds) // the superseded generation — updated is material
-      labels = updated.drop("__changed")
-      labelIds = newIds
-      it += 1
-    }
-    release(edgeIds) // the result reads only the final label checkpoint
-    if (!converged) {
-      release(labelIds)
-      throw new IllegalArgumentException(
-        s"label propagation did not converge within $maxIters iterations")
-    }
-    labels.select(col("node"), col("label").as("cluster_id"))
+  def dedupClusters(pairs: DataFrame, cuts: Checkpoints.Scope,
+      idACol: String = "id_a", idBCol: String = "id_b",
+      maxIters: Int = 20): DataFrame = {
+    Checkpoints.scoped { edgeScope => Checkpoints.scoped { labelScope =>
+      // both edge directions from ONE evaluation of the pairs frame: a
+      // self-union (pairs ∪ pairs.swapped) would plan the ENTIRE pairs
+      // subtree twice — for the composed x2f path that is the full LSH
+      // chain (signature aggregate, band window, self-join, verify) run
+      // once per union arm inside the edges cut (the pairs chain, not
+      // the iterations, is x2f's cost). The explode emits (a→b, b→a) per
+      // pair row in a codegen projection, so the chain evaluates once;
+      // same rows, same distinct.
+      val edges = edgeScope.cut(
+        pairs.select(explode(array(
+            struct(col(idACol).as("src"), col(idBCol).as("dst")),
+            struct(col(idBCol).as("src"), col(idACol).as("dst")))).as("__e"))
+          .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+          .distinct()) // consumed every round: materialize once
+      // init = identity labels with the FIRST propagation round fused in:
+      // label(v) = min(v, min direct neighbor) — exactly what round 1
+      // over identity labels computes, for the price of one aggregate
+      // instead of a full join+agg+update round (one loop round — two
+      // checkpoint/convergence jobs — fewer per call; the trajectory from
+      // here is identical, spec-pinned by the chain-propagation test).
+      // One label row per node: the update joins on a contract key.
+      var labels = labelScope.cut(
+        edges.groupBy(col("src").as("__graft_node"))
+          .agg(least(col("src"), min(col("dst"))).as("label")))
+      var it = 0
+      var converged = false
+      while (it < maxIters && !converged) {
+        val neighborMin = edges
+          .join(labels.select(col("__graft_node").as("dst"),
+            col("label").as("nl")), "dst")
+          .groupBy(col("src").as("__graft_node"))
+          .agg(min(col("nl")).as("min_nl"))
+        // the superseded generation is released: updated is material
+        val updated = labelScope.recut(labels
+          .join(neighborMin, Seq("__graft_node"), "left")
+          .select(col("__graft_node"),
+            least(col("label"), coalesce(col("min_nl"), col("label"))).as("label"),
+            (col("min_nl") < col("label")).as("__changed")))
+        converged = updated.filter(col("__changed")).isEmpty
+        labels = updated.drop("__changed")
+        it += 1
+      }
+      if (!converged)
+        throw new IllegalArgumentException(
+          s"label propagation did not converge within $maxIters iterations")
+      cuts.adopt(labelScope) // the result reads the final generation
+      labels.select(col("__graft_node").as("node"), col("label").as("cluster_id"))
+    }}
   }
 
   /** SimHash signatures (X2d): per-token codegen'd hashes vote per bit;

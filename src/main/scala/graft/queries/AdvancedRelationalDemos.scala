@@ -46,7 +46,7 @@ object AdvancedRelationalDemos {
       WHERE NOT EXISTS (SELECT 1 FROM orders o
                         WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
       ORDER BY c_custkey ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
       val finished = t(s, dir, "orders")
@@ -78,7 +78,7 @@ object AdvancedRelationalDemos {
       FROM orders
       GROUP BY ROLLUP (cast(date_trunc('month', o_orderdate) AS date), o_orderpriority)
       ORDER BY month ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""),
-    (s, dir) => t(s, dir, "orders")
+    (s, dir, _) => t(s, dir, "orders")
       .rollup(monthOf(col("o_orderdate")).as("month"), col("o_orderpriority"))
       .agg(
         count(lit(1)).as("n_orders"),
@@ -104,7 +104,7 @@ object AdvancedRelationalDemos {
       UNION ALL
       SELECT custkey, 'finished_only' AS membership FROM (SELECT custkey FROM finished EXCEPT SELECT custkey FROM urgent)
       ORDER BY custkey ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val orders = t(s, dir, "orders")
       val urgent = orders.filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_custkey").as("custkey"))
@@ -162,7 +162,7 @@ object AdvancedRelationalDemos {
       FROM orders
       GROUP BY 1
       ORDER BY month ASC NULLS LAST"""),
-    (s, dir) => pivotWide(s, dir).orderBy(col("month").asc_nulls_last))
+    (s, dir, _) => pivotWide(s, dir).orderBy(col("month").asc_nulls_last))
 
   // -------------------------------------------------------------------
   // Q16: UNPIVOT — the wide-to-long inverse of Q15, melting the five
@@ -187,7 +187,7 @@ object AdvancedRelationalDemos {
         ON n_urgent, n_high, n_medium, n_not_specified, n_low
         INTO NAME priority_bucket VALUE n_orders)
       ORDER BY month ASC NULLS LAST, priority_bucket ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val wide = pivotWide(s, dir) // the UNSORTED pivoted relation
       wide.unpivot(
           ids = Array(col("month")),
@@ -219,7 +219,7 @@ object AdvancedRelationalDemos {
                month ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST"""
 
   private val q17 = Demo("q17_grouping_sets", Some(groupingSetsText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
       s.sql(groupingSetsText)
     })
@@ -252,7 +252,7 @@ object AdvancedRelationalDemos {
       FROM orders
       WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
       ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
       val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -287,7 +287,7 @@ object AdvancedRelationalDemos {
       SELECT doc_id, cast(i AS bigint) AS pos, toks[i] AS token
       FROM d, unnest(generate_series(1, least(coalesce(len(toks), 0), 5))) AS t(i)
       ORDER BY doc_id ASC NULLS LAST, pos ASC NULLS LAST"""),
-    (s, dir) => t(s, dir, "documents")
+    (s, dir, _) => t(s, dir, "documents")
       .select(col("doc_id"),
         posexplode(slice(split(col("text"), " "), 1, 5)))
       .select(col("doc_id"), (col("pos") + 1).cast(LongType).as("pos"),
@@ -311,7 +311,7 @@ object AdvancedRelationalDemos {
         FROM orders)
       WHERE rnk <= 3
       ORDER BY o_orderpriority ASC NULLS LAST, rnk ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       t(s, dir, "orders")
@@ -341,7 +341,7 @@ object AdvancedRelationalDemos {
       JOIN nation b ON a.n_regionkey = b.n_regionkey AND a.n_name < b.n_name
       JOIN region r ON r.r_regionkey = a.n_regionkey
       ORDER BY r_name ASC NULLS LAST, nation_a ASC NULLS LAST, nation_b ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val a = t(s, dir, "nation")
         .select(col("n_regionkey"), col("n_name").as("nation_a"))
       val b = t(s, dir, "nation")
@@ -372,7 +372,7 @@ object AdvancedRelationalDemos {
       ORDER BY o_orderkey ASC NULLS LAST"""
 
   private val q21 = Demo("q21_correlated_subquery", Some(correlatedText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
       s.sql(correlatedText)
     })
@@ -402,7 +402,7 @@ object AdvancedRelationalDemos {
       ORDER BY scenario ASC NULLS LAST"""
 
   private val q22 = Demo("q22_not_in_semantics", Some(notInText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "customer").createOrReplaceTempView("customer")
       Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
       s.sql(notInText)
@@ -428,7 +428,7 @@ object AdvancedRelationalDemos {
                o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""
 
   private val q23 = Demo("q23_cube", Some(cubeText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
       s.sql(cubeText)
     })
@@ -454,7 +454,7 @@ object AdvancedRelationalDemos {
       ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST"""
 
   private val q24 = Demo("q24_range_frame", Some(rangeFrameText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
       s.sql(rangeFrameText)
     })
@@ -484,7 +484,7 @@ object AdvancedRelationalDemos {
       SELECT o_orderpriority, median_price, mode_status
       FROM me JOIN md USING (o_orderpriority)
       ORDER BY o_orderpriority ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val c = t(s, dir, "orders").select(col("o_orderpriority"),
         col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -515,7 +515,7 @@ object AdvancedRelationalDemos {
       FROM documents
       WHERE doc_id <= 500
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => t(s, dir, "documents")
+    (s, dir, _) => t(s, dir, "documents")
       .filter(col("doc_id") <= 500)
       .select(col("doc_id"),
         regexp_extract(col("text"), "([a-z]{8,})", 1).as("first_long_word"),
@@ -542,7 +542,7 @@ object AdvancedRelationalDemos {
       FROM customer
       WHERE c_custkey <= 500
       ORDER BY c_custkey ASC NULLS LAST"""),
-    (s, dir) => t(s, dir, "customer")
+    (s, dir, _) => t(s, dir, "customer")
       .filter(col("c_custkey") <= 500)
       .select(col("c_custkey"),
         upper(col("c_name")).as("up_name"),
@@ -574,7 +574,7 @@ object AdvancedRelationalDemos {
       WINDOW w AS (PARTITION BY o_orderpriority
                    ORDER BY o_totalprice ASC, o_orderkey ASC)
       ORDER BY o_orderkey ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
       val wm = Window.partitionBy(col("o_orderpriority"))
@@ -620,7 +620,7 @@ object AdvancedRelationalDemos {
       ORDER BY s.mon ASC NULLS LAST"""
 
   private val q29 = Demo("q29_recursive_cte", Some(recursiveCteText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
       s.sql(recursiveCteText)
     })
@@ -644,7 +644,7 @@ object AdvancedRelationalDemos {
              list_contains(toks, 'the') AS has_the
       FROM tok
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Tables.table(s, dir, "documents")
+    (s, dir, _) => Tables.table(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast(LongType).as("n_toks"),
@@ -673,7 +673,7 @@ object AdvancedRelationalDemos {
       ORDER BY c_custkey ASC NULLS LAST"""
 
   private val q31 = Demo("q31_try_cast", Some(tryCastText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "customer").createOrReplaceTempView("customer")
       s.sql(tryCastText)
     })
@@ -699,7 +699,7 @@ object AdvancedRelationalDemos {
       FROM orders
       WHERE o_orderkey <= 2000
       ORDER BY o_orderkey ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val od = col("o_orderdate").cast(DateType)
       Tables.table(s, dir, "orders")
         .filter(col("o_orderkey") <= 2000)

@@ -91,17 +91,17 @@ object CorpusCleanDemos {
       SELECT doc_id, lang, source
       FROM samp
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => CorpusClean.pipeline(
+    (s, dir, cuts) => CorpusClean.pipeline(
         Tables.table(s, dir, "documents"),
         idCol = "doc_id", textCol = "text", stratumCol = "lang",
         nearDupThreshold = 0.5, rates = rates,
-        // one eager in-memory cut after exact dedup: the LSH stage reads
-        // its input 3x (signatures + both verification sides); without
-        // the cut that re-runs quality+fingerprint+window each time.
-        // localCheckpoint (not persist): no CacheManager registration, so
-        // each bench/verify build re-materializes independently instead
-        // of silently reusing a cache across runs.
-        materializeCut = _.localCheckpoint(true))
+        // one eager cut after exact dedup: the LSH stage reads its input
+        // 3x (signatures + both verification sides); without the cut
+        // that re-runs quality+fingerprint+window each time. A cut (not
+        // persist) registers nothing with the CacheManager, so each
+        // bench/verify build re-materializes independently instead of
+        // silently reusing a cache across runs.
+        cuts = Some(cuts))
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -145,11 +145,11 @@ object CorpusCleanDemos {
       SELECT doc_id, lang, source
       FROM csamp
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => CorpusClean.pipeline(
+    (s, dir, cuts) => CorpusClean.pipeline(
         Tables.table(s, dir, "documents"),
         idCol = "doc_id", textCol = "text", stratumCol = "lang",
         nearDupThreshold = 0.5, rates = rates,
-        materializeCut = _.localCheckpoint(true),
+        cuts = Some(cuts),
         lshMaxBucket = Some(2))
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy(col("doc_id").asc_nulls_last))
@@ -183,7 +183,7 @@ object CorpusCleanDemos {
       FROM m
       GROUP BY lang
       ORDER BY lang ASC NULLS LAST"""),
-    (s, dir) => CorpusClean.datasetReport(
+    (s, dir, _) => CorpusClean.datasetReport(
         Tables.table(s, dir, "documents"), "text", "lang")
       .orderBy(col("lang").asc_nulls_last))
 
@@ -228,7 +228,7 @@ object CorpusCleanDemos {
                                 ORDER BY h ASC, doc_id ASC) AS band_rank
       FROM h4
       ORDER BY bucket ASC NULLS LAST, band_rank ASC NULLS LAST"""),
-    (s, dir) => CorpusClean.curriculumOrder(
+    (s, dir, _) => CorpusClean.curriculumOrder(
         Tables.table(s, dir, "documents"), "doc_id", "text", salt = curSalt)
       .orderBy(col("bucket").asc_nulls_last, col("band_rank").asc_nulls_last))
 
@@ -256,7 +256,7 @@ object CorpusCleanDemos {
       UNION ALL SELECT 4, 'near_dedup', n3, n2 - n3 FROM c
       UNION ALL SELECT 5, 'sample', n4, n3 - n4 FROM c
       ORDER BY stage_idx ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, cuts) => {
       // the SAME stage frames (and parameters) x11's pipeline executes —
       // CorpusClean.stages is the single definition site, so the
       // waterfall can never drift from the pipeline output
@@ -264,10 +264,10 @@ object CorpusCleanDemos {
         Tables.table(s, dir, "documents"),
         idCol = "doc_id", textCol = "text", stratumCol = "lang",
         nearDupThreshold = 0.5, rates = rates,
-        materializeCut = _.localCheckpoint(true),
+        cuts = Some(cuts),
         // every stage frame is counted below, so each cuts once — a
         // lazy nearKept would re-run the LSH pair chain per downstream
-        // count (r17: the waterfall's plan carried the chain twice)
+        // count (the waterfall's plan would carry the chain twice)
         cutAllStages = true).ordered
       val wide = stages.zipWithIndex
         .map { case ((_, df), i) => df.agg(count(lit(1)).as(s"n$i")) }

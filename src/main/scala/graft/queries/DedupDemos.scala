@@ -81,7 +81,7 @@ object DedupDemos {
             FROM documents)
       WHERE rn = 1
       ORDER BY lang ASC NULLS LAST, source ASC NULLS LAST"""),
-    (s, dir) => TextDedup.exactDedup(
+    (s, dir, _) => TextDedup.exactDedup(
         t(s, dir, "documents"), Seq("lang", "source"), col("doc_id"))
       .select(col("lang"), col("source"), col("doc_id"))
       .orderBy(col("lang").asc_nulls_last, col("source").asc_nulls_last))
@@ -106,14 +106,14 @@ object DedupDemos {
              $fingerprintSql AS fingerprint
       FROM documents
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextDedup.fingerprint(t(s, dir, "documents"), "doc_id", "text")
+    (s, dir, _) => TextDedup.fingerprint(t(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id").asc_nulls_last))
 
   // X2b: MinHash+LSH near-dup pairs — the 100 TB dedup path. The exact
   // brute-force oracle matches because at j >= 0.5 the per-pair LSH miss
   // probability is (1-j^2)^64 <= 1e-8 and candidates are exact-verified.
   private val x2b = Demo("x2b_minhash_lsh", Some(oracleJaccardPairs(0.5)),
-    (s, dir) => TextDedup.minhashLshPairs(
+    (s, dir, _) => TextDedup.minhashLshPairs(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.5)
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
@@ -256,19 +256,16 @@ object DedupDemos {
   // so the oracle replays the signatures themselves.
   private val x2h = Demo("x2h_minhash_estimate",
     Some(oracleLshEstimatePairs(0.35)),
-    // materializeSignatures: the signature frame feeds THREE consumers
-    // (banding + both pair-join sides), and lazily the 128-permutation
-    // signature aggregate — this operator's dominant compute — runs once
-    // per consumer (r18 plan audit: 3 MinHashAgg HashAggregates over 3
-    // text scans). The cut runs it ONCE into ~n·1 KB of storage; unlike
-    // the x2b lazy-vs-materialize tradeoff (where the cut restructures
-    // verification into semi joins), this is a pure 3×→1× of the same
-    // aggregate, so it wins at demo scale too (A/B in
-    // OPTIMIZATION_r18.md). This is also the honest production shape:
-    // the re-score path's whole point is signatures computed once.
-    (s, dir) => TextDedup.minhashEstimatePairs(
+    // the signatures are cut: they feed THREE consumers (banding + both
+    // pair-join sides), and lazily the 128-permutation signature
+    // aggregate — this operator's dominant compute — runs once per
+    // consumer over its own text scan. The cut runs it ONCE into ~n·1 KB
+    // of storage, a pure 3×→1× of the same aggregate, so it wins at demo
+    // scale too — and the re-score path's point is signatures computed
+    // once.
+    (s, dir, cuts) => TextDedup.minhashEstimatePairs(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.35,
-        materializeSignatures = Some(TextDedup.eagerCut))
+        cuts = Some(cuts))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
   // X2b (capped): the open-web-scale face of x2b — the maxBucket
@@ -281,7 +278,7 @@ object DedupDemos {
   // the capped SEMANTICS, not just the uncapped-coincident output.
   private val x2b2 = Demo("x2b2_minhash_capped",
     Some(oracleLshCappedPairs(0.5, cap = 2)),
-    (s, dir) => TextDedup.minhashLshPairs(
+    (s, dir, _) => TextDedup.minhashLshPairs(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.5,
         maxBucket = Some(2))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
@@ -293,7 +290,7 @@ object DedupDemos {
   // the capped variant below.
   private val x2c = Demo("x2c_ngram_jaccard",
     Some(oracleJaccardPairs(0.05, docFilter = " AND doc_id < 1000")),
-    (s, dir) => TextDedup.ngramJaccardPairs(
+    (s, dir, _) => TextDedup.ngramJaccardPairs(
         t(s, dir, "documents").filter(col("doc_id") < 1000),
         "doc_id", "text", threshold = 0.05)
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
@@ -305,7 +302,7 @@ object DedupDemos {
   // scaladoc documents the recall tradeoff).
   private val x2c2 = Demo("x2c2_ngram_jaccard_capped",
     Some(oracleJaccardPairsCapped(0.05, cap = 50)),
-    (s, dir) => TextDedup.ngramJaccardPairs(
+    (s, dir, _) => TextDedup.ngramJaccardPairs(
         t(s, dir, "documents"), "doc_id", "text",
         threshold = 0.05, maxDocFreq = Some(50))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
@@ -334,8 +331,9 @@ object DedupDemos {
       FROM reach
       GROUP BY node
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextDedup.dedupClusters(
-        TextDedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text", 0.5))
+    (s, dir, cuts) => TextDedup.dedupClusters(
+        TextDedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text", 0.5),
+        cuts)
       .select(col("node").as("doc_id"), col("cluster_id"))
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -366,9 +364,9 @@ object DedupDemos {
       FROM reach
       GROUP BY node
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextDedup.dedupClusters(
+    (s, dir, cuts) => TextDedup.dedupClusters(
         TextDedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-          0.5, maxBucket = Some(2)))
+          0.5, maxBucket = Some(2)), cuts)
       .select(col("node").as("doc_id"), col("cluster_id"))
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -393,7 +391,7 @@ object DedupDemos {
       FROM votes
       GROUP BY doc_id
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextDedup.simhash(t(s, dir, "documents"), "doc_id", "text")
+    (s, dir, _) => TextDedup.simhash(t(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id").asc_nulls_last))
 
   // X2e: embedding-cosine near-dup pairs, bounded to a fixed 1000-vector
@@ -418,7 +416,7 @@ object DedupDemos {
       FROM n a JOIN n b ON a.vec_id < b.vec_id
       WHERE cosine >= 0.4
       ORDER BY vec_a ASC NULLS LAST, vec_b ASC NULLS LAST"""),
-    (s, dir) => TextDedup.embeddingNearDupPairs(
+    (s, dir, _) => TextDedup.embeddingNearDupPairs(
         t(s, dir, "embeddings").filter(col("vec_id") < 1000),
         "vec_id", "embedding", threshold = 0.4)
       .orderBy(col("vec_a").asc_nulls_last, col("vec_b").asc_nulls_last))
@@ -457,7 +455,7 @@ object DedupDemos {
       FROM cand
       WHERE levenshtein(dname, s_name) <= 1
       ORDER BY did ASC NULLS LAST, clean_key ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val sup = t(s, dir, "supplier")
       val pos = pmod(col("s_suppkey"), length(col("s_name")).cast("long"))
         .cast("int")
@@ -499,7 +497,7 @@ object DedupDemos {
       WHERE NOT EXISTS (SELECT 1 FROM fp_store s
                         WHERE s.fingerprint = in_batch.fingerprint)
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val d = t(s, dir, "documents")
       val store = TextDedup.fingerprint(
         d.filter(col("doc_id") < 400), "doc_id", "text")
@@ -546,7 +544,7 @@ object DedupDemos {
   }
 
   private val x23 = Demo("x23_decontaminate", Some(deconOracle),
-    (s, dir) => {
+    (s, dir, _) => {
       val (corpus, bench) = deconSplit(s, dir)
       TextDedup.decontaminate(corpus, bench, "doc_id", "text", deconN)
         .orderBy(col("doc_id").asc_nulls_last)
@@ -559,7 +557,7 @@ object DedupDemos {
   // output is identical (same oracle). The filter build is one bounded
   // collect of the tiny benchmark side.
   private val x23b = Demo("x23b_decontaminate_bloom", Some(deconOracle),
-    (s, dir) => {
+    (s, dir, _) => {
       val (corpus, bench) = deconSplit(s, dir)
       TextDedup.decontaminateBloom(corpus, bench, "doc_id", "text", deconN)
         .orderBy(col("doc_id").asc_nulls_last)
@@ -600,7 +598,7 @@ object DedupDemos {
       FROM m GROUP BY 1
       ORDER BY doc_id ASC NULLS LAST"""
   },
-    (s, dir) => TextDedup.dedupSpans(t(s, dir, "documents"), "doc_id", "text",
+    (s, dir, _) => TextDedup.dedupSpans(t(s, dir, "documents"), "doc_id", "text",
         spanN)
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -627,7 +625,7 @@ object DedupDemos {
                FILTER (WHERE rn = 1), '') AS clean_text
       FROM r GROUP BY 1
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextDedup.segmentDedup(t(s, dir, "documents"), "doc_id", "text",
+    (s, dir, _) => TextDedup.segmentDedup(t(s, dir, "documents"), "doc_id", "text",
         width = segW)
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -684,7 +682,7 @@ object DedupDemos {
       GROUP BY 1, 2
       HAVING count(*) >= $winShared
       ORDER BY id_a ASC NULLS LAST, id_b ASC NULLS LAST"""),
-    (s, dir) => TextDedup.winnowPairs(t(s, dir, "documents"), "doc_id", "text",
+    (s, dir, _) => TextDedup.winnowPairs(t(s, dir, "documents"), "doc_id", "text",
         k = winK, w = winW, minShared = winShared, maxDocFreq = winCap)
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
@@ -717,7 +715,7 @@ object DedupDemos {
       WHERE greatest(cast(inter AS double) / na.n,
                      cast(inter AS double) / nb.n) >= $contThreshold
       ORDER BY id_a ASC NULLS LAST, id_b ASC NULLS LAST"""),
-    (s, dir) => TextDedup.containmentPairs(t(s, dir, "documents"),
+    (s, dir, _) => TextDedup.containmentPairs(t(s, dir, "documents"),
         "doc_id", "text", threshold = contThreshold,
         maxDocFreq = Some(contCap))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
@@ -748,7 +746,7 @@ object DedupDemos {
                   ELSE 'changed' END AS status
       FROM j
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val d = t(s, dir, "documents")
       val v1 = d.filter(col("doc_id") % 7 =!= 0)
         .withColumn("text", when(col("doc_id") % 5 === 0,
@@ -788,7 +786,7 @@ object DedupDemos {
             FROM m)
       WHERE rn = 1
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val m = graft.operators.TextAnalysis.qualityMetrics(
         t(s, dir, "documents"), "text")
       val fp = TextDedup.withFingerprint(m, "text")
@@ -814,7 +812,7 @@ object DedupDemos {
       FROM sh a JOIN sh b ON a.doc_id % 5 = 4 AND b.doc_id % 5 != 4
       WHERE jaccard >= 0.5
       ORDER BY new_id ASC NULLS LAST, old_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val d = t(s, dir, "documents")
       TextDedup.incrementalLshPairs(
           d.filter(col("doc_id") % 5 === 4),
@@ -852,7 +850,7 @@ object DedupDemos {
       JOIN sh sb ON sb.doc_id = cand.old_id
       WHERE jaccard >= 0.5
       ORDER BY new_id ASC NULLS LAST, old_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val d = t(s, dir, "documents")
       TextDedup.incrementalLshPairs(
           d.filter(col("doc_id") % 5 === 4),
@@ -886,8 +884,7 @@ object DedupDemos {
   // keys APPEND into the store's bucket layout; batch2 (≡4) then probes
   // base+batch1 through the same store — no corpus re-scan or re-index
   // anywhere in the loop. Both probes run CAPPED (maxBucket = 2, the
-  // production configuration — r8 verdict item 2: the crawl-loop demo
-  // probed uncapped while the library had the knob), so the oracle
+  // production configuration), so the oracle
   // replays the banding and BOTH store states' bucket filters exactly
   // (the x58b pattern, once per store state: the append changes which
   // buckets blow the cap for probe 2) — hash-checked, not
@@ -926,7 +923,7 @@ object DedupDemos {
       JOIN sh sb ON sb.doc_id = cand.old_id
       WHERE jaccard >= 0.5
       ORDER BY batch ASC NULLS LAST, new_id ASC NULLS LAST, old_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, cuts) => {
       val d = t(s, dir, "documents")
       val base = d.filter(col("doc_id") % 5 <= 2)
       val b1 = d.filter(col("doc_id") % 5 === 3)
@@ -936,19 +933,19 @@ object DedupDemos {
       TextDedup.lshStoreWrite(base, "doc_id", "text", "x59_band_store",
         path = Some(scratch))
       // batch1's band index is derived ONCE and shared by its probe and
-      // its append (r17: the probe's internal lshIndex(b1) and the
-      // append's were two full shingle→signature→band passes over the
+      // its append (otherwise the probe's internal lshIndex(b1) and the
+      // append's are two full shingle→signature→band passes over the
       // same batch; the cut costs one action and halves the batch-1
       // index work). Cut BEFORE the probe so the append reads the same
       // materialized rows.
-      val b1Idx = TextDedup.eagerCut(TextDedup.lshIndex(b1, "doc_id", "text"))
+      val b1Idx = cuts.cut(TextDedup.lshIndex(b1, "doc_id", "text"))
       // batch1's probe must COMPLETE before the append mutates the store
       // (lazily-evaluated, it would see its own batch and self-pair) —
       // exactly the sequential contract of a real crawl loop
-      val p1 = TextDedup.probeLshStore(b1, s.table("x59_band_store"), base,
-        "doc_id", "text", threshold = 0.5,
+      val p1 = cuts.cut(TextDedup.probeLshStore(b1, s.table("x59_band_store"),
+        base, "doc_id", "text", threshold = 0.5,
         maxBucket = Some(x59Cap),
-        prebuiltBatchIndex = Some(b1Idx)).localCheckpoint(true)
+        prebuiltBatchIndex = Some(b1Idx)))
       TextDedup.lshStoreAppend(b1, "doc_id", "text", "x59_band_store",
         prebuiltIndex = Some(b1Idx))
       val p2 = TextDedup.probeLshStore(b2, s.table("x59_band_store"),
@@ -1031,12 +1028,12 @@ object DedupDemos {
   // recall gate in TextDedupSpec runs this instrument at sf0.1.
   private val x62 = Demo("x62_lsh_survival",
     Some(oracleSurvivalStats(0.5, None)),
-    (s, dir) => TextDedup.lshSurvivalStats(
+    (s, dir, cuts) => TextDedup.lshSurvivalStats(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.5,
-        // r15 verdict item 4: cut the band index + candidates once —
-        // the lazy plan re-derived the shingle→signature→band chain
-        // per consumer (discovery, bucket window, verify)
-        materialize = Some(_.localCheckpoint(true)))
+        // the band index + candidates are cut once — the lazy plan
+        // re-derives the shingle→signature→band chain per consumer
+        // (discovery, bucket window, verify)
+        cuts = Some(cuts))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
   // X62b: the SAMPLED-discovery face — ground truth from the first 8
@@ -1045,14 +1042,14 @@ object DedupDemos {
   // sample is the claimed restriction, not an approximation.
   private val x62b = Demo("x62b_lsh_survival_sampled",
     Some(oracleSurvivalStats(0.5, Some(8))),
-    (s, dir) => TextDedup.lshSurvivalStats(
+    (s, dir, cuts) => TextDedup.lshSurvivalStats(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.5,
         discoveryBands = Some(8),
-        materialize = Some(_.localCheckpoint(true)))
+        cuts = Some(cuts))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
   // X63: the recall-vs-cap CURVE off the exact survival stats — the
-  // table the r11 verdict asked for, as an oracle-checked query shape
+  // recall table as an oracle-checked query shape
   // (exact face: every weight is 1, so recall = n_surviving / n_true
   // in exact double arithmetic, bit-identical across engines).
   private val x63 = Demo("x63_lsh_recall_curve",
@@ -1067,10 +1064,10 @@ object DedupDemos {
       FROM stats, caps
       GROUP BY 1
       ORDER BY cap ASC NULLS LAST"""),
-    (s, dir) => TextDedup.recallAtCaps(
+    (s, dir, cuts) => TextDedup.recallAtCaps(
         TextDedup.lshSurvivalStats(
           t(s, dir, "documents"), "doc_id", "text", threshold = 0.5,
-          materialize = Some(_.localCheckpoint(true))),
+          cuts = Some(cuts)),
         caps = Seq(2, 4, 8, 16, 32, 64))
       .orderBy(col("cap").asc_nulls_last))
 
@@ -1080,16 +1077,16 @@ object DedupDemos {
   // min_bn against FULL-corpus bucket sizes. This is the instrument
   // that prices recall at decades where even band-restricted exact
   // ground truth exceeds a box's scratch (10M docs = 29.64B uncapped
-  // pairs vs ~78G, three measured r16 kills): inclusion is uniform
+  // pairs vs ~78G of scratch): inclusion is uniform
   // 1/S² over the pair universe, so the recall ratio needs no
   // reweighting. The oracle proves the sample is the claimed exact
   // restriction — same md5 arithmetic on both engines.
   private val x65 = Demo("x65_lsh_survival_pairsampled",
     Some(oracleSurvivalStats(0.5, None, sampleOneIn = Some(2))),
-    (s, dir) => TextDedup.lshSurvivalStatsSampled(
+    (s, dir, cuts) => TextDedup.lshSurvivalStatsSampled(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.5,
         sampleOneIn = 2,
-        materialize = Some(_.localCheckpoint(true)))
+        cuts = Some(cuts))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
   // X65b: the recall-vs-cap curve off the pair-sampled stats — exactly
@@ -1108,11 +1105,11 @@ object DedupDemos {
       FROM stats, caps
       GROUP BY 1
       ORDER BY cap ASC NULLS LAST"""),
-    (s, dir) => TextDedup.recallAtCaps(
+    (s, dir, cuts) => TextDedup.recallAtCaps(
         TextDedup.lshSurvivalStatsSampled(
           t(s, dir, "documents"), "doc_id", "text", threshold = 0.5,
           sampleOneIn = 2,
-          materialize = Some(_.localCheckpoint(true))),
+          cuts = Some(cuts)),
         caps = Seq(2, 4, 8, 16, 32, 64))
       .orderBy(col("cap").asc_nulls_last))
 
@@ -1154,7 +1151,7 @@ object DedupDemos {
         WHERE jaccard >= $threshold)"""
 
   // X64: the recall-floor knob end-to-end — the measured recall curve
-  // consumed as an API (r13 verdict item 2). Each preset prices its
+  // consumed as an API. Each preset prices its
   // floor at the 5M-doc decade through TextDedup.budgetForRecall
   // (default floor 0.998 → 32 pairs/doc; the high-recall preset
   // 0.9995 → 48, the measured cap-8 operating point), calibrates that
@@ -1179,16 +1176,13 @@ object DedupDemos {
       SELECT * FROM arm_high_recall
       ORDER BY preset ASC NULLS LAST, id_a ASC NULLS LAST,
                id_b ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, cuts) => {
       val docs = t(s, dir, "documents")
       val n = docs.count()
-      // ONE shingle→signature→band derivation for the whole demo: the
-      // two calibrations AND the shared pair chain read this cut
-      // (r14 verdict item 5 — the original form re-derived the chain
-      // from raw text once per preset and was the suite's slowest
-      // query at 9 s)
-      val bands = TextDedup.lshIndex(docs, "doc_id", "text")
-        .localCheckpoint(true)
+      // ONE shingle→signature→band derivation for the whole demo: the two
+      // calibrations AND the shared pair chain read this cut (a chain per
+      // preset made this the suite's slowest query, at 9 s)
+      val bands = cuts.cut(TextDedup.lshIndex(docs, "doc_id", "text"))
       val presets = Seq(("default", 0.998), ("high_recall", 0.9995)).map {
         case (preset, floor) =>
           val budget = TextDedup.budgetForRecall(5000000L, floor)
@@ -1197,20 +1191,16 @@ object DedupDemos {
       // ONE candidate + verify chain at the LOOSEST preset's cap; each
       // tighter preset reads off it as a min_bn filter — the survival
       // law (a pair survives cap c iff its smallest shared live bucket
-      // is ≤ c; spec-pinned equality with the per-cap operator). r16
-      // ran the capped chain once per preset — the suite's most
-      // expensive query — when the preset outputs are nested by
-      // construction (r16 verdict item 6).
+      // is ≤ c; spec-pinned equality with the per-cap operator). The
+      // preset outputs are nested by construction, so running the
+      // capped chain once per preset would only repeat work.
       val capMax = presets.map(_._3).max
-      // candidate chain stays LAZY here (materializeCandidates = None):
-      // the r17 A/B measured the cut variant SLOWER at sf0.1 (4.47 vs
-      // 3.60 s — the checkpoint barrier costs more than re-reading the
-      // already-cut band index saves); at corpus scale callers pass
-      // materializeCandidates = Some(eagerCut) so the live-bucket
-      // window + self-join runs once instead of once per consumer
-      val withBn = TextDedup.minhashLshPairsWithMinBucket(bands, docs,
-          "doc_id", "text", threshold = 0.5, maxBucket = capMax)
-        .localCheckpoint(true)
+      // the candidate chain stays lazy (cuts = None): at sf0.1 the cut
+      // variant measured slower (4.47 vs 3.60 s), the barrier costing more
+      // than re-reading the cut band index saves; at corpus scale
+      // cuts = Some(scope) runs the live-bucket self-join once
+      val withBn = cuts.cut(TextDedup.minhashLshPairsWithMinBucket(bands,
+        docs, "doc_id", "text", threshold = 0.5, maxBucket = capMax))
       presets.map { case (preset, budget, cap) =>
         withBn.filter(col("min_bn") <= cap)
           .select(lit(preset).as("preset"),

@@ -48,7 +48,7 @@ object EventsDemos {
       FROM events
       GROUP BY 1
       ORDER BY event_type ASC NULLS LAST"""),
-    (s, dir) => t(s, dir, "events")
+    (s, dir, _) => t(s, dir, "events")
       .select(col("event_type"),
         from_json(col("props"), StructType(Seq(StructField("k", LongType))))
           .getField("k").as("k"))
@@ -72,7 +72,7 @@ object EventsDemos {
       FROM events
       WHERE event_id <= 500
       ORDER BY event_id ASC NULLS LAST"""),
-    (s, dir) => t(s, dir, "events")
+    (s, dir, _) => t(s, dir, "events")
       .filter(col("event_id") <= 500)
       .select(col("event_id"), col("event_type"),
         expr("variant_get(parse_json(props), '$.k', 'bigint')").as("k"))
@@ -91,7 +91,7 @@ object EventsDemos {
       FROM events
       GROUP BY 1, 2
       ORDER BY window_start ASC NULLS LAST, event_type ASC NULLS LAST"""),
-    (s, dir) => tumbling(t(s, dir, "events"))
+    (s, dir, _) => tumbling(t(s, dir, "events"))
       .orderBy(col("window_start").asc_nulls_last, col("event_type").asc_nulls_last))
 
   /** The shared batch/streaming tumbling-agg transformation. */
@@ -121,7 +121,7 @@ object EventsDemos {
                   FROM events))
       GROUP BY 1
       ORDER BY window_start ASC NULLS LAST"""),
-    (s, dir) => sliding(t(s, dir, "events"))
+    (s, dir, _) => sliding(t(s, dir, "events"))
       .orderBy(col("window_start").asc_nulls_last))
 
   /** The shared batch/streaming sliding-agg transformation. */
@@ -159,7 +159,7 @@ object EventsDemos {
       FROM sessions
       GROUP BY user_id, sid
       ORDER BY user_id ASC NULLS LAST, session_start ASC NULLS LAST"""),
-    (s, dir) => session(t(s, dir, "events"))
+    (s, dir, _) => session(t(s, dir, "events"))
       .orderBy(col("user_id").asc_nulls_last, col("session_start").asc_nulls_last))
 
   /** The shared batch/streaming session-agg transformation. */
@@ -191,7 +191,7 @@ object EventsDemos {
         ON p.user_id = c.user_id
        AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
       ORDER BY purchase_id ASC NULLS LAST, click_id ASC NULLS LAST"""),
-    (s, dir) => intervalJoin(t(s, dir, "events"))
+    (s, dir, _) => intervalJoin(t(s, dir, "events"))
       .orderBy(col("purchase_id").asc_nulls_last,
         col("click_id").asc_nulls_last))
 
@@ -230,7 +230,7 @@ object EventsDemos {
         ON p.user_id = c.user_id
        AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
       ORDER BY purchase_id ASC NULLS LAST, click_id ASC NULLS FIRST"""),
-    (s, dir) => intervalJoin(t(s, dir, "events"), "left_outer")
+    (s, dir, _) => intervalJoin(t(s, dir, "events"), "left_outer")
       .orderBy(col("purchase_id").asc_nulls_last,
         col("click_id").asc_nulls_first))
 
@@ -274,7 +274,7 @@ object EventsDemos {
              CASE WHEN n1 > 0 THEN cast(n3 AS double) / cast(n1 AS double) END
       FROM c
       ORDER BY step ASC NULLS LAST"""),
-    (s, dir) => graft.operators.Funnel.funnel(
+    (s, dir, _) => graft.operators.Funnel.funnel(
         t(s, dir, "events"), "user_id", "event_type", "ts",
         Seq("view", "click", "purchase"), maxGap = Some("6 HOURS"))
       .orderBy(col("step").asc_nulls_last))
@@ -310,7 +310,7 @@ object EventsDemos {
              cast(n_active AS double) / cast(cohort_size AS double) AS retention
       FROM matrix m JOIN sizes USING (cohort_week)
       ORDER BY cohort_week ASC NULLS LAST, week_offset ASC NULLS LAST"""),
-    (s, dir) => graft.operators.Retention.cohortRetention(
+    (s, dir, _) => graft.operators.Retention.cohortRetention(
         t(s, dir, "events"), "user_id", "event_type", "ts", "signup")
       .orderBy(col("cohort_week").asc_nulls_last,
         col("week_offset").asc_nulls_last))
@@ -335,7 +335,7 @@ object EventsDemos {
              event_type AS first_event_type
       FROM r WHERE rn = 1
       ORDER BY user_id ASC NULLS LAST"""),
-    (s, dir) => firstTouch(t(s, dir, "events"))
+    (s, dir, _) => firstTouch(t(s, dir, "events"))
       .orderBy(col("user_id").asc_nulls_last))
 
   /** The shared batch face of streaming first-touch (X6f). */
@@ -371,7 +371,7 @@ object EventsDemos {
       SELECT event_id, user_id, event_type, ts
       FROM r WHERE rn = 1
       ORDER BY event_id ASC NULLS LAST"""),
-    (s, dir) => throttleDedup(t(s, dir, "events"))
+    (s, dir, _) => throttleDedup(t(s, dir, "events"))
       .orderBy(col("event_id").asc_nulls_last))
 
   /** The shared batch face of streaming ingestion dedup (X6g). */
@@ -404,7 +404,7 @@ object EventsDemos {
       FROM events e JOIN customer c ON e.user_id = c.c_custkey
       GROUP BY 1, 2
       ORDER BY window_start ASC NULLS LAST, c_nationkey ASC NULLS LAST"""),
-    (s, dir) => enrichedTumbling(t(s, dir, "events"), t(s, dir, "customer"))
+    (s, dir, _) => enrichedTumbling(t(s, dir, "events"), t(s, dir, "customer"))
       .orderBy(col("window_start").asc_nulls_last,
         col("c_nationkey").asc_nulls_last))
 
@@ -454,7 +454,7 @@ object EventsDemos {
       FROM l
       GROUP BY step, step_name
       ORDER BY step ASC NULLS LAST"""),
-    (s, dir) => graft.operators.Funnel.funnelLatency(
+    (s, dir, _) => graft.operators.Funnel.funnelLatency(
         t(s, dir, "events"), "user_id", "event_type", "ts",
         Seq("view", "click", "purchase"), maxGap = Some("6 HOURS"))
       .orderBy(col("step").asc_nulls_last))
@@ -485,7 +485,7 @@ object EventsDemos {
              event_id AS touch_event_id, event_type AS touch_type
       FROM r WHERE rn = 1
       ORDER BY user_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val e = t(s, dir, "events")
       val conv = e.filter(col("event_type") === "purchase")
         .groupBy(col("user_id")).agg(min(col("ts")).as("purchase_ts"))

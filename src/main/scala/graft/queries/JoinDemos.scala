@@ -33,7 +33,7 @@ object JoinDemos {
       ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         ON p.user_id = c.user_id AND p.ts >= c.ts
       ORDER BY p.event_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val ev = t(s, dir, "events")
         .filter(col("event_type").isin("purchase", "click"))
         .select(col("event_id"), col("user_id"), col("ts"), col("value"),
@@ -70,7 +70,7 @@ object JoinDemos {
       FROM events JOIN bands ON value >= lo AND value < hi
       GROUP BY band
       ORDER BY band ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val bands = s.createDataFrame(bandRows).toDF("band", "lo", "hi")
       t(s, dir, "events")
         .join(broadcast(bands), col("value") >= col("lo") && col("value") < col("hi"))

@@ -71,7 +71,7 @@ object ModelDemos {
              lead(valid_from) OVER (PARTITION BY o_custkey ORDER BY valid_from) IS NULL AS is_current
       FROM kept
       ORDER BY o_custkey ASC NULLS LAST, valid_from ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, cuts) => {
       val orders = t(s, dir, "orders")
       var snap: Option[DataFrame] = None
       eraBounds.foreach { bound =>
@@ -80,12 +80,12 @@ object ModelDemos {
             Seq("o_custkey"), "o_orderdate", col("o_orderkey"))
           .select(col("o_custkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_orderdate").as("updated_at"))
-        // each run materializes its snapshot table (localCheckpoint) the
-        // way dbt writes the snapshot between runs: timestampStrategy's
+        // each run materializes its snapshot table (a cut) the way dbt
+        // writes the snapshot between runs: timestampStrategy's
         // output references its join subtree from four branches, so an
         // unmaterialized 3-era chain would re-evaluate era 1 ~25 times
-        snap = Some(Snapshot.timestampStrategy(
-          snap, src, Seq("o_custkey"), "updated_at").localCheckpoint(true))
+        snap = Some(cuts.cut(Snapshot.timestampStrategy(
+          snap, src, Seq("o_custkey"), "updated_at")))
       }
       snap.get
         .withColumn("is_current", col(Snapshot.ValidTo).isNull)
@@ -117,7 +117,7 @@ object ModelDemos {
       FROM events
       GROUP BY 1, 2
       ORDER BY day ASC NULLS LAST, event_type ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val path = freshScratchDir("x13_incremental") + "/daily_events"
       val table = batches.map { case (lo, hi) =>
         Incremental.run(s, path, Incremental.InsertOverwrite(Seq("day"))) {
@@ -167,7 +167,7 @@ object ModelDemos {
                   ELSE 'pass' END AS status
       FROM src
       ORDER BY source_name ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       import graft.models.SourceFreshness
       import graft.models.SourceFreshness.Source
       val events = t(s, dir, "events")
@@ -210,7 +210,7 @@ object ModelDemos {
         SELECT 'P', round(avg(o_totalprice), 2), count(*)
           FROM orders WHERE o_orderstatus = 'P')
       ORDER BY status ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val dag = new graft.models.SqlDag(s, freshScratchDir("q33"))
       val built = dag.run(
         Seq(graft.models.SqlDag.SqlModel("q33_status_mix", q33Model)),
@@ -244,7 +244,7 @@ object ModelDemos {
       WHERE o_totalprice >= 1000 AND o_orderstatus = 'O'
       GROUP BY o_orderpriority
       ORDER BY priority ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val dag = new graft.models.SqlDag(s, freshScratchDir("q34"))
       val built = dag.run(
         Seq(graft.models.SqlDag.SqlModel("q34_priced_priorities", q34Model)),
@@ -283,7 +283,7 @@ object ModelDemos {
         AND o_orderstatus <> 'X'
       GROUP BY o_orderpriority
       ORDER BY priority ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val dag = new graft.models.SqlDag(s, freshScratchDir("q35"))
       val built = dag.run(
         Seq(graft.models.SqlDag.SqlModel("q35_urgent_open", q35Model)),
@@ -322,7 +322,7 @@ object ModelDemos {
       FROM orders
       GROUP BY 1
       ORDER BY month ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val scratch = freshScratchDir("q36")
       val csvDir = s"$scratch/orders_seed"
       t(s, dir, "orders")
@@ -378,7 +378,7 @@ object ModelDemos {
         FROM orders_enriched GROUP BY 1, 2)
       SELECT priority, month, n, avg_price FROM priority_daily
       ORDER BY priority ASC NULLS LAST, month ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val models = Seq(
         graft.models.SqlDag.SqlModel("orders_enriched",
           "select o_orderkey, o_orderpriority, o_totalprice, " +
@@ -443,7 +443,7 @@ object ModelDemos {
       WHERE o_orderstatus = 'O'
       GROUP BY 1, 2
       ORDER BY period ASC NULLS LAST, priority ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val dag = new graft.models.SqlDag(s, freshScratchDir("q38"))
       val built = dag.run(
         Seq(graft.models.SqlDag.SqlModel("orders_enriched_m",
@@ -484,7 +484,7 @@ object ModelDemos {
         FROM stg_open_orders GROUP BY 1)
       SELECT month, n_orders, total FROM monthly_open
       ORDER BY month ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val models = Seq(
         graft.models.SqlDag.SqlModel("stg_open_orders",
           "select o_orderkey, o_totalprice, " +
@@ -527,7 +527,7 @@ object ModelDemos {
         FROM orders WHERE o_orderstatus = 'O')
       SELECT count(*) AS n, round(sum(gross), 2) AS total_gross
       FROM priced"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val dag = new graft.models.SqlDag(s, freshScratchDir("q40"))
       // shared session: clear leftovers so the existence assertions
       // below can only be satisfied by THIS run's hooks
@@ -575,7 +575,7 @@ object ModelDemos {
              o_totalprice / nullif(o_orderkey % 2, 0) AS price_odd_only
       FROM orders
       ORDER BY o_orderkey ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val dag = new graft.models.SqlDag(s, freshScratchDir("q41"))
       val built = dag.run(
         Seq(graft.models.SqlDag.SqlModel("orders_keyed",
@@ -604,7 +604,7 @@ object ModelDemos {
              round(sum(o_totalprice), 2) AS total
       FROM orders GROUP BY 1
       ORDER BY status ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val yaml = """
 models:
   - name: status_rollup
@@ -658,7 +658,7 @@ models:
       FROM orders
       WHERE o_orderstatus IS NOT NULL AND o_orderstatus NOT IN ('O', 'F')
       ORDER BY o_orderkey ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val yaml = """
 models:
   - name: orders
@@ -724,7 +724,7 @@ models:
         GROUP BY 1)
       SELECT year, n_big, total_price FROM big_orders_by_year
       ORDER BY year ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val models = Seq(
         graft.models.SqlDag.SqlModel("stg_priced",
           "select o_orderkey, o_totalprice, " +

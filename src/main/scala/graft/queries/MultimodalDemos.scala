@@ -41,7 +41,7 @@ object MultimodalDemos {
              lang AS source_lang
       FROM documents
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Multimodal.mediaTable(docs(s, dir))
+    (s, dir, _) => Multimodal.mediaTable(docs(s, dir))
       .select(col("doc_id"), col("media_type"),
         col("meta.n_bytes").as("n_bytes"),
         col("meta.source_lang").as("source_lang"))
@@ -65,7 +65,7 @@ object MultimodalDemos {
              ELSE 0.0 END AS brightness
       FROM documents
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Multimodal.decodeFeatures(Multimodal.mediaTable(docs(s, dir)))
+    (s, dir, _) => Multimodal.decodeFeatures(Multimodal.mediaTable(docs(s, dir)))
       .toDF()
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -81,7 +81,7 @@ object MultimodalDemos {
                + unnest(generate_series(1, $NFramesSql)) AS frame_fingerprint
       FROM documents
       ORDER BY doc_id ASC NULLS LAST, frame_idx ASC NULLS LAST"""),
-    (s, dir) => Multimodal.sampleFrames(
+    (s, dir, _) => Multimodal.sampleFrames(
         Multimodal.decodeFeatures(Multimodal.mediaTable(docs(s, dir))))
       .select(col("doc_id"), col("media_type"), col("frame_idx"),
         col("frame_fingerprint"))
@@ -96,7 +96,7 @@ object MultimodalDemos {
       WITH ${resizeCtesSql("documents")}
       $resizeSelectSql
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Multimodal.resize(
+    (s, dir, _) => Multimodal.resize(
         Multimodal.decodeFeatures(Multimodal.mediaTable(docs(s, dir))), maxDim = 48)
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -175,7 +175,7 @@ object MultimodalDemos {
       FROM cand
       WHERE bit_count(xor(ph_a, ph_b)) <= 3
       ORDER BY id_a ASC NULLS LAST, id_b ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val images = docs(s, dir).filter(pmod(col("doc_id"), lit(3)) === 0)
       Multimodal.phashNearDupPairs(
           Multimodal.perceptualHash(Multimodal.mediaTable(images)),
@@ -217,13 +217,13 @@ object MultimodalDemos {
       ${resizeCtesSql("kept")}
       $resizeSelectSql
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, cuts) => {
       import graft.operators.TextDedup
       val images = docs(s, dir).filter(pmod(col("doc_id"), lit(3)) === 0)
       val media = Multimodal.mediaTable(images)
       val pairs = Multimodal.phashNearDupPairs(
         Multimodal.perceptualHash(media), maxHamming = 3)
-      val dropped = TextDedup.dedupClusters(pairs)
+      val dropped = TextDedup.dedupClusters(pairs, cuts)
         .filter(col("node") =!= col("cluster_id"))
         .select(col("node"))
       val kept = media.join(dropped,
@@ -258,7 +258,7 @@ object MultimodalDemos {
                     v -> v*v)) AS bigint) AS energy
       FROM fr
       ORDER BY doc_id ASC NULLS LAST, frame_idx ASC NULLS LAST"""),
-    (s, dir) => Multimodal.audioFrameEnergy(
+    (s, dir, _) => Multimodal.audioFrameEnergy(
         Multimodal.mediaTable(docs(s, dir)), frame = audioFrame)
       .toDF()
       .orderBy(col("doc_id").asc_nulls_last, col("frame_idx").asc_nulls_last))

@@ -27,11 +27,13 @@ import graft.sources.Tables
   */
 object RelationalDemos {
 
-  /** A named demonstrator: Spark builder + equivalent DuckDB oracle SQL. */
+  /** A named demonstrator: Spark builder (cutting into the scope its
+    * caller closes) + equivalent DuckDB oracle SQL.
+    */
   final case class Demo(
       name: String,
       oracle: Option[String],
-      build: (SparkSession, String) => DataFrame)
+      build: (SparkSession, String, graft.Checkpoints.Scope) => DataFrame)
 
   private val dec2 = DecimalType(18, 2)
 
@@ -61,7 +63,7 @@ object RelationalDemos {
       FROM orders
       GROUP BY 1, 2
       ORDER BY month DESC NULLS LAST, o_orderpriority ASC NULLS LAST"""),
-      (s, dir) => t(s, dir, "orders")
+      (s, dir, _) => t(s, dir, "orders")
         .groupBy(
           monthOf(col("o_orderdate")).as("month"),
           col("o_orderpriority"))
@@ -102,7 +104,7 @@ object RelationalDemos {
       ORDER BY l_orderkey ASC NULLS LAST, l_linenumber ASC NULLS LAST,
                net_price ASC NULLS LAST, p_brand ASC NULLS LAST,
                p_type ASC NULLS LAST"""),
-      (s, dir) => t(s, dir, "lineitem")
+      (s, dir, _) => t(s, dir, "lineitem")
         .filter(col("l_quantity") > 45)
         .join(broadcast(t(s, dir, "part")),
           col("l_partkey") === col("p_partkey"), "left")
@@ -141,7 +143,7 @@ object RelationalDemos {
              cast(cast(coalesce(qty_shipped, 0) AS decimal(18,2)) AS double) AS qty_shipped
       FROM om FULL OUTER JOIN lm ON om.month = lm.month
       ORDER BY month ASC NULLS LAST"""),
-      (s, dir) => {
+      (s, dir, _) => {
         val om = t(s, dir, "orders")
           .groupBy(monthOf(col("o_orderdate")).as("month"))
           .agg(count(lit(1)).as("n_orders"),
@@ -180,7 +182,7 @@ object RelationalDemos {
              s.s_suppkey, s.s_name
       FROM agg LEFT JOIN supplier s ON agg.c_nationkey = s.s_nationkey
       ORDER BY nationkey ASC NULLS LAST, s_suppkey ASC NULLS LAST"""),
-      (s, dir) => t(s, dir, "customer")
+      (s, dir, _) => t(s, dir, "customer")
         .groupBy(col("c_nationkey"))
         .agg(
           countDistinct(col("c_custkey")).as("n_customers"),
@@ -211,7 +213,7 @@ object RelationalDemos {
       FROM orders
       ORDER BY o_orderkey ASC NULLS LAST, price_numeric ASC NULLS LAST,
                status ASC NULLS LAST"""),
-      (s, dir) => {
+      (s, dir, _) => {
         val r = lit(0.05) / lit(12)
         val growth = pow(lit(1) + r, lit(36))
         t(s, dir, "orders").select(
@@ -239,7 +241,7 @@ object RelationalDemos {
                       o_orderpriority
       FROM orders
       ORDER BY month ASC NULLS LAST, o_orderpriority ASC NULLS LAST"""),
-      (s, dir) => t(s, dir, "orders")
+      (s, dir, _) => t(s, dir, "orders")
         .select(monthOf(col("o_orderdate")).as("month"), col("o_orderpriority"))
         .distinct()
         .orderBy(col("month").asc_nulls_last, col("o_orderpriority").asc_nulls_last)),
@@ -252,7 +254,7 @@ object RelationalDemos {
       GROUP BY 1
       HAVING count(*) > 100
       ORDER BY o_orderpriority ASC NULLS LAST"""),
-      (s, dir) => t(s, dir, "orders")
+      (s, dir, _) => t(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
         .filter(col("n") > 100)
@@ -277,7 +279,7 @@ object RelationalDemos {
              (SELECT count(*) FROM actual_months) - count(*) AS extra_rows
       FROM expected_months
       HAVING (SELECT count(*) FROM actual_months) != count(*)"""),
-      (s, dir) => {
+      (s, dir, _) => {
         val orders = t(s, dir, "orders")
         val expected = orders
           .select(monthOf(col("o_orderdate")).as("month"), col("o_orderpriority"))
@@ -298,7 +300,7 @@ object RelationalDemos {
     // (reference: stg_loans.sql:1-3 CTE shape).
     Demo("q09_select_star", Some("""
       SELECT * FROM region ORDER BY r_regionkey ASC NULLS LAST"""),
-      (s, dir) => t(s, dir, "region")
+      (s, dir, _) => t(s, dir, "region")
         .orderBy(col("r_regionkey").asc_nulls_last)),
 
     // ----- O1: dedicated multi-key mixed-direction global sort (reference:
@@ -309,7 +311,7 @@ object RelationalDemos {
       FROM orders
       ORDER BY order_date DESC NULLS LAST, o_orderkey ASC NULLS LAST,
                o_orderpriority ASC NULLS LAST"""),
-      (s, dir) => t(s, dir, "orders")
+      (s, dir, _) => t(s, dir, "orders")
         .select(col("o_orderkey"),
           col("o_orderdate").cast(DateType).as("order_date"),
           col("o_orderpriority"))
@@ -321,7 +323,7 @@ object RelationalDemos {
     // Catalyst plan regardless of entry API. CTE + join + agg + sort in
     // a single spark.sql text that is ALSO the oracle, verbatim.
     Demo("q11_sql_surface", Some(sqlSurfaceText),
-      (s, dir) => {
+      (s, dir, _) => {
         // register only the relations the query names (registerAll would
         // also open events and flip its nanos legacy conf needlessly)
         Seq("nation", "region").foreach(n =>

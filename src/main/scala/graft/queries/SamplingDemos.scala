@@ -21,7 +21,7 @@ object SamplingDemos {
       FROM documents
       WHERE (((doc_id % 2147483648) * 2654435761) >> 16) % 100 < 20
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Sampling.hashSample(docs(s, dir), col("doc_id"), percent = 20)
+    (s, dir, _) => Sampling.hashSample(docs(s, dir), col("doc_id"), percent = 20)
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -38,7 +38,7 @@ object SamplingDemos {
       FROM documents
       WHERE (((doc_id % 2147483648) * 2654435761) >> 16) % 100 < $stratCase
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Sampling.stratifiedSample(docs(s, dir), col("doc_id"), col("lang"),
+    (s, dir, _) => Sampling.stratifiedSample(docs(s, dir), col("doc_id"), col("lang"),
         rates = stratRates)
       .select(col("doc_id"), col("lang"))
       .orderBy(col("doc_id").asc_nulls_last))
@@ -71,7 +71,7 @@ object SamplingDemos {
       FROM documents d JOIN r ON d.lang = r.dom
       WHERE (((doc_id % 2147483648) * 2654435761) >> 16) % 1000000 < r.rate_ppm
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Sampling.mixToTarget(docs(s, dir), col("doc_id"), "lang",
+    (s, dir, _) => Sampling.mixToTarget(docs(s, dir), col("doc_id"), "lang",
         mixWeights)
       .select(col("doc_id"), col("lang"), col("rate_ppm"))
       .orderBy(col("doc_id").asc_nulls_last))
@@ -98,7 +98,7 @@ object SamplingDemos {
       SELECT doc_id, h AS shuffle_key, h % $shuffleShards AS shard
       FROM h4
       ORDER BY shuffle_key ASC NULLS LAST, doc_id ASC NULLS LAST"""),
-    (s, dir) => Sampling.shuffleShard(docs(s, dir), col("doc_id"),
+    (s, dir, _) => Sampling.shuffleShard(docs(s, dir), col("doc_id"),
         numShards = shuffleShards, salt = shuffleSalt)
       .select(col("doc_id"), col("shuffle_key"), col("shard"))
       .orderBy(col("shuffle_key").asc_nulls_last, col("doc_id").asc_nulls_last))
@@ -132,7 +132,7 @@ object SamplingDemos {
       WHERE (((doc_id % 2147483648) * 2654435761) >> 16) % 100
               < CASE WHEN keep = 1 THEN 100 ELSE 10 END
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val scored = graft.operators.TextAnalysis.qualityMetrics(
         docs(s, dir), "text")
       Sampling.qualityResample(scored, col("doc_id"), col("keep") === 1,
@@ -166,7 +166,7 @@ object SamplingDemos {
       SELECT doc_id, source, domain_rank
       FROM r WHERE domain_rank <= $capN
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => Sampling.capPerDomain(docs(s, dir), col("doc_id"), "source",
+    (s, dir, _) => Sampling.capPerDomain(docs(s, dir), col("doc_id"), "source",
         maxPerDomain = capN, salt = capSalt)
       .select(col("doc_id"), col("source"), col("domain_rank"))
       .orderBy(col("doc_id").asc_nulls_last))
@@ -202,7 +202,7 @@ object SamplingDemos {
                // greatest((c.n_tokens * 1000000) // tot.total, 1) AS epochs
       FROM c, tot
       ORDER BY lang ASC NULLS LAST"""),
-    (s, dir) => Sampling.mixtureEpochs(docs(s, dir), "lang", "text",
+    (s, dir, _) => Sampling.mixtureEpochs(docs(s, dir), "lang", "text",
         targetPpm = epochTargets)
       .orderBy(col("lang").asc_nulls_last))
 
@@ -230,7 +230,7 @@ object SamplingDemos {
       JOIN plan p ON d.lang = p.lang,
       unnest(generate_series(1, p.epochs)) e(epoch)
       ORDER BY doc_id ASC NULLS LAST, epoch ASC NULLS LAST"""),
-    (s, dir) => Sampling.materializeEpochs(docs(s, dir), "lang", "text",
+    (s, dir, _) => Sampling.materializeEpochs(docs(s, dir), "lang", "text",
         targetPpm = epochTargets)
       .select(col("doc_id"), col("lang"), col("epoch"))
       .orderBy(col("doc_id").asc_nulls_last, col("epoch").asc_nulls_last))
@@ -261,7 +261,7 @@ object SamplingDemos {
       FROM s
       GROUP BY split, lang
       ORDER BY split ASC NULLS LAST, lang ASC NULLS LAST"""),
-    (s, dir) => Sampling.assignSplit(docs(s, dir), col("doc_id"), splitPlan)
+    (s, dir, _) => Sampling.assignSplit(docs(s, dir), col("doc_id"), splitPlan)
       .groupBy(col("split"), col("lang"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("split").asc_nulls_last, col("lang").asc_nulls_last))
@@ -307,7 +307,7 @@ object SamplingDemos {
       FROM tg LEFT JOIN trg ON tg.g = trg.g
       GROUP BY tg.doc_id, tg.lang
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       import graft.operators.TextDedup
       val split = Sampling.assignSplit(docs(s, dir).select(
           col("doc_id"), col("lang"), col("text")),
@@ -355,7 +355,7 @@ object SamplingDemos {
       SELECT domain, n_docs, (1000000 * w) // ws AS share_ppm
       FROM w CROSS JOIN ws
       ORDER BY domain ASC NULLS LAST"""),
-    (s, dir) => Sampling.temperatureShares(
+    (s, dir, _) => Sampling.temperatureShares(
         Tables.table(s, dir, "documents"), "lang", alpha = 0.5)
       .orderBy(col("domain").asc_nulls_last))
 

@@ -39,7 +39,7 @@ object ScaleDemos {
       FROM lineitem
       GROUP BY l_returnflag
       ORDER BY l_returnflag ASC NULLS LAST"""),
-    (s, dir) => ScaleOps.saltedAgg(
+    (s, dir, _) => ScaleOps.saltedAgg(
         t(s, dir, "lineitem"),
         keys = Seq("l_returnflag"),
         saltFrom = col("l_orderkey"),
@@ -70,7 +70,7 @@ object ScaleDemos {
              cast(cnt AS double) / cast(total AS double) AS share
       FROM top CROSS JOIN total
       ORDER BY rank ASC NULLS LAST"""),
-    (s, dir) => ScaleOps.keySkewProfile(
+    (s, dir, _) => ScaleOps.keySkewProfile(
         t(s, dir, "events"), col("user_id"), topK = 10)
       .orderBy(col("rank").asc_nulls_last))
 
@@ -107,7 +107,7 @@ object ScaleDemos {
       SELECT doc_id, text, lang, source, n_chars
       FROM documents
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"))
@@ -135,7 +135,7 @@ object ScaleDemos {
       WHERE cast(ts AS date) = DATE '2024-01-15'
       GROUP BY 1
       ORDER BY event_type ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val ev = t(s, dir, "events").select(
         to_date(col("ts")).as("day"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -164,7 +164,7 @@ object ScaleDemos {
       FROM orders JOIN customer ON o_custkey = c_custkey
       GROUP BY 1
       ORDER BY c_mktsegment ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       import org.apache.spark.sql.types.{DecimalType, DoubleType}
       val dec2 = DecimalType(18, 2)
       val scratch = freshScratchDir("x26_bucketed")
@@ -204,7 +204,7 @@ object ScaleDemos {
              count(*) AS n_events
       FROM c GROUP BY z, xb, yb
       ORDER BY z ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val cells = t(s, dir, "events").select(
         pmod(col("user_id"), lit(64L)).as("xb"),
         pmod(datediff(col("ts").cast("date"),
@@ -232,7 +232,7 @@ object ScaleDemos {
       FROM documents
       WHERE n_chars >= 300
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       val scratch = freshScratchDir("x38_orc")
@@ -275,7 +275,7 @@ object ScaleDemos {
       FROM h4
       GROUP BY 1
       ORDER BY shard ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val deduped = TextDedup.exactDedup(
         TextDedup.withFingerprint(t(s, dir, "documents"), "text"),
         keys = Seq("fingerprint"), tiebreak = col("doc_id"))
@@ -307,7 +307,7 @@ object ScaleDemos {
              CASE WHEN doc_id % 2 = 1 THEN n_chars END AS n_chars
       FROM documents
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val docs = t(s, dir, "documents")
       val scratch = freshScratchDir("x44_evolve")
       docs.filter(pmod(col("doc_id"), lit(2)) === 0)

@@ -41,7 +41,7 @@ object SimilarityDemos {
                                  ORDER BY cosine DESC, c.vec_id) <= 10
       ORDER BY query_id ASC NULLS LAST, cosine DESC NULLS LAST,
                vec_id ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.topKCosine(
+    (s, dir, _) => VectorSearch.topKCosine(
         emb(s, dir), emb(s, dir).filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10)
       .orderBy(col("query_id").asc_nulls_last, col("cosine").desc_nulls_last,
@@ -74,7 +74,7 @@ object SimilarityDemos {
                                  ORDER BY cosine DESC, c.vec_id) <= 10
       ORDER BY query_id ASC NULLS LAST, cosine DESC NULLS LAST,
                vec_id ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.bucketedAnn(
+    (s, dir, _) => VectorSearch.bucketedAnn(
         emb(s, dir), emb(s, dir).filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10)
       .orderBy(col("query_id").asc_nulls_last, col("cosine").desc_nulls_last,
@@ -137,7 +137,7 @@ object SimilarityDemos {
                                  ORDER BY cosine DESC, c.vec_id) <= 10
       ORDER BY query_id ASC NULLS LAST, cosine DESC NULLS LAST,
                vec_id ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.ivfSearch(
+    (s, dir, _) => VectorSearch.ivfSearch(
         emb(s, dir), emb(s, dir).filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, kCells = 4, iters = 2, nProbe = 2)
       .orderBy(col("query_id").asc_nulls_last, col("cosine").desc_nulls_last,
@@ -174,7 +174,7 @@ object SimilarityDemos {
                ELSE 0 END AS q_int8
       FROM e JOIN m USING (vec_id)
       ORDER BY vec_id ASC NULLS LAST, dim ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.normalizeQuantize(emb(s, dir), "vec_id", "embedding")
+    (s, dir, _) => VectorSearch.normalizeQuantize(emb(s, dir), "vec_id", "embedding")
       .orderBy(col("vec_id").asc_nulls_last, col("dim").asc_nulls_last))
 
   // -------------------------------------------------------------------
@@ -211,7 +211,7 @@ object SimilarityDemos {
              CASE WHEN d.dup_of IS NULL THEN 1 ELSE 0 END AS kept, d.dup_of
       FROM asg a LEFT JOIN dup d USING (vec_id)
       ORDER BY vec_id ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.semDeDup(emb(s, dir), "vec_id", "embedding",
+    (s, dir, _) => VectorSearch.semDeDup(emb(s, dir), "vec_id", "embedding",
         kCells = 4, iters = 2, minCosine = 0.35)
       .orderBy(col("vec_id").asc_nulls_last))
 
@@ -258,7 +258,7 @@ object SimilarityDemos {
              CASE WHEN d.dup_of IS NULL THEN 1 ELSE 0 END AS kept, d.dup_of
       FROM asg a LEFT JOIN dup d USING (vec_id)
       ORDER BY vec_id ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.semDeDupAuto(emb(s, dir), "vec_id", "embedding",
+    (s, dir, _) => VectorSearch.semDeDupAuto(emb(s, dir), "vec_id", "embedding",
         iters = 2, minCosine = 0.35, targetCellSize = autoCellSize)
       .orderBy(col("vec_id").asc_nulls_last))
 
@@ -287,7 +287,7 @@ object SimilarityDemos {
                         THEN 1 ELSE -1 END))) AS bigint) AS proj
       FROM p
       ORDER BY vec_id ASC NULLS LAST, dim ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.signedRandomProjection(emb(s, dir), "vec_id",
+    (s, dir, _) => VectorSearch.signedRandomProjection(emb(s, dir), "vec_id",
         "embedding", outDims = srpDims)
       .orderBy(col("vec_id").asc_nulls_last, col("dim").asc_nulls_last))
 
@@ -315,7 +315,7 @@ object SimilarityDemos {
                                  ORDER BY cosine DESC, c.vec_id) <= 3
       ORDER BY query_id ASC NULLS LAST, cosine DESC NULLS LAST,
                vec_id ASC NULLS LAST"""),
-    (s, dir) => VectorSearch.hardNegatives(
+    (s, dir, _) => VectorSearch.hardNegatives(
         emb(s, dir), emb(s, dir).filter(col("vec_id") < 5),
         "vec_id", "embedding", "label", k = 3)
       .orderBy(col("query_id").asc_nulls_last, col("cosine").desc_nulls_last,
@@ -365,7 +365,7 @@ object SimilarityDemos {
              doc_id, rrf_score, rank_0, rank_1
       FROM top
       ORDER BY fused_rank ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val docs = Tables.table(s, dir, "documents")
       val lex = graft.operators.TextAnalysis.bm25TopK(
           docs, "doc_id", "text", TextDemos.bm25Terms, k = 20)

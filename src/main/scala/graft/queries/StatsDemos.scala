@@ -38,7 +38,7 @@ object StatsDemos {
       FROM c
       GROUP BY event_type
       ORDER BY event_type ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val cents = round(col("value") * 100).cast("long")
       t(s, dir, "events")
         .select(col("event_type"), cents.as("cents"))
@@ -74,7 +74,7 @@ object StatsDemos {
       FROM c
       GROUP BY event_type
       ORDER BY event_type ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val cents = round(col("value") * 100).cast("long")
       t(s, dir, "events")
         .select(col("event_type"), cents.as("cents"))
@@ -133,7 +133,7 @@ object StatsDemos {
                AS n_estimate,
              buckets_used
       FROM exact CROSS JOIN sketch"""),
-    (s, dir) => graft.operators.Sketches.approxDistinct(
+    (s, dir, _) => graft.operators.Sketches.approxDistinct(
       t(s, dir, "lineitem"), col("l_orderkey")))
 
   // -------------------------------------------------------------------
@@ -183,7 +183,7 @@ object StatsDemos {
       LEFT JOIN exact e USING (probe_key)
       JOIN est USING (probe_key)
       ORDER BY probe_key ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val probes = s.range(0, 20).select(col("id").as("probe_key"))
       graft.operators.Sketches
         .cmFrequency(t(s, dir, "events"), col("user_id"), probes, "probe_key")
@@ -240,7 +240,7 @@ object StatsDemos {
       SELECT cr.event_type, cr.q, cr.n, cr.est_value, ex.exact_value
       FROM crossing cr JOIN ex USING (event_type, q)
       ORDER BY event_type ASC NULLS LAST, q ASC NULLS LAST"""),
-    (s, dir) => graft.operators.Sketches.histQuantiles(
+    (s, dir, _) => graft.operators.Sketches.histQuantiles(
         t(s, dir, "events"), "event_type",
         round(col("value") * 100).cast("long"),
         Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99))
@@ -288,7 +288,7 @@ object StatsDemos {
       ORDER BY flag ASC NULLS LAST"""
 
   private val x9g = Demo("x9g_correlation", Some(correlationText),
-    (s, dir) => {
+    (s, dir, _) => {
       Tables.table(s, dir, "lineitem").createOrReplaceTempView("lineitem")
       s.sql(correlationText)
     })
@@ -314,7 +314,7 @@ object StatsDemos {
       UNION ALL
       SELECT 'value', count(*), count(value), count(DISTINCT value) FROM ev
       ORDER BY col_name ASC NULLS LAST"""),
-    (s, dir) => graft.operators.Profile.profile(
+    (s, dir, _) => graft.operators.Profile.profile(
         t(s, dir, "events").select(col("user_id"), col("event_type"),
           col("value"),
           when(col("value") > 100, col("value")).as("big_value")),
@@ -345,7 +345,7 @@ object StatsDemos {
       FROM c JOIN fences USING (event_type)
       GROUP BY 1
       ORDER BY event_type ASC NULLS LAST"""),
-    (s, dir) => graft.operators.Profile.iqrOutliers(
+    (s, dir, _) => graft.operators.Profile.iqrOutliers(
         t(s, dir, "events"), "event_type",
         round(col("value") * 100).cast("long"))
       .orderBy(col("event_type").asc_nulls_last))
@@ -370,7 +370,7 @@ object StatsDemos {
       FROM c, t
       WHERE cnt * $hhK > n
       ORDER BY hh_key ASC NULLS LAST"""),
-    (s, dir) => graft.operators.Sketches.heavyHitters(
+    (s, dir, _) => graft.operators.Sketches.heavyHitters(
         t(s, dir, "documents")
           .select(explode(split(lower(col("text")), " ")).as("word"))
           .filter(col("word") =!= ""),

@@ -22,7 +22,7 @@ object TextDemos {
              length(replace(regexp_replace(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]', 'x', 'g'), ' ', '')) AS bpeish_tokens
       FROM documents
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.tokenCounts(docs(s, dir), "text")
+    (s, dir, _) => TextAnalysis.tokenCounts(docs(s, dir), "text")
       .select(col("doc_id"), col("ws_tokens"), col("bpeish_tokens"))
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -46,7 +46,7 @@ object TextDemos {
                   THEN 1 ELSE 0 END AS keep
       FROM m
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.qualityMetrics(docs(s, dir), "text")
+    (s, dir, _) => TextAnalysis.qualityMetrics(docs(s, dir), "text")
       .select(col("doc_id"), col("n_chars_m"), col("n_tokens"),
         col("punct_ratio"), col("stopword_ratio"), col("mean_word_len"),
         col("keep"))
@@ -75,7 +75,7 @@ object TextDemos {
                   ELSE 'und' END AS lang_guess
       FROM sc
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.langGuess(docs(s, dir), "text")
+    (s, dir, _) => TextAnalysis.langGuess(docs(s, dir), "text")
       .select(col("doc_id"), col("lang"), col("lang_guess"))
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -86,7 +86,7 @@ object TextDemos {
       GROUP BY 1
       ORDER BY freq DESC NULLS LAST, word ASC NULLS LAST
       LIMIT 50"""),
-    (s, dir) => TextAnalysis.wordTopK(docs(s, dir), "text", 50))
+    (s, dir, _) => TextAnalysis.wordTopK(docs(s, dir), "text", 50))
 
   // X5e: PII masking. The harness corpus contains no PII, so the demo
   // derives a text with deterministic doc_id-based email/IP/number tokens
@@ -115,7 +115,7 @@ object TextDemos {
              regexp_replace(after_ip, '${TextAnalysis.NumberPattern}', '<num>', 'g') AS masked
       FROM m2
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, _) => {
       val withPii = docs(s, dir).select(col("doc_id"),
         concat(col("text"),
           lit(" contact user"), col("doc_id").cast("string"),
@@ -143,7 +143,7 @@ object TextDemos {
              array_to_string(toks[start + 1 : start + 64], ' ') AS chunk_text
       FROM st
       ORDER BY doc_id ASC NULLS LAST, chunk_idx ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.chunkByTokens(docs(s, dir), "doc_id", "text",
+    (s, dir, _) => TextAnalysis.chunkByTokens(docs(s, dir), "doc_id", "text",
         chunkSize = 64, overlap = 16)
       .orderBy(col("doc_id").asc_nulls_last, col("chunk_idx").asc_nulls_last))
 
@@ -167,7 +167,8 @@ object TextDemos {
       FROM c
       GROUP BY 1
       ORDER BY bin_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.packSequences(docs(s, dir), "doc_id", "text", 2048)
+    (s, dir, cuts) => TextAnalysis.packSequences(docs(s, dir), "doc_id", "text",
+        2048, cuts)
       .orderBy(col("bin_id").asc_nulls_last))
 
   // -------------------------------------------------------------------
@@ -197,7 +198,7 @@ object TextDemos {
         FROM scored)
       SELECT doc_id, rank, term, tf, df FROM ranked WHERE rank <= 5
       ORDER BY doc_id ASC NULLS LAST, rank ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.tfIdf(docs(s, dir), "doc_id", "text", 5)
+    (s, dir, _) => TextAnalysis.tfIdf(docs(s, dir), "doc_id", "text", 5)
       .drop("score")
       .orderBy(col("doc_id").asc_nulls_last, col("rank").asc_nulls_last))
 
@@ -225,7 +226,7 @@ object TextDemos {
              cast(n_common AS double) / cast(n_bigrams AS double) AS coverage
       FROM per
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.bigramCoverage(docs(s, dir), "doc_id", "text",
+    (s, dir, _) => TextAnalysis.bigramCoverage(docs(s, dir), "doc_id", "text",
         minDf = 3)
       .orderBy(col("doc_id").asc_nulls_last))
 
@@ -279,7 +280,7 @@ object TextDemos {
                   THEN 1 ELSE 0 END AS keep_repetition
       FROM m
       ORDER BY doc_id ASC NULLS LAST, top_bigram ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.repetitionMetrics(docs(s, dir), "doc_id", "text")
+    (s, dir, _) => TextAnalysis.repetitionMetrics(docs(s, dir), "doc_id", "text")
       .orderBy(col("doc_id").asc_nulls_last, col("top_bigram").asc_nulls_last))
 
   // X5k: unigram-LM document scoring (TextAnalysis.unigramLmScore) —
@@ -303,7 +304,7 @@ object TextDemos {
              cast(sum_tf AS double) / n_toks / total_tokens AS mean_tok_p
       FROM d, tot
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.unigramLmScore(docs(s, dir), "doc_id", "text")
+    (s, dir, _) => TextAnalysis.unigramLmScore(docs(s, dir), "doc_id", "text")
       .orderBy(col("doc_id").asc_nulls_last))
 
   // X5l: CCNet-style head/middle/tail terciles
@@ -331,7 +332,7 @@ object TextDemos {
                   ELSE 'tail' END AS bucket
       FROM s, b
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.perplexityBuckets(docs(s, dir), "doc_id", "text")
+    (s, dir, _) => TextAnalysis.perplexityBuckets(docs(s, dir), "doc_id", "text")
       .orderBy(col("doc_id").asc_nulls_last))
 
   // X33: BM25 TOP-K RETRIEVAL (TextAnalysis.bm25TopK) — Okapi BM25
@@ -380,7 +381,7 @@ object TextDemos {
              doc_id, score_scaled, n_terms
       FROM top
       ORDER BY rank ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.bm25TopK(docs(s, dir), "doc_id", "text",
+    (s, dir, _) => TextAnalysis.bm25TopK(docs(s, dir), "doc_id", "text",
         bm25Terms, k = 20)
       .orderBy(col("rank").asc_nulls_last))
 
@@ -426,7 +427,7 @@ object TextDemos {
       WHERE cnt_a + cnt_b >= 5
       ORDER BY contrib_q6 DESC, word ASC
       LIMIT 50"""),
-    (s, dir) => TextAnalysis.chisqDrift(docs(s, dir), "text",
+    (s, dir, _) => TextAnalysis.chisqDrift(docs(s, dir), "text",
         inA = col("lang") === "en", minCount = 5, topK = 50)
       .orderBy(col("contrib_q6").desc, col("word").asc))
 
@@ -460,7 +461,7 @@ object TextDemos {
       FROM bg JOIN c2 USING (bg) JOIN c1 USING (w1)
       GROUP BY doc_id
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.bigramLmScore(docs(s, dir), "doc_id", "text")
+    (s, dir, _) => TextAnalysis.bigramLmScore(docs(s, dir), "doc_id", "text")
       .orderBy(col("doc_id").asc_nulls_last))
 
   // -------------------------------------------------------------------
@@ -486,8 +487,8 @@ object TextDemos {
       FROM r, t
       WHERE 1000000 * (cum - cnt) < 950000 * total
       ORDER BY rank ASC NULLS LAST"""),
-    (s, dir) => TextAnalysis.vocabCoverage(docs(s, dir), "text",
-        coveragePpm = 950000L)
+    (s, dir, cuts) => TextAnalysis.vocabCoverage(docs(s, dir), "text",
+        coveragePpm = 950000L, cuts)
       .orderBy(col("rank").asc_nulls_last))
 
   // -------------------------------------------------------------------
@@ -539,7 +540,7 @@ object TextDemos {
         $union)
       ORDER BY merge_rank ASC NULLS LAST"""
   },
-    (s, dir) => TextAnalysis.bpeMerges(docs(s, dir), "text",
+    (s, dir, _) => TextAnalysis.bpeMerges(docs(s, dir), "text",
         numMerges = bpeRounds)
       .orderBy(col("merge_rank").asc_nulls_last))
 
@@ -582,7 +583,7 @@ object TextDemos {
       GROUP BY doc_id
       ORDER BY doc_id ASC NULLS LAST"""
   },
-    (s, dir) => {
+    (s, dir, _) => {
       val d = docs(s, dir)
       val merges = TextAnalysis.bpeMerges(d, "text", numMerges = bpeRounds)
         .collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -655,7 +656,7 @@ object TextDemos {
       FROM f, w$pRounds w
       ORDER BY doc_id ASC NULLS LAST"""
   },
-    (s, dir) => {
+    (s, dir, _) => {
       val feats = TextAnalysis.qualityMetrics(docs(s, dir), "text")
         .withColumn("n_digits", length(col("text"))
           - length(regexp_replace(col("text"), "[0-9]", "")))
@@ -699,9 +700,9 @@ object TextDemos {
       FROM dw LEFT JOIN v ON dw.word = v.word
       GROUP BY doc_id
       ORDER BY doc_id ASC NULLS LAST"""),
-    (s, dir) => {
+    (s, dir, cuts) => {
       val d = docs(s, dir)
-      val vocab = TextAnalysis.vocabCoverage(d, "text", coveragePpm = 950000L)
+      val vocab = TextAnalysis.vocabCoverage(d, "text", 950000L, cuts)
       TextAnalysis.oovRate(d, "doc_id", "text", vocab)
         .orderBy(col("doc_id").asc_nulls_last)
     })

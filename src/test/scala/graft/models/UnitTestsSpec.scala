@@ -1,6 +1,6 @@
 package graft.models
 
-import graft.SparkSpec
+import graft.{Checkpoints, SparkSpec}
 
 /** dbt 1.8 unit tests: YAML parse (SchemaConfig.unitTests) and the
   * fixture-driven runner (UnitTests.run) — pass, fail-with-diff, input
@@ -8,6 +8,11 @@ import graft.SparkSpec
   * literal-inferred).
   */
 class UnitTestsSpec extends SparkSpec {
+
+  // every diff UnitTests.run returns is cut here; released after the suite
+  private val cuts = new Checkpoints.Scope
+
+  override def afterAll(): Unit = try cuts.close() finally super.afterAll()
 
   private val models = Seq(
     SqlDag.SqlModel("stg_loans",
@@ -71,7 +76,7 @@ unit_tests:
   test("runner: a failing expectation returns the tagged symmetric diff") {
     val bad = SchemaConfig.unitTests(yaml.replace(
       "- {grade: B, n: 1, total: 1.0}", "- {grade: B, n: 2, total: 9.0}"))
-    val diff = UnitTests.run(spark, bad.head, models)
+    val diff = UnitTests.run(spark, bad.head, models, cuts)
     val rows = diff.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSet
     assert(rows === Set(
@@ -83,16 +88,16 @@ unit_tests:
     val ts = SchemaConfig.unitTests(yaml)
     // a model input with no given fixture: refuse (dbt's isolation rule)
     assert(intercept[IllegalArgumentException] {
-      UnitTests.run(spark, ts.head.copy(given = Nil), models)
+      UnitTests.run(spark, ts.head.copy(given = Nil), models, cuts)
     }.getMessage.contains("no `given` fixture: graded"))
     // a given input the model never reads: a typo must not no-op
     assert(intercept[IllegalArgumentException] {
       UnitTests.run(spark, ts.head.copy(given =
         ts.head.given :+ ("phantom" -> SchemaConfig.Fixture.Rows(
-          Seq(Map[String, Any]("x" -> 1L))))), models)
+          Seq(Map[String, Any]("x" -> 1L))))), models, cuts)
     }.getMessage.contains("never reads: phantom"))
     assert(intercept[IllegalArgumentException] {
-      UnitTests.run(spark, ts.head.copy(model = "nope"), models)
+      UnitTests.run(spark, ts.head.copy(model = "nope"), models, cuts)
     }.getMessage.contains("unknown model 'nope'"))
     // fixtures register under mangled names and are dropped afterwards
     assert(!spark.catalog.tableExists("graded"))
@@ -116,14 +121,14 @@ unit_tests:
         Seq(Map[String, Any]("loan_id" -> 7L, "loaded_on" -> "2024-02-28")))),
       expect = SchemaConfig.Fixture.Rows(Seq(Map[String, Any]("loan_id" -> 7L,
         "next_day" -> "2024-02-29", "note" -> null))))
-    assert(UnitTests.run(spark, t, m,
+    assert(UnitTests.run(spark, t, m, cuts,
       inputFrames = Map("raw_loans" -> real)).count() === 0L)
     // without the template, a date-string literal stays a string and the
     // all-NULL column cannot be typed — fail fast with the remedy named
     assert(intercept[IllegalArgumentException] {
       UnitTests.run(spark, t.copy(given = Seq("raw_loans" ->
         SchemaConfig.Fixture.Rows(Seq(
-          Map[String, Any]("loan_id" -> 7L, "loaded_on" -> null))))), m)
+          Map[String, Any]("loan_id" -> 7L, "loaded_on" -> null))))), m, cuts)
     }.getMessage.contains("inputFrames"))
   }
 
@@ -134,11 +139,11 @@ unit_tests:
       given = Seq("vals" -> SchemaConfig.Fixture.Rows(Seq(
         Map[String, Any]("v" -> 1L), Map[String, Any]("v" -> 2.5)))),
       expect = SchemaConfig.Fixture.Rows(Seq(Map[String, Any]("s" -> 3.5))))
-    assert(UnitTests.run(spark, widened, m).count() === 0L)
+    assert(UnitTests.run(spark, widened, m, cuts).count() === 0L)
     assert(intercept[IllegalArgumentException] {
       UnitTests.run(spark, widened.copy(given = Seq("vals" ->
         SchemaConfig.Fixture.Rows(Seq(
-          Map[String, Any]("v" -> 1L), Map[String, Any]("v" -> "x"))))), m)
+          Map[String, Any]("v" -> 1L), Map[String, Any]("v" -> "x"))))), m, cuts)
     }.getMessage.contains("mixed literal types"))
   }
 
@@ -184,12 +189,12 @@ unit_tests:
           "note" -> null),
         Map[String, Any]("loan_id" -> 8L, "next_day" -> null,
           "note" -> null))))
-    assert(UnitTests.run(spark, t, m,
+    assert(UnitTests.run(spark, t, m, cuts,
       inputFrames = Map("raw_loans" -> real)).count() === 0L)
     // a CSV column the relation lacks fails fast like a dict key would
     assert(intercept[IllegalArgumentException] {
       UnitTests.run(spark, t.copy(given = Seq("raw_loans" ->
-        SchemaConfig.Fixture.Csv("loan_id,phantom\n7,x"))), m,
+        SchemaConfig.Fixture.Csv("loan_id,phantom\n7,x"))), m, cuts,
         inputFrames = Map("raw_loans" -> real))
     }.getMessage.contains("'phantom' does not exist"))
     // a quoted field spanning lines cannot survive line-per-record
@@ -200,7 +205,7 @@ unit_tests:
       "loan_id,note\n7,\"unterminated"))
       assert(intercept[IllegalArgumentException] {
         UnitTests.run(spark, t.copy(given = Seq("raw_loans" ->
-          SchemaConfig.Fixture.Csv(broken))), m,
+          SchemaConfig.Fixture.Csv(broken))), m, cuts,
           inputFrames = Map("raw_loans" -> real))
       }.getMessage.contains("format: sql"))
   }
@@ -218,7 +223,7 @@ unit_tests:
       given = Seq("vectors" -> SchemaConfig.Fixture.Sql(
         "select 7 as doc_id, array(3.0, 4.0) as vec")),
       expect = SchemaConfig.Fixture.Sql("select 7 as doc_id, 25.0 as sq"))
-    assert(UnitTests.run(spark, t, m,
+    assert(UnitTests.run(spark, t, m, cuts,
       inputFrames = Map("vectors" -> real)).count() === 0L)
     // same fixture as dict: the non-atomic template column must fail
     // fast (a string cast to array yields NULL SILENTLY — r12 advice),
@@ -226,7 +231,7 @@ unit_tests:
     val asDict = t.copy(given = Seq("vectors" -> SchemaConfig.Fixture.Rows(
       Seq(Map[String, Any]("doc_id" -> 7L, "vec" -> "[3.0, 4.0]")))))
     assert(intercept[IllegalArgumentException] {
-      UnitTests.run(spark, asDict, m, inputFrames = Map("vectors" -> real))
+      UnitTests.run(spark, asDict, m, cuts, inputFrames = Map("vectors" -> real))
     }.getMessage.contains("non-atomic type"))
     // omitting the complex column stays legal: intentional typed NULL
     val omitted = t.copy(
@@ -234,7 +239,7 @@ unit_tests:
         Seq(Map[String, Any]("doc_id" -> 7L)))),
       expect = SchemaConfig.Fixture.Sql(
         "select 7 as doc_id, cast(null as double) as sq"))
-    assert(UnitTests.run(spark, omitted, m,
+    assert(UnitTests.run(spark, omitted, m, cuts,
       inputFrames = Map("vectors" -> real)).count() === 0L)
   }
 

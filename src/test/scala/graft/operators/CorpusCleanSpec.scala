@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Checkpoints, SparkSpec}
 import graft.sources.Tables
 
 /** The materialization hook of the corpus-clean capstone: the post-dedup
@@ -14,17 +14,18 @@ class CorpusCleanSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
   private val rates = Map("en" -> 50, "de" -> 100, "fr" -> 100, "es" -> 100)
 
-  private def run(cut: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+  private def pipeline(cuts: Option[Checkpoints.Scope]) =
     CorpusClean.pipeline(
       Tables.table(spark, sfDir, "documents"),
       idCol = "doc_id", textCol = "text", stratumCol = "lang",
-      nearDupThreshold = 0.5, rates = rates, materializeCut = cut)
+      nearDupThreshold = 0.5, rates = rates, cuts = cuts)
+
+  private def ids(cuts: Option[Checkpoints.Scope]) =
+    pipeline(cuts).select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
 
   test("localCheckpoint cut: identical survivors to the fully lazy pipeline") {
-    val lazyRows = run(identity)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val cutRows = run(_.localCheckpoint(true))
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val lazyRows = ids(None)
+    val cutRows = Checkpoints.scoped(c => ids(Some(c)))
     assert(cutRows === lazyRows)
     assert(cutRows.nonEmpty)
   }
@@ -38,12 +39,13 @@ class CorpusCleanSpec extends SparkSpec {
     // cap passed by hand
     val docs = Tables.table(spark, sfDir, "documents")
     def survivors(maxBucket: Option[Int], floor: Option[Double]) =
-      CorpusClean.pipeline(docs,
-          idCol = "doc_id", textCol = "text", stratumCol = "lang",
-          nearDupThreshold = 0.5, rates = rates,
-          materializeCut = _.localCheckpoint(true),
-          lshMaxBucket = maxBucket, lshRecallFloor = floor)
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      Checkpoints.scoped { cuts =>
+        CorpusClean.pipeline(docs,
+            idCol = "doc_id", textCol = "text", stratumCol = "lang",
+            nearDupThreshold = 0.5, rates = rates, cuts = Some(cuts),
+            lshMaxBucket = maxBucket, lshRecallFloor = floor)
+          .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      }
     // replicate the pipeline's own pre-passes to get the implied cap
     val quality = TextAnalysis.qualityMetrics(docs, "text")
       .filter(col("keep") === 1).select(docs.columns.toIndexedSeq.map(col): _*)
@@ -71,11 +73,12 @@ class CorpusCleanSpec extends SparkSpec {
   test("localCheckpoint cut: upstream subtree materializes once (no source scans downstream)") {
     // without the cut the parquet source is scanned by every LSH re-read
     // of the dedup output: >= 3 scans in the optimized plan
-    val lazyPlan = run(identity).queryExecution.optimizedPlan.toString
+    val lazyPlan = pipeline(None).queryExecution.optimizedPlan.toString
     assert("Relation.*parquet".r.findAllIn(lazyPlan).size >= 3, lazyPlan.take(2000))
     // with the cut, everything downstream reads the checkpointed RDD —
     // zero parquet scans remain in the final plan
-    val cutPlan = run(_.localCheckpoint(true)).queryExecution.optimizedPlan.toString
+    val cutPlan = Checkpoints.scoped(c =>
+      pipeline(Some(c)).queryExecution.optimizedPlan.toString)
     assert("Relation.*parquet".r.findAllIn(cutPlan).isEmpty, cutPlan.take(2000))
     assert(cutPlan.contains("LogicalRDD"), cutPlan.take(2000))
   }

@@ -36,13 +36,15 @@ class EdgeCaseSpec extends SparkSpec {
     // empty input: packing yields zero bins, no driver-side error from
     // the empty partition-offset map
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(TextAnalysis.packSequences(empty, "doc_id", "text", 100).count() === 0)
+    val cuts = new graft.Checkpoints.Scope
+    assert(TextAnalysis.packSequences(empty, "doc_id", "text", 100, cuts).count() === 0)
     // NULL text drops out of chunking entirely (documented contract) and
     // lands in the NULL packing bin without poisoning the running offset
     val chunks = TextAnalysis.chunkByTokens(df, "doc_id", "text", 4, 1)
     assert(chunks.select("doc_id").distinct().collect().map(_.getLong(0)).toSeq === Seq(2L))
-    val bins = TextAnalysis.packSequences(df, "doc_id", "text", 100)
+    val bins = try TextAnalysis.packSequences(df, "doc_id", "text", 100, cuts)
       .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0)) -> r.getLong(1)).toMap
+    finally cuts.close()
     assert(bins === Map(-1L -> 1L, 0L -> 1L)) // NULL bin + the real doc's bin
   }
 

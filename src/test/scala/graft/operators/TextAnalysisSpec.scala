@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Checkpoints, SparkSpec}
 
 /** Edge cases of the X5e/X5f operators not reachable through the oracle
   * demos (which run over the harness corpus): masking order, overlap
@@ -68,9 +68,11 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = scala.util.Random.shuffle((0 until 40).toList)
       .map(i => (i.toLong, (1 to i + 1).map(_ => "w").mkString(" ")))
       .toDF("doc_id", "text").repartition(7)
-    val packed = TextAnalysis.packSequences(docs, "doc_id", "text", 25)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sortBy(_._1)
+    val packed = Checkpoints.scoped { cuts =>
+      TextAnalysis.packSequences(docs, "doc_id", "text", 25, cuts)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).sortBy(_._1)
+    }
     // conservation: every doc in exactly one bin, all tokens counted
     assert(packed.map(_._2).sum === 40L)
     assert(packed.map(_._3).sum === (1 to 40).map(_.toLong).sum)
@@ -283,7 +285,8 @@ class TextAnalysisSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq((1L, "a a a b b c")).toDF("doc_id", "text")
-    val out = TextAnalysis.vocabCoverage(df, "text", coveragePpm = 800000L)
+    val cuts = new Checkpoints.Scope
+    val out = TextAnalysis.vocabCoverage(df, "text", coveragePpm = 800000L, cuts)
       .orderBy("rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toList
@@ -295,11 +298,12 @@ class TextAnalysisSpec extends SparkSpec {
     val vocab = ('a' to 'j').map(_.toString)
     val docs = (1L to 10L).map(id =>
       (id, Seq.fill(30)(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
-    val got = TextAnalysis.vocabCoverage(docs.toDF("doc_id", "text"),
-        "text", coveragePpm = 900000L)
+    val got = try TextAnalysis.vocabCoverage(docs.toDF("doc_id", "text"),
+        "text", coveragePpm = 900000L, cuts)
       .orderBy("rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toList
+    finally cuts.close()
     val counts = docs.flatMap(_._2.split(" ")).groupBy(identity)
       .map { case (w, a) => (w, a.size.toLong) }.toSeq
       .sortBy { case (w, c) => (-c, w) }

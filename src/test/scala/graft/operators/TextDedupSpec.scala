@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Checkpoints, SparkSpec}
+import graft.Checkpoints.scoped
 import graft.sources.Tables
 
 /** Library-only paths of the dedup API not covered by the oracle demos:
@@ -16,9 +17,9 @@ class TextDedupSpec extends SparkSpec {
     val docs = Tables.table(spark, sfDir, "documents")
     val lazyPairs = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5)
       .collect().map(_.mkString("|")).toSet
-    val scalePath = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        materializeCandidates = Some(_.localCheckpoint(true)))
-      .collect().map(_.mkString("|")).toSet
+    val scalePath = scoped(cuts =>
+      TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5, cuts = Some(cuts))
+        .collect().map(_.mkString("|")).toSet)
     assert(scalePath === lazyPairs)
     assert(lazyPairs.nonEmpty)
   }
@@ -31,35 +32,22 @@ class TextDedupSpec extends SparkSpec {
     // the x64 shape: ONE banding derivation, cut, then the capped
     // candidate+verify tail per caller — must be pair-for-pair the
     // from-text path (lazy AND materialized-candidates variants)
-    val bands = TextDedup.lshIndex(docs, "doc_id", "text").localCheckpoint(true)
-    val fromIndex = TextDedup.minhashLshPairsFromIndex(bands, docs,
-        "doc_id", "text", 0.5, maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    assert(fromIndex === fromText)
-    val fromIndexMat = TextDedup.minhashLshPairsFromIndex(bands, docs,
-        "doc_id", "text", 0.5,
-        materializeCandidates = Some(_.localCheckpoint(true)),
-        maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    assert(fromIndexMat === fromText)
+    scoped { cuts =>
+      val bands = cuts.cut(TextDedup.lshIndex(docs, "doc_id", "text"))
+      val fromIndex = TextDedup.minhashLshPairsFromIndex(bands, docs,
+          "doc_id", "text", 0.5, maxBucket = Some(64))
+        .collect().map(_.mkString("|")).toSet
+      assert(fromIndex === fromText)
+      val fromIndexMat = TextDedup.minhashLshPairsFromIndex(bands, docs,
+          "doc_id", "text", 0.5, cuts = Some(cuts), maxBucket = Some(64))
+        .collect().map(_.mkString("|")).toSet
+      assert(fromIndexMat === fromText)
+    }
     assert(fromText.nonEmpty)
     // a frame that isn't lshIndex-shaped refuses, it doesn't misjoin
     intercept[IllegalArgumentException] {
       TextDedup.minhashLshPairsFromIndex(docs, docs, "doc_id", "text", 0.5)
     }
-  }
-
-  test("tracked checkpoint cuts persist at MEMORY_AND_DISK_SER and release") {
-    val sc = spark.sparkContext
-    val docs = Tables.table(spark, sfDir, "documents")
-    val (cut, ids) = graft.Checkpoints.tracked(docs.select("doc_id"))
-    try {
-      assert(ids.nonEmpty)
-      ids.foreach(id => assert(sc.getPersistentRDDs(id).getStorageLevel ===
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-      assert(cut.count() === docs.count())
-    } finally graft.Checkpoints.release(sc, ids)
-    assert(ids.forall(id => !sc.getPersistentRDDs.contains(id)))
   }
 
   test("minhash LSH: stop-bucket cap wiring — generous cap ≡ uncapped, cap below pairability drops all") {
@@ -143,9 +131,10 @@ class TextDedupSpec extends SparkSpec {
     val docs = Tables.table(spark, sfDir, "documents")
     val lazyP = TextDedup.minhashEstimatePairs(docs, "doc_id", "text", 0.35)
       .collect().map(_.mkString("|")).toSet
-    val cut = TextDedup.minhashEstimatePairs(docs, "doc_id", "text", 0.35,
-        materializeSignatures = Some(_.localCheckpoint(true)))
-      .collect().map(_.mkString("|")).toSet
+    val cut = scoped(cuts =>
+      TextDedup.minhashEstimatePairs(docs, "doc_id", "text", 0.35,
+          cuts = Some(cuts))
+        .collect().map(_.mkString("|")).toSet)
     assert(cut === lazyP && lazyP.nonEmpty)
   }
 
@@ -197,13 +186,13 @@ class TextDedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val batch = docs.filter(col("doc_id") % 5 === 4)
     val corpus = docs.filter(col("doc_id") % 5 =!= 4)
-    def run(m: Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame]) =
-      TextDedup.incrementalLshPairs(batch, corpus, "doc_id", "text", 0.5, m)
+    def run(cuts: Option[Checkpoints.Scope]) =
+      TextDedup.incrementalLshPairs(batch, corpus, "doc_id", "text", 0.5, cuts)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val lazyPairs = run(None)
     assert(lazyPairs === Set((9L, 1L, 1.0), (9L, 2L, 1.0),
       (14L, 1L, 1.0), (14L, 2L, 1.0)))
-    assert(run(Some(_.localCheckpoint(true))) === lazyPairs)
+    assert(scoped(cuts => run(Some(cuts))) === lazyPairs)
   }
 
   test("lshStoreAppend: probe-after-append equals a full index rebuild (X59)") {
@@ -257,13 +246,13 @@ class TextDedupSpec extends SparkSpec {
     // construction (only paired ids appear)
     val pairs = Seq((10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (50L, 51L))
       .toDF("id_a", "id_b")
-    val got = TextDedup.dedupClusters(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val got = scoped(cuts => TextDedup.dedupClusters(pairs, cuts)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
     assert(got === Map(10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
       14L -> 10L, 50L -> 50L, 51L -> 50L))
     // an insufficient iteration cap must throw, never return partial labels
     intercept[IllegalArgumentException] {
-      TextDedup.dedupClusters(pairs, maxIters = 1)
+      scoped(cuts => TextDedup.dedupClusters(pairs, cuts, maxIters = 1))
     }
   }
 
@@ -275,14 +264,16 @@ class TextDedupSpec extends SparkSpec {
     // one checkpoint per round would show as many extra persisted RDDs
     val pairs = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val before = sc.getPersistentRDDs.keySet.toSet
-    val labels = TextDedup.dedupClusters(pairs)
+    val cuts = new Checkpoints.Scope
+    val labels = TextDedup.dedupClusters(pairs, cuts)
     val after = sc.getPersistentRDDs.keySet.toSet.diff(before)
-    // live storage after the run = the FINAL label generation only —
-    // per-round checkpoints and the edge frame were explicitly released
-    // (a localCheckpoint may span a couple of RDDs, but ~10 iterations
-    // leaking would blow well past this bound)
-    assert(after.size <= 2, s"leaked persisted RDDs: $after")
+    // live storage after the run = the FINAL label generation only, held
+    // by the caller's scope — per-round cuts and the edge frame were
+    // released by the scopes dedupClusters owns
+    assert(after.size === 1 && after === cuts.ids, s"leaked persisted RDDs: $after")
     assert(labels.count() === 12L)
+    cuts.close()
+    assert(sc.getPersistentRDDs.keySet.toSet === before)
   }
 
   test("minhash LSH plan gate: ONE signature aggregate feeds the band expansion") {
@@ -670,24 +661,6 @@ class TextDedupSpec extends SparkSpec {
       === Set(2L))
   }
 
-  test("ensureEagerCut: checkpoint-backed plans pass through untouched; lazy cuts re-cut") {
-    val s = spark
-    import s.implicits._
-    def isRddBacked(d: org.apache.spark.sql.DataFrame) =
-      d.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    val df = Seq(1, 2, 3).toDF("v")
-    val cut = df.localCheckpoint(true)
-    assert(isRddBacked(cut))
-    assert(TextDedup.ensureEagerCut(cut) eq cut)
-    // identity and cache() are NOT lineage cuts: both re-cut
-    assert(!isRddBacked(df))
-    assert(isRddBacked(TextDedup.ensureEagerCut(df)))
-    val cached = df.cache()
-    assert(isRddBacked(TextDedup.ensureEagerCut(cached)))
-    cached.unpersist()
-  }
-
   test("lshSurvivalStats: true pairs ≡ uncapped LSH; min_bn survival ≡ the capped operator at every cap") {
     val docs = Tables.table(spark, sfDir, "documents")
     val stats = TextDedup.lshSurvivalStats(docs, "doc_id", "text", 0.5)
@@ -722,10 +695,10 @@ class TextDedupSpec extends SparkSpec {
     // min_bn (computed over all bands either way)
     assert(sampled.subsetOf(exact), s"sampled ⊄ exact: ${sampled.diff(exact)}")
     assert(sampled.nonEmpty)
-    val sampledCut = TextDedup.lshSurvivalStats(docs, "doc_id", "text", 0.5,
-        discoveryBands = Some(8),
-        materialize = Some(_.localCheckpoint(true)))
-      .collect().map(_.mkString("|")).toSet
+    val sampledCut = scoped(cuts =>
+      TextDedup.lshSurvivalStats(docs, "doc_id", "text", 0.5,
+          discoveryBands = Some(8), cuts = Some(cuts))
+        .collect().map(_.mkString("|")).toSet)
     assert(sampledCut === sampled)
   }
 
@@ -786,14 +759,15 @@ class TextDedupSpec extends SparkSpec {
     assert(sampled.size < exact.size) // the sample is a real restriction
     // the at-scale face: prebuilt cut index + materialized cuts ≡ the
     // lazy path
-    val bands = TextDedup.lshIndex(docs, "doc_id", "text").localCheckpoint(true)
-    val atScale = TextDedup.lshSurvivalStatsSampled(
-        docs, "doc_id", "text", 0.5, sampleOneIn = 2,
-        prebuiltIndex = Some(bands),
-        materialize = Some(TextDedup.eagerCut))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+    val atScale = scoped { cuts =>
+      val bands = cuts.cut(TextDedup.lshIndex(docs, "doc_id", "text"))
+      TextDedup.lshSurvivalStatsSampled(
+          docs, "doc_id", "text", 0.5, sampleOneIn = 2,
+          prebuiltIndex = Some(bands), cuts = Some(cuts))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+        .toSet
+    }
     assert(atScale === sampled)
     // and recallAtCaps over the sampled frame needs NO reweighting:
     // uniform inclusion ⇒ recall = per-cap survival fraction
@@ -809,7 +783,8 @@ class TextDedupSpec extends SparkSpec {
 
   test("minhashLshPairsWithMinBucket: the min_bn filter ≡ the per-cap operator (x64's shared-chain law)") {
     val docs = Tables.table(spark, sfDir, "documents")
-    val bands = TextDedup.lshIndex(docs, "doc_id", "text").localCheckpoint(true)
+    val cuts = new Checkpoints.Scope
+    val bands = cuts.cut(TextDedup.lshIndex(docs, "doc_id", "text"))
     val withBn = TextDedup.minhashLshPairsWithMinBucket(bands, docs,
         "doc_id", "text", 0.5, maxBucket = 64)
       .collect()
@@ -828,8 +803,7 @@ class TextDedupSpec extends SparkSpec {
     }
     // scale path (materialized candidates) ≡ lazy
     val atScale = TextDedup.minhashLshPairsWithMinBucket(bands, docs,
-        "doc_id", "text", 0.5, maxBucket = 64,
-        materializeCandidates = Some(_.localCheckpoint(true)))
+        "doc_id", "text", 0.5, maxBucket = 64, cuts = Some(cuts))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSet
@@ -838,6 +812,27 @@ class TextDedupSpec extends SparkSpec {
       TextDedup.minhashLshPairsWithMinBucket(bands, docs,
         "doc_id", "text", 0.5, maxBucket = 1)
     }.getMessage.contains("maxBucket"))
+    cuts.close()
+  }
+
+  test("verify-sets cut: the materialized LSH paths leave no storage once their scope closes") {
+    val docs = Tables.table(spark, sfDir, "documents")
+    val sc = spark.sparkContext
+    // the candidate cut AND the shingle-set cut inside the verify are
+    // recorded in the caller's scope, so closing it frees both
+    def leftBehind(build: Checkpoints.Scope => org.apache.spark.sql.DataFrame) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val cuts = new Checkpoints.Scope
+      assert(build(cuts).collect().nonEmpty)
+      assert(cuts.ids.size >= 2, s"expected candidate + sets cuts, got ${cuts.ids}")
+      cuts.close()
+      sc.getPersistentRDDs.keySet.toSet -- before
+    }
+    assert(leftBehind(cuts => TextDedup.minhashLshPairs(docs, "doc_id", "text",
+      0.5, cuts = Some(cuts))).isEmpty)
+    assert(leftBehind(cuts => TextDedup.minhashLshPairsWithMinBucket(
+      TextDedup.lshIndex(docs, "doc_id", "text"), docs, "doc_id", "text", 0.5,
+      maxBucket = 64, cuts = Some(cuts))).isEmpty)
   }
 
   test("recallAtCaps: exact-face fractions, cap monotonicity, HT reweighting on a pinned frame") {
@@ -917,17 +912,14 @@ class TextDedupSpec extends SparkSpec {
     // budget rule calibrates to at sf10–sf100) and cap 8 (the cap
     // budgetForRecall(5M, 0.9995) resolves to). Cap 2 is known to lose
     // pairs here, which shows the gate can see a miss.
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    scoped { cuts =>
       val docs = Tables.table(spark, "/root/testdata/sf0.1", "documents")
       val nDocs = docs.count()
-      val bandsIdx = TextDedup.eagerCut(TextDedup.lshIndex(docs, "doc_id", "text"))
+      val bandsIdx = cuts.cut(TextDedup.lshIndex(docs, "doc_id", "text"))
       val calCap = TextDedup.calibrateMaxBucket(bandsIdx, nDocs, 32.0)
       val caps = (Seq(2, 4, 5, 8, 16, 32, 64) :+ calCap).distinct.sorted
       val stats = TextDedup.lshSurvivalStats(docs, "doc_id", "text",
-        threshold = 0.5, materialize = Some(TextDedup.eagerCut),
-        prebuiltIndex = Some(bandsIdx))
+        threshold = 0.5, cuts = Some(cuts), prebuiltIndex = Some(bandsIdx))
       val recall = TextDedup.recallAtCaps(stats, caps).collect()
         .map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(3)))).toMap
       info(s"calibrated cap $calCap, n_true ${recall(2)._1}, recall ppm " +
@@ -941,6 +933,6 @@ class TextDedupSpec extends SparkSpec {
           s"recall at $label ($cap) is ${recall(cap)._2} < 1.0 — a " +
             s"banding/capping change cost recall (n_true ${recall(cap)._1})")
       assert(recall(2)._2 < 1.0, s"cap 2 lost no pair: $recall")
-    } finally graft.Checkpoints.release(sc, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
   }
 }
