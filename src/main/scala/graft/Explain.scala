@@ -5,12 +5,14 @@ import java.nio.file.{Files, Paths}
 
 /** Plan-inspection utility: `runMain graft.Explain <query>[,<query>...]
   * [sfDir] [outDir]` prints the formatted physical plan of each named
-  * SparkEntry query — the iterate-on-the-plan loop (builder prompt:
-  * explain until it's the plan you'd want, not the first one that
-  * passed). With a single query and no outDir it also times two
-  * `count()`s (warm/cold) as a quick probe; with `outDir` each plan is
-  * written to `outDir/<query>.txt` instead (the committed before/after
-  * plans under `plans/` are these files).
+  * SparkEntry query, to check that the plan is the one intended rather
+  * than merely one that returns the right rows. With a single query and
+  * no outDir it also times two runs (cold, then warm) of
+  * [[BenchProtocol.evaluate]], the timing action Bench uses; a `count()`
+  * would time a different plan, since EliminateSorts and column pruning
+  * delete work under it. With `outDir` each plan is written to
+  * `outDir/<query>.txt` instead (the committed before/after plans under
+  * `plans/` are these files).
   *
   * Queries that drive their own actions eagerly (multi-batch demos like
   * x59/x12/x13) still produce a plan for their FINAL frame — the
@@ -46,12 +48,11 @@ object Explain {
       // DataFrame a second time here would run the writes twice and
       // time a rebuilt state
       val df = built.head
-      val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      val t1 = System.nanoTime()
-      val n2 = df.count()
-      println(f"rows=$n2 time2=${(System.nanoTime() - t1) / 1e9}%.2fs (warm)")
+      Seq("cold", "warm").foreach { label =>
+        val t0 = System.nanoTime()
+        BenchProtocol.evaluate(df)
+        println(f"time ($label)=${(System.nanoTime() - t0) / 1e9}%.2fs")
+      }
     }
     spark.stop()
   }

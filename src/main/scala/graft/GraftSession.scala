@@ -16,9 +16,13 @@ object GraftSession {
     *  - blocking shuffle cleanup, so the shuffle files that
     *    `BenchProtocol.releaseStorage`'s `System.gc()` frees are deleted
     *    before it returns rather than during the next timed query;
-    *  - WARN logging, with Spark's window logger at ERROR: it warns
-    *    "No Partition Defined" on every global window, including the
-    *    bounded ones PlanSpec's window sweep already checks;
+    *  - WARN logging, with two loggers at ERROR: Spark's window logger
+    *    warns "No Partition Defined" on every global window, including
+    *    the bounded ones PlanSpec's window sweep already checks, and
+    *    `MapPartitionsRDD` warns that a locally checkpointed RDD's
+    *    lineage is gone each time [[graft.Checkpoints.Scope]] or
+    *    `BenchProtocol.releaseStorage` unpersists a cut, which is the
+    *    intended release;
     *  - [[graft.sources.Tables.bootstrap]].
     */
   def local(cpus: Int): SparkSession = {
@@ -32,6 +36,7 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Configurator.setLevel("org.apache.spark.sql.execution.window", Level.ERROR)
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     graft.sources.Tables.bootstrap(spark)
     spark
   }

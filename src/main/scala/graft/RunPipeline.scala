@@ -32,7 +32,7 @@ object RunPipeline {
     // (spec-pinned in BuildSpec), a WARN reports and proceeds. dbt's
     // `threads`: independent models in one dependency wave build
     // concurrently (e.g. the two mart variants + loan_monthly_detail)
-    val threads = GraftSession.intEnv("SPARK_GRAFT_THREADS", 4)
+    val threads = 4
     val t0 = System.nanoTime()
     val dag = new SqlDag(spark, warehouseDir)
     val buildRes = dag.build(models, seeds, FictionBankSql.tests,

@@ -50,8 +50,8 @@ object SqlDag {
     * returned frames, but they DO participate in the state manifest
     * (dbt's `state:modified` hashes node config, hooks included — a
     * CI run must not skip a model whose audit/GRANT hook changed).
-    */
-  /** `tags` is dbt's `+tags` node config: free-form labels selectable
+    *
+    * `tags` is dbt's `+tags` node config: free-form labels selectable
     * with `tag:name` tokens (`dbt run --select tag:nightly`).
     */
   final case class SqlModel(name: String, jinjaSql: String,
@@ -303,8 +303,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * `{{ this }}` stays un-substituted — it resolves to the model name
     * deterministically, so it carries no state). Driver-side string
     * work only.
-    */
-  /** `analyses` join the manifest as compile-only nodes keyed
+    *
+    * `analyses` join the manifest as compile-only nodes keyed
     * `analysis:<name>` (namespaced — an analysis can never collide with
     * a model entry): checksum of the COMPILED text plus lineage, so an
     * edited analysis — or a macro edit its body expands — flags
@@ -650,6 +650,9 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * model, duplicate model names, and models shadowing a seed (dbt
     * errors on duplicate relation names; silently overwriting a seed
     * view would make sibling models' results depend on build order).
+    * A model whose build throws aborts the run with its own exception.
+    * The scheduling itself is [[schedule]]'s, shared with [[build]] and
+    * [[retry]]; a run is the case with no tests.
     *
     * `select`/`exclude` narrow the run to a sub-DAG with dbt's graph
     * operators (see [[selectModels]]). A selected model may ref an
@@ -660,7 +663,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     *
     * `threads` mirrors dbt's profiles.yml `threads`: models with all
     * dependencies satisfied build CONCURRENTLY (wave-parallel over the
-    * dependency frontier, a fixed pool of at most `threads`). Results
+    * dependency frontier, one fixed pool of `threads` per call). Results
     * are identical to the sequential build — each model's input
     * relations are fully materialized before its wave starts, and
     * sibling models touch disjoint relation names.
@@ -680,14 +683,14 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * the world. dbt's default precedence is kept: a relation that
     * already exists in the target environment wins over the deferred
     * one; `favorState = true` flips that (dbt's `--favor-state`).
-    */
-  /** `vars` are dbt project variables (`--vars` CLI overrides):
+    *
+    * `vars` are dbt project variables (`--vars` CLI overrides):
     * `{{ var('name') }}` / `{{ var('name', default) }}` in any model
     * text or macro body resolves against this map before control flow
     * and macro expansion; an undefined var with no default fails fast
     * ([[JinjaMacros.substituteVars]]).
-    */
-  /** `sources` declares the project's source tables (dbt's schema.yml
+    *
+    * `sources` declares the project's source tables (dbt's schema.yml
     * `sources:` + the warehouse relations they point at), keyed
     * (source_name, table_name): `{{ source('a', 'b') }}` in any model
     * text resolves to the registered frame. A model naming an
@@ -708,8 +711,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * run even for a narrowed `select` — dbt's contract (project hooks
     * wrap the RUN, not a node) — but are skipped entirely when the
     * selection resolves to zero models, matching dbt's no-op runs.
-    */
-  /** `contracts` are the project's enforced model contracts
+    *
+    * `contracts` are the project's enforced model contracts
     * ([[SchemaConfig.contracts]], dbt ≥1.5 `contract: enforced`): when a
     * contracted model materializes, its ACTUAL schema is checked against
     * the declared column set and Spark-parsed types — the build FAILS
@@ -719,8 +722,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     * consumer at read time instead of this model at build time). The
     * check is analysis-time metadata only — no data pass; a contract
     * naming an unknown model fails before anything builds.
-    */
-  /** `packages` are loaded dependency projects ([[Packages.load]] —
+    *
+    * `packages` are loaded dependency projects ([[Packages.load]] —
     * the `dbt deps` verb): their macros join the registry for EVERY
     * model (package macros are global in dbt), their models join the
     * DAG as a sub-DAG rendered with the package's own var defaults
@@ -747,16 +750,17 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       packages: Seq[Packages.Package] = Nil,
       analyses: Seq[Analysis] = Nil,
       selector: Option[SchemaConfig.SelectorDef] = None): Map[String, DataFrame] = {
-    require(threads >= 1, s"need threads >= 1, got $threads")
     require(defer.nonEmpty || !favorState,
       "favorState is only meaningful with defer (dbt: --favor-state " +
         "requires --defer)")
     val (expanded, startHooks, endHooks, expAnalyses) =
       expandJinja(models, macros, packages, vars, onRunStart, onRunEnd,
         analyses)
-    runExpanded(expanded, seeds, threads, select, exclude, state, defer,
-      favorState, exposures, sources,
-      startHooks, endHooks, contracts, expAnalyses, selector)
+    val chosen = selectModels(expanded, select, exclude, state,
+      exposures = exposures, analyses = expAnalyses, selector = selector)
+    schedule(expanded, chosen, seeds, threads, sources, startHooks, endHooks,
+      contracts, tests = Map.empty, storeDir = None, failFast = true,
+      defer = defer, favorState = favorState).relations
   }
 
   /** The Jinja preamble [[run]] and [[build]] share: validate the
@@ -810,44 +814,47 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     allMacros
   }
 
-  private def runExpanded(models: Seq[SqlModel], seeds: Map[String, DataFrame],
-      threads: Int, select: Seq[String],
-      exclude: Seq[String],
-      state: Option[String],
-      defer: Option[String],
-      favorState: Boolean,
-      exposures: Seq[SchemaConfig.Exposure] = Nil,
-      sources: Map[(String, String), DataFrame] = Map.empty,
-      onRunStart: Seq[String] = Nil,
-      onRunEnd: Seq[String] = Nil,
-      contracts: Seq[SchemaConfig.Contract] = Nil,
-      analyses: Seq[Analysis] = Nil,
-      selector: Option[SchemaConfig.SelectorDef] = None,
-      // [[build]]'s scheduling hooks — inert under the defaults, so a
-      // plain `run` is byte-for-byte the pre-build behavior:
-      //   afterNode — the node-level GATE (build: run the node's tests);
-      //     returning false stops the node's descendants, never the node,
-      //   onSkip(node, deadAncestor) — a node was skipped because an
-      //     ancestor died (build failure or failed error-severity test),
-      //   onError — when set, a node whose build THROWS is reported here
-      //     and gates its descendants instead of aborting the whole run
-      //     (dbt build continues independent subgraphs; plain run keeps
-      //     its abort-on-first-failure contract via the None default)
-      afterNode: Option[(String, Map[String, DataFrame]) => Boolean] = None,
-      onSkip: (String, String) => Unit = (_, _) => (),
-      onError: Option[(String, Throwable) => Unit] = None,
-      //   haltOnGateFailure — dbt build --fail-fast's TEST half: the
-      //     first failed gate stops scheduling (not-yet-started nodes
-      //     report skipped); build() wires it to failFast,
-      //   deadAtStart — nodes pre-marked dead before scheduling:
-      //     retry() re-runs the previous build's failed GATES against
-      //     the kept relations, and a gate that fails again must doom
-      //     its descendants exactly like a live gate failure would
-      haltOnGateFailure: Boolean = false,
-      deadAtStart: Set[String] = Set.empty)
-      : Map[String, DataFrame] = {
+  /** The one scheduler behind [[run]], [[build]] and [[retry]]. It
+    * validates the project (`models`, already Jinja-expanded), registers
+    * seeds and sources, resolves the refs that leave `chosen` (the
+    * selected models, in declaration order) and builds `chosen` in
+    * dependency waves, reporting every node in execution order.
+    *
+    *  - The test gate: after a wave builds, EVERY success registers
+    *    before any gate runs, so a test may read any relation built so
+    *    far, siblings of its own wave included. A node's gate runs its
+    *    `tests` ([[GenericTests.runDetailed]]) and reports it "success";
+    *    an error-severity failure marks the node dead. `gateFirst` are
+    *    nodes gated before the first wave: [[build]]'s seeds (an
+    *    untested seed gets no report row) and [[retry]]'s kept nodes
+    *    whose gate failed, whose relations come from `kept`.
+    *  - Skips: a node that refs a dead node is dead too and reports
+    *    "skipped", caused by its alphabetically first dead ref.
+    *  - Failures: a wave's builds run on the call's pool when
+    *    `threads > 1`, and each build's failure is captured. Under
+    *    `failFast` the first failure in wave order is rethrown as is
+    *    (sequentially, no later sibling builds), and the first failed
+    *    gate halts scheduling: every node not yet started reports
+    *    skipped. Otherwise a failed node reports "error" and is dead.
+    */
+  private def schedule(models: Seq[SqlModel], chosen: Seq[SqlModel],
+      seeds: Map[String, DataFrame], threads: Int,
+      sources: Map[(String, String), DataFrame], onRunStart: Seq[String],
+      onRunEnd: Seq[String], contracts: Seq[SchemaConfig.Contract],
+      tests: Map[String, Seq[GenericTests.DataTest]],
+      storeDir: Option[String], failFast: Boolean,
+      gateFirst: Seq[String] = Nil, kept: Map[String, DataFrame] = Map.empty,
+      defer: Option[String] = None, favorState: Boolean = false)
+      : BuildResult = {
+    import scala.util.{Failure, Success, Try}
+    require(threads >= 1, s"need threads >= 1, got $threads")
     val dupNames = models.groupBy(_.name).collect { case (n, ms) if ms.size > 1 => n }
     require(dupNames.isEmpty, s"duplicate model names: ${dupNames.mkString(", ")}")
+    val orphanTests = tests.keySet.diff(seeds.keySet ++ models.map(_.name))
+    require(orphanTests.isEmpty,
+      "tests are keyed on unknown nodes: " +
+        s"${orphanTests.toSeq.sorted.mkString(", ")} (known: models, " +
+        "package models, and seeds)")
     val contractByModel = contracts.map(c => c.model -> c).toMap
     require(contracts.size == contractByModel.size,
       s"duplicate contracts: ${contracts.map(_.model)
@@ -871,13 +878,12 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
           missingSrc.map(st => s"${st._1}.${st._2}").mkString(", ") +
           " — declare them in run(sources = Map((source, table) -> frame))")
     }
+    val pool =
+      if (threads > 1) Some(java.util.concurrent.Executors.newFixedThreadPool(threads))
+      else None
     // source relations register like seeds: inputs, never built; they are
     // dropped after the end hooks (the last consumer) or when the run throws
-    withSources(sources) {
-    val chosen =
-      if (select.isEmpty && exclude.isEmpty && selector.isEmpty) models
-      else selectModels(models, select, exclude, state,
-        exposures = exposures, analyses = analyses, selector = selector)
+    try withSources(sources) {
     val byName = models.map(m => m.name -> m).toMap
     seeds.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     // refs that leave the selection resolve to already-built relations —
@@ -967,27 +973,50 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
         s"model ${c.model} violates its enforced contract:\n  " +
           problems.mkString("\n  "))
     }
+    // one wave's builds, each failure captured: on the pool when more
+    // than one is ready, else in order, where under failFast nothing
+    // after a failure builds
+    def buildWave(ready: Seq[SqlModel]): Seq[(SqlModel, Try[DataFrame])] =
+      pool match {
+        case Some(p) if ready.size > 1 =>
+          ready.map(m => m -> p.submit(new java.util.concurrent.Callable[Try[DataFrame]] {
+            override def call(): Try[DataFrame] = Try(build(m))
+          })).map { case (m, f) => m -> f.get() }
+        case _ =>
+          ready.foldLeft(Vector.empty[(SqlModel, Try[DataFrame])]) { (done, m) =>
+            if (failFast && done.exists(_._2.isFailure)) done
+            else done :+ (m -> Try(build(m)))
+          }
+      }
     // project-level hooks wrap the RUN (dbt's on-run-start/on-run-end):
     // eager spark.sql like model hooks, skipped when nothing is selected
     def runProjectHooks(hooks: Seq[String]): Unit =
       if (chosen.nonEmpty)
         hooks.foreach(h => spark.sql(runnable(h)))
     runProjectHooks(onRunStart)
-    var built: Map[String, DataFrame] = seeds ++ externallyBuilt
+    var built: Map[String, DataFrame] = kept ++ seeds ++ externallyBuilt
     // `dead` = nodes whose DESCENDANTS must not run: a node whose build
-    // threw (continue-on-error mode) or whose gate (error-severity test)
-    // failed. The node's own relation — if it materialized — stays
-    // addressable; only scheduling downstream of it stops. dbt build's
-    // skip semantics. Seeded with retry()'s re-failed gates.
-    var dead = deadAtStart
-    // seed-level gate first: dbt build runs a seed's tests before any
-    // model that reads it (seeds here are pre-supplied frames, so only
-    // the gate runs — there is nothing to build)
-    afterNode.foreach { gate =>
-      seeds.keys.toSeq.sorted.foreach { s =>
-        if (!gate(s, built)) dead += s
+    // threw or whose gate failed. The node's own relation — if it
+    // materialized — stays addressable; only scheduling downstream of it
+    // stops. dbt build's skip semantics.
+    var dead = Set.empty[String]
+    val report = scala.collection.mutable.ListBuffer.empty[BuildNodeResult]
+    def gate(name: String): Unit = {
+      val ts = tests.getOrElse(name, Nil)
+      if (ts.nonEmpty || !seeds.contains(name)) {
+        val results = GenericTests.runDetailed(ts, built, storeDir)
+        val failed = results.filter(_.status == "error")
+        if (failed.nonEmpty) dead += name
+        report += BuildNodeResult(name, "success", results,
+          if (failed.isEmpty) None
+          else Some("test failure: " + failed.map(_.name).mkString(", ")))
       }
     }
+    def skip(m: SqlModel, cause: String): Unit = {
+      dead += m.name
+      report += BuildNodeResult(m.name, "skipped", Nil, Some(cause))
+    }
+    gateFirst.foreach(gate)
     var remaining = chosen
     while (remaining.nonEmpty) {
       // skip-cascade to fixpoint BEFORE readiness: a node whose ref is
@@ -998,11 +1027,7 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       while (cascading) {
         val (doomed, alive) =
           remaining.partition(m => refsOf(m.jinjaSql).exists(dead))
-        doomed.foreach { m =>
-          val cause = refsOf(m.jinjaSql).filter(dead).toSeq.min
-          dead += m.name
-          onSkip(m.name, cause)
-        }
+        doomed.foreach(m => skip(m, refsOf(m.jinjaSql).filter(dead).toSeq.min))
         remaining = alive
         cascading = doomed.nonEmpty
       }
@@ -1011,62 +1036,27 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
           remaining.partition(m => refsOf(m.jinjaSql).forall(built.contains))
         require(ready.nonEmpty,
           s"cyclic or unsatisfied deps among: ${blocked.map(_.name).mkString(", ")}")
-        // with onError set a node's failure is captured per-node (the
-        // Try is built INSIDE the wave so parallel siblings still run);
-        // with the None default the exception propagates exactly as
-        // before — run's abort-on-first-failure contract
-        def tryBuild(m: SqlModel): (SqlModel, scala.util.Try[DataFrame]) =
-          m -> (if (onError.isDefined) scala.util.Try(build(m))
-                else scala.util.Success(build(m)))
-        val wave: Seq[(SqlModel, scala.util.Try[DataFrame])] =
-          if (threads == 1 || ready.size == 1) ready.map(tryBuild)
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(threads, ready.size))
-            try {
-              import scala.jdk.CollectionConverters._
-              val tasks = ready.map { m =>
-                new java.util.concurrent.Callable[
-                    (SqlModel, scala.util.Try[DataFrame])] {
-                  override def call(): (SqlModel, scala.util.Try[DataFrame]) =
-                    tryBuild(m)
-                }
-              }
-              // invokeAll preserves task order and rethrows a failed
-              // model's exception at .get — same failure surface as the
-              // sequential path
-              pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
-            } finally pool.shutdown()
-          }
-        // ALL wave successes register before ANY gate runs (two passes):
-        // the gates run sequentially in wave order, and a
-        // test frame may read any relation built so far INCLUDING every
-        // sibling of its own wave — with the single-pass form a gate on
-        // wave member i could not see members i+1..n even though they
-        // had already finished building
+        val wave = buildWave(ready)
+        if (failFast) wave.collectFirst { case (_, Failure(e)) => throw e }
+        // every success registers before any gate runs, so a gate may
+        // read a later sibling of its own wave
         wave.foreach {
-          case (m, scala.util.Success(df)) => built += m.name -> df
+          case (m, Success(df)) => built += m.name -> df
           case _ => ()
         }
         wave.foreach {
-          case (m, scala.util.Success(_)) =>
-            afterNode.foreach(gate => if (!gate(m.name, built)) dead += m.name)
-          case (m, scala.util.Failure(e)) =>
+          case (m, Success(_)) => gate(m.name)
+          case (m, Failure(e)) =>
             dead += m.name
-            onError.foreach(_(m.name, e))
+            report += BuildNodeResult(m.name, "error", Nil, Some(errorCause(e)))
         }
         remaining = blocked
         // dbt build --fail-fast also halts SCHEDULING after a failed
-        // test node, not only after build exceptions: every node not
-        // yet started reports as skipped, named after
-        // the first gate failure of this wave, and no further wave runs
-        if (haltOnGateFailure) {
-          wave.collectFirst {
-            case (m, scala.util.Success(_)) if dead(m.name) => m.name
-          }.foreach { cause =>
-            remaining.foreach { m => dead += m.name; onSkip(m.name, cause) }
-            remaining = Nil
-          }
+        // test node: every node not yet started reports as skipped, named
+        // after the first gate failure of this wave
+        if (failFast) ready.map(_.name).find(dead).foreach { cause =>
+          remaining.foreach(skip(_, cause))
+          remaining = Nil
         }
       }
     }
@@ -1081,8 +1071,8 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     // after the ephemeral drop: end hooks observe the same relation
     // state dbt's would (ephemeral models never reach the warehouse)
     runProjectHooks(onRunEnd)
-    built
-    }
+    BuildResult(report.toSeq, built)
+    } finally pool.foreach(_.shutdown())
   }
 
   /** Runs `body` with `sources` registered as temp views, and drops them
@@ -1150,70 +1140,11 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       packages: Seq[Packages.Package] = Nil,
       storeDir: Option[String] = None,
       failFast: Boolean = false): SqlDag.BuildResult = {
-    val gated = new GatedBuild(models, seeds, tests, threads, macros, vars,
-      sources, onRunStart, onRunEnd, contracts, packages, storeDir, failFast)
-    val relations = gated.schedule(select, exclude)
-    SqlDag.BuildResult(gated.report.toSeq, relations)
-  }
-
-  /** One [[build]] or [[retry]] run: the Jinja expansion, a refusal of
-    * tests keyed on nodes the project does not have (known: models,
-    * package models and seeds), the node report, and the test gate the
-    * scheduler calls after every node. The gate runs a node's tests over
-    * the relations built so far and says whether its descendants may run;
-    * a node in `passed` (retry's kept successes) never re-runs its tests,
-    * and an untested seed gets no report row. A node whose build throws is
-    * reported and gates its descendants — or, under `failFast`, aborts the
-    * run — and under `failFast` a failed gate halts scheduling.
-    */
-  private final class GatedBuild(models: Seq[SqlModel],
-      seeds: Map[String, DataFrame],
-      tests: Map[String, Seq[GenericTests.DataTest]], threads: Int,
-      macros: Seq[JinjaMacros.MacroDef], vars: Map[String, String],
-      sources: Map[(String, String), DataFrame], onRunStart: Seq[String],
-      onRunEnd: Seq[String], contracts: Seq[SchemaConfig.Contract],
-      packages: Seq[Packages.Package], storeDir: Option[String],
-      failFast: Boolean, passed: Set[String] = Set.empty) {
-    require(threads >= 1, s"need threads >= 1, got $threads")
     val (expanded, startHooks, endHooks, _) =
       expandJinja(models, macros, packages, vars, onRunStart, onRunEnd, Nil)
-    val knownNodes: Set[String] = expanded.map(_.name).toSet ++ seeds.keySet
-    private val orphanTests = tests.keySet.diff(knownNodes)
-    require(orphanTests.isEmpty,
-      "tests are keyed on unknown nodes: " +
-        s"${orphanTests.toSeq.sorted.mkString(", ")} (known: models, " +
-        "package models, and seeds)")
-    val report = scala.collection.mutable.ListBuffer.empty[BuildNodeResult]
-
-    def gate(name: String, built: Map[String, DataFrame]): Boolean = {
-      val ts = tests.getOrElse(name, Nil)
-      if (passed(name) || (ts.isEmpty && seeds.contains(name))) true
-      else {
-        val results = GenericTests.runDetailed(ts, built, storeDir)
-        val failed = results.filter(_.status == "error")
-        report += BuildNodeResult(name, "success", results,
-          if (failed.isEmpty) None
-          else Some("test failure: " + failed.map(_.name).mkString(", ")))
-        failed.isEmpty
-      }
-    }
-
-    def schedule(select: Seq[String], exclude: Seq[String],
-        deadAtStart: Set[String] = Set.empty): Map[String, DataFrame] =
-      runExpanded(expanded, seeds, threads, select, exclude,
-        state = None, defer = None, favorState = false,
-        sources = sources, onRunStart = startHooks, onRunEnd = endHooks,
-        contracts = contracts,
-        afterNode = Some(gate _),
-        onSkip = (name, cause) =>
-          report += BuildNodeResult(name, "skipped", Nil, Some(cause)),
-        onError =
-          if (failFast) None
-          else Some((name, e) =>
-            report += BuildNodeResult(name, "error", Nil,
-              Some(errorCause(e)))),
-        haltOnGateFailure = failFast,
-        deadAtStart = deadAtStart)
+    schedule(expanded, selectModels(expanded, select, exclude), seeds,
+      threads, sources, startHooks, endHooks, contracts, tests, storeDir,
+      failFast, gateFirst = seeds.keys.toSeq.sorted)
   }
 
   /** `dbt retry` — resume a failed [[build]] from its failure point,
@@ -1228,12 +1159,10 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
     *     standard subset-run contract),
     *   - "success" nodes whose error-severity TEST failed re-run their
     *     GATE ONLY, against the kept relation (dbt retries the test
-    *     node, not the model): a gate that passes now unblocks the
-    *     node's skipped descendants in the same pass; one that fails
-    *     again dooms them again (pre-marked dead before scheduling),
-    *   - passed nodes don't re-run at all — their gates short-circuit
-    *     (a seed's gate is invoked unconditionally by the scheduler,
-    *     so the short-circuit is what "keep successes" means there).
+    *     node, not the model), before the first wave: a gate that
+    *     passes now unblocks the node's skipped descendants in the same
+    *     pass; one that fails again dooms them again,
+    *   - passed nodes don't re-run at all.
     * The returned report covers THIS retry's nodes only (dbt's
     * run_results after retry); `relations` is the previous run's map
     * overlaid with everything rebuilt here. Throws if `previous` has
@@ -1252,52 +1181,40 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       packages: Seq[Packages.Package] = Nil,
       storeDir: Option[String] = None,
       failFast: Boolean = false): SqlDag.BuildResult = {
-    // keep successes: a passed gate never re-runs
-    val gated = new GatedBuild(models, seeds, tests, threads, macros, vars,
-      sources, onRunStart, onRunEnd, contracts, packages, storeDir, failFast,
-      passed = previous.nodes.filter(_.gatePassed).map(_.name).toSet)
-    val unknownPrev = previous.nodes.map(_.name).filterNot(gated.knownNodes)
+    val (expanded, startHooks, endHooks, _) =
+      expandJinja(models, macros, packages, vars, onRunStart, onRunEnd, Nil)
+    val knownNodes = expanded.map(_.name).toSet ++ seeds.keySet
+    val unknownPrev = previous.nodes.map(_.name).filterNot(knownNodes)
     require(unknownPrev.isEmpty,
       "previous build report names nodes this project does not have: " +
         s"${unknownPrev.distinct.sorted.mkString(", ")} — retry must " +
         "run against the same models/seeds/packages as the build")
     val toRebuild = previous.nodes.collect {
       case n if n.status == "error" || n.status == "skipped" => n.name
-    }.distinct
-    val (gateRetrySeeds, gateRetryModels) = previous.nodes.collect {
+    }.toSet
+    // failed gates re-run on their kept relations: models first, then
+    // seeds, as a build gates them
+    val (seedGates, modelGates) = previous.nodes.collect {
       case n if n.status == "success" && !n.gatePassed => n.name
     }.distinct.partition(seeds.contains)
-    require(toRebuild.nonEmpty || gateRetryModels.nonEmpty ||
-      gateRetrySeeds.nonEmpty,
+    require(toRebuild.nonEmpty || modelGates.nonEmpty || seedGates.nonEmpty,
       "nothing to retry: the previous build fully succeeded")
-    // failed MODEL gates re-run HERE, against the kept relations — the
-    // node is not in the rebuild selection, so the scheduler would
-    // never invoke its gate; a re-failure pre-marks it dead so its
-    // descendants (in the selection) skip exactly like a live failure
-    val kept = seeds ++ previous.relations
-    val deadStart = gateRetryModels.filterNot(gated.gate(_, kept)).toSet
-    if (toRebuild.isEmpty) {
-      // gate-only retry: failed SEED gates get the same treatment (the
-      // scheduler's seed-gate loop is not running to do it for us)
-      gateRetrySeeds.foreach(gated.gate(_, kept))
-      SqlDag.BuildResult(gated.report.toSeq, previous.relations)
-    } else {
-      // EPHEMERAL ancestors of the rebuild set re-materialize too:
-      // their carrier views were dropped when the previous run ended,
-      // so a rebuilt child's ref cannot resolve externally
-      val byName = gated.expanded.map(m => m.name -> m).toMap
-      var rebuild = toRebuild.toSet
-      var frontier = rebuild
-      while (frontier.nonEmpty) {
-        frontier = frontier
-          .flatMap(n => byName.get(n).toSeq.flatMap(m => refsOf(m.jinjaSql)))
-          .filter(n => byName.get(n).exists(_.materialization == Ephemeral))
-          .diff(rebuild)
-        rebuild ++= frontier
-      }
-      val relations = gated.schedule(rebuild.toSeq.sorted, Nil, deadStart)
-      SqlDag.BuildResult(gated.report.toSeq, previous.relations ++ relations)
+    // EPHEMERAL ancestors of the rebuild set re-materialize too:
+    // their carrier views were dropped when the previous run ended,
+    // so a rebuilt child's ref cannot resolve externally
+    val byName = expanded.map(m => m.name -> m).toMap
+    var rebuild = toRebuild
+    var frontier = rebuild
+    while (frontier.nonEmpty) {
+      frontier = frontier
+        .flatMap(n => byName.get(n).toSeq.flatMap(m => refsOf(m.jinjaSql)))
+        .filter(n => byName.get(n).exists(_.materialization == Ephemeral))
+        .diff(rebuild)
+      rebuild ++= frontier
     }
+    schedule(expanded, expanded.filter(m => rebuild(m.name)), seeds, threads,
+      sources, startHooks, endHooks, contracts, tests, storeDir, failFast,
+      gateFirst = modelGates ++ seedGates, kept = previous.relations)
   }
 
   /** `dbt ls` — print the selection without running anything: the same
@@ -1317,11 +1234,9 @@ class SqlDag(spark: SparkSession, warehouseDir: String) {
       selector: Option[SchemaConfig.SelectorDef] = None): Seq[String] = {
     val (expanded, _, _, _) =
       expandJinja(models, macros, packages, vars, Nil, Nil, Nil)
-    val chosen =
-      if (select.isEmpty && exclude.isEmpty && selector.isEmpty) expanded
-      else selectModels(expanded, select, exclude, state = None,
-        exposures = exposures, analyses = analyses, selector = selector)
-    chosen.map(_.name).sorted
+    selectModels(expanded, select, exclude, state = None,
+      exposures = exposures, analyses = analyses, selector = selector)
+      .map(_.name).sorted
   }
 
   /** `dbt run-operation` — invoke one registered macro standalone,

@@ -18,6 +18,11 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // each Checkpoints.Scope release warns that the cut's lineage is
+    // gone, which is the intended release (as in GraftSession.local)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
     graft.sources.Tables.bootstrap(s)
     s
   }
@@ -47,4 +52,35 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def resource(path: String): String = SparkSpec.resource(path)
   def fictionBankSeeds: Map[String, org.apache.spark.sql.DataFrame] =
     SparkSpec.fictionBankSeeds(spark)
+
+  /** Spark jobs started on this thread while `body` runs. Jobs are
+    * tagged with a job group; after `body`, one marker job in another
+    * group is run and awaited — the listener bus delivers events in
+    * order, so once the marker's start has arrived every earlier job
+    * start has too.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-spec-${System.nanoTime()}"
+    val marker = group + "-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -122,6 +122,24 @@ class BuildSpec extends SparkSpec {
     intercept[Exception] { dag.build(broken, seeds, failFast = true) }
   }
 
+  test("a failing model throws its own exception at threads = 1 and 4 (run, failFast build)") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-build-throw").toString
+    val dag = new SqlDag(spark, wh)
+    // m_a shares wave 1 with m_d, so at threads = 4 it fails on a pool
+    // thread while a sibling builds
+    val broken = models.map(m =>
+      if (m.name == "m_a")
+        m.copy(jinjaSql = "select no_such_column from {{ ref('raw_vals') }}")
+      else m)
+    def thrown(body: => Any): Class[_] = intercept[Exception](body).getClass
+    val classes = Seq(1, 4).map(threads => threads -> Seq(
+      thrown(dag.run(broken, seeds, threads = threads)),
+      thrown(dag.build(broken, seeds, threads = threads, failFast = true))))
+    assert(classOf[org.apache.spark.sql.AnalysisException]
+      .isAssignableFrom(classes.head._2.head), classes)
+    assert(classes.flatMap(_._2).distinct.size === 1, classes)
+  }
+
   test("a gate may read LATER siblings of its own wave (all successes register before any gate)") {
     val wh = java.nio.file.Files.createTempDirectory("graft-build-wave").toString
     val dag = new SqlDag(spark, wh)
@@ -279,5 +297,70 @@ class BuildSpec extends SparkSpec {
     // the audit table exists (and is empty — zero violations)
     val audited = spark.read.parquet(s"$store/d_not_null")
     assert(audited.count() === 0L)
+  }
+
+  /** A report as comparable values: node, status, cause and each test's
+    * name, failure count and status (audit paths differ per warehouse).
+    */
+  private def summary(r: BuildResult) =
+    r.nodes.map(n => (n.name, n.status, n.cause,
+      n.tests.map(t => (t.name, t.failures, t.status))))
+
+  test("the project build: its Spark jobs and full report, the same at threads = 4; so is the broken-staging retry") {
+    val seeds = fictionBankSeeds
+    def build(threads: Int) = {
+      val wh = java.nio.file.Files.createTempDirectory("graft-build-fb").toString
+      new SqlDag(spark, wh).build(FictionBankSql.models, seeds,
+        FictionBankSql.tests, threads = threads,
+        storeDir = Some(s"$wh/test_failures"))
+    }
+    val (sequential, jobs) = jobsDuring(build(1))
+    // the build's jobs (test counts, audit writes, mart writes): a
+    // change to scheduling alone must not add or drop one
+    assert(jobs === 63)
+    val ok = (t: String) => (t, 0L, "pass")
+    assert(summary(sequential) === Seq(
+      ("stg_loans", "success", None, Seq(ok("unique_stg_loans_loan_id"),
+        ok("not_null_stg_loans_loan_id"),
+        ok("relationships_stg_loans_loan_type_id"))),
+      ("stg_loan_payments", "success", None, Seq(
+        ok("unique_stg_loan_payments_payment_id"),
+        ok("not_null_stg_loan_payments_payment_status"),
+        ok("accepted_values_payment_status"),
+        ok("relationships_payments_loan_id"))),
+      ("fct_loan_details", "success", None, Nil),
+      ("agg_monthly_loans", "success", None, Seq(
+        ("grain_agg_monthly_loans", 1L, "warn"),
+        ("unique_agg_monthly_loans_grain", 10L, "warn"))),
+      ("agg_monthly_loans_fixed", "success", None, Seq(
+        ("grain_agg_monthly_loans_fixed", 1L, "warn"),
+        ok("unique_agg_monthly_loans_fixed_grain"))),
+      ("loan_monthly_detail", "success", None, Nil)))
+    assert(summary(build(4)) === summary(sequential))
+    // RunPipeline's retry: a broken stg_loan_payments errors and skips
+    // both monthly marts; the retry reruns exactly those three
+    val broken = FictionBankSql.models.map(m =>
+      if (m.name == "stg_loan_payments")
+        m.copy(jinjaSql =
+          "select no_such_column from {{ ref('raw_loan_payments') }}")
+      else m)
+    def failedThenRetried(threads: Int) = {
+      val dag = new SqlDag(spark,
+        java.nio.file.Files.createTempDirectory("graft-build-fbr").toString)
+      val failed = dag.build(broken, seeds, threads = threads)
+      (summary(failed), summary(dag.retry(FictionBankSql.models, seeds,
+        failed, threads = threads)))
+    }
+    val (failed, retried) = failedThenRetried(1)
+    assert(failed.map(n => (n._1, n._2)) === Seq(
+      "stg_loans" -> "success", "stg_loan_payments" -> "error",
+      "agg_monthly_loans" -> "skipped", "agg_monthly_loans_fixed" -> "skipped",
+      "fct_loan_details" -> "success", "loan_monthly_detail" -> "success"))
+    assert(failed(1)._3.exists(_.contains("no_such_column")))
+    assert(failed.slice(2, 4).map(_._3) ===
+      Seq(Some("stg_loan_payments"), Some("stg_loan_payments")))
+    assert(retried === Seq("stg_loan_payments", "agg_monthly_loans",
+      "agg_monthly_loans_fixed").map(n => (n, "success", None, Nil)))
+    assert(failedThenRetried(4) === ((failed, retried)))
   }
 }

@@ -112,37 +112,6 @@ class IncrementalSpec extends SparkSpec {
     assert(all(r3) === Set(("d1", "a", 1L), ("d2", "b", 20L)))
   }
 
-  /** Spark jobs started on this thread while `body` runs. Jobs are
-    * tagged with a job group; after `body`, one marker job in another
-    * group is run and awaited — the listener bus delivers events in
-    * order, so once the marker's start has arrived every earlier job
-    * start has too.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"incr-spec-${System.nanoTime()}"
-    val marker = group + "-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def staging(path: String): java.nio.file.Path = {
     val p = java.nio.file.Paths.get(path)
     p.resolveSibling("." + p.getFileName + ".staging")
