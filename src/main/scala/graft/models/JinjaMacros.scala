@@ -20,8 +20,8 @@ package graft.models
   *     the expanded text sees refs introduced by macros
   *   - whitespace-control markers (`{%-`, `-%}`) are accepted and the
   *     body trimmed
-  *   - control flow, the dbt authoring idioms (r6 verdict: the last
-  *     SQL-authoring migration wall): `{% for v in ['a', 'b'] %}` /
+  *   - control flow, the dbt authoring idioms a migrated project
+  *     needs to compile: `{% for v in ['a', 'b'] %}` /
   *     `{% for v in range(a, b) %}` with `loop.first/last/index/
   *     index0/length`, and `{% if cond %}…{% elif %}…{% else %}…
   *     {% endif %}` where `cond` (after variable substitution) is
@@ -106,7 +106,7 @@ object JinjaMacros {
     * `scale=pow(10, 2)`), then `%}`. A `{% macro` token whose signature
     * does not parse FAILS here with the macro's name — the earlier
     * regex-group form silently skipped it, and the unexpanded call
-    * sites surfaced later as confusing SQL parse errors (r6 advice).
+    * sites surfaced later as confusing SQL parse errors.
     */
   def parse(source: String): Seq[MacroDef] = {
     val defs = MacroToken.findAllMatchIn(source).toSeq.map { tk =>
@@ -276,8 +276,8 @@ object JinjaMacros {
 
   /** Render an AST under an environment (macro params + loop vars +
     * `{% set %}` bindings). The environment THREADS left-to-right
-    * through the sequence, with Jinja's ACTUAL scoping (r8 review —
-    * if-blocks create no scope): a SetNode extends the env for its
+    * through the sequence, with Jinja's ACTUAL scoping (if-blocks
+    * create no scope): a SetNode extends the env for its
     * following siblings, a set inside a taken `{% if %}` branch ESCAPES
     * to the text after `{% endif %}` (the standard dbt
     * if/set/else/set/endif idiom), and only `{% for %}` bodies are a
@@ -295,8 +295,8 @@ object JinjaMacros {
       case Lit(t) => sb.append(if (env.isEmpty) t else substituteParams(t, env))
       case SetNode(name, valueText) =>
         val v = substIdents(valueText, env).trim
-        // literal-subset guard (r8 review: a non-literal RHS previously
-        // passed SILENTLY into SQL against the documented fail-fast):
+        // literal-subset guard (otherwise a non-literal RHS would pass
+        // SILENTLY into SQL against the documented fail-fast):
         // after substitution the RHS may be a quoted string, number,
         // boolean, list literal, or a bare substituted word — anything
         // with an unquoted '(' is a call the renderer cannot evaluate
@@ -430,7 +430,7 @@ object JinjaMacros {
     * both unquoted operands parse as numbers (Jinja: `1 == 1.0` is
     * true, `digits == 00` with digits bound to `0` is true) and
     * textually otherwise — a textual-only compare silently took the
-    * wrong branch on numeric conditions (r8 advice). Anything else
+    * wrong branch on numeric conditions. Anything else
     * fails fast — an unevaluable condition means a variable this
     * renderer does not know, and guessing would silently drop SQL.
     */
@@ -446,7 +446,7 @@ object JinjaMacros {
       // numeric comparison ONLY when both operands are UNQUOTED numeric
       // literals — Jinja compares quoted strings as strings ('1' ==
       // '1.0' is false); unquote-before-numeric silently flipped such
-      // conditions (r8 review). Mixed quoted/unquoted stays textual
+      // conditions. Mixed quoted/unquoted stays textual
       // after unquoting (historical subset semantics, documented).
       if (!quoted(ta) && !quoted(tb)) {
         (numeric(a), numeric(b)) match {
@@ -500,7 +500,7 @@ object JinjaMacros {
     * between the name and its argument list (`| replace ('a', 'b')`),
     * so the paren check skips it — without that, the valid spelling
     * parsed as a 0-arg `replace` and died with a misleading
-    * "unsupported filter" for a filter that IS supported (r9 advice).
+    * "unsupported filter" for a filter that IS supported.
     */
   private def parseFilter(chain: String): (String, Seq[String], String) = {
     var rest = chain
@@ -589,8 +589,8 @@ object JinjaMacros {
           s"var() name must be a string literal, got '${args.head}'")
         // the default must itself be a literal — a nested call (e.g.
         // var('a', var('b'))) cannot be evaluated here and previously
-        // leaked RAW into the rendered SQL via the whole-span path
-        // (r8 review); fail fast like every other non-subset construct
+        // leaked RAW into the rendered SQL via the whole-span path;
+        // fail fast like every other non-subset construct
         args.lift(1).foreach(d => require(topLevelCallFree(d),
           s"unsupported var() default '$d' — literals only"))
         val name = unquote(args.head)
@@ -607,7 +607,7 @@ object JinjaMacros {
     // strings re-quote so downstream literal evaluation sees one literal.
     // A string value carrying a quote cannot be re-quoted faithfully in
     // the subset (no escape syntax) — fail fast, never emit a malformed
-    // literal (r8 review).
+    // literal.
     def inlineLiteral(v: String): String = {
       val vt = v.trim
       if (numeric(v).isDefined || vt == "true" || vt == "false" ||
@@ -645,8 +645,8 @@ object JinjaMacros {
     // walk the text JINJA SPAN by JINJA SPAN: var() is Jinja syntax and
     // resolves only inside {{ … }} / {% … %} — plain SQL text is never
     // scanned, so a column/UDF named `var` survives and an unpaired
-    // apostrophe in a SQL comment cannot desync anything (r8 review:
-    // the previous whole-text scan tracked SQL quotes and both failed)
+    // apostrophe in a SQL comment cannot desync anything (a whole-text
+    // scan that tracked SQL quotes got both wrong)
     val out = new StringBuilder
     var i = 0
     while (i < text.length) {
@@ -670,7 +670,7 @@ object JinjaMacros {
             // RAW value (Jinja semantics), even a value with quotes;
             // an optional trailing `| filter` chain transforms the
             // value before printing ({{ var('x') | upper }} — the dbt
-            // authoring idiom, r8 verdict item 5); whitespace-control
+            // authoring idiom); whitespace-control
             // markers ({{- -}}) are span syntax, not content
             val t = inner.trim.stripPrefix("-").stripSuffix("-").trim
             if (t.startsWith("var"))
@@ -845,7 +845,7 @@ object JinjaMacros {
   /** Split a raw argument string on top-level commas (parens, brackets
     * and quotes shield nested ones — a list-literal arg `['a', 'b']`
     * is ONE argument). An all-whitespace string is a ZERO-arg call —
-    * Jinja treats `m( )` like `m()`, binding defaults (r6 advice); the
+    * Jinja treats `m( )` like `m()`, binding defaults; the
     * error stays for genuinely empty positions like `m(a,,b)`.
     */
   private def splitArgs(s: String): Seq[String] = {
@@ -900,8 +900,8 @@ object JinjaMacros {
         s"macro '${m.name}' missing required argument '$p'")))
       // quotedness is KEPT at bind time — the ONE unquote happens at
       // whole-span print, the same convention as {% set %} bindings.
-      // (r8 advice: unquoting here too made {{ m("'x'") }} print x —
-      // a double unquote — and split the two binding conventions.)
+      // (unquoting here too would make {{ m("'x'") }} print x — a
+      // double unquote — and split the two binding conventions.)
       p -> v
     }.toMap
     // body control flow renders at CALL time, under the bound params —

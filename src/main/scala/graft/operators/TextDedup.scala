@@ -38,7 +38,7 @@ object TextDedup {
   // coinciding name).
   graft.plans.FanoutLint.allowContractKeys(
     "__graft_id_a", "__graft_id_b", "__graft_new_id", "__graft_old_id",
-    "__graft_node", "__graft_band", "__graft_key")
+    "__graft_node")
 
   /** Keep-first exact dedup by key (X1): one hash shuffle on the keys;
     * `tiebreak` makes "first" deterministic (dropDuplicates' keep-first
@@ -362,14 +362,21 @@ object TextDedup {
   }
 
   /** Candidate pairs of a `(doc_id, band, key)` band frame — the ONE
-    * definition of the LSH candidate machinery ([[minhashLshPairs]] and
-    * [[estimatePairsFromSignatures]] share it, so the estimator's
-    * candidate set can never silently diverge from the exact path's):
-    * bucket size as a WINDOW over the (band, key) shuffle — one exchange
-    * carries the count, the live-bucket filter, AND both self-join sides
-    * (merge hint: broadcasting a corpus-scale band index is never right,
-    * and an AQE broadcast would also recompute the upstream signature
-    * aggregate per side — plan-gated in TextDedupSpec).
+    * LSH candidate generator ([[minhashLshPairsFromIndex]], the survival
+    * instruments and [[estimatePairsFromSignatures]] all read it, so no
+    * face's candidate set can drift from another's):
+    * `(__graft_id_a, __graft_id_b, __graft_min_bn)`, one row per pair.
+    * Bucket size `bn` is a WINDOW over the (band, key) shuffle — one
+    * exchange carries the count, the live-bucket filter (`bn ≥ 2`, and
+    * `bn ≤ maxBucket` under a cap), AND both self-join sides (merge hint:
+    * broadcasting a corpus-scale band index is never right, and an AQE
+    * broadcast would also recompute the upstream signature aggregate per
+    * side — plan-gated in TextDedupSpec).
+    *
+    * `bn` belongs to the bucket, so it is the same on both join sides,
+    * and the pair aggregate's `min(a.bn)` is the pair's smallest shared
+    * live-bucket size. A consumer that drops `__graft_min_bn` lets
+    * Catalyst prune the `min`, leaving the plain pair aggregate.
     */
   private def lshCandidatePairs(bands: DataFrame,
       maxBucket: Option[Int]): DataFrame = {
@@ -377,13 +384,15 @@ object TextDedup {
     val live = bands.withColumn("bn", bn)
       .filter(maxBucket.fold(col("bn") >= 2)(cap =>
         col("bn") >= 2 && col("bn") <= cap))
-      .select(col("doc_id"), col("band"), col("key"))
+      .select(col("doc_id"), col("band"), col("key"), col("bn"))
     live.as("a").hint("merge")
       .join(live.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("__graft_id_a"), col("b.doc_id").as("__graft_id_b"))
-      .distinct()
+      .select(col("a.doc_id").as("__graft_id_a"), col("b.doc_id").as("__graft_id_b"),
+        col("a.bn"))
+      .groupBy(col("__graft_id_a"), col("__graft_id_b"))
+      .agg(min(col("bn")).as("__graft_min_bn"))
   }
 
   /** MinHash+LSH near-dup pairs (X2b) — the 100 TB dedup path: shingle →
@@ -391,7 +400,9 @@ object TextDedup {
     * combinable) → 64 bands of r=2 → per-bucket candidate pairs → exact
     * Jaccard verification at `threshold`. At threshold t the per-pair miss
     * probability is (1−t²)^64 (≤1e-8 at t=0.5), while cluster cost is
-    * O(n·bands) shuffle instead of O(n²).
+    * O(n·bands) shuffle instead of O(n²). `(id_a, id_b, jaccard)`: this is
+    * [[minhashLshPairsFromIndex]] over this corpus's own [[lshIndex]],
+    * without its `min_bn` column.
     *
     * `cuts`: under `None` exact verification joins against shingle sets
     * of the WHOLE corpus (re-read once per pair side). `Some(scope)` cuts
@@ -424,20 +435,24 @@ object TextDedup {
       threshold: Double,
       cuts: Option[Checkpoints.Scope] = None,
       maxBucket: Option[Int] = None): DataFrame =
-    pairsFromBands(lshCandidatePairs(lshIndex(df, idCol, textCol), maxBucket),
-      df, idCol, textCol, threshold, cuts)
+    minhashLshPairsFromIndex(lshIndex(df, idCol, textCol), df, idCol,
+      textCol, threshold, cuts, maxBucket).drop("min_bn")
 
-  /** [[minhashLshPairs]] against an ALREADY-BUILT band index — the
-    * re-entry point for callers that hold the [[lshIndex]] output
-    * (typically checkpointed once and shared): calibration sweeps,
-    * multi-preset demos, and any pipeline that derives the
-    * shingle→signature→band chain once and runs the capped candidate +
-    * verify tail several times (running the full chain once per preset
-    * triples the signature work). `bands` must be [[lshIndex]]-shaped
-    * (`doc_id, band, key`); `corpus` supplies the texts for exact
-    * verification, exactly as in the from-text path — spec-pinned:
-    * `minhashLshPairsFromIndex(lshIndex(df), df, …) ≡
-    * minhashLshPairs(df, …)` pair-for-pair.
+  /** Verified near-dup pairs of an ALREADY-BUILT band index, each with
+    * its smallest shared live-bucket size: `(id_a, id_b, jaccard,
+    * min_bn)`. `bands` must be [[lshIndex]]-shaped (`doc_id, band, key`;
+    * typically cut once and shared by calibration and several presets);
+    * `corpus` supplies the texts for exact verification. `cuts` and
+    * `maxBucket` as in [[minhashLshPairs]], which is this face over the
+    * corpus's own index.
+    *
+    * `min_bn` comes with the candidates ([[lshCandidatePairs]]), so it
+    * costs no extra join. It is what lets one chain serve several caps:
+    * a pair survives a TIGHTER cap `c ≤ maxBucket` iff `min_bn ≤ c`, so
+    * a multi-preset caller (x64) runs this once at its loosest cap and
+    * reads every tighter preset as a filter — filter ≡ the per-cap
+    * operator, spec-pinned in TextDedupSpec. Uncapped, `min_bn` is the
+    * survival statistic of [[lshSurvivalStats]].
     */
   def minhashLshPairsFromIndex(bands: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double,
@@ -447,77 +462,20 @@ object TextDedup {
     require(need.subsetOf(bands.columns.toSet),
       s"band index must have columns ${need.mkString(", ")} (lshIndex " +
         s"output); got ${bands.columns.mkString(", ")}")
-    pairsFromBands(lshCandidatePairs(bands, maxBucket), corpus, idCol,
-      textCol, threshold, cuts)
-  }
-
-  /** [[minhashLshPairsFromIndex]] at cap `maxBucket`, with each verified
-    * pair's `min_bn` — its smallest shared live-bucket size — attached:
-    * `(id_a, id_b, jaccard, min_bn)`. The survival law
-    * ([[lshSurvivalStats]], spec-pinned) says a pair survives a TIGHTER
-    * cap `c ≤ maxBucket` iff `min_bn ≤ c`, so a multi-preset caller
-    * (x64: the default and high-recall budget presets differ only in
-    * their calibrated cap) runs ONE candidate + verify chain at the
-    * LOOSEST preset's cap and reads every tighter preset as a filter
-    * instead of running the full capped chain once per preset — the
-    * presets' outputs are nested by construction. Filter-equality with
-    * the per-cap operator is spec-pinned (TextDedupSpec).
-    *
-    * Cost vs one [[minhashLshPairsFromIndex]] run: the candidate
-    * aggregate keys the same (pair) groups — `min(bn)` instead of
-    * `distinct` — and the verify joins back to the candidate frame once
-    * to re-attach `min_bn` (one extra shuffle of the verified-pair set,
-    * which is ≤ the candidate set the chain already carries).
-    */
-  def minhashLshPairsWithMinBucket(bands: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, threshold: Double, maxBucket: Int,
-      cuts: Option[Checkpoints.Scope] = None): DataFrame = {
-    require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    val bnc = count(lit(1)).over(Window.partitionBy(col("band"), col("key")))
-    val live = bands.withColumn("bn", bnc)
-      .filter(col("bn") >= 2 && col("bn") <= maxBucket)
-      .select(col("doc_id"), col("band"), col("key"), col("bn"))
-    // bn is a property of the BUCKET, identical on both join sides, so
-    // min(a.bn) over the pair's shared live buckets IS min_bn
-    val candMin0 = live.as("a").hint("merge")
-      .join(live.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("__graft_id_a"),
-        col("b.doc_id").as("__graft_id_b"))
-      .agg(min(col("a.bn")).as("__graft_min_bn"))
-    val candMin = Checkpoints.cutIn(cuts)(candMin0)
-    val candIds = candMin.select(col("__graft_id_a"), col("__graft_id_b"))
-    val setsBase =
-      if (cuts.isEmpty) corpus else candidateDocs(corpus, candIds, idCol)
-    // one verified row per pair: the re-attach joins on contract keys
-    verifyCandidatePairs(candIds, setsBase, idCol, textCol, threshold, cuts)
-      .select(col("id_a").as("__graft_id_a"), col("id_b").as("__graft_id_b"),
-        col("jaccard"))
-      .join(candMin, Seq("__graft_id_a", "__graft_id_b"))
-      .select(col("__graft_id_a").as("id_a"), col("__graft_id_b").as("id_b"),
-        col("jaccard"), col("__graft_min_bn").as("min_bn"))
-  }
-
-  /** The shared candidate→verify tail of the from-text and from-index
-    * paths (ONE definition, so the index-reusing face can never drift
-    * from [[minhashLshPairs]]' semantics).
-    */
-  private def pairsFromBands(lazyCand: DataFrame, df: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      cuts: Option[Checkpoints.Scope]): DataFrame =
+    val lazyCand = lshCandidatePairs(bands, maxBucket)
     cuts match {
-      case None => verifyCandidatePairs(lazyCand, df, idCol, textCol, threshold)
+      case None => verifyCandidatePairs(lazyCand, corpus, idCol, textCol, threshold)
       case Some(scope) =>
         val c = scope.cut(lazyCand)
         // the shingle-set frame is cut too (see verifyCandidatePairs:
         // lazy sets evaluate once per pair side)
-        verifyCandidatePairs(c, candidateDocs(df, c, idCol),
+        verifyCandidatePairs(c, candidateDocs(corpus, c, idCol),
           idCol, textCol, threshold, cuts)
     }
+  }
 
   /** The rows of `df` whose id appears on either side of a
-    * `(__graft_id_a, __graft_id_b)` candidate frame — the verify base of
+    * [[lshCandidatePairs]] frame — the verify base of
     * every materialized path. No broadcast hint: the candidate-doc set is
     * O(docs with a near-dup), unbounded at corpus scale, so AQE
     * broadcasts it only when it actually fits, else a shuffled semi join.
@@ -528,10 +486,11 @@ object TextDedup {
       .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
       .distinct(), Seq(idCol), "left_semi")
 
-  /** Exact-Jaccard verification of a `(__graft_id_a, __graft_id_b)`
-    * candidate frame against shingle sets built from `setsBase` — the
-    * shared tail of every LSH verify path (ONE definition, so the paths'
-    * semantics can never drift).
+  /** Exact-Jaccard verification of a [[lshCandidatePairs]] frame against
+    * shingle sets built from `setsBase` — the shared tail of every LSH
+    * verify path (ONE definition, so the paths' semantics can never
+    * drift): `(id_a, id_b, jaccard, min_bn)`, `min_bn` passed through
+    * from the candidates.
     *
     * `Some(scope)` cuts the shingle-set frame ONCE before the two pair-
     * side joins: the sets frame is joined by `__graft_id_a` and again by
@@ -549,7 +508,8 @@ object TextDedup {
       .join(sets.select(col("doc_id").as("__graft_id_b"), col("shs").as("shs_b")),
         "__graft_id_b")
       .select(col("__graft_id_a").as("id_a"), col("__graft_id_b").as("id_b"),
-        jaccardOfSets(col("shs_a"), col("shs_b")).as("jaccard"))
+        jaccardOfSets(col("shs_a"), col("shs_b")).as("jaccard"),
+        col("__graft_min_bn").as("min_bn"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -613,15 +573,21 @@ object TextDedup {
     * curve at any cap list reads off this one frame
     * ([[recallAtCaps]]).
     *
+    * Exact discovery (`discoveryBands = None`) is
+    * [[minhashLshPairsFromIndex]] uncapped: the candidates already carry
+    * `min_bn` over all bands, so the verified pairs are the stats.
+    *
     * `discoveryBands = Some(k)`: ground-truth discovery restricted to
-    * the FIRST k bands — the scale path where the full uncapped verify
+    * the FIRST k bands — for corpora where the full uncapped verify
     * does not fit (at 2M docs the 64-band candidate set is 1.19B pairs;
     * k = 2 is ~1/32 of that). Discovered pairs are a j-BIASED sample of
     * the true-pair universe (a pair at Jaccard j collides in a given
     * band w.p. j², so inclusion probability is
-    * π(j) = 1−(1−j²)^k, rising with j); `min_bn` is still computed
-    * over ALL bands, so [[recallAtCaps]] can reweight each pair by
-    * 1/π(j) (Horvitz–Thompson) to estimate the full-universe recall.
+    * π(j) = 1−(1−j²)^k, rising with j). The candidates' own `min_bn`
+    * covers only the k bands, so it is recomputed over ALL bands
+    * ([[withFullIndexMinBn]]), and [[recallAtCaps]] can reweight each
+    * pair by 1/π(j) (Horvitz–Thompson) to estimate the full-universe
+    * recall. `Some(64)` equals the exact face row for row (spec-pinned).
     * Residual bias (conditioning on an early-band collision adds ~1
     * expected colliding bucket, nudging min_bn down) is measured, not
     * assumed: BENCHNOTES.md records k-sampled and exact side by side at
@@ -632,8 +598,9 @@ object TextDedup {
     * governed by the analytic (1−t²)^64 ≤ 1e-8 miss bound (x2b's
     * contract), not by the cap.
     *
-    * `Some(scope)` cuts the band index, the candidates, the shingle sets
-    * and the true pairs (which feed both sides of the min-bucket join).
+    * `Some(scope)` cuts the candidates and the shingle sets, and under
+    * `Some(k)` also the band index and the true pairs, which two
+    * consumers each read.
     *
     * `prebuiltIndex`: an already-derived [[lshIndex]] frame
     * (`doc_id, band, key`) to use instead of deriving one here, so a
@@ -647,80 +614,41 @@ object TextDedup {
       prebuiltIndex: Option[DataFrame] = None): DataFrame = {
     discoveryBands.foreach(k => require(k >= 1 && k <= Hashing.MinhashK / 2,
       s"discoveryBands must be in [1, ${Hashing.MinhashK / 2}], got $k"))
-    val cut = Checkpoints.cutIn(cuts) _
-    // one band-index derivation per call: the index feeds THREE
-    // consumers — discovery, the bucket-size window, and (via
-    // candidates) the verify — and a lazy chain re-runs
-    // shingles+signatures per consumer. Under `Some(scope)` the index
-    // cuts ONCE and every consumer reads the cut; the lazy default keeps
-    // the demo-scale no-storage path.
-    val bands = cut(prebuiltIndex.getOrElse(lshIndex(df, idCol, textCol)))
-    val discovery = discoveryBands.fold(bands)(k => bands.filter(col("band") < k))
-    val cand = cut(lshCandidatePairs(discovery, maxBucket = None))
-    // lazy demo path: verify against the whole corpus
-    val setsBase =
-      if (cuts.isEmpty) df else candidateDocs(df, cand, idCol)
-    val truePairs = cut(verifyCandidatePairs(cand, setsBase, idCol,
-      textCol, threshold, cuts))
-    // bucket sizes over the FULL index (the sizes the capped operator
-    // filters on), then restricted to docs that appear in a true pair —
-    // the window must see every bucket member, so filter AFTER it.
-    // The lazy window shape is deliberate: this exact-discovery
-    // instrument is priced to ≤5M docs where the window fits (the 10M+
-    // face is [[lshSurvivalStatsSampled]], whose histogram tail never
-    // materializes the full index with counts). A histogram+cut tail
-    // measured x63 2.55→3.11 s and histogram-no-cut 3.77 s at sf0.1 —
-    // the extra checkpoint barrier / semi-join stages cost more than the
-    // duplicate window saves below the 5M ceiling.
-    val bn = bands.withColumn("bn",
-      count(lit(1)).over(Window.partitionBy(col("band"), col("key"))))
-    val pairDocs = truePairs
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-      .distinct()
-    val bnPair = bn.join(pairDocs, Seq("doc_id"), "left_semi")
-    joinMinBn(truePairs, bnPair)
+    val bands = prebuiltIndex.getOrElse(lshIndex(df, idCol, textCol))
+    discoveryBands match {
+      case None => minhashLshPairsFromIndex(bands, df, idCol, textCol, threshold, cuts)
+      case Some(k) =>
+        // two consumers of the index (discovery and the full-index
+        // window): a lazy index re-runs shingles+signatures for each
+        val cutBands = Checkpoints.cutIn(cuts)(bands)
+        withFullIndexMinBn(
+          minhashLshPairsFromIndex(cutBands.filter(col("band") < k), df, idCol,
+            textCol, threshold, cuts),
+          cutBands, cuts)
+    }
   }
 
-  /** The min_bn tail of [[lshSurvivalStatsSampled]]: FULL-corpus
-    * bucket sizes for exactly
-    * the buckets the true-pair docs are members of — membership rows
-    * first (index ⋉ pair docs; the pair-doc side is O(true pairs),
-    * broadcastable), then each touched bucket's size via a
-    * map-side-combinable histogram over the index rows of those buckets
-    * (never the full-index window, which does not fit at 10M docs).
-    * `bnPair` feeds BOTH sides of the pair join below, so
-    * `Some(scope)` cuts it — without the cut the whole
-    * memb ⋈ sizes subtree (itself reading the band index three times)
-    * evaluates once per side: x65's tail planned 52 Exchanges and 10
-    * checkpoint re-scans from exactly this duplication.
+  /** The full-index `min_bn` of pairs discovered in a RESTRICTED band
+    * frame (first k bands, or a sampled sub-corpus), whose candidates'
+    * own `min_bn` counts only the restricted buckets: `(id_a, id_b,
+    * jaccard, min_bn)` with `min_bn` over every bucket of `bands`. Bucket
+    * sizes are a window over the full index, restricted to pair docs
+    * AFTER the window (it must see every bucket member); a two-sided
+    * (band, key)-intersection join then reads each pair's smallest
+    * shared bucket. `Some(scope)` cuts the pairs, which feed both the
+    * pair-doc semi join and the intersection join.
     */
-  private def attachMinBn(truePairs: DataFrame, bands: DataFrame,
+  private def withFullIndexMinBn(pairs: DataFrame, bands: DataFrame,
       cuts: Option[Checkpoints.Scope]): DataFrame = {
+    val truePairs = Checkpoints.cutIn(cuts)(
+      pairs.select(col("id_a"), col("id_b"), col("jaccard")))
     val pairDocs = truePairs
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
       .distinct()
-    val memb = bands.join(pairDocs, Seq("doc_id"), "left_semi")
-    val sizes = bands
-      .join(memb.select(col("band"), col("key")).distinct(),
-        Seq("band", "key"), "left_semi")
-      .groupBy(col("band").as("__graft_band"), col("key").as("__graft_key"))
-      .agg(count(lit(1)).as("bn"))
-    // one size row per bucket: the attach joins on contract keys
-    val bnPair = Checkpoints.cutIn(cuts)(memb
-      .select(col("doc_id"), col("band").as("__graft_band"),
-        col("key").as("__graft_key"))
-      .join(sizes, Seq("__graft_band", "__graft_key"))
-      .select(col("__graft_band").as("band"), col("__graft_key").as("key"),
-        col("doc_id"), col("bn")))
-    joinMinBn(truePairs, bnPair)
-  }
-
-  /** The two-sided (band, key)-intersection join that reads a pair's
-    * min shared-bucket size off a `(doc_id, band, key, bn)` membership
-    * frame — the ONE definition shared by the exact (window) and
-    * sampled (histogram) bn tails.
-    */
-  private def joinMinBn(truePairs: DataFrame, bnPair: DataFrame): DataFrame =
+    val bnPair = bands
+      .withColumn("bn",
+        count(lit(1)).over(Window.partitionBy(col("band"), col("key"))))
+      .join(pairDocs, Seq("doc_id"), "left_semi")
     truePairs
       .join(bnPair.select(col("doc_id").as("id_a"), col("band"), col("key"),
         col("bn")), "id_a")
@@ -731,6 +659,7 @@ object TextDedup {
           col("key") === col("__graft_bkey"))
       .groupBy(col("id_a"), col("id_b"), col("jaccard"))
       .agg(min(col("bn")).as("min_bn"))
+  }
 
   /** Deterministic 1-in-`oneIn` document sample predicate, identical in
     * Spark and ANSI SQL: keep ids whose `md5(cast(id AS string))` first
@@ -753,11 +682,9 @@ object TextDedup {
   }
 
   /** [[lshSurvivalStats]] over a SAMPLED PAIR UNIVERSE — the instrument
-    * for corpus decades where even band-restricted exact ground truth
-    * exceeds a box's scratch (at 10M docs the uncapped candidate
-    * universe is 29.64 B pairs ≈ ~100 G of verify scratch vs ~78 G
-    * usable, and k-band discovery CANNOT shrink it — k samples the same
-    * quadratically growing universe). Pair sampling shrinks the UNIVERSE
+    * for corpora where even band-restricted exact ground truth does not
+    * fit: k-band discovery CANNOT shrink it, since k samples the same
+    * quadratically growing universe. Pair sampling shrinks the UNIVERSE
     * itself: restrict to pairs whose BOTH endpoints pass
     * [[samplePredicate]] — every such pair that collides in any band
     * does so inside the sampled sub-corpus (bucket membership is
@@ -765,26 +692,19 @@ object TextDedup {
     * exactly the true pairs with both endpoints sampled: a uniform
     * 1/S² Bernoulli sample of the true-pair universe. `min_bn` is
     * computed against FULL-corpus bucket sizes (the sizes the cap
-    * actually filters on), so each sampled pair's cap-survival
-    * indicator is its exact full-universe value, and
+    * actually filters on; the same full-index tail as
+    * [[lshSurvivalStats]]' k-band face), so each sampled pair's
+    * cap-survival indicator is its exact full-universe value, and
     * [[recallAtCaps]]`(stats, caps)` — uniform weights; the
     * Horvitz–Thompson 1/π weights of a uniform design cancel in the
     * recall ratio — is an unbiased estimator of the full-universe
     * recall-at-cap. (CI: binomial on the sampled true-pair count; the
-    * endpoint-sharing correlation between sampled pairs is ignored,
-    * which the 5M validation face measures rather than assumes.)
+    * endpoint-sharing correlation between sampled pairs is ignored.)
     *
-    * Scale shape vs [[lshSurvivalStats]]: discovery + verify volumes
-    * shrink ×S² (the part that could never fit), and the bucket-size
-    * side is a map-side-combinable `(band, key)` histogram joined to
-    * the sampled pair docs' buckets — NOT the full-index window that
-    * materializes every index row with its count.
-    * The histogram semi-joins down to the buckets pair docs touch
-    * before counting, so its shuffle output is bounded by those
-    * buckets' membership, not the 10·64 M-row index.
-    *
-    * `prebuiltIndex` / `cuts` as in
-    * [[lshSurvivalStats]]. Output schema identical:
+    * Discovery + verify volumes shrink ×S² against [[lshSurvivalStats]].
+    * `prebuiltIndex` as there; `Some(scope)` cuts the band index (read by
+    * discovery and the full-index window), the candidates and the true
+    * pairs, but not the shingle sets. Output schema identical:
     * `(id_a, id_b, jaccard, min_bn)`.
     */
   def lshSurvivalStatsSampled(df: DataFrame, idCol: String, textCol: String,
@@ -808,15 +728,9 @@ object TextDedup {
     // the extra checkpoint barrier COSTING more than it saves (x65b
     // 3.25→3.88 s, x65 4.22→4.49 s medians of 3 interleaved runs) where
     // the exact family won (x62 4.35→3.80 s).
-    val truePairs = cut(verifyCandidatePairs(cand, setsBase, idCol,
-      textCol, threshold))
-    // FULL-corpus bucket sizes for exactly the buckets the pair docs
-    // are members of ([[attachMinBn]]; the pair join is [[joinMinBn]],
-    // shared with [[lshSurvivalStats]] so the two instruments can never
-    // disagree on the bn a pair reads, and the two-sided bnPair frame is
-    // cut once instead of evaluating its index-scanning subtree once per
-    // pair side).
-    attachMinBn(truePairs, bandsFull, cuts)
+    withFullIndexMinBn(
+      verifyCandidatePairs(cand, setsBase, idCol, textCol, threshold),
+      bandsFull, cuts)
   }
 
   /** The recall-vs-cap curve off a [[lshSurvivalStats]] frame: one row
@@ -1145,8 +1059,8 @@ object TextDedup {
           .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
           .distinct()) // consumed every round: materialize once
       // init = identity labels with the FIRST propagation round fused in:
-      // label(v) = min(v, min direct neighbor) — exactly what round 1
-      // over identity labels computes, for the price of one aggregate
+      // label(v) = min(v, min direct neighbor) — exactly what the first
+      // round over identity labels computes, for the price of one aggregate
       // instead of a full join+agg+update round (one loop round — two
       // checkpoint/convergence jobs — fewer per call; the trajectory from
       // here is identical, spec-pinned by the chain-propagation test).

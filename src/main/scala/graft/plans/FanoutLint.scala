@@ -36,14 +36,14 @@ object FanoutLint extends Rule[LogicalPlan] {
     * candidate pairs join per-doc shingle frames keyed by a unique doc
     * id) so the lint stays quiet on joins the library itself guarantees,
     * and a real user-query warning is never buried under operator noise
-    * (r7 verdict: at 139 demos the internal WARNs would eventually mask
-    * a genuine one). Matching is name-based, so the registered names MUST
+    * (across the demos, internal WARNs would mask a genuine one).
+    * Matching is name-based, so the registered names MUST
     * live in the reserved `__graft_` namespace: operators join on the
     * namespaced key internally and alias to their public output names
     * (`id_a`…) only in the final select, which keeps a user query whose
-    * own columns coincide with the public names fully linted (r8 advice:
-    * the earlier public-name allowlist silently exempted user joins on
-    * `id_a` and made lint behavior depend on class-load order).
+    * own columns coincide with the public names fully linted (a
+    * public-name allowlist would silently exempt user joins on `id_a`
+    * and make lint behavior depend on class-load order).
     */
   private val contractKeys = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 

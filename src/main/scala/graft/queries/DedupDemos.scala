@@ -180,8 +180,8 @@ object DedupDemos {
   /** The SELF-join capped bucket policy over an existing `bk` CTE:
     * bucket sizes → the 2 ≤ bn ≤ cap live filter → in-bucket candidate
     * pairs. ONE definition shared by the x2b2/x2f2 oracles and the x11b
-    * capped-pipeline oracle (r8 review: a re-pasted copy could disagree
-    * on which buckets the cap drops).
+    * capped-pipeline oracle, so no copy can disagree on which buckets
+    * the cap drops.
     */
   private[queries] def oracleCappedCandidateCtes(cap: Int): String = s"""
       bsz AS (SELECT band, key, count(*) AS bn FROM bk GROUP BY 1, 2),
@@ -271,8 +271,8 @@ object DedupDemos {
   // X2b (capped): the open-web-scale face of x2b — the maxBucket
   // stop-bucket cap bounds the worst band bucket at C(cap, 2) candidate
   // pairs, the knob that keeps LSH linear where the uncapped candidate
-  // volume grows O(n²·p) on random band collisions (measured 42x at the
-  // r7 500k probe). The demo pins cap=2 — small enough that the cap
+  // volume grows O(n²·p) on random band collisions (measured 42x at
+  // 500k docs). The demo pins cap=2 — small enough that the cap
   // provably FIRES at the verify SF (at sf0.01 it drops the one pair
   // whose every colliding bucket has 3+ members), so the oracle checks
   // the capped SEMANTICS, not just the uncapped-coincident output.
@@ -821,12 +821,12 @@ object DedupDemos {
         .orderBy(col("new_id").asc_nulls_last, col("old_id").asc_nulls_last)
     })
 
-  // X58b: the CAPPED incremental probe — probeLshStore's maxBucket (r7
-  // verdict residual: the probe side rode the uncapped candidate
-  // volume; store buckets past the cap are now dropped before the probe
-  // join). Cross-set semantics differ from the self-join cap: bn counts
-  // STORE members only and single-member buckets survive ANY cap — at
-  // the verify SF even cap=1 loses none of the 4 true pairs, which is
+  // X58b: the CAPPED incremental probe — probeLshStore's maxBucket
+  // drops store buckets past the cap before the probe join, so the
+  // probe side does not ride the uncapped candidate volume. Cross-set
+  // semantics differ from the self-join cap: bn counts STORE members
+  // only and single-member buckets survive ANY cap — at the verify SF
+  // even cap=1 loses none of the 4 true pairs, which is
   // the design's recall story (a true pair's ~16 colliding buckets are
   // overwhelmingly 1-store-member buckets; only corpus-scale
   // boilerplate buckets blow a cap). Unlike x58 — whose brute-force
@@ -1023,16 +1023,14 @@ object DedupDemos {
   // behind the budget rule (calibrateMaxBucket bounds COST; this frame
   // measures what the chosen cap COSTS IN RECALL: a pair survives cap c
   // iff its smallest shared band bucket is ≤ c). Exact discovery face.
-  // Scale: candidate gen is the x2b machinery; min_bn rides the same
-  // (band, key) bucket-count shuffle restricted to pair docs. The
-  // recall gate in TextDedupSpec runs this instrument at sf0.1.
+  // Scale: candidate gen is the x2b machinery, and min_bn rides its
+  // candidate pairs (the pair aggregate's min over shared bucket sizes).
+  // The recall gate in TextDedupSpec runs this instrument at sf0.1.
   private val x62 = Demo("x62_lsh_survival",
     Some(oracleSurvivalStats(0.5, None)),
     (s, dir, cuts) => TextDedup.lshSurvivalStats(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.5,
-        // the band index + candidates are cut once — the lazy plan
-        // re-derives the shingle→signature→band chain per consumer
-        // (discovery, bucket window, verify)
+        // the candidates and shingle sets are cut once
         cuts = Some(cuts))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
@@ -1075,12 +1073,11 @@ object DedupDemos {
   // restricted to pairs whose BOTH endpoints pass the deterministic
   // md5 1-in-2 document sample, full-band discovery inside the sample,
   // min_bn against FULL-corpus bucket sizes. This is the instrument
-  // that prices recall at decades where even band-restricted exact
-  // ground truth exceeds a box's scratch (10M docs = 29.64B uncapped
-  // pairs vs ~78G of scratch): inclusion is uniform
-  // 1/S² over the pair universe, so the recall ratio needs no
-  // reweighting. The oracle proves the sample is the claimed exact
-  // restriction — same md5 arithmetic on both engines.
+  // that prices recall where even band-restricted exact ground truth
+  // does not fit: inclusion is uniform 1/S² over the pair universe, so
+  // the recall ratio needs no reweighting. The oracle proves the sample
+  // is the claimed exact restriction — same md5 arithmetic on both
+  // engines.
   private val x65 = Demo("x65_lsh_survival_pairsampled",
     Some(oracleSurvivalStats(0.5, None, sampleOneIn = Some(2))),
     (s, dir, cuts) => TextDedup.lshSurvivalStatsSampled(
@@ -1089,8 +1086,8 @@ object DedupDemos {
         cuts = Some(cuts))
       .orderBy(col("id_a").asc_nulls_last, col("id_b").asc_nulls_last))
 
-  // X65b: the recall-vs-cap curve off the pair-sampled stats — exactly
-  // the estimator the 10M probe face reads (recallAtCaps with uniform
+  // X65b: the recall-vs-cap curve off the pair-sampled stats — the
+  // estimator of full-universe recall (recallAtCaps with uniform
   // weights = the sample's survival fraction per cap). Bit-identical
   // doubles across engines: exact integer counts ratioed in double.
   private val x65b = Demo("x65b_recall_curve_pairsampled",
@@ -1189,18 +1186,19 @@ object DedupDemos {
           (preset, budget, TextDedup.calibrateMaxBucket(bands, n, budget))
       }
       // ONE candidate + verify chain at the LOOSEST preset's cap; each
-      // tighter preset reads off it as a min_bn filter — the survival
-      // law (a pair survives cap c iff its smallest shared live bucket
-      // is ≤ c; spec-pinned equality with the per-cap operator). The
-      // preset outputs are nested by construction, so running the
-      // capped chain once per preset would only repeat work.
+      // tighter preset reads off it as a filter on the min_bn its
+      // candidates carry — the survival law (a pair survives cap c iff
+      // its smallest shared live bucket is ≤ c; spec-pinned equality
+      // with the per-cap operator). The preset outputs are nested by
+      // construction, so running the capped chain once per preset would
+      // only repeat work.
       val capMax = presets.map(_._3).max
       // the candidate chain stays lazy (cuts = None): at sf0.1 the cut
       // variant measured slower (4.47 vs 3.60 s), the barrier costing more
       // than re-reading the cut band index saves; at corpus scale
       // cuts = Some(scope) runs the live-bucket self-join once
-      val withBn = cuts.cut(TextDedup.minhashLshPairsWithMinBucket(bands,
-        docs, "doc_id", "text", threshold = 0.5, maxBucket = capMax))
+      val withBn = cuts.cut(TextDedup.minhashLshPairsFromIndex(bands,
+        docs, "doc_id", "text", threshold = 0.5, maxBucket = Some(capMax)))
       presets.map { case (preset, budget, cap) =>
         withBn.filter(col("min_bn") <= cap)
           .select(lit(preset).as("preset"),

@@ -224,8 +224,8 @@ object ModelDemos {
   // SetNode via SqlDag.run(vars = …)) — the dbt `--vars` CI surface:
   // `min_price` binds from the runner's vars map (a CLI override),
   // `status` falls back to its var() DEFAULT, a {% set %} carries it,
-  // and the {% if %} gate compares the set binding — the last everyday
-  // dbt-authoring constructs (r7 verdict item 7). The oracle is the
+  // and the {% if %} gate compares the set binding — the everyday
+  // dbt-authoring constructs. The oracle is the
   // fully-substituted SQL.
   // -------------------------------------------------------------------
   private val q34Model =
@@ -255,8 +255,8 @@ object ModelDemos {
 
   // -------------------------------------------------------------------
   // Q35: JINJA FILTERS on var prints (JinjaMacros.applyFilters via
-  // substituteVars) — the next dbt-authoring construct after vars (r8
-  // verdict item 5): `| trim | upper` normalizes a sloppily-entered
+  // substituteVars) — the dbt-authoring construct that transforms a
+  // var print: `| trim | upper` normalizes a sloppily-entered
   // status var (through the var() DEFAULT path), `| replace | upper`
   // canonicalizes a priority prefix passed as a CLI override. Filters
   // are whole-span string transforms applied at render time; the
@@ -269,10 +269,10 @@ object ModelDemos {
       " and o_orderpriority like" +
       " '{{ var(\"prio_prefix\") | replace (\"%\", \"\") | upper }}%'" +
       // `| default` fires only for an UNDEFINED var with no var()
-      // default (dbt precedence; r9 verdict item 7) — status_excl is
-      // never passed, so 'x' | upper → 'X' reaches the SQL. The space
-      // in `replace (…)` above pins the r9-advice fix: Jinja allows
-      // whitespace before a filter's argument list.
+      // default (dbt precedence) — status_excl is never passed, so
+      // 'x' | upper → 'X' reaches the SQL. The space in `replace (…)`
+      // above pins that Jinja allows whitespace before a filter's
+      // argument list.
       " and o_orderstatus != '{{ var(\"status_excl\") | default(\"x\") | upper }}'" +
       " group by o_orderpriority"
 
@@ -590,8 +590,8 @@ object ModelDemos {
     })
 
   // -------------------------------------------------------------------
-  // Q42: MODEL CONTRACTS — dbt ≥1.5 `contract: enforced` (the largest
-  // migration-visible dbt surface the repo lacked, r11 verdict): the
+  // Q42: MODEL CONTRACTS — dbt ≥1.5 `contract: enforced` (a
+  // migration-visible dbt surface): the
   // schema.yml declares the model's column names and types; the build
   // checks the ACTUAL materialized schema against them and fails fast
   // on drift. The demo builds a contracted rollup (green face), then
@@ -641,8 +641,8 @@ models:
     })
 
   // -------------------------------------------------------------------
-  // Q43: TEST SEVERITY + STORE_FAILURES — dbt's test-config block (r12
-  // verdict item 3): `severity: warn` keeps a flagging test from
+  // Q43: TEST SEVERITY + STORE_FAILURES — dbt's test-config block:
+  // `severity: warn` keeps a flagging test from
   // breaking the build, `warn_if`/`error_if` thresholds grade the
   // failure count, and `store_failures` persists the violating rows to
   // an audit table. The demo declares the tests in schema.yml form,

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -18,11 +20,12 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // each Checkpoints.Scope release warns that the cut's lineage is
-    // gone, which is the intended release (as in GraftSession.local)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    // as in GraftSession.local: each Checkpoints.Scope release warns that
+    // the cut's lineage is gone, which is the intended release, and every
+    // global window (a row_number over the whole frame) warns that it has
+    // no partition
+    Configurator.setLevel("org.apache.spark.sql.execution.window", Level.ERROR)
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     graft.sources.Tables.bootstrap(s)
     s
   }

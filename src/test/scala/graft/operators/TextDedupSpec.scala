@@ -35,11 +35,12 @@ class TextDedupSpec extends SparkSpec {
     scoped { cuts =>
       val bands = cuts.cut(TextDedup.lshIndex(docs, "doc_id", "text"))
       val fromIndex = TextDedup.minhashLshPairsFromIndex(bands, docs,
-          "doc_id", "text", 0.5, maxBucket = Some(64))
+          "doc_id", "text", 0.5, maxBucket = Some(64)).drop("min_bn")
         .collect().map(_.mkString("|")).toSet
       assert(fromIndex === fromText)
       val fromIndexMat = TextDedup.minhashLshPairsFromIndex(bands, docs,
           "doc_id", "text", 0.5, cuts = Some(cuts), maxBucket = Some(64))
+        .drop("min_bn")
         .collect().map(_.mkString("|")).toSet
       assert(fromIndexMat === fromText)
     }
@@ -700,6 +701,12 @@ class TextDedupSpec extends SparkSpec {
           discoveryBands = Some(8), cuts = Some(cuts))
         .collect().map(_.mkString("|")).toSet)
     assert(sampledCut === sampled)
+    // all 64 bands: the full-index window tail reads the same min_bn as
+    // the one the exact face's candidates carry
+    val allBands = TextDedup.lshSurvivalStats(docs, "doc_id", "text", 0.5,
+        discoveryBands = Some(64))
+      .collect().map(_.mkString("|")).toSet
+    assert(allBands === exact)
   }
 
   test("samplePredicate: deterministic md5 sample — rates, nesting, cross-engine arithmetic, refusals") {
@@ -781,19 +788,19 @@ class TextDedupSpec extends SparkSpec {
       curve.map(_.getDouble(3)))
   }
 
-  test("minhashLshPairsWithMinBucket: the min_bn filter ≡ the per-cap operator (x64's shared-chain law)") {
+  test("minhashLshPairsFromIndex: the min_bn filter ≡ the per-cap operator (x64's shared-chain law)") {
     val docs = Tables.table(spark, sfDir, "documents")
     val cuts = new Checkpoints.Scope
     val bands = cuts.cut(TextDedup.lshIndex(docs, "doc_id", "text"))
-    val withBn = TextDedup.minhashLshPairsWithMinBucket(bands, docs,
-        "doc_id", "text", 0.5, maxBucket = 64)
+    val withBn = TextDedup.minhashLshPairsFromIndex(bands, docs,
+        "doc_id", "text", 0.5, maxBucket = Some(64))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(withBn.nonEmpty)
     assert(withBn.forall(t => t._4 >= 2 && t._4 <= 64))
     // ONE chain at the loosest cap serves every tighter preset as a
     // filter — pair-for-pair AND jaccard-for-jaccard with the per-cap
-    // operator (the nesting x64 now exploits)
+    // operator (the nesting x64 exploits)
     Seq(2, 3, 64).foreach { cap =>
       val filtered = withBn.filter(_._4 <= cap).map(t => (t._1, t._2, t._3)).toSet
       val direct = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
@@ -802,16 +809,12 @@ class TextDedupSpec extends SparkSpec {
       assert(filtered === direct, s"shared-chain law broken at cap $cap")
     }
     // scale path (materialized candidates) ≡ lazy
-    val atScale = TextDedup.minhashLshPairsWithMinBucket(bands, docs,
-        "doc_id", "text", 0.5, maxBucket = 64, cuts = Some(cuts))
+    val atScale = TextDedup.minhashLshPairsFromIndex(bands, docs,
+        "doc_id", "text", 0.5, cuts = Some(cuts), maxBucket = Some(64))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSet
     assert(atScale === withBn.toSet)
-    assert(intercept[IllegalArgumentException] {
-      TextDedup.minhashLshPairsWithMinBucket(bands, docs,
-        "doc_id", "text", 0.5, maxBucket = 1)
-    }.getMessage.contains("maxBucket"))
     cuts.close()
   }
 
@@ -830,9 +833,6 @@ class TextDedupSpec extends SparkSpec {
     }
     assert(leftBehind(cuts => TextDedup.minhashLshPairs(docs, "doc_id", "text",
       0.5, cuts = Some(cuts))).isEmpty)
-    assert(leftBehind(cuts => TextDedup.minhashLshPairsWithMinBucket(
-      TextDedup.lshIndex(docs, "doc_id", "text"), docs, "doc_id", "text", 0.5,
-      maxBucket = 64, cuts = Some(cuts))).isEmpty)
   }
 
   test("recallAtCaps: exact-face fractions, cap monotonicity, HT reweighting on a pinned frame") {

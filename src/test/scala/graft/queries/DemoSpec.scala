@@ -26,9 +26,9 @@ class DemoSpec extends SparkSpec {
   }
 
   test("library-internal N:1 joins stay quiet: x2f, x64 and x65 at sf0.001") {
-    // dedupClusters' label update (one label row per node), the x64
-    // min_bn re-attach (one verified row per pair) and attachMinBn's
-    // bucket sizes (one size row per bucket) are N:1 by construction
+    // dedupClusters' label update (one label row per node) and the LSH
+    // verify joins (one shingle set per doc) are N:1 by construction;
+    // x65 also runs the full-index min_bn tail of the survival stats
     val linted = spark.newSession()
     linted.experimental.extraOptimizations = Seq(FanoutLint)
     FanoutLint.clear()

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Checkpoints, SparkEntry, SparkSpec}
 
 /** Physical-plan shape assertions (SURVEY.md §4): each claimed plan
   * property — broadcast the small side, push filters to the scan, prune
@@ -335,5 +335,34 @@ class PlanSpec extends SparkSpec {
     // one exchange keyed on the segment (keep-first window), one on the
     // doc id (reassembly aggregate) — a third would be a regression
     assert("\\(\\d+\\) Exchange".r.findAllIn(p).size == 2, p)
+  }
+
+  /** The Spark jobs query `name` runs while it builds its frame, and the
+    * Exchanges that frame plans.
+    */
+  private def workBudget(name: String): (Int, Int) =
+    Checkpoints.scoped { cuts =>
+      val (df, jobs) = jobsDuring(SparkEntry.build(name, spark, sfDir, cuts))
+      (jobs, "\\(\\d+\\) Exchange".r.findAllIn(
+        df.queryExecution.explainString(ExplainMode.fromString("formatted"))).size)
+    }
+
+  test("work budget: build jobs and planned Exchanges of x62, x63 and x64") {
+    // the survival stats and x64's presets read min_bn off their
+    // candidate pairs; a second bucket window or a min_bn re-attach join
+    // shows up here. A count that falls is lowered here in the same change.
+    assert(workBudget("x62_lsh_survival") === ((9, 1)))
+    assert(workBudget("x63_lsh_recall_curve") === ((9, 2)))
+    assert(workBudget("x64_recall_floor_presets") === ((15, 1)))
+  }
+
+  test("x2b: the candidate pair aggregate computes no function (the unused min_bn is pruned)") {
+    val p = Checkpoints.scoped(cuts =>
+      SparkEntry.build("x2b_minhash_lsh", spark, sfDir, cuts)
+        .queryExecution.executedPlan.toString)
+    val pairAggs = p.linesIterator
+      .filter(l => l.contains("HashAggregate") && l.contains("__graft_id_a")).toSeq
+    assert(pairAggs.nonEmpty, p)
+    assert(pairAggs.forall(_.contains("functions=[]")), pairAggs.mkString("\n"))
   }
 }
