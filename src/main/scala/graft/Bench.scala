@@ -1,6 +1,6 @@
 package graft
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every `SparkEntry.queries` entry on
@@ -97,6 +97,14 @@ object Bench {
       .getOrElse(0)
     summaryWith(byCost.take(kFit), byCost.size - kFit)
   }
+
+  /** Where a run keeps its full record besides `target/bench.json`: the
+    * tracked `BENCH_FULL.json` under `repoRoot` for a full-suite run, and
+    * nowhere for a `SPARK_GRAFT_ONLY` subset, whose partial record would
+    * replace the full suite's.
+    */
+  def fullRecordPath(repoRoot: String, only: Option[Seq[String]]): Option[Path] =
+    if (only.isEmpty) Some(Paths.get(repoRoot, "BENCH_FULL.json")) else None
 
   def main(args: Array[String]): Unit = {
     // mutual exclusion with any other timing harness, taken before the
@@ -233,17 +241,17 @@ object Bench {
     Files.write(Paths.get("target/bench.json"),
       (json + "\n").getBytes(StandardCharsets.UTF_8))
     // Also write the full record (per-query timings + failed list) to a
-    // tracked path, BENCH_FULL.json: the stdout line carries only the
-    // most expensive queries, and target/ is not tracked. Resolved
-    // against BenchProtocol.repoRoot so a caller outside the repo root
-    // still writes it into the repo.
+    // tracked path, BENCH_FULL.json, on a full-suite run: the stdout line
+    // carries only the most expensive queries, and target/ is not
+    // tracked. Resolved against BenchProtocol.repoRoot so a caller
+    // outside the repo root still writes it into the repo.
     val repoRoot = BenchProtocol.repoRoot
     // scale-factor guard: every consumer of BENCH_FULL.json
     // (round_close, sync_benchnotes, record diffs) assumes sf0.1, so a
     // record measured at a different sf does not overwrite it unless
     // SPARK_GRAFT_ALLOW_SF_CHANGE=1 says so
-    val fullPath = Paths.get(repoRoot, "BENCH_FULL.json")
-    val priorSf = if (Files.exists(fullPath)) {
+    val fullPath = fullRecordPath(repoRoot, only)
+    val priorSf = fullPath.filter(Files.exists(_)).flatMap { fullPath =>
       val prior = new String(Files.readAllBytes(fullPath), StandardCharsets.UTF_8)
       // anchored to the record's tail: "sf" is the last field of the
       // full record by construction, and an unanchored first match could
@@ -262,7 +270,7 @@ object Bench {
         sys.exit(1)
       }
       m
-    } else None
+    }
     priorSf.filter(p => p != sfDir &&
         sys.env.get("SPARK_GRAFT_ALLOW_SF_CHANGE").isEmpty).foreach { p =>
       // repoRoot-anchored like BENCH_FULL itself, so the printed
@@ -275,8 +283,8 @@ object Bench {
       benchLock.close()
       sys.exit(1)
     }
-    Files.write(fullPath,
-      (json + "\n").getBytes(StandardCharsets.UTF_8))
+    fullPath.foreach(Files.write(_,
+      (json + "\n").getBytes(StandardCharsets.UTF_8)))
     // The full line above carries every per-query timing (~4 KB); a
     // consumer that captures only the last ~2000 characters of stdout
     // would cut its head off and lose the record. So the stdout line

@@ -19,12 +19,16 @@ import org.apache.spark.sql.functions._
   *  - anything else (same or older `updated_at`) leaves the table
   *    untouched — closed history is immutable.
   *
-  * Scale: one run = one equi-join of the open slice against the (deduped)
-  * source on the snapshot key plus unions — every step is a narrow
-  * key-shuffle with no driver state, so a run over a 100 TB source is the
-  * same plan with more partitions. Closed rows are never rejoined: they
-  * pass through untouched, and in a partitioned materialization
-  * (`valid_to IS NULL` as the hot partition) they are never even read.
+  * Scale: one run = one full-outer equi-join of the open slice against
+  * the (deduped) source on the snapshot key, read by one projection that
+  * turns each joined row into an array of its 1–2 output versions
+  * (`[opening]`, `[closing, opening]` or `[kept]`), expanded by `inline`
+  * and unioned with the closed rows. The join is planned and run once
+  * per run; every step is a narrow key-shuffle with no driver state, so
+  * a run over a 100 TB source is the same plan with more partitions.
+  * Closed rows are never rejoined: they pass through untouched, and in a
+  * partitioned materialization (`valid_to IS NULL` as the hot partition)
+  * they are never even read.
   * Production note: on a transactional table format this merge is a
   * storage-side MERGE INTO; the relational algebra below is identical.
   */
@@ -57,7 +61,7 @@ object Snapshot {
     * one row per key and exactly the key + check columns.
     *
     * Scale: identical shape to [[timestampStrategy]] — one open-slice
-    * equi-join per run, closed history untouched.
+    * join per run with one consumer, closed history untouched.
     */
   def checkStrategy(
       existing: Option[DataFrame],
@@ -114,8 +118,6 @@ object Snapshot {
         // fate; incoming valid_from under a fresh name so both sides of
         // the comparison survive the join
         val inc = incoming.withColumnRenamed(ValidFrom, "__new_from")
-          .drop(ValidTo)
-        val nonKeyIncoming = inc.columns.filterNot(key.contains).toSeq
         // NULL-SAFE key equality: latestPerKey's window groups NULL keys
         // into one key, so the merge must match them too — with plain `=`
         // a NULL-keyed source row would never match its open version and
@@ -128,34 +130,27 @@ object Snapshot {
         // must NEVER supersede, whatever the strategy predicate says —
         // the check strategy's value-diff would otherwise be true vs NULL
         val superseded = col("i.__new_from").isNotNull && supersedes("o", "i")
-        // 1. keys only in source → open a first version
-        val inserted = joined.filter(col(s"o.$ValidFrom").isNull)
-          .select(key.map(k => col(s"i.$k")) ++
-            nonKeyIncoming.map(c => col(s"i.$c")): _*)
-        // 2. open versions superseded by the incoming state → close them …
-        val nowClosed = joined
-          .filter(col(s"o.$ValidFrom").isNotNull && superseded)
-          .select(open.columns.toIndexedSeq.map {
-            case ValidTo => col("i.__new_from").as(ValidTo)
-            case c => col(s"o.$c")
-          }: _*)
-        // … and open the replacement version
-        val reopened = joined
-          .filter(col(s"o.$ValidFrom").isNotNull && superseded)
-          .select(key.map(k => col(s"i.$k")) ++
-            nonKeyIncoming.map(c => col(s"i.$c")): _*)
-        // 3. open versions not superseded (incl. keys absent from the
-        // source) → untouched
-        val stillOpen = joined
-          .filter(col(s"o.$ValidFrom").isNotNull &&
-            (col("i.__new_from").isNull || !superseded))
-          .select(open.columns.toIndexedSeq.map(c => col(s"o.$c")): _*)
-        val opened = (inserted unionByName reopened)
-          .withColumnRenamed("__new_from", ValidFrom)
-          .withColumn(ValidTo,
-            lit(null).cast(source.schema(updatedAt).dataType))
-          .select(open.columns.toIndexedSeq.map(col): _*)
-        closed unionByName nowClosed unionByName stillOpen unionByName opened
+        // a version as a struct in the snapshot's column order
+        def version(pick: String => Column): Column =
+          struct(snap.columns.toIndexedSeq.map(c => pick(c).as(c)): _*)
+        val opening = version {
+          case ValidFrom => col("i.__new_from")
+          case c => col(s"i.$c")
+        }
+        val closing = version {
+          case ValidTo => col("i.__new_from")
+          case c => col(s"o.$c")
+        }
+        val kept = version(c => col(s"o.$c"))
+        // each joined row becomes its 1–2 output versions in one pass, so
+        // the join has one consumer: a key only in the source opens a
+        // first version; a superseded open version is closed and its
+        // replacement opened; any other open version (including a key
+        // absent from the source) is kept as it is
+        closed unionByName joined.select(inline(
+          when(col(s"o.$ValidFrom").isNull, array(opening))
+            .when(superseded, array(closing, opening))
+            .otherwise(array(kept))))
     }
   }
 }

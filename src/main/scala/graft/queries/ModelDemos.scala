@@ -71,7 +71,7 @@ object ModelDemos {
              lead(valid_from) OVER (PARTITION BY o_custkey ORDER BY valid_from) IS NULL AS is_current
       FROM kept
       ORDER BY o_custkey ASC NULLS LAST, valid_from ASC NULLS LAST"""),
-    (s, dir, cuts) => {
+    (s, dir, _) => {
       val orders = t(s, dir, "orders")
       var snap: Option[DataFrame] = None
       eraBounds.foreach { bound =>
@@ -80,12 +80,12 @@ object ModelDemos {
             Seq("o_custkey"), "o_orderdate", col("o_orderkey"))
           .select(col("o_custkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_orderdate").as("updated_at"))
-        // each run materializes its snapshot table (a cut) the way dbt
-        // writes the snapshot between runs: timestampStrategy's
-        // output references its join subtree from four branches, so an
-        // unmaterialized 3-era chain would re-evaluate era 1 ~25 times
-        snap = Some(cuts.cut(Snapshot.timestampStrategy(
-          snap, src, Seq("o_custkey"), "updated_at")))
+        // the eras chain lazily, with no cut between runs: each merge
+        // reads its predecessor twice (closed and open slice), so the
+        // final plan holds era 1 four times, and x12 runs 11 Spark jobs
+        // where a cut per era makes it run 14
+        snap = Some(Snapshot.timestampStrategy(
+          snap, src, Seq("o_custkey"), "updated_at"))
       }
       snap.get
         .withColumn("is_current", col(Snapshot.ValidTo).isNull)

@@ -1,9 +1,11 @@
 package graft
 
 /** Harness-discipline specs: the bench/probe mutual-exclusion lock,
-  * failure-reason capture in the timing loop, and the record line's
-  * JSON. None touches query semantics; they keep a bench record from
-  * being contaminated by a concurrent run or losing why a query failed.
+  * failure-reason capture in the timing loop, the record line's JSON,
+  * and which runs may write the tracked full record. None touches query
+  * semantics; they keep a bench record from being contaminated by a
+  * concurrent run, losing why a query failed, or being replaced by a
+  * subset run's.
   */
 class BenchSpec extends SparkSpec {
 
@@ -74,5 +76,11 @@ class BenchSpec extends SparkSpec {
     assert(Bench.jsonEscape("""say "hi"\ now""") === """say \"hi\"\\ now""")
     assert(Bench.jsonEscape("a\nb\tc\rd") === "a\\nb\\tc\\rd")
     assert(Bench.jsonEscape("ctrl:" + 1.toChar) === "ctrl:\\u0001")
+  }
+
+  test("a SPARK_GRAFT_ONLY subset run leaves the tracked full record alone") {
+    assert(Bench.fullRecordPath("/repo", None) ===
+      Some(java.nio.file.Paths.get("/repo", "BENCH_FULL.json")))
+    assert(Bench.fullRecordPath("/repo", Some(Seq("x12", "x13"))) === None)
   }
 }

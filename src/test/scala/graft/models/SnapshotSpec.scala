@@ -2,12 +2,14 @@ package graft.models
 
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** dbt timestamp-strategy SCD2 semantics, pinned case by case on a tiny
   * fixture: insert / supersede / unchanged / missing-key / out-of-order
-  * (older update must NOT reopen history).
+  * (older update must NOT reopen history), and a merge run's plan: one
+  * open-slice join.
   */
 class SnapshotSpec extends SparkSpec {
 
@@ -67,6 +69,61 @@ class SnapshotSpec extends SparkSpec {
       ("a", "v1", ts("2024-01-01"), Some(ts("2024-02-01"))),
       ("a", "v2", ts("2024-02-01"), Some(ts("2024-03-01"))),
       ("a", "v3", ts("2024-03-01"), None)))
+  }
+
+  test("one run hits every outcome at once, a NULL key included (timestamp strategy)") {
+    val s1 = Snapshot.timestampStrategy(None,
+      src(("a", "v1", "2024-01-01"), ("b", "v1", "2024-01-01"),
+        ("c", "v1", "2024-01-01"), (null, "v1", "2024-01-01")),
+      Seq("id"), "updated_at")
+    // a and the NULL key superseded, b unchanged, c absent, d new
+    val s2 = Snapshot.timestampStrategy(Some(s1),
+      src(("a", "v2", "2024-02-01"), ("b", "v1", "2024-01-01"),
+        (null, "v2", "2024-02-01"), ("d", "v1", "2024-02-01")),
+      Seq("id"), "updated_at")
+    assert(rows(s2) === Set(
+      ("a", "v1", ts("2024-01-01"), Some(ts("2024-02-01"))),
+      ("a", "v2", ts("2024-02-01"), None),
+      ("b", "v1", ts("2024-01-01"), None),
+      ("c", "v1", ts("2024-01-01"), None),
+      ("d", "v1", ts("2024-02-01"), None),
+      (null, "v1", ts("2024-01-01"), Some(ts("2024-02-01"))),
+      (null, "v2", ts("2024-02-01"), None)))
+    assert(s2.count() === 7)
+  }
+
+  test("one run hits every outcome at once, a NULL key included (check strategy)") {
+    def srcC(rows: (String, String)*): DataFrame = rows.toSeq.toDF("id", "state")
+    val r1 = Snapshot.checkStrategy(None,
+      srcC(("a", "x"), ("b", "x"), ("c", "x"), (null, "x")),
+      Seq("id"), Seq("state"), ts("2024-01-01"))
+    val r2 = Snapshot.checkStrategy(Some(r1),
+      srcC(("a", "y"), ("b", "x"), (null, "y"), ("d", "x")),
+      Seq("id"), Seq("state"), ts("2024-02-01"))
+    assert(rows(r2) === Set(
+      ("a", "x", ts("2024-01-01"), Some(ts("2024-02-01"))),
+      ("a", "y", ts("2024-02-01"), None),
+      ("b", "x", ts("2024-01-01"), None),
+      ("c", "x", ts("2024-01-01"), None),
+      ("d", "x", ts("2024-02-01"), None),
+      (null, "x", ts("2024-01-01"), Some(ts("2024-02-01"))),
+      (null, "y", ts("2024-02-01"), None)))
+    assert(r2.count() === 7)
+  }
+
+  test("a merge run plans its open-slice join once, under both strategies") {
+    def joins(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+    val s1 = Snapshot.timestampStrategy(None,
+      src(("a", "v1", "2024-01-01")), Seq("id"), "updated_at")
+    val s2 = Snapshot.timestampStrategy(Some(s1),
+      src(("a", "v2", "2024-02-01")), Seq("id"), "updated_at")
+    assert(joins(s2) === 1, s2.queryExecution.optimizedPlan)
+    val r1 = Snapshot.checkStrategy(None,
+      Seq(("a", "x")).toDF("id", "state"), Seq("id"), Seq("state"), ts("2024-01-01"))
+    val r2 = Snapshot.checkStrategy(Some(r1),
+      Seq(("a", "y")).toDF("id", "state"), Seq("id"), Seq("state"), ts("2024-02-01"))
+    assert(joins(r2) === 1, r2.queryExecution.optimizedPlan)
   }
 
   test("latestPerKey dedupes a feed deterministically (timestamp then tiebreak)") {

@@ -354,6 +354,9 @@ class PlanSpec extends SparkSpec {
     assert(workBudget("x62_lsh_survival") === ((9, 1)))
     assert(workBudget("x63_lsh_recall_curve") === ((9, 2)))
     assert(workBudget("x64_recall_floor_presets") === ((15, 1)))
+    // x12's three snapshot eras chain lazily, one join per merge; a cut
+    // per era would show up here as build jobs
+    assert(workBudget("x12_scd2_snapshot") === ((1, 12)))
   }
 
   test("x2b: the candidate pair aggregate computes no function (the unused min_bn is pruned)") {
